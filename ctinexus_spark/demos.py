@@ -3,8 +3,9 @@
 The reference loads 148 ICL example JSONs from data/demo at every
 extraction call (llm_processor.py:1326-1332). Here the corpus is read
 once on the driver and the fitted TF-IDF model is closure-captured
-into the retrieval UDF (an effective broadcast). Falls back cleanly
-when the reference corpus directory is absent.
+into the retrieval UDF (an effective broadcast). A missing corpus
+directory raises FileNotFoundError: an empty corpus would silently
+retrieve no demonstrations for every document.
 """
 
 from __future__ import annotations
@@ -17,11 +18,11 @@ REFERENCE_DEMO_DIR = "/root/reference/ctinexus/data/demo"
 
 def load_demo_corpus(path: str = REFERENCE_DEMO_DIR) -> tuple[list[str], list[str], list[list[dict]]]:
     """→ (demo_ids, texts, explicit_triplets) in sorted-filename order."""
+    if not os.path.isdir(path):
+        raise FileNotFoundError(f"demonstration corpus directory not found: {path}")
     ids: list[str] = []
     texts: list[str] = []
     triplets: list[list[dict]] = []
-    if not os.path.isdir(path):
-        return ids, texts, triplets
     for name in sorted(os.listdir(path)):
         if not name.endswith(".json"):
             continue

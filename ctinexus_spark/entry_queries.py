@@ -523,7 +523,7 @@ ORACLES["ie_demo_topk"] = _demo_topk_oracle_sql()
 # cos(join,merge) = cos(merge,sort) = √2/2 ≥ 0.6 while cos(join,sort)
 # = 0 < 0.6 (off-chain Operator-class cosines ≤ 0.36, pinned by
 # tests/test_ea_semantics.py). Connected components (the north_star's
-# §2.5 A5 semantics, ea.py:_clusters_cc) merge all three into ONE
+# §2.5 A5 semantics, doc_kernel._clusters_cc) merge all three into ONE
 # entity; the reference's star-sets (graph_constructor.py:394-436)
 # keep overlapping {join,merge} / {join,merge,sort} / {merge,sort}
 # clusters with last-write-wins membership — the SURVEY §7 divergence

@@ -5,38 +5,27 @@ Reference semantics (re-expressed, not ported):
   mention_text within a document (cti_processor.py:147-202).
 - A2 embedding — one batch per document there; here one batch per
   Arrow batch of *globally distinct* mention texts (strictly better).
-- A3-A7 merge — type-blocked pairwise cosine, star-set clusters with
-  last-write-wins, frequency-argmax canonical name, dense entity ids
-  in class-first-appearance order (graph_constructor.py:246-441).
-- A8-A10 IOC unmerge — all-IOC clusters split back into their own
-  entities (cti_processor.py:53-115).
+- A3-A10 merge and IOC unmerge — per-document rules defined once in
+  doc_kernel.align_doc and shared with the fused path.
 
-Order-dependent reference semantics rest on CPython dict/set iteration
-order; this rebuild pins total orders instead (SURVEY.md §7):
-traversal position `pos` for first-occurrence, ascending mention_id
-inside class groups and clusters, first-appearance order for IOC
-unmerge iteration. Outcomes are identical wherever the reference is
-deterministic.
-
-Scale shape: minting is pure DataFrame ops (one shuffle on url);
-embedding is a broadcast-free pandas UDF over distinct texts; the
-merge runs per document via applyInPandas — at 10^12 docs the groups
-stay tiny (≤ dozens of mentions), so this parallelizes across
-documents with a single url-shuffle instead of an O(n²) global join.
-`ea_cluster_mode="cc"` swaps star-sets for connected components over
-the ≥threshold similarity edges (north_star semantics).
+Spark shape: minting is pure DataFrame ops (one shuffle on url);
+embedding is a pandas UDF over distinct texts; the merge runs per
+document through partitioning.grouped_map_stitched (many documents per
+Arrow batch) — at 10^12 docs the groups stay tiny (≤ dozens of
+mentions), so this parallelizes across documents with a single
+url-shuffle instead of an O(n²) global join. This modular path is the
+per-stage reference table for the fused pass (test_fused_parity).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ctinexus_spark.config import PipelineConfig
-from ctinexus_spark.ioc import detect_iocs
+from ctinexus_spark.doc_kernel import align_doc
 
 NODES_SCHEMA = (
     "url string, t_idx int, side string, pos int, mention_id int, "
@@ -133,162 +122,6 @@ def embed_mentions(nodes: DataFrame, model) -> DataFrame:
     )
 
 
-# --- per-document merge + IOC unmerge (applyInPandas body) -------------
-
-
-def _cosine_matrix(vecs: np.ndarray) -> np.ndarray:
-    norms = np.linalg.norm(vecs, axis=1, keepdims=True)
-    norms[norms == 0] = 1.0
-    unit = vecs / norms
-    return unit @ unit.T
-
-
-def _clusters_star(group: list[int], neighbors: dict[int, set[int]]) -> list[set[int]]:
-    """Reference star-sets: {m} ∪ neighbors(m) per member, dedup by set
-    equality keeping first (graph_constructor.py:413-420)."""
-    uniq: list[set[int]] = []
-    for m in group:
-        s = set(neighbors[m]) | {m}
-        if s not in uniq:
-            uniq.append(s)
-    return uniq
-
-
-def _clusters_cc(group: list[int], neighbors: dict[int, set[int]]) -> list[set[int]]:
-    """Connected components over the ≥threshold edges (north_star
-    mode), ordered by smallest member id."""
-    seen: set[int] = set()
-    comps: list[set[int]] = []
-    for start in group:
-        if start in seen:
-            continue
-        comp, stack = set(), [start]
-        while stack:
-            n = stack.pop()
-            if n in comp:
-                continue
-            comp.add(n)
-            stack.extend(neighbors[n] - comp)
-        seen |= comp
-        comps.append(comp)
-    return comps
-
-
-def _align_one_doc(pdf: pd.DataFrame, threshold: float, mode: str) -> pd.DataFrame:
-    pdf = pdf.sort_values("pos", kind="stable").reset_index(drop=True)
-    n_rows = len(pdf)
-    # pull columns out ONCE — per-element .iloc in loops is the slow path
-    mids = pdf["mention_id"].to_numpy()
-    texts = pdf["mention_text"].tolist()
-    classes = pdf["mention_class"].tolist()
-    embeddings_col = pdf["embedding"].tolist()
-
-    # node_dict: mention_id -> row indices in traversal order
-    node_rows: dict[int, list[int]] = {}
-    for i in range(n_rows):
-        node_rows.setdefault(int(mids[i]), []).append(i)
-
-    # embeddings per mention_id (first row's vector; identical by text)
-    emb: dict[int, np.ndarray] = {
-        m: np.asarray(embeddings_col[rows[0]], dtype=np.float64)
-        for m, rows in node_rows.items()
-    }
-    text_of = {m: texts[rows[0]] for m, rows in node_rows.items()}
-
-    # class blocking in first-appearance order
-    class_order: list[str] = []
-    class_members: dict[str, set[int]] = {}
-    for i in range(n_rows):
-        c = classes[i]
-        if c not in class_members:
-            class_members[c] = set()
-            class_order.append(c)
-        class_members[c].add(int(mids[i]))
-
-    entity_id = 0
-    # per-mention assignment (last write wins, as in the reference)
-    ent_of: dict[int, tuple[int, str, list[str]]] = {}
-
-    for c in class_order:
-        group = sorted(class_members[c])
-        if len(group) == 1:
-            m = group[0]
-            ent_of[m] = (entity_id, text_of[m], [])
-            entity_id += 1
-            continue
-
-        vecs = np.vstack([emb[m] for m in group])
-        sims = _cosine_matrix(vecs)
-        neighbors: dict[int, set[int]] = {m: set() for m in group}
-        for i, m1 in enumerate(group):
-            for j in range(i + 1, len(group)):
-                if sims[i, j] >= threshold:
-                    m2 = group[j]
-                    neighbors[m1].add(m2)
-                    neighbors[m2].add(m1)
-
-        clusters = (_clusters_cc if mode == "cc" else _clusters_star)(group, neighbors)
-        for cluster in clusters:
-            members = sorted(cluster)
-            # canonical: frequency argmax, ties → lowest mention_id
-            canon = max(members, key=lambda m: (len(node_rows[m]), -m))
-            canon_text = text_of[canon]
-            all_texts = [text_of[m] for m in members]
-            for m in members:
-                ent_of[m] = (
-                    entity_id,
-                    canon_text,
-                    [t for t in all_texts if t != text_of[m]],
-                )
-            entity_id += 1
-
-    # materialize per-node columns
-    ent_ids = np.empty(n_rows, dtype=np.int64)
-    ent_texts: list[str] = [""] * n_rows
-    merged: list[list[str]] = [[] for _ in range(n_rows)]
-    for m, rows in node_rows.items():
-        e_id, e_text, m_list = ent_of[m]
-        for r in rows:
-            ent_ids[r] = e_id
-            ent_texts[r] = e_text
-            merged[r] = list(m_list)
-
-    # --- IOC unmerge (PostProcessor, cti_processor.py:53-115) ---
-    entity_idx = entity_id
-    first_mid_of_text = {}
-    for i in range(n_rows):
-        first_mid_of_text.setdefault(texts[i], int(mids[i]))
-
-    for i in range(n_rows):
-        if not merged[i]:
-            continue
-        iocs = detect_iocs(merged[i], texts[i])
-        if not iocs or len(iocs) < len(merged[i]) + 1:
-            continue  # partial-IOC clusters stay merged (reference TODO)
-        # deterministic order: first-appearance of the IOC's mention
-        for m_text in sorted(iocs, key=lambda t: first_mid_of_text.get(t, 1 << 30)):
-            if m_text not in first_mid_of_text:
-                continue
-            m_id = first_mid_of_text[m_text]
-            rows = node_rows[m_id]
-            new_id = entity_idx
-            if ent_texts[rows[0]] != m_text:
-                entity_idx += 1
-            for r in rows:
-                if texts[r] == ent_texts[r]:
-                    merged[r] = []
-                else:
-                    merged[r] = []
-                    ent_ids[r] = new_id
-                    ent_texts[r] = m_text
-
-    out = pdf.drop(columns=["embedding"]).copy()
-    out["entity_id"] = ent_ids.astype("int32")
-    out["entity_text"] = ent_texts
-    out["mention_merged"] = merged
-    return out
-
-
 def align_entities(
     nodes: DataFrame,
     embeddings: DataFrame,
@@ -307,13 +140,25 @@ def align_entities(
     # batched grouped-map: many docs per Arrow exchange instead of the
     # ~2 ms-per-group applyInPandas tax (once per document). NOTE the
     # modular path still ships embedding vectors through the url
-    # shuffle — it is the oracle-semantics reference; the production
+    # shuffle — it is the per-stage reference table; the production
     # fused path embeds inside the Arrow pass (operators/fused.py).
-    def _process(pdf):
-        import pandas as pd
+    def _align(g: pd.DataFrame) -> pd.DataFrame:
+        g = g.sort_values("pos", kind="stable")
+        texts = g["mention_text"].tolist()
+        ent_ids, ent_texts, merged = align_doc(
+            g["mention_id"].tolist(), texts, g["mention_class"].tolist(),
+            dict(zip(texts, g["embedding"].tolist())), thr, mode,
+        )
+        return g.drop(columns=["embedding"]).assign(
+            entity_id=ent_ids,
+            entity_text=ent_texts,
+            mention_merged=merged,
+        )
 
-        outs = [_align_one_doc(g, thr, mode) for _, g in pdf.groupby("url", sort=False)]
-        return pd.concat(outs, ignore_index=True)
+    def _process(pdf: pd.DataFrame) -> pd.DataFrame:
+        return pd.concat(
+            [_align(g) for _, g in pdf.groupby("url", sort=False)], ignore_index=True
+        )
 
     from ctinexus_spark.partitioning import grouped_map_stitched
 

@@ -10,6 +10,8 @@ Spark shape: triples are re-grouped per document with
 `sort_array(collect_list(struct(...)))` (map-side partial aggregation,
 one shuffle on url), then a `mapInPandas` batch calls the model once
 per Arrow batch of documents and explodes typed triples back out.
+Responses are parsed by doc_kernel.parse_tagging, the parse the fused
+path shares.
 """
 
 from __future__ import annotations
@@ -20,22 +22,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ctinexus_spark.jsonrepair import parse_llm_json
-from ctinexus_spark.validation import valid_typed_triplet
+from ctinexus_spark.doc_kernel import parse_tagging
 
 ET_SCHEMA = (
     "url string, t_idx int, subject_text string, subject_class string, "
     "relation string, object_text string, object_class string, valid boolean"
 )
-
-
-def _first_key_or_default(cls) -> str:
-    if isinstance(cls, dict):
-        keys = list(cls.keys())
-        return keys[0] if keys else "default"
-    if isinstance(cls, str) and cls:
-        return cls
-    return "default"
 
 
 def tag_triples(triples_ie: DataFrame, docs: DataFrame, model) -> DataFrame:
@@ -58,38 +50,11 @@ def tag_triples(triples_ie: DataFrame, docs: DataFrame, model) -> DataFrame:
                 ]
                 for doc_triples in pdf["triples"]
             ]
-            responses = model.tag(texts, triples_per_doc)
-            rows = []
-            for url, resp in zip(pdf["url"], responses):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {}
-                if not isinstance(payload, dict):
-                    payload = {}
-                tagged = payload.get("tagged_triples")
-                if tagged is None:
-                    tagged = payload.get("triplets", [])
-                if not isinstance(tagged, list):
-                    tagged = []
-                for i, t in enumerate(tagged):
-                    ok = valid_typed_triplet(t)
-                    subj = t.get("subject") if isinstance(t, dict) else {}
-                    obj = t.get("object") if isinstance(t, dict) else {}
-                    subj = subj if isinstance(subj, dict) else {}
-                    obj = obj if isinstance(obj, dict) else {}
-                    rows.append(
-                        (
-                            url,
-                            i,
-                            subj.get("text"),
-                            _first_key_or_default(subj.get("class")),
-                            t.get("relation") if isinstance(t, dict) else None,
-                            obj.get("text"),
-                            _first_key_or_default(obj.get("class")),
-                            ok,
-                        )
-                    )
+            rows = [
+                (url, i, *typed)
+                for url, resp in zip(pdf["url"].tolist(), model.tag(texts, triples_per_doc))
+                for i, typed in enumerate(parse_tagging(resp))
+            ]
             yield pd.DataFrame(
                 rows,
                 columns=[

@@ -1,9 +1,12 @@
 """Fused fast-path operators.
 
-The modular operators (ie/et/ea/lp/materialize) are the semantic
-reference — each independently tested against DuckDB oracles. This
-module collapses them into two Arrow passes for throughput; a test
-asserts bit-identical output vs the modular path.
+The per-document semantics (response parsing, alignment, graph
+analysis) live in ctinexus_spark/doc_kernel.py and are shared with the
+modular operators (ie/et/ea/lp/materialize). Those remain the Spark-
+plumbing reference: each stage is a separate table checked against a
+DuckDB oracle. This module runs the same kernel calls in two Arrow
+passes for throughput; a test asserts identical output vs the modular
+path.
 
 Shuffle budget of the fused pipeline:
   normalize+extract+tag : mapInPandas, ZERO shuffles
@@ -20,20 +23,16 @@ handles at the partitioner level (url is already high-cardinality).
 
 from __future__ import annotations
 
+from collections import Counter
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
-from ctinexus_spark.ioc import detect_iocs
-from ctinexus_spark.jsonrepair import parse_llm_json
-from ctinexus_spark.operators.ea import _clusters_cc, _clusters_star, _cosine_matrix
-from ctinexus_spark.operators.et import _first_key_or_default
+from ctinexus_spark.doc_kernel import align_doc, analyze_doc, parse_extraction, parse_tagging
 from ctinexus_spark.partitioning import barrier
-from ctinexus_spark.validation import valid_ie_triplet, valid_typed_triplet
 
 TYPED_SCHEMA = (
     "url string, t_idx int, subject_text string, subject_class string, "
@@ -49,49 +48,16 @@ def extract_and_tag(docs: DataFrame, model, text_col: str = "text_norm") -> Data
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             texts = pdf[text_col].fillna("").tolist()
-            urls = pdf["url"].tolist()
-            extracted: list[list[dict]] = []
-            for resp in model.extract(texts):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {"triplets": []}
-                trips = payload.get("triplets", [])
-                trips = [t for t in trips if valid_ie_triplet(t)] if isinstance(trips, list) else []
-                extracted.append(
-                    [
-                        {
-                            "subject": t["subject"] if isinstance(t["subject"], str)
-                            else (t["subject"].get("text") or t["subject"].get("mention_text")),
-                            "relation": t["relation"],
-                            "object": t["object"] if isinstance(t["object"], str)
-                            else (t["object"].get("text") or t["object"].get("mention_text")),
-                        }
-                        for t in trips
-                    ]
-                )
-            rows = []
-            for url, text, resp in zip(urls, texts, model.tag(texts, extracted)):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {}
-                tagged = payload.get("tagged_triples") if isinstance(payload, dict) else None
-                if tagged is None and isinstance(payload, dict):
-                    tagged = payload.get("triplets", [])
-                if not isinstance(tagged, list):
-                    tagged = []
-                for i, t in enumerate(tagged):
-                    ok = valid_typed_triplet(t)
-                    subj = t.get("subject") if isinstance(t, dict) else {}
-                    obj = t.get("object") if isinstance(t, dict) else {}
-                    subj = subj if isinstance(subj, dict) else {}
-                    obj = obj if isinstance(obj, dict) else {}
-                    rows.append(
-                        (url, i, subj.get("text"), _first_key_or_default(subj.get("class")),
-                         t.get("relation") if isinstance(t, dict) else None,
-                         obj.get("text"), _first_key_or_default(obj.get("class")), ok)
-                    )
+            extracted = [
+                [{"subject": s, "relation": r, "object": o}
+                 for s, r, o, ok in parse_extraction(resp) if ok]
+                for resp in model.extract(texts)
+            ]
+            rows = [
+                (url, i, *typed)
+                for url, resp in zip(pdf["url"].tolist(), model.tag(texts, extracted))
+                for i, typed in enumerate(parse_tagging(resp))
+            ]
             yield pd.DataFrame(
                 rows,
                 columns=["url", "t_idx", "subject_text", "subject_class",
@@ -108,141 +74,6 @@ FUSED_SCHEMA = (
     "o_mention_id int, o_text string, o_class string, o_merged array<string>, "
     "o_entity_id int, o_entity_text string"
 )
-
-
-def _align_core(
-    mids: list[int], texts: list[str], classes: list[str],
-    emb_of: dict[str, np.ndarray], threshold: float, mode: str,
-):
-    """EA merge + IOC unmerge over node arrays in traversal order.
-    Same semantics as operators/ea.py:_align_one_doc (shared cluster
-    helpers); returns per-node (entity_id, entity_text, merged)."""
-    n = len(mids)
-    node_rows: dict[int, list[int]] = {}
-    for i in range(n):
-        node_rows.setdefault(mids[i], []).append(i)
-    text_of = {m: texts[rows[0]] for m, rows in node_rows.items()}
-
-    class_order: list[str] = []
-    class_members: dict[str, set[int]] = {}
-    for i in range(n):
-        c = classes[i]
-        if c not in class_members:
-            class_members[c] = set()
-            class_order.append(c)
-        class_members[c].add(mids[i])
-
-    entity_id = 0
-    ent_of: dict[int, tuple[int, str, list[str]]] = {}
-    for c in class_order:
-        group = sorted(class_members[c])
-        if len(group) == 1:
-            m = group[0]
-            ent_of[m] = (entity_id, text_of[m], [])
-            entity_id += 1
-            continue
-        vecs = np.vstack([emb_of[text_of[m]] for m in group])
-        sims = _cosine_matrix(vecs)
-        neighbors: dict[int, set[int]] = {m: set() for m in group}
-        for i, m1 in enumerate(group):
-            for j in range(i + 1, len(group)):
-                if sims[i, j] >= threshold:
-                    neighbors[m1].add(group[j])
-                    neighbors[group[j]].add(m1)
-        clusters = (_clusters_cc if mode == "cc" else _clusters_star)(group, neighbors)
-        for cluster in clusters:
-            members = sorted(cluster)
-            canon = max(members, key=lambda m: (len(node_rows[m]), -m))
-            all_texts = [text_of[m] for m in members]
-            for m in members:
-                ent_of[m] = (entity_id, text_of[canon], [t for t in all_texts if t != text_of[m]])
-            entity_id += 1
-
-    ent_ids = [0] * n
-    ent_texts = [""] * n
-    merged: list[list[str]] = [[] for _ in range(n)]
-    for m, rows in node_rows.items():
-        e_id, e_text, m_list = ent_of[m]
-        for r in rows:
-            ent_ids[r] = e_id
-            ent_texts[r] = e_text
-            merged[r] = list(m_list)
-
-    # IOC unmerge (PostProcessor semantics)
-    entity_idx = entity_id
-    first_mid_of_text: dict[str, int] = {}
-    for i in range(n):
-        first_mid_of_text.setdefault(texts[i], mids[i])
-    for i in range(n):
-        if not merged[i]:
-            continue
-        iocs = detect_iocs(merged[i], texts[i])
-        if not iocs or len(iocs) < len(merged[i]) + 1:
-            continue
-        for m_text in sorted(iocs, key=lambda t: first_mid_of_text.get(t, 1 << 30)):
-            if m_text not in first_mid_of_text:
-                continue
-            m_id = first_mid_of_text[m_text]
-            rows = node_rows[m_id]
-            new_id = entity_idx
-            if ent_texts[rows[0]] != m_text:
-                entity_idx += 1
-            for r in rows:
-                if texts[r] == ent_texts[r]:
-                    merged[r] = []
-                else:
-                    merged[r] = []
-                    ent_ids[r] = new_id
-                    ent_texts[r] = m_text
-    return ent_ids, ent_texts, merged
-
-
-def _graph_core(ent_ids: list[int], ent_texts: list[str], t_idxs: list[int]):
-    """Per-doc components/degree/main/topic over node arrays (node i
-    order = traversal pos). Returns (mains_excl_topic, topic) as
-    (entity_id, entity_text) tuples; same tie rules as operators/lp.py."""
-    first_pos: dict[int, int] = {}
-    text_of: dict[int, str] = {}
-    degree: dict[int, int] = {}
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        root = x
-        while parent.setdefault(root, root) != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    by_triple: dict[int, list[int]] = {}
-    for i, e in enumerate(ent_ids):
-        if e not in first_pos:
-            first_pos[e] = i
-            text_of[e] = ent_texts[i]
-            degree[e] = 0
-        degree[e] += 1
-        by_triple.setdefault(t_idxs[i], []).append(e)
-    for pair in by_triple.values():
-        if len(pair) == 2:
-            ra, rb = find(pair[0]), find(pair[1])
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-
-    comp_members: dict[int, list[int]] = {}
-    for e in first_pos:
-        comp_members.setdefault(find(e), []).append(e)
-    comps = sorted(comp_members.values(), key=lambda ms: min(first_pos[m] for m in ms))
-    mains = [max(sorted(ms), key=lambda m: (degree[m], -m)) for ms in comps]
-    topic = None
-    if comps:
-        big = max(range(len(comps)), key=lambda i: (len(comps[i]), -i))
-        topic = mains[big]
-    pairs = [
-        (m, text_of[m], topic, text_of[topic])
-        for m in mains
-        if topic is not None and m != topic
-    ]
-    return pairs
 
 
 def align_graph_triples(typed: DataFrame, model, config: PipelineConfig) -> DataFrame:
@@ -273,10 +104,13 @@ def align_graph_triples(typed: DataFrame, model, config: PipelineConfig) -> Data
         # node arrays in traversal order (subject, object per triple)
         texts: list[str] = []
         classes: list[str] = []
-        t_idxs: list[int] = []
         for i in range(len(g)):
-            texts.append(s_texts[i]); classes.append(s_classes[i]); t_idxs.append(t_idx_arr[i])
-            texts.append(o_texts[i]); classes.append(o_classes[i]); t_idxs.append(t_idx_arr[i])
+            texts.append(s_texts[i]); classes.append(s_classes[i])
+            texts.append(o_texts[i]); classes.append(o_classes[i])
+        # triple i links nodes 2i and 2i+1, unless documents sharing the
+        # url repeat its t_idx: then none of those triples is linked
+        t_count = Counter(t_idx_arr)
+        edges = [(2 * i, 2 * i + 1) for i, t in enumerate(t_idx_arr) if t_count[t] == 1]
 
         # mention minting: first-occurrence dense ids
         mid_of: dict[str, int] = {}
@@ -286,8 +120,9 @@ def align_graph_triples(typed: DataFrame, model, config: PipelineConfig) -> Data
                 mid_of[txt] = len(mid_of)
             mids.append(mid_of[txt])
 
-        ent_ids, ent_texts, merged = _align_core(mids, texts, classes, emb_of, thr, mode)
-        link_pairs = _graph_core(ent_ids, ent_texts, t_idxs)
+        ent_ids, ent_texts, merged = align_doc(mids, texts, classes, emb_of, thr, mode)
+        ents = analyze_doc(ent_ids, ent_texts, edges)
+        topic = next((e for e in ents if e.is_topic), None)
 
         for i in range(len(g)):
             si, oi = 2 * i, 2 * i + 1
@@ -296,12 +131,13 @@ def align_graph_triples(typed: DataFrame, model, config: PipelineConfig) -> Data
                  mids[si], texts[si], classes[si], merged[si], ent_ids[si], ent_texts[si],
                  mids[oi], texts[oi], classes[oi], merged[oi], ent_ids[oi], ent_texts[oi])
             )
-        for (m_id, m_text, tp_id, tp_text) in link_pairs:
-            rows.append(
-                (url, "main_pair", None, None,
-                 None, None, None, None, m_id, m_text,
-                 None, None, None, None, tp_id, tp_text)
-            )
+        for e in ents:
+            if e.is_main and not e.is_topic:
+                rows.append(
+                    (url, "main_pair", None, None,
+                     None, None, None, None, e.entity_id, e.entity_text,
+                     None, None, None, None, topic.entity_id, topic.entity_text)
+                )
 
     cols = [
         "url", "row_type", "t_idx", "relation",
@@ -312,8 +148,7 @@ def align_graph_triples(typed: DataFrame, model, config: PipelineConfig) -> Data
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
         uniq = pd.unique(pd.concat([pdf["subject_text"], pdf["object_text"]], ignore_index=True))
         uniq = [u for u in uniq.tolist() if u is not None]
-        vecs = model.embed(uniq)
-        emb_of = {txt: np.asarray(vecs[i], dtype=np.float64) for i, txt in enumerate(uniq)}
+        emb_of = dict(zip(uniq, model.embed(uniq)))
         rows: list = []
         for url, g in pdf.groupby("url", sort=False):
             _one_doc(url, g, emb_of, rows)
@@ -338,6 +173,17 @@ def extracted_triples(fused: DataFrame) -> DataFrame:
         F.col("relation").alias("pred"),
         F.col("o_entity_text").alias("obj"),
         F.lit("extracted").alias("source"),
+    )
+
+
+def predicted_triples(links: DataFrame) -> DataFrame:
+    """LINKS_SCHEMA rows (status='ok') → (url, subj, pred, obj, source)."""
+    return links.filter(F.col("status") == "ok").select(
+        "url",
+        F.col("subject_text").alias("subj"),
+        F.col("relation").alias("pred"),
+        F.col("object_text").alias("obj"),
+        F.lit("predicted").alias("source"),
     )
 
 
@@ -371,11 +217,4 @@ def fused_kg(docs: DataFrame, model, config: PipelineConfig) -> DataFrame:
     fused = barrier(align_graph_triples(typed, model, config))
 
     links = link_main_pairs(fused, docs, model)
-    predicted = links.filter(F.col("status") == "ok").select(
-        "url",
-        F.col("subject_text").alias("subj"),
-        F.col("relation").alias("pred"),
-        F.col("object_text").alias("obj"),
-        F.lit("predicted").alias("source"),
-    )
-    return extracted_triples(fused).unionByName(predicted)
+    return extracted_triples(fused).unionByName(predicted_triples(links))

@@ -10,7 +10,9 @@ Spark shape:
   is a *broadcast kNN join* inside a pandas UDF — zero shuffle.
 - extraction runs in `mapInPandas`: one ModelClient batch call per
   Arrow batch (strictly better batching than the reference's
-  one-call-per-doc), JSON repair + validation per response.
+  one-call-per-doc); each response goes through
+  doc_kernel.parse_extraction (JSON repair + validation), the parse
+  the fused path shares.
 - invalid triplets land in a `valid=false` side-output instead of a
   log line.
 """
@@ -25,9 +27,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ctinexus_spark.config import PipelineConfig
-from ctinexus_spark.jsonrepair import parse_llm_json
+from ctinexus_spark.doc_kernel import parse_extraction
 from ctinexus_spark.tfidf import TfidfModel, clean_for_retrieval
-from ctinexus_spark.validation import valid_ie_triplet
 
 IE_SCHEMA = (
     "url string, t_idx int, subject string, relation string, object string, valid boolean"
@@ -81,41 +82,18 @@ def extract_triples(docs: DataFrame, model, text_col: str = "text_norm") -> Data
     """documents → (url, t_idx, subject, relation, object, valid).
 
     `model` is a ModelClient; its `.extract(texts)` gets one call per
-    Arrow batch. Responses ride through the JSON-repair cascade, then
-    the IE validation filter; rejects keep valid=false.
+    Arrow batch. Responses are parsed by doc_kernel.parse_extraction;
+    rejects keep valid=false.
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            texts = pdf[text_col].fillna("").tolist()
-            responses = model.extract(texts)
-            rows = []
-            for url, resp in zip(pdf["url"], responses):
-                try:
-                    payload = parse_llm_json(resp)
-                except ValueError:
-                    payload = {"triplets": []}
-                triplets = payload.get("triplets", [])
-                if not isinstance(triplets, list):
-                    triplets = []
-                for i, t in enumerate(triplets):
-                    ok = valid_ie_triplet(t)
-                    subj = t.get("subject") if isinstance(t, dict) else None
-                    obj = t.get("object") if isinstance(t, dict) else None
-                    if isinstance(subj, dict):
-                        subj = subj.get("text") or subj.get("mention_text")
-                    if isinstance(obj, dict):
-                        obj = obj.get("text") or obj.get("mention_text")
-                    rows.append(
-                        (
-                            url,
-                            i,
-                            subj if isinstance(subj, str) else None,
-                            t.get("relation") if isinstance(t, dict) else None,
-                            obj if isinstance(obj, str) else None,
-                            ok,
-                        )
-                    )
+            responses = model.extract(pdf[text_col].fillna("").tolist())
+            rows = [
+                (url, i, *triplet)
+                for url, resp in zip(pdf["url"].tolist(), responses)
+                for i, triplet in enumerate(parse_extraction(resp))
+            ]
             yield pd.DataFrame(
                 rows, columns=["url", "t_idx", "subject", "relation", "object", "valid"]
             )

@@ -2,24 +2,18 @@
 
 Reference semantics (graph_constructor.py:51-209,
 llm_processor.py:900-1015):
-- undirected adjacency per document over aligned entity ids; DFS
-  connected components (L2-L3);
-- degree = subject+object occurrence count over ALL of the document's
-  triples (named "outdegree" there, but counts both sides) (L4);
-- main node per component = first strict degree-argmax (L5), topic
-  node = main node of the largest component, first-largest wins (L6);
+- L2-L6 per-document components, degree, main and topic node — rules
+  defined once in doc_kernel.analyze_doc and shared with the fused
+  path;
 - one LLM call per non-topic main node proposing the edge
   main ↔ topic; answers that name neither orientation exactly become
   the "hallucination" sentinel (L7-L8).
 
-Order pins (SURVEY.md §7): components ordered by the first traversal
-appearance of any member; argmax ties break toward lower entity_id.
-
-Spark shape: component/degree/main/topic run per document inside one
-applyInPandas (union-find, no recursion — the reference's recursive
-DFS would blow the stack on big components); link calls batch per
-Arrow batch in mapInPandas; the guard is plain column logic on the
-model output.
+Spark shape: graph analysis runs per document through
+partitioning.grouped_map_stitched (many documents per Arrow batch);
+link calls batch per Arrow batch in mapInPandas (infer_links, shared
+with the fused path); the guard is plain column logic on the model
+output.
 """
 
 from __future__ import annotations
@@ -31,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
+from ctinexus_spark.doc_kernel import EntityStats, analyze_doc
 from ctinexus_spark.jsonrepair import parse_llm_json
 
 GRAPH_SCHEMA = (
@@ -42,89 +37,6 @@ LINKS_SCHEMA = (
     "url string, subject_entity_id int, subject_text string, relation string, "
     "object_entity_id int, object_text string, status string"
 )
-
-
-class _DSU:
-    def __init__(self):
-        self.parent: dict[int, int] = {}
-
-    def find(self, x: int) -> int:
-        root = x
-        while self.parent.setdefault(root, root) != root:
-            root = self.parent[root]
-        while self.parent[x] != root:  # path compression
-            self.parent[x], x = root, self.parent[x]
-        return root
-
-    def union(self, a: int, b: int):
-        ra, rb = self.find(a), self.find(b)
-        if ra != rb:
-            self.parent[max(ra, rb)] = min(ra, rb)
-
-
-def _analyze_doc(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Input: per-doc aligned node rows (url, pos, entity_id,
-    entity_text, t_idx, side). Output: one row per entity with
-    component/degree/main/topic flags."""
-    pdf = pdf.sort_values("pos", kind="stable")
-    url = pdf["url"].iloc[0]
-    # column extraction once — iterrows() is the slow path
-    eids = pdf["entity_id"].to_numpy()
-    poss = pdf["pos"].to_numpy()
-    tidxs = pdf["t_idx"].to_numpy()
-    sides = pdf["side"].tolist()
-    etexts = pdf["entity_text"].tolist()
-
-    first_pos: dict[int, int] = {}
-    text_of: dict[int, str] = {}
-    degree: dict[int, int] = {}
-    dsu = _DSU()
-
-    by_triple: dict[int, dict[str, int]] = {}
-    for i in range(len(pdf)):
-        e = int(eids[i])
-        if e not in first_pos:
-            first_pos[e] = int(poss[i])
-            text_of[e] = etexts[i]
-            degree[e] = 0
-        degree[e] += 1
-        by_triple.setdefault(int(tidxs[i]), {})[sides[i]] = e
-
-    for sides in by_triple.values():
-        if "subject" in sides and "object" in sides:
-            dsu.union(sides["subject"], sides["object"])
-
-    comp_members: dict[int, list[int]] = {}
-    for e in first_pos:
-        comp_members.setdefault(dsu.find(e), []).append(e)
-
-    # component ids in discovery order = min first_pos of members
-    comps = sorted(comp_members.values(), key=lambda ms: min(first_pos[m] for m in ms))
-
-    rows = []
-    mains: list[int] = []
-    for cid, members in enumerate(comps):
-        main = max(sorted(members), key=lambda m: (degree[m], -m))
-        mains.append(main)
-        for m in members:
-            rows.append((url, m, text_of[m], cid, len(members), degree[m], m == main, False))
-
-    topic = None
-    if comps:
-        # largest component, first-discovered wins ties
-        big_idx = max(range(len(comps)), key=lambda i: (len(comps[i]), -i))
-        topic = mains[big_idx]
-
-    out = pd.DataFrame(
-        rows,
-        columns=[
-            "url", "entity_id", "entity_text", "component_id",
-            "component_size", "degree", "is_main", "is_topic",
-        ],
-    )
-    if topic is not None:
-        out.loc[out["entity_id"] == topic, "is_topic"] = True
-    return out
 
 
 def analyze_graph(aligned_nodes: DataFrame, pre_grouped: bool = False) -> DataFrame:
@@ -145,8 +57,19 @@ def analyze_graph(aligned_nodes: DataFrame, pre_grouped: bool = False) -> DataFr
     cols = aligned_nodes.select("url", "pos", "t_idx", "side", "entity_id", "entity_text")
 
     def _process(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [_analyze_doc(g) for _, g in pdf.groupby("url", sort=False)]
-        return pd.concat(outs, ignore_index=True)
+        rows = []
+        for url, g in pdf.groupby("url", sort=False):
+            g = g.sort_values("pos", kind="stable")
+            # a triple's edge joins the last subject and the last object
+            # node carrying its t_idx (documents sharing a url repeat it)
+            ends: dict[int, dict[str, int]] = {}
+            for i, (t, side) in enumerate(zip(g["t_idx"].tolist(), g["side"].tolist())):
+                ends.setdefault(t, {})[side] = i
+            edges = [(e["subject"], e["object"]) for e in ends.values()
+                     if "subject" in e and "object" in e]
+            ents = analyze_doc(g["entity_id"].tolist(), g["entity_text"].tolist(), edges)
+            rows.extend((url, *e) for e in ents)
+        return pd.DataFrame(rows, columns=["url", *EntityStats._fields])
 
     return grouped_map_stitched(
         cols, "url", _process, GRAPH_SCHEMA, assume_grouped=pre_grouped

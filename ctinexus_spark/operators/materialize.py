@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ctinexus_spark.operators.fused import predicted_triples
+
 
 def materialize_kg(
     aligned_nodes: DataFrame,
@@ -46,11 +48,4 @@ def materialize_kg(
     if predicted_links is None:
         return extracted
 
-    predicted = predicted_links.filter(F.col("status") == "ok").select(
-        "url",
-        F.col("subject_text").alias("subj"),
-        F.col("relation").alias("pred"),
-        F.col("object_text").alias("obj"),
-        F.lit("predicted").alias("source"),
-    )
-    return extracted.unionByName(predicted)
+    return extracted.unionByName(predicted_triples(predicted_links))

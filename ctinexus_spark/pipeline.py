@@ -44,6 +44,7 @@ def run_pipeline_checkpointed(
         extract_and_tag,
         extracted_triples,
         link_main_pairs,
+        predicted_triples,
     )
     from ctinexus_spark.operators.normalize import normalize_documents
 
@@ -71,14 +72,7 @@ def run_pipeline_checkpointed(
         spark, "kg_links", pairs_input,
         lambda fr: link_main_pairs(fr, docs, model), key="url",
     )
-    predicted = links.filter(F.col("status") == "ok").select(
-        "url",
-        F.col("subject_text").alias("subj"),
-        F.col("relation").alias("pred"),
-        F.col("object_text").alias("obj"),
-        F.lit("predicted").alias("source"),
-    )
-    return extracted_triples(fused).unionByName(predicted)
+    return extracted_triples(fused).unionByName(predicted_triples(links))
 
 
 @dataclass

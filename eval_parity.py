@@ -8,8 +8,26 @@ from __future__ import annotations
 
 import json
 
-from ctinexus_spark.evaluation import evaluate_parity
+from ctinexus_spark.demos import REFERENCE_DEMO_DIR
+from ctinexus_spark.evaluation import ANNOTATION_DIR, evaluate_parity
 from ctinexus_spark.session import build_session
+
+REFERENCE_DATA_NOTE = f"""
+## Results that need the reference checkout
+
+These read data from the CTINexus reference checkout, which is not
+shipped with this repository. Where it is missing they cannot
+be reproduced; the tests skip with a reason instead of passing empty.
+
+- EVAL parity (`python3 eval_parity.py`, the table above): the
+  annotated corpus at `{ANNOTATION_DIR}`.
+- `tests/test_parity.py`: the same annotated corpus.
+- `tests/test_demo_retrieval.py`: the 148-file demonstration corpus at
+  `{REFERENCE_DEMO_DIR}`.
+- `ie_demo_topk` in `tests/test_entry_contract.py`: the same
+  demonstration corpus (`demos.load_demo_corpus` raises
+  `FileNotFoundError` without it).
+"""
 
 
 def main() -> None:
@@ -41,6 +59,7 @@ def main() -> None:
             "ground truth; residual recall gaps are faithful reference\n"
             "behaviors (all-IOC clusters are deliberately unmerged;\n"
             "star-mode last-write-wins can split human-annotated groups).\n"
+            + REFERENCE_DATA_NOTE
         )
 
 

@@ -1,0 +1,284 @@
+"""Per-document kernel (ctinexus_spark/doc_kernel.py) semantics on plain
+lists — no Spark needed except for the last check, which pins the
+modular EA operator's Spark plumbing to the same kernel call."""
+
+import json
+import os
+import subprocess
+import sys
+
+import numpy as np
+from hypothesis import example, given
+from hypothesis import strategies as st
+
+from ctinexus_spark.doc_kernel import (
+    align_doc,
+    analyze_doc,
+    first_key_or_default,
+    parse_extraction,
+    parse_tagging,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+E1, E2, E3 = np.eye(3)
+
+
+def mint(texts):
+    """First-occurrence dense mention ids, as mint_mentions assigns them."""
+    ids: dict[str, int] = {}
+    return [ids.setdefault(t, len(ids)) for t in texts]
+
+
+def align(texts, classes, emb_of, mode="star", threshold=0.6):
+    return align_doc(mint(texts), texts, classes, emb_of, threshold, mode)
+
+
+# --- parsing --------------------------------------------------------------
+
+json_values = st.recursive(
+    st.none() | st.booleans() | st.integers() | st.floats(allow_nan=False) | st.text(max_size=8),
+    lambda inner: st.lists(inner, max_size=4)
+    | st.dictionaries(
+        st.sampled_from(["triplets", "tagged_triples", "subject", "relation",
+                         "object", "text", "mention_text", "class"]),
+        inner, max_size=4,
+    ),
+    max_leaves=20,
+)
+
+
+@given(st.text(max_size=300) | json_values.map(json.dumps))
+@example("[]")
+@example("null")
+@example('"x"')
+@example('{"triplets": [1, null, {"subject": {"text": 5}, "relation": 7, "object": "o"}]}')
+@example('{"tagged_triples": [[], {"subject": "s", "object": {"class": {}}}]}')
+def test_parsers_never_raise(resp):
+    """Model output is arbitrary text; a response that is not a JSON
+    object with the expected shape yields rejects or nothing, never an
+    exception that would fail the whole Arrow task."""
+    for row in parse_extraction(resp):
+        assert len(row) == 4
+        assert all(v is None or isinstance(v, str) for v in row[:3])
+    for row in parse_tagging(resp):
+        assert len(row) == 6
+        assert isinstance(row[1], str) and isinstance(row[4], str)
+
+
+def test_non_object_payloads_have_no_triplets():
+    for resp in ("[]", "null", '"x"', "5", None):
+        assert parse_extraction(resp) == []
+        assert parse_tagging(resp) == []
+    # a dict response is its own payload, as parse_llm_json passes it through
+    one = {"triplets": [{"subject": "a", "relation": "r", "object": "b"}]}
+    assert [row[:3] for row in parse_extraction(one)] == [("a", "r", "b")]
+
+
+def test_extraction_rows_keep_rejects_and_coerce_text():
+    resp = json.dumps({"triplets": [
+        {"subject": {"text": "APT29"}, "relation": "uses", "object": "Mimikatz"},
+        {"subject": {"text": 5}, "relation": "uses", "object": "x"},
+        {"subject": "a", "relation": "", "object": "b"},
+        {"subject": "a", "relation": 7, "object": "b"},
+        "not a triplet",
+    ]})
+    # a non-string relation (always a reject) would fail the string column
+    assert parse_extraction(resp) == [
+        ("APT29", "uses", "Mimikatz", True),
+        (None, "uses", "x", True),
+        ("a", "", "b", False),
+        ("a", None, "b", False),
+        (None, None, None, False),
+    ]
+
+
+def test_tagging_class_fallbacks():
+    resp = json.dumps({"triplets": [
+        {"subject": {"text": "A", "class": {"Malware": 1, "Tool": 2}},
+         "relation": "r", "object": {"text": "B"}},
+        {"subject": {"text": "C", "class": ""}, "relation": "r", "object": "D"},
+    ]})
+    assert parse_tagging(resp) == [
+        ("A", "Malware", "r", "B", "default", True),
+        ("C", "default", "r", None, "default", False),
+    ]
+    assert first_key_or_default({}) == "default"
+    assert first_key_or_default("Tool") == "Tool"
+
+
+# --- EA ---------------------------------------------------------------------
+
+
+def test_canonical_frequency_argmax_ties_to_lowest_mention_id():
+    emb = {"B": E1, "A": E1, "X": E2, "Y": E3}
+    # B and A once each: tie → B (mention id 0)
+    ids, texts, merged = align(["B", "X", "A", "Y"], ["M", "T", "M", "U"], emb)
+    assert texts == ["B", "X", "B", "Y"]
+    assert ids[0] == ids[2]
+    assert merged[0] == ["A"] and merged[2] == ["B"]
+    # A twice: frequency wins over the lower id
+    _, texts, _ = align(["B", "X", "A", "Y", "A", "Y"], ["M", "T", "M", "U", "M", "U"], emb)
+    assert texts[:5] == ["A", "X", "A", "Y", "A"]
+
+
+def test_entity_ids_in_class_first_appearance_order():
+    emb = {t: E1 for t in "abcd"}
+    ids, _, _ = align(["a", "b", "c", "d"], ["M", "T", "T", "M"], emb, threshold=2.0)
+    assert ids == [0, 2, 3, 1]
+
+
+def test_star_sets_vs_cc_on_chain_geometry():
+    from ctinexus_spark.entry_queries import CHAIN_TERMS, chain_embed_overrides
+
+    emb = {t: np.asarray(v) for t, v in chain_embed_overrides().items()}
+    emb["x"] = E3
+    nodes = [*CHAIN_TERMS, "x"]  # join, merge, sort: mention ids 0, 1, 2
+    classes = ["Operator"] * 3 + ["Tool"]
+    # star-sets {join,merge}, {join,merge,sort}, {merge,sort}; last write wins
+    ids, texts, merged = align(nodes, classes, emb, mode="star")
+    assert ids == [1, 2, 2, 3]
+    assert texts == ["join", "merge", "merge", "x"]
+    assert merged[:3] == [["merge", "sort"], ["sort"], ["merge"]]
+    # connected components: one entity named by the lowest id
+    ids, texts, merged = align(nodes, classes, emb, mode="cc")
+    assert ids == [0, 0, 0, 1]
+    assert texts == ["join", "join", "join", "x"]
+    assert merged[1] == ["join", "sort"]
+
+
+def test_partial_ioc_cluster_stays_merged():
+    emb = {"10.0.0.1": E1, "evil host": E1}
+    ids, texts, merged = align(["10.0.0.1", "evil host"], ["IP", "IP"], emb)
+    assert ids == [0, 0]
+    assert texts == ["10.0.0.1", "10.0.0.1"]
+    assert merged == [["evil host"], ["10.0.0.1"]]
+
+
+def test_all_ioc_cluster_unmerges_with_fresh_ids():
+    emb = {"10.0.0.1": E1, "10.0.0.2": E1, "tool": E2}
+    ids, texts, merged = align(["10.0.0.1", "tool", "10.0.0.2"], ["IP", "T", "IP"], emb)
+    assert texts == ["10.0.0.1", "tool", "10.0.0.2"]
+    assert ids == [0, 1, 2]  # the split-off member gets an id after every cluster
+    assert merged == [[], [], []]
+
+
+# --- LP ---------------------------------------------------------------------
+
+
+def by_id(ents):
+    return {e.entity_id: e for e in ents}
+
+
+def test_topic_is_largest_component_first_discovered_on_ties():
+    # two size-2 components; the one discovered first holds the HIGHER ids
+    g = by_id(analyze_doc([3, 4, 0, 1], ["d", "e", "a", "b"], [(0, 1), (2, 3)]))
+    assert g[3].component_id == 0 and g[0].component_id == 1
+    assert g[3].is_main and g[0].is_main  # degree ties → lower entity id
+    assert g[3].is_topic and not g[0].is_topic
+    # a strictly larger later component wins
+    g = by_id(analyze_doc([3, 4, 0, 1, 0, 2], list("deabac"), [(0, 1), (2, 3), (4, 5)]))
+    assert g[0].is_topic and g[0].degree == 2 and g[0].component_size == 3
+    assert [e for e in g.values() if e.is_topic] == [g[0]]
+
+
+def test_self_loop_counts_degree_twice():
+    g = by_id(analyze_doc([0, 0, 1, 2], ["s", "s", "o", "t"], [(0, 1), (2, 3)]))
+    assert g[0].degree == 2
+    assert g[0].component_size == 1
+    assert g[1].component_id == g[2].component_id != g[0].component_id
+
+
+def test_only_listed_edges_link():
+    # nodes 2 and 3 share no edge: each is its own component, and every
+    # occurrence still counts toward degree
+    g = by_id(analyze_doc([0, 1, 0, 2], list("abac"), [(0, 1)]))
+    assert g[0].component_id == g[1].component_id == 0
+    assert g[2].component_id == 1 and g[2].is_main
+    assert g[0].degree == 2 and g[0].is_topic
+
+
+# --- tooling ----------------------------------------------------------------
+
+
+def test_kernel_import_does_not_load_pyspark():
+    code = (
+        "import sys, ctinexus_spark.doc_kernel\n"
+        "loaded = sorted(m for m in sys.modules if m.split('.')[0] == 'pyspark')\n"
+        "assert not loaded, loaded\n"
+    )
+    subprocess.run([sys.executable, "-c", code], cwd=REPO, check=True)
+
+
+# --- Spark plumbing == kernel -------------------------------------------------
+
+
+def test_align_entities_matches_kernel_per_url(spark, cti_documents):
+    """align_entities' Spark output equals the collected input grouped
+    by url and fed through the same align_doc call."""
+    from ctinexus_spark.config import PipelineConfig
+    from ctinexus_spark.model import StubModel
+    from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
+    from ctinexus_spark.operators.et import tag_triples
+    from ctinexus_spark.operators.ie import extract_triples
+    from ctinexus_spark.operators.normalize import normalize_documents
+
+    cfg = PipelineConfig()
+    model = StubModel(cfg, alias_map={"Cozy Bear": "APT29"})
+    docs = normalize_documents(cti_documents, lang_filter="en")
+    typed = tag_triples(extract_triples(docs, model).filter("valid"), docs, model)
+    nodes = mint_mentions(typed)
+    emb = embed_mentions(nodes, model)
+
+    got = {
+        (r.url, r.pos, r.entity_id, r.entity_text, tuple(r.mention_merged))
+        for r in align_entities(nodes, emb, cfg).collect()
+    }
+
+    expected = set()
+    for url, g in nodes.join(emb, "mention_text", "left").toPandas().groupby("url"):
+        g = g.sort_values("pos")
+        texts = g["mention_text"].tolist()
+        ids, ent_texts, merged = align_doc(
+            g["mention_id"].tolist(), texts, g["mention_class"].tolist(),
+            dict(zip(texts, g["embedding"])), cfg.similarity_threshold, cfg.ea_cluster_mode,
+        )
+        expected |= {
+            (url, p, i, t, tuple(m))
+            for p, i, t, m in zip(g["pos"].tolist(), ids, ent_texts, merged)
+        }
+    assert got and got == expected
+
+
+def test_duplicate_url_linking_per_path(spark):
+    """Two documents under one url repeat each other's t_idx values. The
+    modular path links a repeated t_idx's last subject with its last
+    object; the fused path links none of the triples that repeat a
+    t_idx. Both paths' predicted links are pinned here until
+    duplicate-url semantics are settled."""
+    from conftest import CTI_DOC_1, CTI_DOC_2
+
+    from ctinexus_spark.config import PipelineConfig
+    from ctinexus_spark.model import StubModel
+    from ctinexus_spark.operators.fused import fused_kg
+    from ctinexus_spark.operators.normalize import normalize_documents
+    from ctinexus_spark.pipeline import run_pipeline
+
+    url = "https://threats.example.com/akira"
+    df = spark.createDataFrame(
+        [(url, CTI_DOC_1, "en"), (url, CTI_DOC_2, "en")],
+        "url string, text string, lang string",
+    )
+    cfg = PipelineConfig()
+
+    def predicted(kg):
+        return {(r.subj, r.obj) for r in kg.filter("source = 'predicted'").collect()}
+
+    modular = run_pipeline(df, StubModel(cfg), cfg).kg
+    assert predicted(modular) == {("192.168.1.100", "malicious.com")}
+
+    fused = fused_kg(normalize_documents(df, lang_filter="en"), StubModel(cfg), cfg)
+    topic = "Victims in the financial sector"
+    assert predicted(fused) == {
+        (m, topic) for m in ("192.168.1.100", "CVE-2023-1234", "attacker@malicious.com",
+                             "evil-domain.example.com", "malicious.com")
+    }
