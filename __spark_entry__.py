@@ -36,20 +36,17 @@ WINDOW = 50
 # Queries whose semantics or backing operators changed in the current
 # round. Must be a subset of the current window (tested).
 _CHANGED_R05 = [
-    "part_pagerank", "part_kcore", "dedup_incremental", "simhash",
-    "simhash_candidates", "dedup_clusters_cc", "dedup_clusters_stars",
-    "dedup_keeplist", "semantic_dedup", "kg_global_entities",
-    "hll_distinct", "cms_topk", "bloom_probe", "bm25_topk",
-    "doc_len_quantiles", "part_communities", "cluster_topics",
-    "part_reach", "part_clustering", "mmr_topk", "source_drift",
-    "event_asof_purchase", "part_ppr", "click_attribution",
-    "event_rollup_cascade", "kmv_distinct", "kmv_overlap", "part_truss",
-    "jaccard_pairs", "event_funnel", "part_linkpred", "cohort_retention",
-    "part_sssp", "hybrid_topk", "event_bursts", "part_walks",
-    "kg_entity_cooc", "event_twa", "revenue_cube", "idle_customers",
-    "event_decay", "event_transitions", "event_cusum", "order_zorder",
-    "user_event_pivot", "user_event_unpivot", "part_name_fuzzy",
-    "event_props_k",
+    "dedup_incremental", "simhash", "simhash_candidates",
+    "dedup_clusters_cc", "dedup_clusters_stars", "dedup_keeplist",
+    "semantic_dedup", "kg_global_entities", "hll_distinct", "cms_topk",
+    "bloom_probe", "bm25_topk", "doc_len_quantiles", "cluster_topics",
+    "mmr_topk", "source_drift", "event_asof_purchase",
+    "click_attribution", "event_rollup_cascade", "kmv_distinct",
+    "kmv_overlap", "jaccard_pairs", "event_funnel", "cohort_retention",
+    "hybrid_topk", "event_bursts", "kg_entity_cooc", "event_twa",
+    "revenue_cube", "idle_customers", "event_decay",
+    "event_transitions", "event_cusum", "order_zorder",
+    "user_event_pivot", "user_event_unpivot", "event_props_k",
 ]
 
 CHANGED_THIS_ROUND = [
@@ -76,8 +73,6 @@ CHANGED_THIS_ROUND = [
     "dedup_keeplist",
     "dedup_incremental",
     "semantic_dedup",
-    # label_propagation pre-partitioned edge table:
-    "part_communities",
     # operator-internal rewrites (same integers, new dataflow):
     "jaccard_pairs",
     "shingle_overlap",
@@ -88,28 +83,28 @@ CHANGED_THIS_ROUND = [
 # Per-round rotation fronts (the driver window = first WINDOW names of
 # rotation + natural-order fill). r01-r03 used the natural order — an
 # empty rotation. Keep every past round's list: the union-coverage
-# test replays them.
+# test replays them. Queries deleted since (the part_* graph-analytics
+# and mm_* multimodal rows) are dropped from the lists, so a recorded
+# window now fills its freed slots in natural order.
 ROTATION_HISTORY: dict[str, list[str]] = {
     "r01": [],
     "r02": [],
     "r03": [],
     "r04": [
-        "bpe_merges", "token_pmi", "dup_grams", "part_pagerank",
-        "part_kcore", "semantic_dedup", "cdc_chunks", "langid",
-        "event_sessions_native", "dedup_incremental", "table_profile",
-        "pack_plan", "simhash", "simhash_candidates", "ivf_assign",
-        "ivf_topk", "dedup_clusters_cc", "dedup_keeplist",
-        "quality_gate", "text_dedupe", "tpch_q1", "revenue_join",
-        "region_revenue", "user_top_events", "event_sessions",
-        "event_type_rollup", "order_percentiles", "revenue_rollup",
-        "event_leadlag", "part_triangles", "stratified_sample",
-        "mixture_plan", "decontaminate", "vocab_topk", "line_dedup",
-        "domain_cap", "dsir_features", "rand_proj", "pq_codes",
-        "pq_adc_topk", "ivf_pq_topk",
+        "bpe_merges", "token_pmi", "dup_grams", "semantic_dedup",
+        "cdc_chunks", "langid", "event_sessions_native",
+        "dedup_incremental", "table_profile", "pack_plan", "simhash",
+        "simhash_candidates", "ivf_assign", "ivf_topk",
+        "dedup_clusters_cc", "dedup_keeplist", "quality_gate",
+        "text_dedupe", "tpch_q1", "revenue_join", "region_revenue",
+        "user_top_events", "event_sessions", "event_type_rollup",
+        "order_percentiles", "revenue_rollup", "event_leadlag",
+        "stratified_sample", "mixture_plan", "decontaminate",
+        "vocab_topk", "line_dedup", "domain_cap", "dsir_features",
+        "rand_proj", "pq_codes", "pq_adc_topk", "ivf_pq_topk",
     ],
     # round 5: the changed set first, then the rows whose only greens
-    # date to r01-r03 (oldest coverage), then the r04 KG block —
-    # exactly WINDOW names, so the window is fully explicit this round.
+    # date to r01-r03 (oldest coverage), then the r04 KG block.
     "r05": _CHANGED_R05 + [
         # url_ops leads the fill: its only green is this round's window
         # (union coverage breaks if it slips past WINDOW as the changed
@@ -122,8 +117,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "redact_pii", "fingerprints", "bpe_tokens", "winnow_fp",
         "dedup_exact", "minhash", "lsh_bands", "lsh_candidates",
         "shingle_overlap", "emb_cosine_pairs", "ann_topk",
-        "lsh_buckets", "lsh_topk", "knn_vote", "mm_metadata",
-        "mm_frame_plan",
+        "lsh_buckets", "lsh_topk", "knn_vote",
         # ea_entities_merged / ea_entities_cc / ie_demo_topk /
         # ea_ioc_unmerge / lp_links_flaky / kg_fused / lp_split_graph
         # rotated out to make room for the sketch / retrieval /
@@ -134,15 +128,14 @@ ROTATION_HISTORY: dict[str, list[str]] = {
     # round 6 (optimization): the changed set first, then the
     # verification-refresh fill (round-5 VERDICT #1) — the queries
     # whose only greens date to r01-r03, then three of the stalest r04
-    # rows the verdict named. 22 + 25 + 3 = exactly WINDOW names.
+    # rows the verdict named.
     "r06": CHANGED_THIS_ROUND + [
         "doc_text_norm", "ie_triples", "ie_counts", "et_typed",
         "token_stats", "quality", "lang_features", "gopher_rules",
         "repetition_ratios", "lm_scores", "doc_chunks", "redact_pii",
         "fingerprints", "bpe_tokens", "dedup_exact", "minhash",
         "lsh_bands", "lsh_candidates", "emb_cosine_pairs", "ann_topk",
-        "lsh_buckets", "lsh_topk", "knn_vote", "mm_metadata",
-        "mm_frame_plan",
+        "lsh_buckets", "lsh_topk", "knn_vote",
         "tpch_q1", "ivf_topk", "pq_adc_topk",
     ],
 }

@@ -1,6 +1,6 @@
 """Optimization-round instrumentation (guide §1): per-stage noop-sink
 timings and .explain("formatted") captures for the expensive bench
-queries. NOT part of the driver contract — bench.py stays frozen.
+queries (bench.py's headline list). Not part of the query contract.
 
 Usage:
   python3 bench_extra.py stages          # per-stage timings, kg chain
@@ -24,6 +24,7 @@ _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:
     sys.path.insert(0, _REPO)
 
+from bench import _headline_queries  # noqa: E402
 from ctinexus_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -58,22 +59,9 @@ def _noop_time(spark, label, df_fn, reps=3):
     return med
 
 
-def _bench_queries():
-    from ctinexus_spark import dataset_queries, entry_queries
-
-    q = {
-        "kg_pipeline": entry_queries.q_kg_fused,
-        "kg_modular": entry_queries.q_kg_triples,
-        "ie_triples": entry_queries.q_ie_triples,
-        "lp_graph": entry_queries.q_lp_graph,
-    }
-    q.update(dataset_queries.BENCH_QUERIES)
-    return q
-
-
 def cmd_q(names, reps=3):
     spark = _spark()
-    qs = _bench_queries()
+    qs = _headline_queries()
     for n in names:
         spark.sparkContext.setJobDescription(f"bench_extra:{n}")
         _noop_time(spark, n, lambda n=n: qs[n](spark, SF_DIR), reps=reps)
@@ -128,7 +116,7 @@ def cmd_stages():
 def cmd_plans(names):
     os.makedirs(os.path.join(_REPO, "plans", "r06"), exist_ok=True)
     spark = _spark()
-    qs = _bench_queries()
+    qs = _headline_queries()
     suffix = os.environ.get("PLAN_SUFFIX", "before")
     for n in names:
         df = qs[n](spark, SF_DIR)
@@ -147,7 +135,7 @@ def cmd_ab(a, b, reps=4):
     """Interleaved A/B (CLAUDE.md drift protocol): alternate the two
     queries rep times, report medians + ratio."""
     spark = _spark()
-    qs = _bench_queries()
+    qs = _headline_queries()
     times = {a: [], b: []}
     for rep in range(1 + reps):  # rep 0 = warm-up, discarded
         for n in (a, b):

@@ -17,8 +17,6 @@ Families:
                   (operators/similarity.py); JL projection, PQ
                   encode/ADC + IVF-PQ with trained per-subspace
                   codebooks (operators/quantize.py)
-- multimodal    : binary metadata + frame-sample plans over binary
-                  columns synthesized from text (operators/multimodal)
 - url ops       : normalize/validate/domain (text/urls.py)
 - classical     : TPC-H-style agg + join + window/sessionization
                   (the classical-operator checklist of SURVEY.md §2.7)
@@ -303,31 +301,6 @@ def q_ivf_pq_topk(spark, sf_dir):
     return ivf_pq_topk(emb, emb.filter(F.col("vec_id") < 10))
 
 
-# --- multimodal plumbing (binary columns synthesized from text so the
-# driver tables can oracle-check the schema/metadata path; the codec
-# itself stays behind the honest stub in operators/multimodal.py) ----
-
-
-def q_mm_metadata(spark, sf_dir):
-    from ctinexus_spark.operators.multimodal import media_metadata
-
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.col("text"), "UTF-8").alias("content"),
-    )
-    return media_metadata(media)
-
-
-def q_mm_frame_plan(spark, sf_dir):
-    from ctinexus_spark.operators.multimodal import frame_sample_plan
-
-    media = _docs(spark, sf_dir).select(
-        F.col("doc_id").alias("media_id"),
-        (F.col("n_chars").cast("double") / F.lit(100.0)).alias("duration_sec"),
-    )
-    return frame_sample_plan(media, fps=0.2)
-
-
 def q_url_ops(spark, sf_dir):
     """URL normalize/validate/domain (T8) over synthesized URLs — half
     with an explicit scheme (mixed case host), half scheme-less (which
@@ -547,81 +520,6 @@ def q_event_leadlag(spark, sf_dir):
     )
 
 
-def q_part_triangles(spark, sf_dir):
-    """Triangle counts over the part co-occurrence graph (parts
-    sharing an order are connected) — degree-ordered orientation, the
-    arboricity-bounded MapReduce triangle algorithm
-    (graph/analytics.py)."""
-    from ctinexus_spark.graph.analytics import triangle_counts
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return triangle_counts(edges)
-
-
-def _shipment_edges(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_suppkey", "l_partkey")
-    return li.select(
-        F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-        F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"),
-    )
-
-
-def q_part_pagerank(spark, sf_dir):
-    """PageRank over the supplier→part shipment graph (who supplies
-    what; ranks parts by their DISTINCT supplier in-links — duplicate
-    edges collapse, so shipment multiplicity deliberately does not
-    weight the edge). Oracle-grade since round 5: pagerank_pinned
-    left-folds both float sums in explicit (source / vertex) order, so
-    the 5-round ranks are bit-exact against the unrolled DuckDB twin
-    (list_sum(list(x ORDER BY k)) is the same strict fold) — full
-    double precision, no rounding column. The throughput variant
-    (shuffle-order sums, identical algebra to 1e-9 by
-    tests/test_graph_and_skew.py) runs as bench's graph_pagerank."""
-    from ctinexus_spark.graph.analytics import pagerank_pinned
-
-    return pagerank_pinned(_shipment_edges(spark, sf_dir), iterations=5)
-
-
-def q_graph_pagerank_bench(spark, sf_dir):
-    """Bench twin of part_pagerank through the unpinned (shuffle-sum)
-    pagerank() — the production throughput path."""
-    from ctinexus_spark.graph.analytics import pagerank
-
-    return pagerank(_shipment_edges(spark, sf_dir), iterations=5)
-
-
-def q_part_kcore(spark, sf_dir):
-    """80-core of the part co-occurrence graph (parts sharing an
-    order) — the dense-cluster extraction peel; at sf0.01 the peel
-    cascades 143 parts away (degrees run 42-206, so k=80 bites without
-    collapsing the graph). Integer output, deterministic; oracle-grade
-    since round 5 via a DuckDB WITH RECURSIVE peel (each recursion step
-    re-derives degrees over the working edge set and drops below-k
-    endpoints; the fixpoint iteration is extracted by max(iter));
-    exact peel semantics additionally pinned by
-    tests/test_graph_and_skew.py."""
-    from ctinexus_spark.graph.analytics import k_core
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return k_core(edges, k=80)
-
-
 def q_event_asof_purchase(spark, sf_dir):
     """As-of join: every event tagged with the user's most recent
     purchase at-or-before its timestamp — the trade/quote primitive
@@ -707,81 +605,6 @@ def q_event_rollup_cascade(spark, sf_dir):
     return time_rollup(ev, ts="ts", value="value")
 
 
-def q_part_truss(spark, sf_dir):
-    """4-truss of the part co-occurrence graph restricted to parts
-    < 300 (2689 edges at sf0.01; supports run 1-9 so k=4 peels a real
-    cascade, 2689 → 617 edges) — edge-level cohesion, strictly
-    stronger than the k-core. Iterative triangle-support peel
-    (graph/analytics.k_truss); oracle = WITH RECURSIVE re-deriving
-    per-edge supports from uncorrelated triangle enumerations over
-    the working edge table each step (correlated per-edge subqueries
-    do NOT decorrelate in DuckDB — measured timeout)."""
-    from ctinexus_spark.graph.analytics import k_truss
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    ).filter(F.col("l_partkey") < 300)
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return k_truss(edges, k=4)
-
-
-def _ktruss_sql(k: int = 4, max_part: int = 300) -> str:
-    """Recursive k-truss twin: per step, per-edge triangle supports
-    come from three UNCORRELATED copies of the a<b<c triangle
-    enumeration over the working table (multiple recursive references
-    + aggregates are legal in DuckDB 1.0); termination = the survivor
-    count equals the working count; final NOT EXISTS guard mirrors the
-    _kcore_sql empty-truss convention."""
-
-    def sup(srctbl: str) -> str:
-        tri = (
-            f"SELECT e1.u AS a, e1.v AS b, e2.v AS c "
-            f"FROM {srctbl} e1 JOIN {srctbl} e2 ON e1.v = e2.u "
-            f"JOIN {srctbl} e3 ON e3.u = e1.u AND e3.v = e2.v"
-        )
-        return f"""(
-  SELECT u, v, count(*) AS s FROM (
-    SELECT t.a AS u, t.b AS v FROM ({tri}) t
-    UNION ALL SELECT t.a, t.c FROM ({tri}) t
-    UNION ALL SELECT t.b, t.c FROM ({tri}) t
-  ) GROUP BY u, v
-)"""
-
-    thresh = k - 2
-    return f"""
-WITH RECURSIVE co AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < {max_part} AND b.l_partkey < {max_part}
-),
-peel(iter, u, v) AS (
-  SELECT 0, u, v FROM co
-  UNION ALL
-  SELECT c.iter + 1, c.u, c.v
-  FROM peel c JOIN {sup('peel')} sup ON sup.u = c.u AND sup.v = c.v
-  WHERE sup.s >= {thresh}
-    AND (SELECT count(*) FROM peel)
-        > (SELECT count(*) FROM {sup('peel')} WHERE s >= {thresh})
-),
-fe AS (SELECT u, v FROM peel WHERE iter = (SELECT max(iter) FROM peel)),
-fs AS (
-  SELECT c.u, c.v, CAST(coalesce(sup.s, 0) AS BIGINT) AS support
-  FROM fe c LEFT JOIN {sup('fe')} sup ON sup.u = c.u AND sup.v = c.v
-)
-SELECT u, v, support FROM fs
-WHERE NOT EXISTS (SELECT 1 FROM fs WHERE support < {thresh})
-"""
-
-
 def q_source_drift(spark, sf_dir):
     """Per-source distribution drift: total-variation distance between
     each source's token distribution and the corpus distribution — the
@@ -799,53 +622,6 @@ def q_source_drift(spark, sf_dir):
     return distribution_drift(toks, "source", "token").select(
         F.col("group").alias("source"), "n_tokens", "tv_dist"
     )
-
-
-def q_part_ppr(spark, sf_dir):
-    """Personalized PageRank from two seed suppliers over the
-    shipment graph — the "entities related to X" relevance ranking on
-    a KG (random-walk-with-restart proximity). Same bit-exact
-    pinned-fold machinery as part_pagerank with the restart vector
-    uniform over the seeds; twin = _pagerank_sql(seeds=...) with the
-    personalized recurrence unrolled."""
-    from ctinexus_spark.graph.analytics import pagerank_pinned
-
-    return pagerank_pinned(
-        _shipment_edges(spark, sf_dir), iterations=5, seeds=["s1", "s7"]
-    )
-
-
-def q_part_reach(spark, sf_dir):
-    """4-hop reachability from two seed suppliers over the undirected
-    supplier↔part shipment graph — the k-hop neighborhood / blast-
-    radius query a KG user runs around an entity. Fixed hop budget ⇒
-    zero convergence actions; frontier BFS (graph/analytics.py), one
-    equi-join + distinct + anti-join per hop. Oracle: WITH RECURSIVE
-    walk with UNION (distinct) working-table semantics + min(dist) —
-    integer/string-only output, hash-exact."""
-    from ctinexus_spark.graph.analytics import bfs_distances
-
-    return bfs_distances(_shipment_edges(spark, sf_dir), seeds=["s1", "s7"], hops=4)
-
-
-def q_part_clustering(spark, sf_dir):
-    """Local clustering coefficient over the part co-occurrence graph
-    (parts sharing an order) — transitivity separates organic dense
-    clusters from hub-spoke stars. 2·T/(d·(d−1)) as a single IEEE
-    division of exact integer-valued doubles (token_pmi fixed-chain
-    pattern) so the float column hash-matches the DuckDB twin."""
-    from ctinexus_spark.graph.analytics import clustering_coefficient
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("pa") < F.col("pb"))
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return clustering_coefficient(edges)
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -1841,19 +1617,6 @@ SELECT query_id, n_label AS predicted_label FROM (
   FROM votes
 ) WHERE rk = 1
 """,
-    "mm_metadata": """
-SELECT CAST(doc_id AS VARCHAR) AS media_id,
-       'unknown' AS kind,
-       CAST(octet_length(encode(text)) AS BIGINT) AS n_bytes,
-       md5(text) AS digest
-FROM documents
-""",
-    "mm_frame_plan": """
-SELECT CAST(doc_id AS VARCHAR) AS media_id,
-       CAST(i AS DOUBLE) / 0.2 AS sample_ts_sec
-FROM documents,
-     unnest(range(0, greatest(1, CAST(floor((n_chars / 100.0) * 0.2) AS BIGINT)))) t(i)
-""",
     "url_ops": """
 WITH u AS (
   SELECT doc_id,
@@ -2004,41 +1767,6 @@ SELECT user_id, event_id,
          AS secs_since_prev
 FROM events
 """,
-    "part_triangles": """
-WITH e AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-deg AS (
-  SELECT x, count(*) AS d FROM (
-    SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e
-  ) GROUP BY x
-),
-w AS (
-  SELECT e.u, e.v, du.d AS du, dv.d AS dv
-  FROM e JOIN deg du ON e.u = du.x JOIN deg dv ON e.v = dv.x
-),
-o AS (
-  SELECT u AS s, v AS t, dv AS dt FROM w WHERE (du < dv) OR (du = dv AND u < v)
-  UNION ALL
-  SELECT v AS s, u AS t, du AS dt FROM w WHERE NOT ((du < dv) OR (du = dv AND u < v))
-),
-paths AS (
-  SELECT p1.s, p1.t AS t1, p1.dt AS d1, p2.t AS t2, p2.dt AS d2
-  FROM o p1 JOIN o p2 ON p1.s = p2.s
-  WHERE (p1.dt < p2.dt) OR (p1.dt = p2.dt AND p1.t < p2.t)
-),
-tri AS (
-  SELECT p.s, p.t1, p.t2 FROM paths p JOIN o ON o.s = p.t1 AND o.t = p.t2
-)
-SELECT vertex, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-  SELECT s AS vertex FROM tri
-  UNION ALL SELECT t1 AS vertex FROM tri
-  UNION ALL SELECT t2 AS vertex FROM tri
-) GROUP BY vertex
-""",
     "event_type_rollup": """
 SELECT event_type,
        CAST(count(*) AS BIGINT) AS n,
@@ -2129,71 +1857,6 @@ SELECT sv.grp AS source, g_tot.n_g AS n_tokens,
          / CAST(2 * g_tot.n_g * grand.nn AS DOUBLE) AS tv_dist
 FROM sv JOIN g_tot USING (grp), grand
 """,
-    # UNION (not UNION ALL) in the recursive term gives distinct
-    # working-table semantics: the walk table stays bounded by
-    # |V|·hops pairs instead of multiplying along paths; min(dist)
-    # collapses a vertex reached at several depths.
-    "part_reach": """
-WITH RECURSIVE e AS (
-  SELECT DISTINCT 's' || l_suppkey AS a, 'p' || l_partkey AS b FROM lineitem
-),
-und AS (
-  SELECT a, b FROM e UNION SELECT b AS a, a AS b FROM e
-),
-walk(v, dist) AS (
-  SELECT * FROM (VALUES ('s1', 0), ('s7', 0)) t(v, dist)
-  UNION
-  SELECT u.b, w.dist + 1 FROM walk w JOIN und u ON u.a = w.v WHERE w.dist < 4
-)
-SELECT v AS vertex, CAST(min(dist) AS INT) AS dist FROM walk GROUP BY v
-""",
-    # part_triangles' orientation chain + degrees, extended with the
-    # coefficient: one IEEE division of exact integer-valued doubles
-    # matches Spark bit-for-bit (token_pmi fixed-chain precedent).
-    "part_clustering": """
-WITH e AS (
-  SELECT DISTINCT least(a.l_partkey, b.l_partkey) AS u,
-                  greatest(a.l_partkey, b.l_partkey) AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-),
-deg AS (
-  SELECT x, count(*) AS d FROM (
-    SELECT u AS x FROM e UNION ALL SELECT v AS x FROM e
-  ) GROUP BY x
-),
-w AS (
-  SELECT e.u, e.v, du.d AS du, dv.d AS dv
-  FROM e JOIN deg du ON e.u = du.x JOIN deg dv ON e.v = dv.x
-),
-o AS (
-  SELECT u AS s, v AS t, dv AS dt FROM w WHERE (du < dv) OR (du = dv AND u < v)
-  UNION ALL
-  SELECT v AS s, u AS t, du AS dt FROM w WHERE NOT ((du < dv) OR (du = dv AND u < v))
-),
-paths AS (
-  SELECT p1.s, p1.t AS t1, p1.dt AS d1, p2.t AS t2, p2.dt AS d2
-  FROM o p1 JOIN o p2 ON p1.s = p2.s
-  WHERE (p1.dt < p2.dt) OR (p1.dt = p2.dt AND p1.t < p2.t)
-),
-tri AS (
-  SELECT p.s, p.t1, p.t2 FROM paths p JOIN o ON o.s = p.t1 AND o.t = p.t2
-),
-tc AS (
-  SELECT vertex, CAST(count(*) AS BIGINT) AS n_triangles FROM (
-    SELECT s AS vertex FROM tri
-    UNION ALL SELECT t1 AS vertex FROM tri
-    UNION ALL SELECT t2 AS vertex FROM tri
-  ) GROUP BY vertex
-)
-SELECT d.x AS vertex,
-       CAST(d.d AS BIGINT) AS degree,
-       CAST(coalesce(t.n_triangles, 0) AS BIGINT) AS n_triangles,
-       CAST(2 * coalesce(t.n_triangles, 0) AS DOUBLE)
-         / CAST(d.d * (d.d - 1) AS DOUBLE) AS clustering
-FROM deg d LEFT JOIN tc t ON t.vertex = d.x
-WHERE d.d >= 2
-""",
 }
 
 QUERIES = {
@@ -2226,8 +1889,6 @@ QUERIES = {
     "knn_vote": q_knn_vote,
     "ivf_assign": q_ivf_assign,
     "ivf_topk": q_ivf_topk,
-    "mm_metadata": q_mm_metadata,
-    "mm_frame_plan": q_mm_frame_plan,
     "url_ops": q_url_ops,
     "quality_gate": q_quality_gate,
     "text_dedupe": q_text_dedupe,
@@ -2241,11 +1902,6 @@ QUERIES = {
     "order_percentiles": q_order_percentiles,
     "revenue_rollup": q_revenue_rollup,
     "event_leadlag": q_event_leadlag,
-    "part_triangles": q_part_triangles,
-    "part_reach": q_part_reach,
-    "part_clustering": q_part_clustering,
-    "part_ppr": q_part_ppr,
-    "part_truss": q_part_truss,
     "source_drift": q_source_drift,
     "event_asof_purchase": q_event_asof_purchase,
     "click_attribution": q_click_attribution,
@@ -2260,8 +1916,6 @@ QUERIES = {
     "bpe_merges": q_bpe_merges,
     "token_pmi": q_token_pmi,
     "dup_grams": q_dup_grams,
-    "part_pagerank": q_part_pagerank,
-    "part_kcore": q_part_kcore,
     "semantic_dedup": q_semantic_dedup,
     "dedup_incremental": q_dedup_incremental,
     "table_profile": q_table_profile,
@@ -2418,127 +2072,6 @@ SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
 ) WHERE rank <= 5
 """
 QUERIES["ivf_pq_topk"] = q_ivf_pq_topk
-
-
-# --- iterative graph oracles (round 5) ----------------------------------
-# Both were `no_oracle` rows through round 4; the techniques that make
-# them hash-checkable: pagerank folds its two float sums in explicit
-# order on both engines (list_sum(list(x ORDER BY k)) == F.aggregate
-# over array_sort — strict left fold, verified at 2000 elements), and
-# k-core's integer peel is a DuckDB recursive CTE whose working table
-# carries the full surviving edge set per iteration.
-
-def _pagerank_sql(
-    iterations: int = 5, damping: float = 0.85, seeds: list | None = None
-) -> str:
-    """Unrolled-round DuckDB twin of pagerank_pinned over the
-    supplier→part shipment edges. ::DOUBLE casts everywhere — bare
-    DuckDB numeric literals are DECIMALs with exact arithmetic that
-    diverges from IEEE (verified: (1.0-0.85)/7 != the Python float).
-    seeds=[...] emits the PERSONALIZED recurrence: restart vector
-    uniform over the seed set (rank = (1−d)·p + d·(contrib + dang·p)),
-    with 1−d and 1/|S| computed in Python and embedded ({v!r}::DOUBLE,
-    BM25 precedent) to mirror pagerank_pinned's F.lit constants."""
-    if seeds is not None:
-        p_val = 1.0 / len(set(seeds))
-        in_list = ", ".join(f"'{s}'" for s in sorted(set(seeds)))
-        pcase = (
-            f"(CASE WHEN {{v}}.vertex IN ({in_list}) "
-            f"THEN {p_val!r}::DOUBLE ELSE 0.0::DOUBLE END)"
-        )
-        r0 = f"r0 AS (SELECT vertex, {pcase.format(v='verts')} AS rank FROM verts)"
-    else:
-        r0 = "r0 AS (SELECT vertex, 1.0::DOUBLE / (SELECT n FROM nn) AS rank FROM verts)"
-    parts = [
-        f"""e AS (SELECT DISTINCT 's' || l_suppkey AS s, 'p' || l_partkey AS t FROM lineitem),
-verts AS (SELECT s AS vertex FROM e UNION SELECT t FROM e),
-nn AS (SELECT count(*) AS n FROM verts),
-outd AS (SELECT s, count(*) AS od FROM e GROUP BY s),
-w AS (SELECT e.s, e.t, 1.0::DOUBLE / od AS w FROM e JOIN outd USING (s)),
-{r0}"""
-    ]
-    one_minus_d = 1.0 - float(damping)
-    for i in range(1, iterations + 1):
-        p = f"r{i - 1}"
-        if seeds is not None:
-            pv = pcase.format(v="v")
-            rank_expr = (
-                f"{one_minus_d!r}::DOUBLE * {pv}\n"
-                f"         + {damping}::DOUBLE * (coalesce(c.contrib, 0.0::DOUBLE)\n"
-                f"             + (SELECT dang FROM d{i}) * {pv})"
-            )
-        else:
-            rank_expr = (
-                f"(1.0::DOUBLE - {damping}::DOUBLE) / (SELECT n FROM nn)\n"
-                f"         + {damping}::DOUBLE * (coalesce(c.contrib, 0.0::DOUBLE)\n"
-                f"             + (SELECT dang FROM d{i}) / (SELECT n::DOUBLE FROM nn))"
-            )
-        parts.append(
-            f"""c{i} AS (
-  SELECT w.t AS vertex, list_sum(list(r.rank * w.w ORDER BY w.s)) AS contrib
-  FROM w JOIN {p} r ON r.vertex = w.s GROUP BY w.t
-),
-d{i} AS (
-  SELECT coalesce(list_sum(list(r.rank ORDER BY r.vertex)), 0.0::DOUBLE) AS dang
-  FROM {p} r LEFT JOIN outd o ON o.s = r.vertex WHERE o.s IS NULL
-),
-r{i} AS (
-  SELECT v.vertex,
-         {rank_expr} AS rank
-  FROM verts v LEFT JOIN c{i} c ON c.vertex = v.vertex
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f"\nSELECT vertex, rank FROM r{iterations}"
-    )
-
-
-def _kcore_sql(k: int = 80) -> str:
-    """DuckDB recursive peel over the part co-occurrence edges. The
-    recursive term sees only the PREVIOUS iteration's edges (standard
-    working-table semantics), recomputes degrees, and re-emits the
-    surviving edges tagged iter+1 — emitting nothing (terminating)
-    once no vertex is below k. If the peel ends because the survivors
-    were empty (core is empty), the max-iter edge set still contains
-    below-k vertices and the final NOT EXISTS guard returns zero rows."""
-    deg = (
-        "SELECT x, count(*) AS d FROM "
-        "(SELECT u AS x FROM peel UNION ALL SELECT v FROM peel) GROUP BY x"
-    )
-    return f"""
-WITH RECURSIVE co AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey
-  WHERE a.l_partkey < b.l_partkey
-),
-peel(iter, u, v) AS (
-  SELECT 0, u, v FROM co
-  UNION ALL
-  SELECT c.iter + 1, c.u, c.v
-  FROM peel c
-  WHERE EXISTS (SELECT 1 FROM ({deg}) WHERE d < {k})
-    AND c.u NOT IN (SELECT x FROM ({deg}) WHERE d < {k})
-    AND c.v NOT IN (SELECT x FROM ({deg}) WHERE d < {k})
-),
-final_edges AS (
-  SELECT u, v FROM peel WHERE iter = (SELECT max(iter) FROM peel)
-),
-final_deg AS (
-  SELECT x AS vertex, count(*) AS degree
-  FROM (SELECT u AS x FROM final_edges UNION ALL SELECT v FROM final_edges)
-  GROUP BY x
-)
-SELECT vertex, degree FROM final_deg
-WHERE NOT EXISTS (SELECT 1 FROM final_deg WHERE degree < {k})
-"""
-
-
-ORACLES["part_pagerank"] = _pagerank_sql(iterations=5, damping=0.85)
-ORACLES["part_ppr"] = _pagerank_sql(iterations=5, damping=0.85, seeds=["s1", "s7"])
-ORACLES["part_kcore"] = _kcore_sql(k=80)
-ORACLES["part_truss"] = _ktruss_sql(k=4, max_part=300)
 
 
 def _mmr_sql(k: int = 5, lam: float = 0.7, candidates: int = 20, nq: int = 8) -> str:
@@ -3011,60 +2544,6 @@ QUERIES["bm25_topk"] = q_bm25_topk
 QUERIES["doc_len_quantiles"] = q_doc_len_quantiles
 
 
-def q_part_communities(spark, sf_dir):
-    """Label-propagation communities over the (distinct) supplier→part
-    shipment graph, 4 synchronous rounds — the deterministic LPA
-    variant (most frequent neighbor label, ties to the smallest).
-    Fixed round count ⇒ ZERO driver syncs; the oracle is the same
-    recurrence unrolled in SQL. Output adds the community size."""
-    from ctinexus_spark.graph.analytics import label_propagation
-    from ctinexus_spark.partitioning import barrier
-
-    edges = _shipment_edges(spark, sf_dir).distinct()
-    labels = barrier(label_propagation(edges, rounds=4))
-    sizes = labels.groupBy("label").agg(
-        F.count("*").cast("bigint").alias("comm_size")
-    )
-    return labels.join(sizes, "label").select("vertex", "label", "comm_size")
-
-
-def _lpa_sql(rounds: int) -> str:
-    """DuckDB twin of q_part_communities: the LPA recurrence unrolled
-    `rounds` times (vote counts are integers; the argmax is the
-    lexicographic struct min — both engines agree exactly)."""
-    parts = [
-        """e AS (
-  SELECT DISTINCT 's' || l_suppkey AS a, 'p' || l_partkey AS b FROM lineitem
-),
-und AS (SELECT a, b FROM e UNION ALL SELECT b AS a, a AS b FROM e),
-l0 AS (SELECT DISTINCT a AS v, a AS label FROM und)"""
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""v{r} AS (
-  SELECT u.a AS v, l.label, CAST(count(*) AS BIGINT) AS cnt
-  FROM und u JOIN l{r - 1} l ON u.b = l.v GROUP BY u.a, l.label
-),
-l{r} AS (
-  SELECT v, (min(struct_pack(nc := -cnt, lb := label))).lb AS label
-  FROM v{r} GROUP BY v
-)"""
-        )
-    return (
-        "WITH "
-        + ",\n".join(parts)
-        + f""",
-cs AS (SELECT label, CAST(count(*) AS BIGINT) AS comm_size FROM l{rounds} GROUP BY label)
-SELECT l{rounds}.v AS vertex, l{rounds}.label, cs.comm_size
-FROM l{rounds} JOIN cs USING (label)
-"""
-    )
-
-
-ORACLES["part_communities"] = _lpa_sql(rounds=4)
-QUERIES["part_communities"] = q_part_communities
-
-
 def q_cluster_topics(spark, sf_dir):
     """Per-cluster topic signatures: IVF-cell document clusters
     labeled with their top-5 DISTINCTIVE 3-grams by lift ratio
@@ -3118,46 +2597,6 @@ FROM rk JOIN sz USING (cell) WHERE rank <= 5
 """
 
 QUERIES["cluster_topics"] = q_cluster_topics
-
-# headline bench additions (scale-path variants only)
-BENCH_QUERIES = {
-    "dedup_minhash_lsh": q_lsh_candidates,
-    "dedup_simhash_cand": q_simhash_candidates,
-    "dedup_clusters_cc": q_dedup_clusters_cc,
-    "dedup_shingle_verify": q_shingle_overlap,
-    "emb_neardup_lsh": q_emb_cosine_pairs,
-    "ann_lsh_topk": q_lsh_topk,
-    "text_quality": q_quality,
-    "text_gopher": q_gopher_rules,
-    "text_winnow_fp": q_winnow_fp,
-    "dedup_lines": q_line_dedup,
-    "decontaminate": q_decontaminate,
-    "tpch_q1": q_tpch_q1,
-    "dup_grams": q_dup_grams,
-    "token_pmi": q_token_pmi,
-    "graph_pagerank": q_graph_pagerank_bench,
-    "dedup_incremental": q_dedup_incremental,
-    # O(1)-state sketches (round 5): the cardinality/heavy-hitter
-    # profiles a 100 TB pipeline runs instead of exact distincts
-    "sketch_hll": q_hll_distinct,
-    "sketch_cms": q_cms_topk,
-    # zero-driver-sync iterative graph op (fixed-round LPA)
-    "graph_lpa": q_part_communities,
-    # temporal primitives (round 5): as-of carry + cascading rollup
-    "temporal_asof": q_event_asof_purchase,
-    "temporal_rollup": q_event_rollup_cascade,
-}
-
-
-def _bench_kg_global_entities(spark, sf_dir):
-    from ctinexus_spark import entry_queries
-
-    return entry_queries.q_kg_global_entities(spark, sf_dir)
-
-
-# the two cross-document flagships a 100 TB user runs daily (round-4
-# verdict #6): global entity resolution and incremental crawl admission
-BENCH_QUERIES["kg_global_entities"] = _bench_kg_global_entities
 
 
 def q_jaccard_pairs(spark, sf_dir):
@@ -3238,57 +2677,6 @@ FROM s0 LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
 QUERIES["event_funnel"] = q_event_funnel
 
 
-def q_part_linkpred(spark, sf_dir):
-    """Common-neighbor link prediction over the part co-occurrence
-    graph restricted to parts < 300 (the part_truss subgraph):
-    non-adjacent pairs with >= 5 shared neighbors, scored by
-    neighborhood Jaccard — unsupervised KG-completion / recommendation
-    shape (graph/analytics.link_prediction: wedge enumeration →
-    partial-agg pair counts → LEFT ANTI vs the edge set; jaccard one
-    IEEE division of integer-valued doubles). 270 rows at sf0.01."""
-    from ctinexus_spark.graph.analytics import link_prediction
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(
-            (F.col("pa") < F.col("pb")) & (F.col("pa") < 300) & (F.col("pb") < 300)
-        )
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return link_prediction(edges, min_common=5)
-
-
-ORACLES["part_linkpred"] = """
-WITH e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < 300 AND b.l_partkey < 300
-),
-und AS (SELECT u AS x, v AS y FROM e UNION ALL SELECT v AS x, u AS y FROM e),
-deg AS (SELECT x, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY x),
-wedges AS (
-  SELECT p.x AS u, r.x AS v, CAST(count(*) AS BIGINT) AS n_common
-  FROM und p JOIN und r ON p.y = r.y AND p.x < r.x
-  GROUP BY p.x, r.x HAVING count(*) >= 5
-),
-open_pairs AS (
-  SELECT w.* FROM wedges w LEFT JOIN e ON w.u = e.u AND w.v = e.v
-  WHERE e.u IS NULL
-)
-SELECT o.u AS a, o.v AS b, o.n_common, da.d AS deg_a, db.d AS deg_b,
-       CAST(o.n_common AS DOUBLE) / CAST(da.d + db.d - o.n_common AS DOUBLE) AS jaccard
-FROM open_pairs o JOIN deg da ON o.u = da.x JOIN deg db ON o.v = db.x
-"""
-QUERIES["part_linkpred"] = q_part_linkpred
-
-
 def q_cohort_retention(spark, sf_dir):
     """DAILY cohort retention triangle over the events table: users
     bucketed by first-event day, per-offset active fraction — the
@@ -3322,54 +2710,6 @@ SELECT c.cohort_bucket, CAST(c.bucket_offset AS BIGINT) AS bucket_offset,
 FROM cells c JOIN sz USING (cohort_bucket)
 """
 QUERIES["cohort_retention"] = q_cohort_retention
-
-
-def q_part_sssp(spark, sf_dir):
-    """Cheapest routes through the supplier↔part shipment graph:
-    bounded-hop weighted shortest paths from supplier s1, edge weight
-    = min shipped quantity per (supplier, part) — 4 Bellman-Ford
-    relaxation rounds (graph/analytics.sssp; the graph's diameter from
-    s1 is 3, the 4th round still relaxes costs). Integer BIGINT
-    distances — hash-exact; oracle is the same recurrence unrolled."""
-    from ctinexus_spark.graph.analytics import sssp
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    edges = (
-        li.groupBy(
-            F.concat(F.lit("s"), F.col("l_suppkey")).alias("src"),
-            F.concat(F.lit("p"), F.col("l_partkey")).alias("dst"),
-        )
-        .agg(F.min("l_quantity").cast("bigint").alias("weight"))
-    )
-    return sssp(edges, seeds=["s1"], max_hops=4)
-
-
-def _sssp_sql(rounds: int, seed: str) -> str:
-    parts = [
-        """e AS (
-  SELECT 's' || l_suppkey AS a, 'p' || l_partkey AS b,
-         CAST(min(l_quantity) AS BIGINT) AS w
-  FROM lineitem GROUP BY 's' || l_suppkey, 'p' || l_partkey
-),
-und AS (SELECT a AS x, b AS y, w FROM e UNION ALL SELECT b AS x, a AS y, w FROM e),
-d0 AS (SELECT '%s' AS v, CAST(0 AS BIGINT) AS dist)"""
-        % seed
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""d{r} AS (
-  SELECT v, min(dist) AS dist FROM (
-    SELECT v, dist FROM d{r - 1}
-    UNION ALL
-    SELECT u.y AS v, d.dist + u.w AS dist FROM d{r - 1} d JOIN und u ON d.v = u.x
-  ) GROUP BY v
-)"""
-        )
-    return "WITH " + ",\n".join(parts) + f"\nSELECT v, dist FROM d{rounds}"
-
-
-ORACLES["part_sssp"] = _sssp_sql(rounds=4, seed="s1")
-QUERIES["part_sssp"] = q_part_sssp
 
 
 def q_hybrid_topk(spark, sf_dir):
@@ -3491,14 +2831,6 @@ QUALIFY rank <= 10
 QUERIES["hybrid_topk"] = q_hybrid_topk
 
 
-# round-5 late bench additions: the EXACT (prefix-filter) near-dup
-# join — the deterministic sibling of the MinHash funnel — the hybrid
-# BM25+dense RRF retrieval, and the single-shuffle conversion funnel
-BENCH_QUERIES["dedup_exact_jaccard"] = q_jaccard_pairs
-BENCH_QUERIES["retrieval_hybrid"] = q_hybrid_topk
-BENCH_QUERIES["temporal_funnel"] = q_event_funnel
-
-
 def q_event_bursts(spark, sf_dir):
     """Daily per-event-type burst flags: |c − μ| > 2σ in EXACT integer
     arithmetic — q²·(n·c−S)² > p²·(n·SS−S²), no sqrt, no float
@@ -3532,77 +2864,6 @@ SELECT c.key AS event_type, CAST(c.bucket AS BIGINT) AS bucket, c.cnt, m.n,
 FROM counts c JOIN m USING (key)
 """
 QUERIES["event_bursts"] = q_event_bursts
-
-
-def q_part_walks(spark, sf_dir):
-    """Deterministic DeepWalk corpus over the part co-occurrence
-    graph (parts < 300): 2 hash-driven uniform walks of length 4 from
-    every vertex (graph/analytics.random_walks). Hash-driven ⇒ the
-    sampled corpus is reproducible across runs/partitionings/engines;
-    the oracle replays the identical walks step by step."""
-    from ctinexus_spark.graph.analytics import random_walks
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey"
-    )
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pa"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("pb"))
-    edges = (
-        a.join(b, "k")
-        .filter(
-            (F.col("pa") < F.col("pb")) & (F.col("pa") < 300) & (F.col("pb") < 300)
-        )
-        .select(F.col("pa").alias("src"), F.col("pb").alias("dst"))
-        .distinct()
-    )
-    return random_walks(edges, walks_per_vertex=2, length=4, seed=7)
-
-
-def _walks_sql(wpv: int, length: int, seed: int) -> str:
-    def pick(step: int) -> str:
-        key = (
-            f"'{seed}|' || CAST(s.start AS VARCHAR) || '|' || "
-            f"CAST(s.walk AS VARCHAR) || '|{step}|' || CAST(s.v AS VARCHAR)"
-        )
-        return _hex32_sql(key)
-
-    parts = [
-        """e AS (
-  SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-  FROM lineitem a JOIN lineitem b
-    ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-  WHERE a.l_partkey < 300 AND b.l_partkey < 300
-),
-und AS (SELECT u AS x, v AS y FROM e UNION ALL SELECT v AS x, u AS y FROM e),
-adj AS (
-  SELECT x, y, CAST(row_number() OVER (PARTITION BY x ORDER BY y) - 1 AS BIGINT) AS idx
-  FROM und
-),
-deg AS (SELECT x, CAST(count(*) AS BIGINT) AS d FROM und GROUP BY x),
-s0 AS (
-  SELECT x AS start, CAST(w AS BIGINT) AS walk, x AS v
-  FROM (SELECT DISTINCT x FROM und), range(0, %d) r(w)
-)"""
-        % wpv
-    ]
-    for t in range(1, length + 1):
-        parts.append(
-            f"""s{t} AS (
-  SELECT s.start, s.walk, a.y AS v
-  FROM s{t - 1} s
-  JOIN deg ON s.v = deg.x
-  JOIN adj a ON a.x = s.v AND a.idx = ({pick(t)}) %% deg.d
-)""".replace("%%", "%")
-        )
-    selects = " UNION ALL ".join(
-        f"SELECT start, walk, CAST({t} AS INT) AS step, v AS vertex FROM s{t}"
-        for t in range(0, length + 1)
-    )
-    return "WITH " + ",\n".join(parts) + "\n" + selects
-
-
-ORACLES["part_walks"] = _walks_sql(wpv=2, length=4, seed=7)
-QUERIES["part_walks"] = q_part_walks
 
 
 def q_event_twa(spark, sf_dir):
@@ -3916,40 +3177,6 @@ SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
 FROM events GROUP BY user_id, event_type
 """
 QUERIES["user_event_unpivot"] = q_user_event_unpivot
-
-
-def q_part_name_fuzzy(spark, sf_dir):
-    """Fuzzy record linkage over part names: all DISTINCT-name pairs
-    within levenshtein 2, each with its part-group size — the
-    entity-matching join (dedup.edit_distance_join: bigram-blocked,
-    EXACT — one edit kills <= 2 bigrams so lev<=k forces a shared
-    bigram at these lengths; |len diff| filter; JVM levenshtein
-    verify, bit-identical to DuckDB's). Names dedupe + group counts
-    upstream so duplicate groups never square."""
-    from ctinexus_spark.operators.dedup import edit_distance_join
-
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
-    names = p.groupBy(F.col("p_name").alias("name")).agg(
-        F.count("*").cast("bigint").alias("n_parts")
-    )
-    pairs = edit_distance_join(names, threshold=2, id_col="name")
-    na = names.select(F.col("name").alias("a"), F.col("n_parts").alias("n_a"))
-    nb = names.select(F.col("name").alias("b"), F.col("n_parts").alias("n_b"))
-    return pairs.join(na, "a").join(nb, "b").select("a", "b", "dist", "n_a", "n_b")
-
-
-ORACLES["part_name_fuzzy"] = """
-WITH names AS (
-  SELECT p_name AS name, CAST(count(*) AS BIGINT) AS n_parts
-  FROM part GROUP BY p_name
-)
-SELECT a.name AS a, b.name AS b,
-       CAST(levenshtein(a.name, b.name) AS INT) AS dist,
-       a.n_parts AS n_a, b.n_parts AS n_b
-FROM names a JOIN names b ON a.name < b.name
-WHERE levenshtein(a.name, b.name) <= 2
-"""
-QUERIES["part_name_fuzzy"] = q_part_name_fuzzy
 
 
 def q_event_props_k(spark, sf_dir):

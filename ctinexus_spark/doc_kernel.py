@@ -100,7 +100,8 @@ def first_key_or_default(cls) -> str:
 def parse_tagging(resp) -> list[tuple]:
     """ET response → [(subject_text, subject_class, relation,
     object_text, object_class, valid)], one per tagged triple; the
-    list comes from `tagged_triples`, else `triplets`."""
+    list comes from `tagged_triples`, else `triplets`. A non-string
+    text or relation becomes None."""
     payload = _payload(resp)
     tagged = payload.get("tagged_triples")
     if tagged is None:
@@ -112,9 +113,9 @@ def parse_tagging(resp) -> list[tuple]:
         d = _dict(t)
         subj, obj = _dict(d.get("subject")), _dict(d.get("object"))
         out.append((
-            subj.get("text"), first_key_or_default(subj.get("class")),
+            _str_or_none(subj.get("text")), first_key_or_default(subj.get("class")),
             _str_or_none(d.get("relation")),
-            obj.get("text"), first_key_or_default(obj.get("class")),
+            _str_or_none(obj.get("text")), first_key_or_default(obj.get("class")),
             valid_typed_triplet(t),
         ))
     return out

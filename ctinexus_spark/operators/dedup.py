@@ -189,7 +189,12 @@ def shingle_overlap(
     candidates=None keeps the exact corpus-wide variant — the
     TEST-ONLY baseline (round-1 anti-pattern #3); never run it at
     scale.
+
+    min_shared must be >= 1: at 0 the candidate path would emit every
+    candidate pair, including pairs with no shingle in common.
     """
+    if min_shared < 1:
+        raise ValueError(f"min_shared must be >= 1, got {min_shared}")
     from ctinexus_spark.partitioning import ensure_parallelism
 
     if candidates is not None:
@@ -642,26 +647,6 @@ def semantic_dedup_keeplist(
     return embeddings.select(id_col).join(drops, id_col, "left_anti")
 
 
-def embedding_near_dups(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-) -> DataFrame:
-    """Embedding-cosine near-dup pairs — exact all-pairs TEST-ONLY
-    baseline (nested-loop join, O(n²)). The production path is
-    embedding_near_dups_lsh below (round-1 anti-pattern #1)."""
-    from ctinexus_spark.operators.similarity import cosine_expr
-
-    a = embeddings.select(F.col(id_col).alias("a_id"), F.col(vec_col).alias("a_vec"))
-    b = embeddings.select(F.col(id_col).alias("b_id"), F.col(vec_col).alias("b_vec"))
-    pairs = a.join(b, F.col("a_id") < F.col("b_id"))
-    return (
-        pairs.select("a_id", "b_id", cosine_expr("a_vec", "b_vec").alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def embedding_near_dups_lsh(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -827,106 +812,3 @@ def jaccard_join_exact(
             ).alias("jaccard"),
         )
     )
-
-
-def edit_distance_join(
-    strings: DataFrame,
-    threshold: int = 2,
-    id_col: str = "s",
-    min_len: int | None = None,
-) -> DataFrame:
-    """EXACT fuzzy self-join on a string column: all pairs with
-    levenshtein <= threshold — the record-linkage / entity-matching
-    primitive (product names, addresses, aliases).
-
-    Exactness with blocking: one edit destroys at most q=2 bigrams,
-    so lev(a,b) <= k forces |shared bigrams| >= max(|a|,|b|) - 1 - 2k
-    — strictly positive whenever min string length > 2k + 1. Callers
-    that know their length floor pass `min_len` (validated cheaply in
-    Python); otherwise a raise_error guard rides the grams pass and
-    fails the operator's own barrier — no separate min(length) scan at
-    construction time (round-5 VERDICT #6). Either way the violation
-    surfaces as ValueError. Candidates therefore equi-join on shared DISTINCT
-    bigrams (+ the |len diff| <= k necessary condition), and the exact
-    levenshtein verifies — no pair is missed, no O(n²). The verify
-    uses the built-in JVM levenshtein (bit-identical to DuckDB's —
-    classic integer DP).
-
-    Input must be DISTINCT strings (dedupe + carry group counts
-    upstream — a heavily duplicated column would square inside each
-    duplicate group). Output: (a, b, dist) with a < b.
-    """
-    if threshold < 0:
-        raise ValueError("threshold must be >= 0")
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    s = ensure_parallelism(strings.select(F.col(id_col).alias("s")).distinct())
-    bound = 2 * threshold + 1
-    if min_len is not None and min_len <= bound:
-        raise ValueError(
-            f"bigram blocking is only exact for strings longer than "
-            f"2*threshold+1 = {bound}; declared min_len is {min_len}"
-        )
-    if min_len is None:
-        # LAZY precondition (round-5 VERDICT #6: no driver action at
-        # operator-construction time): instead of an eager min(length)
-        # collect(), a raise_error branch rides the grams projection —
-        # the barrier below (part of the operator's own first
-        # materialization) fails fast with the same message if any
-        # string is too short for exact bigram blocking. Callers that
-        # already know their floor pass min_len and skip the check
-        # column entirely.
-        # the guard is folded into the value of `s` itself (a pruned
-        # side column would be optimized away and never evaluate)
-        s = s.select(
-            F.when(
-                F.length("s") <= bound,
-                F.raise_error(
-                    F.concat(
-                        F.lit(
-                            "bigram blocking is only exact for strings "
-                            f"longer than 2*threshold+1 = {bound}; got: "
-                        ),
-                        F.col("s"),
-                    )
-                ),
-            )
-            .otherwise(F.col("s"))
-            .alias("s")
-        )
-    try:
-        grams = barrier(
-            s.select(
-                "s",
-                F.length("s").alias("l"),
-                F.explode(
-                    F.array_distinct(
-                        F.transform(
-                            F.sequence(F.lit(1), F.length("s") - 1),
-                            lambda i: F.col("s").substr(i, F.lit(2)),
-                        )
-                    )
-                ).alias("g"),
-            )
-        )
-    except Exception as exc:  # surface the guard as the documented API error
-        if "bigram blocking is only exact" in str(exc):
-            raise ValueError(
-                f"bigram blocking is only exact for strings longer than "
-                f"2*threshold+1 = {bound}"
-            ) from exc
-        raise
-    a = grams.select(F.col("s").alias("a"), F.col("l").alias("la"), "g")
-    b = grams.select(F.col("s").alias("b"), F.col("l").alias("lb"), "g")
-    cand = (
-        a.join(b, "g")
-        .filter(
-            (F.col("a") < F.col("b"))
-            & (F.abs(F.col("la") - F.col("lb")) <= threshold)
-        )
-        .select("a", "b")
-        .distinct()
-    )
-    return cand.select(
-        "a", "b", F.levenshtein("a", "b").cast("int").alias("dist")
-    ).filter(F.col("dist") <= threshold)

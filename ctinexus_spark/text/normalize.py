@@ -121,10 +121,9 @@ def is_cti_signal_line(line: str) -> bool:
 
 # Extractor priority mirrors the reference's 5-extractor hybrid
 # (llm_processor.py:361-417). The three trafilatura slots are
-# environment-gated the same way as the multimodal codec and Iceberg
-# store: trafilatura is verified absent from this container (import
-# probed round 5) and installs are out of scope, so those candidates
-# are simply never produced here — merge_extraction_candidates ranks
+# environment-gated the same way as the Iceberg store: where
+# trafilatura is not installed those candidates are simply never
+# produced — merge_extraction_candidates ranks
 # whatever sources ARE present (jsonld / meta today) and needs no code
 # change when a deployment with trafilatura supplies the richer
 # candidates.

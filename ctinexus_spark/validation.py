@@ -15,13 +15,20 @@ def _nonempty_str(v) -> bool:
     return isinstance(v, str) and bool(v.strip())
 
 
+def _is_text(v) -> bool:
+    """A usable entity text: a non-empty string (an int text would fail
+    the string column's Arrow conversion for the whole task)."""
+    return isinstance(v, str) and bool(v)
+
+
 def _has_keys(t: dict) -> bool:
     return isinstance(t, dict) and all(k in t for k in ("subject", "relation", "object"))
 
 
 def valid_ie_triplet(t) -> bool:
-    """IE shape: subject/object non-empty string, or dict carrying
-    text/mention_text; relation non-empty string."""
+    """IE shape: subject/object non-empty string, or dict whose text
+    (else mention_text) is a non-empty string; relation non-empty
+    string."""
     if not _has_keys(t):
         return False
     for side in ("subject", "object"):
@@ -32,7 +39,7 @@ def valid_ie_triplet(t) -> bool:
             if not v.strip():
                 return False
         elif isinstance(v, dict):
-            if not (v.get("text") or v.get("mention_text")):
+            if not _is_text(v.get("text") or v.get("mention_text")):
                 return False
         else:
             return False
@@ -40,12 +47,13 @@ def valid_ie_triplet(t) -> bool:
 
 
 def valid_typed_triplet(t) -> bool:
-    """ET shape: subject/object dicts with non-empty 'text'."""
+    """ET shape: subject/object dicts whose 'text' is a non-empty
+    string."""
     if not _has_keys(t):
         return False
     for side in ("subject", "object"):
         v = t.get(side)
-        if not isinstance(v, dict) or not v.get("text"):
+        if not isinstance(v, dict) or not _is_text(v.get("text")):
             return False
     return _nonempty_str(t.get("relation"))
 

@@ -53,16 +53,30 @@ json_values = st.recursive(
 @example('"x"')
 @example('{"triplets": [1, null, {"subject": {"text": 5}, "relation": 7, "object": "o"}]}')
 @example('{"tagged_triples": [[], {"subject": "s", "object": {"class": {}}}]}')
+@example('{"triplets": [{"subject": {"text": 5}, "relation": "uses", "object": "x"}]}')
+@example('{"triplets": [{"subject": {"text": "", "mention_text": 7}, "relation": "uses", "object": "x"}]}')
+@example('{"tagged_triples": [{"subject": {"text": 5, "class": "Malware"}, "relation": "uses", '
+         '"object": {"text": "x", "class": "Tool"}}]}')
+@example('{"tagged_triples": [{"subject": {"text": "", "mention_text": 7}, "relation": "uses", '
+         '"object": {"text": "x"}}]}')
 def test_parsers_never_raise(resp):
     """Model output is arbitrary text; a response that is not a JSON
     object with the expected shape yields rejects or nothing, never an
-    exception that would fail the whole Arrow task."""
+    exception that would fail the whole Arrow task. A row marked valid
+    carries non-empty string subject and object texts (a valid row
+    with an int text would fail the string column's Arrow conversion
+    for the whole task)."""
     for row in parse_extraction(resp):
         assert len(row) == 4
         assert all(v is None or isinstance(v, str) for v in row[:3])
+        if row[3]:
+            assert isinstance(row[0], str) and row[0] and isinstance(row[2], str) and row[2]
     for row in parse_tagging(resp):
         assert len(row) == 6
         assert isinstance(row[1], str) and isinstance(row[4], str)
+        assert all(v is None or isinstance(v, str) for v in (row[0], row[2], row[3]))
+        if row[5]:
+            assert isinstance(row[0], str) and row[0] and isinstance(row[3], str) and row[3]
 
 
 def test_non_object_payloads_have_no_triplets():
@@ -82,10 +96,11 @@ def test_extraction_rows_keep_rejects_and_coerce_text():
         {"subject": "a", "relation": 7, "object": "b"},
         "not a triplet",
     ]})
-    # a non-string relation (always a reject) would fail the string column
+    # a non-string text or relation is None and the row a reject (the raw
+    # value would fail the string column; a valid row needs both texts)
     assert parse_extraction(resp) == [
         ("APT29", "uses", "Mimikatz", True),
-        (None, "uses", "x", True),
+        (None, "uses", "x", False),
         ("a", "", "b", False),
         ("a", None, "b", False),
         (None, None, None, False),

@@ -147,99 +147,6 @@ class TestStarsComponents:
         assert got["lone"] == "lone"
 
 
-class TestPageRank:
-    def test_matches_numpy_power_iteration(self, spark):
-        """Same damping, same iteration count, same dangling rule as a
-        dense numpy power iteration — agreement to 1e-9 (the float
-        shuffle-sum only moves last-ulp bits)."""
-        import numpy as np
-
-        from ctinexus_spark.graph.analytics import pagerank
-
-        edges = [(0, 1), (0, 2), (1, 2), (2, 0), (3, 2)]  # 3 is a source, none dangling? no: all have out
-        edges += [(2, 4)]  # 4 is dangling (no out-edges)
-        df = spark.createDataFrame(edges, "src bigint, dst bigint")
-        got = {r.vertex: r.rank for r in pagerank(df, iterations=10).collect()}
-
-        n, d = 5, 0.85
-        adj = {0: [1, 2], 1: [2], 2: [0, 4], 3: [2], 4: []}
-        r = np.full(n, 1.0 / n)
-        for _ in range(10):
-            contrib = np.zeros(n)
-            dangling = 0.0
-            for s, outs in adj.items():
-                if not outs:
-                    dangling += r[s]
-                for t in outs:
-                    contrib[t] += r[s] / len(outs)
-            r = (1 - d) / n + d * (contrib + dangling / n)
-        for v in range(n):
-            assert abs(got[v] - r[v]) < 1e-9, (v, got[v], r[v])
-        # authority orders as expected: 2 has the most in-links
-        assert max(got, key=got.get) == 2
-
-    def test_empty_graph(self, spark):
-        from ctinexus_spark.graph.analytics import pagerank
-
-        df = spark.createDataFrame([], "src bigint, dst bigint")
-        assert pagerank(df).count() == 0
-
-    def test_pinned_matches_fast_path(self, spark):
-        """pagerank_pinned (ordered left-folds — the oracle-grade
-        variant the registry serves) agrees with the shuffle-sum
-        pagerank to 1e-12 on every vertex: same algebra, only the
-        float reduction order differs."""
-        from ctinexus_spark.graph.analytics import pagerank, pagerank_pinned
-
-        edges = [("a", "b"), ("a", "c"), ("b", "c"), ("c", "a"),
-                 ("d", "c"), ("c", "e")]  # e dangles
-        df = spark.createDataFrame(edges, "src string, dst string")
-        fast = {r.vertex: r.rank for r in pagerank(df, iterations=5).collect()}
-        pin = {r.vertex: r.rank for r in pagerank_pinned(df, iterations=5).collect()}
-        assert set(fast) == set(pin)
-        for v in fast:
-            assert abs(fast[v] - pin[v]) < 1e-12, (v, fast[v], pin[v])
-
-    def test_pinned_empty_graph(self, spark):
-        from ctinexus_spark.graph.analytics import pagerank_pinned
-
-        df = spark.createDataFrame([], "src string, dst string")
-        assert pagerank_pinned(df).count() == 0
-
-
-class TestKCore:
-    def test_peels_to_dense_core(self, spark):
-        from ctinexus_spark.graph.analytics import k_core
-
-        # K4 clique + a pendant chain hanging off vertex 0
-        k4 = [(a, b) for a in range(4) for b in range(4) if a < b]
-        chain = [(0, 10), (10, 11), (11, 12)]
-        df = spark.createDataFrame(k4 + chain, "src bigint, dst bigint")
-        got = {r.vertex: r.degree for r in k_core(df, k=3).collect()}
-        # 3-core = exactly the K4; every member has in-core degree 3
-        assert got == {0: 3, 1: 3, 2: 3, 3: 3}
-        # 2-core: chain still peels (endpoint degree 1 cascades)
-        got2 = {r.vertex for r in k_core(df, k=2).collect()}
-        assert got2 == {0, 1, 2, 3}
-
-    def test_whole_graph_peels_away(self, spark):
-        from ctinexus_spark.graph.analytics import k_core
-
-        chain = spark.createDataFrame([(i, i + 1) for i in range(6)], "src bigint, dst bigint")
-        assert k_core(chain, k=2).count() == 0
-
-    def test_cascading_peel_rounds(self, spark):
-        """A long chain attached to a triangle forces one peel round
-        per chain link — exercises the iterative fixpoint + barrier."""
-        from ctinexus_spark.graph.analytics import k_core
-
-        tri = [(100, 101), (101, 102), (100, 102)]
-        chain = [(100, 0)] + [(i, i + 1) for i in range(9)]
-        df = spark.createDataFrame(tri + chain, "src bigint, dst bigint")
-        got = {r.vertex for r in k_core(df, k=2).collect()}
-        assert got == {100, 101, 102}
-
-
 class TestSkew:
     def test_salt_range_and_determinism(self, spark):
         df = spark.createDataFrame([(f"u{i}",) for i in range(100)], "url string")
@@ -332,65 +239,6 @@ def test_global_entity_resolution(spark):
     assert all(r.entity_text == r.global_id for r in identity.collect())
 
 
-def test_triangle_counts_known_graph(spark):
-    """K4 on {1..4} plus a pendant: each K4 vertex sits in C(3,2)=3
-    triangles, the pendant in none; star centers contribute nothing
-    (degree-ordered orientation)."""
-    from ctinexus_spark.graph.analytics import triangle_counts
-
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    edges = spark.createDataFrame(k4 + [(4, 9), (9, 9)], "src bigint, dst bigint")
-    got = {r.vertex: r.n_triangles for r in triangle_counts(edges).collect()}
-    assert got == {1: 3, 2: 3, 3: 3, 4: 3}
-
-    # a pure star has zero triangles regardless of hub degree
-    star = spark.createDataFrame([(0, i) for i in range(1, 30)], "src bigint, dst bigint")
-    assert triangle_counts(star).count() == 0
-
-
-def test_bfs_distances_path_graph(spark):
-    """Path 1-2-3-4-5-6: hop budget truncates, multi-seed takes the
-    min, and a seed absent from the graph still reports dist 0."""
-    from ctinexus_spark.graph.analytics import bfs_distances
-
-    path = [(i, i + 1) for i in range(1, 6)]
-    edges = spark.createDataFrame(path, "src bigint, dst bigint")
-
-    got = {r.vertex: r.dist for r in bfs_distances(edges, seeds=[1], hops=3).collect()}
-    assert got == {1: 0, 2: 1, 3: 2, 4: 3}
-
-    both = {
-        r.vertex: r.dist for r in bfs_distances(edges, seeds=[1, 6], hops=2).collect()
-    }
-    assert both == {1: 0, 6: 0, 2: 1, 5: 1, 3: 2, 4: 2}
-
-    lone = {
-        r.vertex: r.dist for r in bfs_distances(edges, seeds=[99], hops=2).collect()
-    }
-    assert lone == {99: 0}
-
-
-def test_clustering_coefficient_triangle_with_pendant(spark):
-    """Triangle {1,2,3} + pendant edge 3-4: the degree-2 triangle
-    corners are fully transitive (1.0), the junction vertex is
-    2·1/(3·2)=1/3, the pendant (degree 1) is excluded, and a star hub
-    with zero triangles scores 0.0."""
-    from ctinexus_spark.graph.analytics import clustering_coefficient
-
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (1, 3), (3, 4)], "src bigint, dst bigint"
-    )
-    rows = {r.vertex: r for r in clustering_coefficient(edges).collect()}
-    assert set(rows) == {1, 2, 3}
-    assert rows[1].clustering == 1.0 and rows[2].clustering == 1.0
-    assert rows[3].degree == 3 and rows[3].n_triangles == 1
-    assert abs(rows[3].clustering - 1.0 / 3.0) < 1e-15
-
-    star = spark.createDataFrame([(0, i) for i in range(1, 6)], "src bigint, dst bigint")
-    hub = {r.vertex: r for r in clustering_coefficient(star).collect()}
-    assert set(hub) == {0} and hub[0].clustering == 0.0 and hub[0].n_triangles == 0
-
-
 def test_grouped_map_stitched_whole_groups_across_batches(spark):
     """The shared stitched grouped-map must hand `process` only WHOLE
     key-groups even when a group straddles the Arrow batch cap: with
@@ -426,120 +274,3 @@ def test_grouped_map_stitched_whole_groups_across_batches(spark):
     ]
 
 
-def test_bfs_distances_matches_python_bfs_random(spark):
-    """Erdős–Rényi-ish random graph (seeded): frontier-expansion
-    distances equal a plain Python BFS truncated at the hop budget."""
-    import random
-    from collections import deque
-
-    from ctinexus_spark.graph.analytics import bfs_distances
-
-    rng = random.Random(11)
-    n, m, hops = 60, 120, 3
-    edges = list({(rng.randrange(n), rng.randrange(n)) for _ in range(m)})
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {r.vertex: r.dist for r in bfs_distances(df, seeds=[0, 1], hops=hops).collect()}
-
-    adj = {}
-    for a, b in edges:
-        if a != b:
-            adj.setdefault(a, set()).add(b)
-            adj.setdefault(b, set()).add(a)
-    want, dq = {0: 0, 1: 0}, deque([0, 1])
-    while dq:
-        v = dq.popleft()
-        if want[v] >= hops:
-            continue
-        for w in adj.get(v, ()):
-            if w not in want:
-                want[w] = want[v] + 1
-                dq.append(w)
-    assert got == want
-
-
-def test_personalized_pagerank_matches_numpy(spark):
-    """Seeded restart vector: agrees with a dense numpy
-    random-walk-with-restart to 1e-9, concentrates mass near the
-    seed, and leaves the uniform path untouched (seeds=None equals
-    the original pinned recurrence)."""
-    import numpy as np
-
-    from ctinexus_spark.graph.analytics import pagerank_pinned
-
-    edges = [(0, 1), (1, 2), (2, 3), (3, 4), (4, 0), (1, 0)]
-    df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {
-        r.vertex: r.rank
-        for r in pagerank_pinned(df, iterations=6, seeds=[0]).collect()
-    }
-
-    n, d = 5, 0.85
-    adj = {0: [1], 1: [0, 2], 2: [3], 3: [4], 4: [0]}
-    p = np.zeros(n)
-    p[0] = 1.0
-    r = p.copy()
-    for _ in range(6):
-        contrib = np.zeros(n)
-        dang = 0.0
-        for s, outs in adj.items():
-            if not outs:
-                dang += r[s]
-            for t in outs:
-                contrib[t] += r[s] / len(outs)
-        r = (1 - d) * p + d * (contrib + dang * p)
-    for v in range(n):
-        assert abs(got[v] - r[v]) < 1e-9, (v, got[v], r[v])
-    # proximity: the seed and its direct neighbor outrank the far side
-    assert got[0] > got[3] and got[1] > got[3]
-
-
-def test_k_truss_peels_to_clique(spark):
-    """K4 plus a pendant triangle glued on edge (1,2): the pendant's
-    edges sit in one triangle each (< k-2=2) and peel away; the K4
-    survives with every edge's support back at 2. k=5 empties the
-    graph entirely (K4 edges max out at support 2)."""
-    from ctinexus_spark.graph.analytics import k_truss
-
-    k4 = [(a, b) for a in range(1, 5) for b in range(a + 1, 5)]
-    edges = spark.createDataFrame(
-        k4 + [(1, 5), (2, 5)], "src bigint, dst bigint"
-    )
-    out = {(r.u, r.v): r.support for r in k_truss(edges, k=4).collect()}
-    assert set(out) == set(k4)
-    assert all(s == 2 for s in out.values())
-
-    assert k_truss(edges, k=5).count() == 0
-
-
-def test_k_truss_rejects_k_below_three(spark):
-    import pytest
-
-    from ctinexus_spark.graph.analytics import k_truss
-
-    edges = spark.createDataFrame([(1, 2)], "src bigint, dst bigint")
-    with pytest.raises(ValueError, match="k >= 3"):
-        k_truss(edges, k=2)
-
-
-def test_personalized_pagerank_seed_validation(spark):
-    """Empty seed sets and seed sets disjoint from the vertex universe
-    fail loudly instead of silently producing all-zero ranks."""
-    import pytest
-
-    from ctinexus_spark.graph.analytics import pagerank_pinned
-
-    edges = spark.createDataFrame([(0, 1), (1, 2)], "src bigint, dst bigint")
-    with pytest.raises(ValueError, match="non-empty"):
-        pagerank_pinned(edges, seeds=[])
-    with pytest.raises(ValueError, match="vertex set"):
-        pagerank_pinned(edges, seeds=[999])
-
-
-def test_bfs_exhausted_frontier_exits_early(spark):
-    """A hop budget far beyond the graph's diameter returns the same
-    distances (the early exit is semantics-invisible)."""
-    from ctinexus_spark.graph.analytics import bfs_distances
-
-    edges = spark.createDataFrame([(1, 2), (2, 3)], "src bigint, dst bigint")
-    got = {r.vertex: r.dist for r in bfs_distances(edges, seeds=[1], hops=50).collect()}
-    assert got == {1: 0, 2: 1, 3: 2}

@@ -2,7 +2,8 @@
 single-shuffle funnel — each checked against an independent brute
 reference in plain Python (the DuckDB twins in dataset_queries are the
 driver-side check; these pin the algorithms on adversarial inputs the
-sf corpora don't contain: tiny sets, dead funnels, ts ties)."""
+sf corpora don't contain: tiny sets, dead funnels, ts ties) — plus
+shingle_overlap's argument check."""
 
 from __future__ import annotations
 
@@ -10,7 +11,7 @@ import datetime as dt
 import itertools
 import random
 
-from pyspark.sql import functions as F
+import pytest
 
 from ctinexus_spark.operators import dedup as D
 from ctinexus_spark.operators.temporal import funnel
@@ -145,53 +146,16 @@ def test_funnel_matches_brute_reference(spark):
     assert got == want
 
 
-def _lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[-1]
-
-
-def test_edit_distance_join_matches_brute(spark):
-    """The bigram-blocked join must find EVERY pair within the
-    threshold (the q-gram count filter argument), including pairs
-    differing at the first character (which naive prefix blocking
-    would miss)."""
-    import pytest
-
-    from ctinexus_spark.operators.dedup import edit_distance_join
-
-    rng = random.Random(43)
-    base = ["red widget", "blue bolt", "green gear", "small ring", "metal plate"]
-    names = set(base)
-    for s in base:
-        for _ in range(3):  # mutated variants incl. first-char edits
-            t = list(s)
-            op = rng.choice(["sub", "del", "ins"])
-            pos = rng.randrange(len(t))
-            if op == "sub":
-                t[pos] = rng.choice("abcdefgh")
-            elif op == "del" and len(t) > 7:
-                del t[pos]
-            else:
-                t.insert(pos, rng.choice("abcdefgh"))
-            names.add("".join(t))
-    names = sorted(names)
-    sdf = spark.createDataFrame([(n,) for n in names], ["name"])
-    got = {
-        (r.a, r.b): r.dist
-        for r in edit_distance_join(sdf, threshold=2, id_col="name").collect()
-    }
-    want = {
-        (a, b): _lev(a, b)
-        for a, b in itertools.combinations(names, 2)
-        if _lev(a, b) <= 2
-    }
-    assert got == want and want  # non-trivial fixture
-    # exactness precondition enforced: strings too short must raise
-    tiny = spark.createDataFrame([("abcd",), ("abce",)], ["name"])
-    with pytest.raises(ValueError):
-        edit_distance_join(tiny, threshold=2, id_col="name")
+@pytest.mark.parametrize("min_shared", [0, -1])
+def test_shingle_overlap_rejects_min_shared_below_one(spark, min_shared):
+    """min_shared=0 would let the candidate path emit every candidate
+    pair, including 0/0-Jaccard pairs with no shingle in common; it is
+    rejected when the operator is built, before any Spark action."""
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "w x y z")], ["doc_id", "text"])
+    cand = spark.createDataFrame([(1, 2)], ["a_id", "b_id"])
+    with pytest.raises(ValueError, match="min_shared"):
+        D.shingle_overlap(docs, min_shared=min_shared, candidates=cand)
+    with pytest.raises(ValueError, match="min_shared"):
+        D.shingle_overlap(docs, min_shared=min_shared)
+    # the smallest legal value keeps only pairs that share a shingle
+    assert D.shingle_overlap(docs, min_shared=1, candidates=cand).count() == 0

@@ -1,73 +1,13 @@
-"""Property tests: link_prediction vs a brute adjacency-set reference
-(including the max_degree hub cap) and cohort_retention vs a Python
-fold — adversarial shapes the sf corpora don't contain."""
+"""Property tests: cohort_retention, rrf_fuse and the burst / decay /
+CUSUM monitors vs plain-Python references — adversarial shapes the sf
+corpora don't contain."""
 
 from __future__ import annotations
 
 import datetime as dt
-import itertools
 import random
 
-from ctinexus_spark.graph.analytics import link_prediction
 from ctinexus_spark.operators.temporal import cohort_retention
-
-
-def _brute_lp(edges, min_common, max_degree=None):
-    adj: dict[int, set[int]] = {}
-    for u, v in edges:
-        adj.setdefault(u, set()).add(v)
-        adj.setdefault(v, set()).add(u)
-    out = {}
-    for a, b in itertools.combinations(sorted(adj), 2):
-        if b in adj[a]:
-            continue
-        common = adj[a] & adj[b]
-        if max_degree is not None:
-            common = {c for c in common if len(adj[c]) <= max_degree}
-        if len(common) >= min_common:
-            out[(a, b)] = (len(common), len(adj[a]), len(adj[b]))
-    return out
-
-
-def _rand_edges(rng, n, m):
-    es = set()
-    while len(es) < m:
-        u, v = rng.randrange(n), rng.randrange(n)
-        if u != v:
-            es.add((min(u, v), max(u, v)))
-    return sorted(es)
-
-
-def test_link_prediction_matches_brute(spark):
-    rng = random.Random(3)
-    edges = _rand_edges(rng, 40, 140)
-    sdf = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        (r.a, r.b): (r.n_common, r.deg_a, r.deg_b)
-        for r in link_prediction(sdf, min_common=2).collect()
-    }
-    assert got == _brute_lp(edges, 2)
-    # every returned pair must be non-adjacent
-    eset = set(edges)
-    assert all(p not in eset for p in got)
-
-
-def test_link_prediction_hub_cap(spark):
-    """A super-hub center contributes no wedges under max_degree, but
-    true degrees still feed jaccard."""
-    rng = random.Random(9)
-    edges = _rand_edges(rng, 30, 70)
-    hub = 99
-    edges = sorted(set(edges) | {(i, hub) for i in range(30)})
-    sdf = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        (r.a, r.b): (r.n_common, r.deg_a, r.deg_b)
-        for r in link_prediction(sdf, min_common=1, max_degree=10).collect()
-    }
-    assert got == _brute_lp(edges, 1, max_degree=10)
-    # the hub connects everyone: without the cap every non-edge pair
-    # would have n_common >= 1 via the hub; with it, some pairs vanish
-    assert len(got) < len(_brute_lp(edges, 1))
 
 
 def test_cohort_retention_matches_brute(spark):
@@ -101,32 +41,6 @@ def test_cohort_retention_matches_brute(spark):
     assert all(
         got[(c, o)][0] == got[(c, o)][1] for (c, o) in got if o == 0
     )
-
-
-def test_sssp_matches_brute_bellman_ford(spark):
-    import pytest
-
-    from ctinexus_spark.graph.analytics import sssp
-
-    rng = random.Random(13)
-    edges = [(u, v, rng.randint(1, 9)) for u, v in _rand_edges(rng, 25, 60)]
-    sdf = spark.createDataFrame(edges, ["src", "dst", "weight"])
-    for hops in (1, 3):
-        got = {r.v: r.dist for r in sssp(sdf, seeds=[0, 7], max_hops=hops).collect()}
-        # brute: hop-bounded Bellman-Ford rounds
-        dist = {0: 0, 7: 0}
-        for _ in range(hops):
-            nxt = dict(dist)
-            for u, v, w in edges:
-                for a, b in ((u, v), (v, u)):
-                    if a in dist and dist[a] + w < nxt.get(b, 1 << 60):
-                        nxt[b] = dist[a] + w
-            dist = nxt
-        assert got == dist
-    with pytest.raises(ValueError):
-        sssp(sdf, seeds=[99999], max_hops=1).collect()
-    with pytest.raises(ValueError):
-        sssp(sdf, seeds=[], max_hops=1)
 
 
 def test_rrf_fuse_semantics(spark):
@@ -210,43 +124,6 @@ def test_burst_boundary_is_strict_and_exact(spark):
     # (2,3)·sigma threshold: 1sigma deviation IS a burst
     out2 = burst_detection(ev, k_sigma=(2, 3)).collect()
     assert all(r.is_burst for r in out2)
-
-
-def test_random_walks_replay_in_python(spark):
-    """The hash-driven walks must replay exactly from the Python twin
-    of the column hash (py_hash32) — the determinism IS the feature."""
-    from ctinexus_spark.graph.analytics import random_walks
-    from ctinexus_spark.operators.sketches import py_hash32
-
-    rng = random.Random(21)
-    edges = _rand_edges(rng, 20, 40)
-    sdf = spark.createDataFrame(edges, ["src", "dst"])
-    wpv, length, seed = 2, 3, 7
-    got = {
-        (r.start, r.walk, r.step): r.vertex
-        for r in random_walks(sdf, walks_per_vertex=wpv, length=length, seed=seed).collect()
-    }
-    adj: dict[int, list[int]] = {}
-    for u, v in edges:
-        adj.setdefault(u, []).append(v)
-        adj.setdefault(v, []).append(u)
-    adj = {k: sorted(vs) for k, vs in adj.items()}
-    want = {}
-    for start in adj:
-        for w in range(wpv):
-            v = start
-            want[(start, w, 0)] = v
-            for t in range(1, length + 1):
-                nbrs = adj[v]
-                v = nbrs[py_hash32(f"{seed}|{start}|{w}|{t}|{v}") % len(nbrs)]
-                want[(start, w, t)] = v
-    assert got == want
-    # every consecutive pair must be a real edge
-    eset = {(min(a, b), max(a, b)) for a, b in edges}
-    for (s, w, t), v in got.items():
-        if t:
-            prev = got[(s, w, t - 1)]
-            assert (min(prev, v), max(prev, v)) in eset
 
 
 def test_decayed_counts_matches_python_fold(spark):

@@ -114,6 +114,10 @@ class TestValidation:
         assert not valid_ie_triplet({"subject": "a", "relation": " ", "object": "b"})
         assert not valid_ie_triplet({"subject": "a", "object": "b"})
         assert not valid_ie_triplet({"subject": 3, "relation": "r", "object": "b"})
+        assert not valid_ie_triplet({"subject": {"text": 5}, "relation": "r", "object": "b"})
+        assert not valid_ie_triplet(
+            {"subject": {"text": "", "mention_text": 7}, "relation": "r", "object": "b"}
+        )
         assert not valid_ie_triplet("not a dict")
 
     def test_typed(self):
@@ -121,6 +125,7 @@ class TestValidation:
         assert valid_typed_triplet(ok)
         assert not valid_typed_triplet({"subject": "a", "relation": "r", "object": {"text": "b"}})
         assert not valid_typed_triplet({"subject": {"text": ""}, "relation": "r", "object": {"text": "b"}})
+        assert not valid_typed_triplet({"subject": {"text": 5}, "relation": "r", "object": {"text": "b"}})
 
     def test_aligned_entity_id_zero_ok(self):
         ok = {

@@ -52,18 +52,17 @@ QUADRATIC_NODES = ("CartesianProduct", "BroadcastNestedLoopJoin")
     "qname",
     ["emb_cosine_pairs", "knn_vote", "shingle_overlap", "lsh_candidates",
      "lsh_topk", "ivf_topk", "dedup_exact", "minhash", "simhash",
-     "pq_codes", "pq_adc_topk", "ivf_pq_topk", "part_triangles", "repetition_ratios",
+     "pq_codes", "pq_adc_topk", "ivf_pq_topk", "repetition_ratios",
      "lm_scores", "decontaminate", "vocab_topk", "line_dedup", "domain_cap",
      "dsir_features", "bpe_merges", "token_pmi", "dup_grams", "cdc_chunks",
      "langid", "hll_distinct", "cms_topk", "bloom_probe", "bm25_topk",
-     "doc_len_quantiles", "part_communities", "cluster_topics",
-     "part_reach", "part_clustering", "source_drift",
+     "doc_len_quantiles", "cluster_topics", "source_drift",
      "event_asof_purchase", "click_attribution", "kmv_distinct",
-     "part_truss", "jaccard_pairs", "event_funnel", "part_linkpred",
-     "cohort_retention", "part_sssp", "hybrid_topk", "event_bursts",
-     "part_walks", "kg_entity_cooc", "event_twa", "event_decay",
+     "jaccard_pairs", "event_funnel",
+     "cohort_retention", "hybrid_topk", "event_bursts",
+     "kg_entity_cooc", "event_twa", "event_decay",
      "event_transitions", "event_cusum", "order_zorder",
-     "part_name_fuzzy", "event_props_k"],
+     "event_props_k"],
 )
 def test_no_quadratic_plan_in_scale_queries(spark, qname):
     """Every headline dedup/similarity query must plan as equi joins.
@@ -135,35 +134,6 @@ def test_brute_topk_no_full_table_broadcast(spark):
         S.brute_force_topk(emb, None)._jdf.queryExecution(), "extended"
     )
     assert "broadcast" not in logical.split("== Physical Plan ==")[0].lower()
-
-
-def test_bucketed_join_avoids_exchange(spark, tmp_path):
-    """Tables bucketed on the join key join WITHOUT an Exchange — the
-    shuffle is paid once at write time (co-located storage layout)."""
-    from ctinexus_spark.bucketing import write_bucketed
-
-    kg = spark.createDataFrame(
-        [(f"u{i % 20}", f"s{i}", "p", f"o{i}") for i in range(200)],
-        "url string, subj string, pred string, obj string",
-    )
-    docs = spark.createDataFrame(
-        [(f"u{i}", f"text {i}") for i in range(20)], "url string, text string"
-    )
-    write_bucketed(kg, "bkt_kg", "url", 4, str(tmp_path / "kg"))
-    write_bucketed(docs, "bkt_docs", "url", 4, str(tmp_path / "docs"))
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("bkt_kg").join(spark.table("bkt_docs"), "url")
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert joined.count() == 200
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bkt_kg")
-        spark.sql("DROP TABLE IF EXISTS bkt_docs")
 
 
 def test_lsh_candidates_caps_degenerate_buckets(spark):
