@@ -38,12 +38,11 @@ WINDOW = 50
 _CHANGED_R05 = [
     "dedup_incremental", "simhash", "simhash_candidates",
     "dedup_clusters_cc", "dedup_clusters_stars", "dedup_keeplist",
-    "semantic_dedup", "kg_global_entities", "hll_distinct", "cms_topk",
-    "bloom_probe", "bm25_topk", "doc_len_quantiles", "cluster_topics",
+    "semantic_dedup", "kg_global_entities", "doc_len_quantiles",
     "mmr_topk", "source_drift", "event_asof_purchase",
-    "click_attribution", "event_rollup_cascade", "kmv_distinct",
-    "kmv_overlap", "jaccard_pairs", "event_funnel", "cohort_retention",
-    "hybrid_topk", "event_bursts", "kg_entity_cooc", "event_twa",
+    "click_attribution", "event_rollup_cascade", "jaccard_pairs",
+    "event_funnel", "cohort_retention", "event_bursts", "kg_entity_cooc",
+    "event_twa",
     "revenue_cube", "idle_customers", "event_decay",
     "event_transitions", "event_cusum", "order_zorder",
     "user_event_pivot", "user_event_unpivot", "event_props_k",
@@ -77,15 +76,15 @@ CHANGED_THIS_ROUND = [
     "jaccard_pairs",
     "shingle_overlap",
     "winnow_fp",
-    "cms_topk",
 ]
 
 # Per-round rotation fronts (the driver window = first WINDOW names of
 # rotation + natural-order fill). r01-r03 used the natural order — an
 # empty rotation. Keep every past round's list: the union-coverage
-# test replays them. Queries deleted since (the part_* graph-analytics
-# and mm_* multimodal rows) are dropped from the lists, so a recorded
-# window now fills its freed slots in natural order.
+# test replays them. Queries deleted since (the part_* graph-analytics,
+# mm_* multimodal, sketch, PQ and BM25 rows) are dropped from the
+# lists, so a recorded window now fills its freed slots in natural
+# order.
 ROTATION_HISTORY: dict[str, list[str]] = {
     "r01": [],
     "r02": [],
@@ -101,7 +100,6 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "order_percentiles", "revenue_rollup", "event_leadlag",
         "stratified_sample", "mixture_plan", "decontaminate",
         "vocab_topk", "line_dedup", "domain_cap", "dsir_features",
-        "rand_proj", "pq_codes", "pq_adc_topk", "ivf_pq_topk",
     ],
     # round 5: the changed set first, then the rows whose only greens
     # date to r01-r03 (oldest coverage), then the r04 KG block.
@@ -136,7 +134,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "fingerprints", "bpe_tokens", "dedup_exact", "minhash",
         "lsh_bands", "lsh_candidates", "emb_cosine_pairs", "ann_topk",
         "lsh_buckets", "lsh_topk", "knn_vote",
-        "tpch_q1", "ivf_topk", "pq_adc_topk",
+        "tpch_q1", "ivf_topk",
     ],
 }
 

@@ -14,9 +14,7 @@ Families:
 - similarity    : query-broadcast exact top-k, LSH buckets/top-k,
                   IVF assign/top-k (+ trained k-means centroids),
                   kNN label vote over LSH neighbors
-                  (operators/similarity.py); JL projection, PQ
-                  encode/ADC + IVF-PQ with trained per-subspace
-                  codebooks (operators/quantize.py)
+                  (operators/similarity.py)
 - url ops       : normalize/validate/domain (text/urls.py)
 - classical     : TPC-H-style agg + join + window/sessionization
                   (the classical-operator checklist of SURVEY.md §2.7)
@@ -208,7 +206,7 @@ def q_mmr_topk(spark, sf_dir):
     re-rank for retrieved context. Greedy loop = 4 unrolled DataFrame
     rounds (join vs the selected set + struct-min argmax); the SQL
     twin unrolls the identical recurrence, float constants embedded
-    from Python ({v!r}::DOUBLE, BM25 precedent), scores a fixed IEEE
+    from Python ({v!r}::DOUBLE, DuckDB literals are DECIMAL), scores a fixed IEEE
     chain over left-fold cosines — hash-exact."""
     emb = _emb(spark, sf_dir)
     return S.mmr_rerank(
@@ -273,32 +271,6 @@ def q_semantic_dedup(spark, sf_dir):
     from ctinexus_spark.operators.dedup import semantic_dedup_keeplist
 
     return semantic_dedup_keeplist(_emb(spark, sf_dir), threshold=0.3)
-
-
-def q_rand_proj(spark, sf_dir):
-    from ctinexus_spark.operators.quantize import random_projection
-
-    return random_projection(_emb(spark, sf_dir))
-
-
-def q_pq_codes(spark, sf_dir):
-    from ctinexus_spark.operators.quantize import pq_encode
-
-    return pq_encode(_emb(spark, sf_dir))
-
-
-def q_pq_adc_topk(spark, sf_dir):
-    from ctinexus_spark.operators.quantize import pq_adc_topk
-
-    emb = _emb(spark, sf_dir)
-    return pq_adc_topk(emb, emb.filter(F.col("vec_id") < 10))
-
-
-def q_ivf_pq_topk(spark, sf_dir):
-    from ctinexus_spark.operators.quantize import ivf_pq_topk
-
-    emb = _emb(spark, sf_dir)
-    return ivf_pq_topk(emb, emb.filter(F.col("vec_id") < 10))
 
 
 def q_url_ops(spark, sf_dir):
@@ -1929,157 +1901,12 @@ ORACLES["dedup_incremental"] = ORACLES["dedup_incremental"].format(
 )
 
 
-# --- PQ / random-projection oracles (generated literals) ---------------
-
-def _rand_proj_sql() -> str:
-    from ctinexus_spark.operators.similarity import hyperplane_signs
-
-    signs = hyperplane_signs(64, 16)
-    exprs = []
-    for j in range(16):
-        lits = ", ".join(f"{float(x)}" for x in signs[j])
-        exprs.append(
-            f"list_sum(list_transform(range(1, 65), "
-            f"i -> embedding[i]::DOUBLE * ([{lits}])[i])) / sqrt(16.0)"
-        )
-    lst = ",\n    ".join(exprs)
-    return f"""
-WITH proj AS (SELECT vec_id, [{lst}] AS l FROM embeddings)
-SELECT vec_id, CAST(generate_subscripts(l, 1) - 1 AS INT) AS pos, unnest(l) AS value
-FROM proj
-"""
-
-
-def _pq_cent_values() -> str:
-    from ctinexus_spark.operators.quantize import pq_centroids
-
-    cents = pq_centroids()
-    return ", ".join(
-        f"({s}, {c}, [{', '.join(repr(float(x)) for x in cents[s, c])}]::DOUBLE[])"
-        for s in range(cents.shape[0])
-        for c in range(cents.shape[1])
-    )
-
-
-_PQ_ASSIGN_SQL = """
-cents(s, c, cv) AS (SELECT * FROM (VALUES {vals})),
-dists AS (
-  SELECT e.vec_id, c.s, c.c,
-         list_sum(list_transform(range(1, 9),
-           j -> (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j])
-              * (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j]))) AS dist
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, CAST(s AS INT) AS subspace, CAST(c AS INT) AS code FROM (
-    SELECT vec_id, s, c,
-           row_number() OVER (PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-    FROM dists
-  ) WHERE rn = 1
-)
-"""
-
-ORACLES["rand_proj"] = _rand_proj_sql()
-ORACLES["pq_codes"] = (
-    "WITH " + _PQ_ASSIGN_SQL.format(vals=_pq_cent_values())
-    + "SELECT vec_id, subspace, code FROM assign"
-)
-ORACLES["pq_adc_topk"] = (
-    "WITH " + _PQ_ASSIGN_SQL.format(vals=_pq_cent_values())
-    + """,
-qd AS (
-  SELECT e.vec_id AS query_id, c.s, c.c,
-         list_sum(list_transform(range(1, 9),
-           j -> (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j])
-              * (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j]))) AS dist
-  FROM embeddings e CROSS JOIN cents c
-  WHERE e.vec_id < 10
-),
-scored AS (
-  SELECT q.query_id, a.vec_id AS neighbor_id,
-         list_sum(list(q.dist ORDER BY q.s)) AS adc_dist
-  FROM assign a JOIN qd q ON q.s = a.subspace AND q.c = a.code
-  GROUP BY q.query_id, a.vec_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-  FROM scored WHERE query_id != neighbor_id
-) WHERE rank <= 5
-"""
-)
-
-QUERIES["rand_proj"] = q_rand_proj
-QUERIES["pq_codes"] = q_pq_codes
-QUERIES["pq_adc_topk"] = q_pq_adc_topk
-
-
-# IVF-PQ: coarse-cell restriction + code-lookup distances, composed
-# from the IVF and PQ oracle pieces with fresh CTE names.
-ORACLES["ivf_pq_topk"] = f"""
-WITH ivfcents(cell, cvec) AS (SELECT * FROM (VALUES {_CENTROID_VALUES})),
-iscored AS (
-  SELECT e.vec_id, c.cell,
-         list_cosine_similarity(e.embedding::DOUBLE[], c.cvec) AS cos
-  FROM embeddings e CROSS JOIN ivfcents c
-),
-iassign AS (
-  SELECT vec_id, CAST(cell AS INT) AS cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-    FROM iscored
-  ) WHERE rn = 1
-),
-okc AS (SELECT cell FROM iassign GROUP BY cell HAVING count(*) <= {S.MAX_CELL}),
-iprobes AS (
-  SELECT vec_id AS query_id, CAST(cell AS INT) AS cell FROM (
-    SELECT vec_id, cell,
-           row_number() OVER (PARTITION BY vec_id ORDER BY cos DESC, cell DESC) AS rn
-    FROM iscored WHERE vec_id < 10
-  ) WHERE rn <= {S.N_IVF_PROBE}
-),
-pqcents(s, c, cv) AS (SELECT * FROM (VALUES {_pq_cent_values()})),
-pdists AS (
-  SELECT e.vec_id, c.s, c.c,
-         list_sum(list_transform(range(1, 9),
-           j -> (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j])
-              * (e.embedding[c.s * 8 + j]::DOUBLE - c.cv[j]))) AS dist
-  FROM embeddings e CROSS JOIN pqcents c
-),
-passign AS (
-  SELECT vec_id, CAST(s AS INT) AS subspace, CAST(c AS INT) AS code FROM (
-    SELECT vec_id, s, c,
-           row_number() OVER (PARTITION BY vec_id, s ORDER BY dist ASC, c ASC) AS rn
-    FROM pdists
-  ) WHERE rn = 1
-),
-qd AS (SELECT vec_id AS query_id, s, c, dist FROM pdists WHERE vec_id < 10),
-cand AS (
-  SELECT DISTINCT p.query_id, a.vec_id AS neighbor_id
-  FROM iprobes p JOIN iassign a ON p.cell = a.cell JOIN okc ON a.cell = okc.cell
-),
-scored AS (
-  SELECT c.query_id, c.neighbor_id, list_sum(list(q.dist ORDER BY q.s)) AS adc_dist
-  FROM cand c
-  JOIN passign pa ON pa.vec_id = c.neighbor_id
-  JOIN qd q ON q.query_id = c.query_id AND q.s = pa.subspace AND q.c = pa.code
-  GROUP BY c.query_id, c.neighbor_id
-)
-SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank FROM (
-  SELECT query_id, neighbor_id,
-         row_number() OVER (PARTITION BY query_id ORDER BY adc_dist ASC, neighbor_id ASC) AS rank
-  FROM scored WHERE query_id != neighbor_id
-) WHERE rank <= 5
-"""
-QUERIES["ivf_pq_topk"] = q_ivf_pq_topk
-
-
 def _mmr_sql(k: int = 5, lam: float = 0.7, candidates: int = 20, nq: int = 8) -> str:
     """Unrolled-round DuckDB twin of similarity.mmr_rerank: greedy
     MMR as k CTE rounds — per round, max-sim against the union of
     prior selections, score = λ·rel − (1−λ)·maxsim with BOTH float
-    constants computed in Python and embedded ({v!r}::DOUBLE — the
-    BM25 precedent), argmax = min(struct_pack(ns := −score, cid)) and
+    constants computed in Python and embedded ({v!r}::DOUBLE, since
+    DuckDB bare literals are DECIMAL), argmax = min(struct_pack(ns := −score, cid)) and
     the winning score recovered as −ns (negation is sign-bit-exact).
     Cosines are list_cosine_similarity(::DOUBLE[]) — bit-identical to
     the Spark left-fold."""
@@ -2162,280 +1989,7 @@ ORACLES["mmr_topk"] = _mmr_sql(k=5, lam=0.7, candidates=20, nq=8)
 QUERIES["mmr_topk"] = q_mmr_topk
 
 
-# --- distributed sketches (round 5) -------------------------------------
-# HyperLogLog / Count-Min / Bloom over 3-gram shingles (the corpus
-# has only 31 distinct TOKENS, so grams are the value space with real
-# cardinality: ~16k distinct corpus-wide, 1.2-1.5k per source). All
-# hashes are md5-prefix integers, so both engines agree bit-for-bit
-# (operators/sketches.py has the determinism contract).
-
-
-def _grams3_df(spark, sf_dir, with_source: bool = False):
-    """Non-distinct 3-token grams, one row per occurrence (sequential
-    positions — multiplicity matters for the Count-Min counts)."""
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    toks = F.split(F.col("text"), " ")
-    grams = F.when(
-        F.size(toks) >= 3,
-        F.transform(
-            F.sequence(F.lit(0), F.size(toks) - 3),
-            lambda i: F.array_join(F.slice(toks, i + 1, 3), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    cols = [F.col("source")] if with_source else []
-    return docs.select(*cols, F.explode(grams).alias("v"))
-
-
-def q_hll_distinct(spark, sf_dir):
-    """Per-source HyperLogLog distinct-3-gram estimate (m=1024
-    registers) next to the exact distinct count — the O(1)-state
-    cardinality profile a 100 TB pipeline runs instead of
-    count(DISTINCT) over the raw corpus."""
-    from ctinexus_spark.operators import sketches as K
-
-    g = _grams3_df(spark, sf_dir, with_source=True)
-    hll = K.hll_distinct(g, "source", "v", p=10)
-    exact = g.groupBy("source").agg(
-        F.count_distinct("v").cast("bigint").alias("exact_distinct")
-    )
-    return hll.join(exact, "source")
-
-
-def q_cms_topk(spark, sf_dir):
-    """Count-Min heavy hitters: exact top-50 grams (deterministic
-    tie-break) with their 4x2048 sketch estimate alongside — the gap
-    is the collision noise the sketch trades for O(1) state."""
-    from ctinexus_spark.operators import sketches as K
-
-    g = _grams3_df(spark, sf_dir)
-    return K.cms_heavy_hitters(g, "v", depth=4, width=2048, k=50).withColumnRenamed(
-        "v", "gram"
-    )
-
-
-def q_bloom_probe(spark, sf_dir):
-    """Bloom-filter denylist probe: filter built over src0's distinct
-    grams (16384 bits, 3 hashes), probed with every distinct corpus
-    gram; emits the maybe-members with ground truth so the false
-    positives at this sizing are visible."""
-    from ctinexus_spark.operators import sketches as K
-
-    g = _grams3_df(spark, sf_dir, with_source=True)
-    deny = g.filter(F.col("source") == "src0").select("v")
-    probe = g.select("v").distinct()
-    return K.bloom_probe(probe, deny, "v", bits=16384, hashes=3).withColumnRenamed(
-        "v", "gram"
-    )
-
-
-def _hex32_sql(expr: str) -> str:
-    """DuckDB fragment: integer value of the first 8 md5 hex chars of
-    `expr` — the twin of sketches.hash32 (strpos fold, same idiom as
-    the simhash oracle)."""
-    return (
-        "CAST(list_sum(list_transform(range(1, 9), "
-        f"i -> CAST(strpos('0123456789abcdef', substr(md5({expr}), i, 1)) - 1 AS BIGINT)"
-        " * (CAST(1 AS BIGINT) << ((8 - i) * 4)))) AS BIGINT)"
-    )
-
-
-_GRAMS3_CTES = """tk AS (SELECT source, str_split(text, ' ') AS l FROM documents),
-g AS (
-  SELECT source, array_to_string(list_slice(l, i, i + 2), ' ') AS v
-  FROM tk, unnest(range(1, len(l) - 1)) t(i)
-  WHERE len(l) >= 3
-)"""
-
-ORACLES["hll_distinct"] = f"""
-WITH {_GRAMS3_CTES},
-h AS (SELECT source, {_hex32_sql('v')} AS h32 FROM g),
-rb AS (
-  SELECT source, h32 >> 22 AS bucket,
-         CASE WHEN (h32 & 4194303) = 0 THEN 23
-              ELSE 23 - length(bin(h32 & 4194303)) END AS m_j
-  FROM h
-),
-regs AS (SELECT source, bucket, max(m_j) AS m_j FROM rb GROUP BY source, bucket),
-agg AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS nonzero_registers,
-         sum(1.0::DOUBLE / CAST((1::BIGINT << m_j) AS DOUBLE)) AS s
-  FROM regs GROUP BY source
-),
-ex AS (SELECT source, CAST(count(DISTINCT v) AS BIGINT) AS exact_distinct FROM g GROUP BY source)
-SELECT a.source, a.nonzero_registers,
-       (0.7213::DOUBLE / (1.0::DOUBLE + 1.079::DOUBLE / 1024.0::DOUBLE))
-         * 1048576.0::DOUBLE
-         / (a.s + CAST(1024 - a.nonzero_registers AS DOUBLE)) AS hll_est,
-       ex.exact_distinct
-FROM agg a JOIN ex ON a.source = ex.source
-"""
-
-ORACLES["cms_topk"] = f"""
-WITH {_GRAMS3_CTES},
-cells AS (
-  SELECT t.i AS r, {_hex32_sql("CAST(t.i AS VARCHAR) || '|' || v")} % 2048 AS b
-  FROM g, range(0, 4) t(i)
-),
-sk AS (SELECT r, b, CAST(count(*) AS BIGINT) AS cnt FROM cells GROUP BY r, b),
-ex AS (
-  SELECT v, CAST(count(*) AS BIGINT) AS exact_cnt FROM g GROUP BY v
-  ORDER BY exact_cnt DESC, v LIMIT 50
-),
-pr AS (
-  SELECT ex.v, ex.exact_cnt, t.i AS r,
-         {_hex32_sql("CAST(t.i AS VARCHAR) || '|' || ex.v")} % 2048 AS b
-  FROM ex, range(0, 4) t(i)
-)
-SELECT pr.v AS gram, pr.exact_cnt, min(sk.cnt) AS cms_est
-FROM pr JOIN sk ON pr.r = sk.r AND pr.b = sk.b
-GROUP BY pr.v, pr.exact_cnt
-"""
-
-ORACLES["bloom_probe"] = f"""
-WITH {_GRAMS3_CTES},
-deny AS (SELECT DISTINCT v FROM g WHERE source = 'src0'),
-dpos AS (
-  SELECT DISTINCT {_hex32_sql("CAST(t.i AS VARCHAR) || '|' || v")} % 16384 AS pos
-  FROM deny, range(0, 3) t(i)
-),
-probe AS (SELECT DISTINCT v FROM g),
-ppos AS (
-  SELECT v, {_hex32_sql("CAST(t.i AS VARCHAR) || '|' || v")} % 16384 AS pos
-  FROM probe, range(0, 3) t(i)
-),
-hits AS (SELECT v FROM ppos JOIN dpos USING (pos) GROUP BY v HAVING count(*) = 3)
-SELECT h.v AS gram, (d.v IS NOT NULL) AS is_member
-FROM hits h LEFT JOIN deny d ON h.v = d.v
-"""
-
-QUERIES["hll_distinct"] = q_hll_distinct
-QUERIES["cms_topk"] = q_cms_topk
-QUERIES["bloom_probe"] = q_bloom_probe
-
-
-def q_kmv_distinct(spark, sf_dir):
-    """Per-source KMV (bottom-k) distinct estimate over 3-gram
-    shingles — the distinct sketch that also supports set operations
-    (kmv_overlap). Salted two-stage min-k (no per-group window sort);
-    estimate (k−1)·2³²/h_k is one IEEE division — bit-exact."""
-    from ctinexus_spark.operators.sketches import kmv_distinct
-
-    return kmv_distinct(_grams3_df(spark, sf_dir, with_source=True), "source", "v", k=256)
-
-
-def q_kmv_overlap(spark, sf_dir):
-    """Set operations on two sources' KMV sketches: merged bottom-k →
-    Jaccard / union-size / intersection-size estimates between src0
-    and src1's shingle sets — 'how much do these two feeds overlap'
-    without comparing any documents."""
-    from ctinexus_spark.operators.sketches import kmv_overlap
-
-    return kmv_overlap(
-        _grams3_df(spark, sf_dir, with_source=True), "source", "v",
-        ga="src0", gb="src1", k=256,
-    )
-
-
-_KMV_SCALE = float(255 * (1 << 32))
-
-ORACLES["kmv_distinct"] = f"""
-WITH {_GRAMS3_CTES},
-dh AS (SELECT DISTINCT source, {_hex32_sql('v')} AS h FROM g),
-rk AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS r FROM dh),
-top AS (SELECT source, CAST(count(*) AS INT) AS n_kept FROM rk WHERE r <= 256 GROUP BY source),
-kth AS (SELECT source, h AS kth_hash FROM rk WHERE r = 256)
-SELECT t.source AS "group", t.n_kept,
-       CAST(coalesce(k.kth_hash, -1) AS BIGINT) AS kth_hash,
-       CASE WHEN k.kth_hash IS NULL THEN CAST(t.n_kept AS DOUBLE)
-            ELSE {_KMV_SCALE!r}::DOUBLE / CAST(k.kth_hash AS DOUBLE) END AS kmv_est
-FROM top t LEFT JOIN kth k USING (source)
-"""
-
-ORACLES["kmv_overlap"] = f"""
-WITH {_GRAMS3_CTES},
-dh AS (SELECT DISTINCT source, {_hex32_sql('v')} AS h FROM g
-       WHERE source IN ('src0', 'src1')),
-rk AS (SELECT source, h, row_number() OVER (PARTITION BY source ORDER BY h) AS r FROM dh),
-a AS (SELECT list(h ORDER BY h) AS hs FROM rk WHERE source = 'src0' AND r <= 256),
-b AS (SELECT list(h ORDER BY h) AS hs FROM rk WHERE source = 'src1' AND r <= 256),
-u AS (SELECT list_slice(list_sort(list_distinct(flatten([a.hs, b.hs]))), 1, 256) AS hs
-      FROM a, b),
-m AS (
-  SELECT len(list_intersect(list_intersect(u.hs, a.hs), b.hs)) AS c,
-         len(u.hs) AS kp, u.hs[256] AS ukth, len(u.hs) >= 256 AS isfull
-  FROM u, a, b
-)
-SELECT CAST(c AS INT) AS inter_common,
-       CAST(kp AS INT) AS k_union,
-       CAST(c AS DOUBLE) / CAST(kp AS DOUBLE) AS jaccard_est,
-       CASE WHEN isfull THEN {_KMV_SCALE!r}::DOUBLE / CAST(ukth AS DOUBLE)
-            ELSE CAST(kp AS DOUBLE) END AS union_est,
-       (CAST(c AS DOUBLE) / CAST(kp AS DOUBLE))
-         * (CASE WHEN isfull THEN {_KMV_SCALE!r}::DOUBLE / CAST(ukth AS DOUBLE)
-                 ELSE CAST(kp AS DOUBLE) END) AS inter_est
-FROM m
-"""
-
-QUERIES["kmv_distinct"] = q_kmv_distinct
-QUERIES["kmv_overlap"] = q_kmv_overlap
-
-
-# --- BM25 retrieval + exact quantiles (round 5) -------------------------
-
-# BM25 constants, computed ONCE in Python and embedded verbatim on
-# both engines (repr round-trips to the identical double; DuckDB bare
-# literals are DECIMAL, so every embedding carries ::DOUBLE)
-_BM25_K1 = 1.2
-_BM25_B = 0.75
-_BM25_K1P1 = _BM25_K1 + 1.0
-_BM25_1MB = 1.0 - _BM25_B
-
-
-def _bm25_query_terms(doc_terms):
-    """Deterministic fixture-free query set: rank corpus 3-grams by
-    (count desc, gram asc) and slice three bands — q_hot (ranks 1-5),
-    q_mid (51-55), q_tail (201-205). Self-contained at every sf (the
-    corpus has >> 205 distinct grams at sf0.001 already)."""
-    from pyspark.sql import Window
-
-    ranked = (
-        doc_terms.groupBy("term")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        .orderBy(F.col("c").desc(), F.col("term"))
-        .limit(205)
-    )
-    r = F.row_number().over(Window.orderBy(F.col("c").desc(), F.col("term")))
-    qid = (
-        F.when(F.col("r") <= 5, F.lit("q_hot"))
-        .when((F.col("r") >= 51) & (F.col("r") <= 55), F.lit("q_mid"))
-        .when((F.col("r") >= 201) & (F.col("r") <= 205), F.lit("q_tail"))
-    )
-    return (
-        ranked.withColumn("r", r)
-        .select(qid.alias("query_id"), "term")
-        .filter(F.col("query_id").isNotNull())
-    )
-
-
-def q_bm25_topk(spark, sf_dir):
-    """Corpus-wide BM25 top-10 per query over 3-gram terms, with the
-    query set derived from the corpus itself (hot/mid/tail gram
-    bands). Rational-idf scoring — bit-exact across engines; rankings
-    identical to log-idf BM25 (monotone transform)."""
-    from ctinexus_spark.operators import retrieval as R
-    from ctinexus_spark.partitioning import barrier, ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    doc_terms = R.ngram_terms(docs, n=3)
-    # the query-term table feeds two joins inside bm25_topk — barrier
-    # the branch point (CLAUDE gotcha: lazy persist races; and the
-    # ranked derivation shouldn't recompute per consumer)
-    qterms = barrier(_bm25_query_terms(doc_terms))
-    return R.bm25_topk(
-        doc_terms, qterms, k1=_BM25_K1, b=_BM25_B, k=10, idf="rational"
-    )
+# --- exact quantiles (round 5) ---------------------------------------
 
 
 def q_doc_len_quantiles(spark, sf_dir):
@@ -2454,69 +2008,6 @@ def q_doc_len_quantiles(spark, sf_dir):
         lens, "n_tokens", qs=(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
     )
 
-
-_BM25_DT_CTES = """tk AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-dt AS (
-  SELECT doc_id, array_to_string(list_slice(l, i, i + 2), ' ') AS term
-  FROM tk, unnest(range(1, len(l) - 1)) t(i)
-  WHERE len(l) >= 3
-)"""
-
-ORACLES["bm25_topk"] = f"""
-WITH {_BM25_DT_CTES},
-ranked AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS c FROM dt GROUP BY term
-  ORDER BY c DESC, term LIMIT 205
-),
-rk AS (SELECT term, row_number() OVER (ORDER BY c DESC, term) AS r FROM ranked),
-qt AS (
-  SELECT CASE WHEN r <= 5 THEN 'q_hot'
-              WHEN r BETWEEN 51 AND 55 THEN 'q_mid'
-              WHEN r BETWEEN 201 AND 205 THEN 'q_tail' END AS query_id, term
-  FROM rk
-  WHERE r <= 5 OR r BETWEEN 51 AND 55 OR r BETWEEN 201 AND 205
-),
-tf AS (
-  SELECT dt.doc_id, dt.term, CAST(count(*) AS BIGINT) AS tf
-  FROM dt JOIN (SELECT DISTINCT term FROM qt) v USING (term)
-  GROUP BY dt.doc_id, dt.term
-),
-dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM dt GROUP BY doc_id),
-sc AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-  FROM dl
-),
-ct AS (
-  SELECT qt.query_id, tf.doc_id, tf.term,
-         (((sc.n_docs - CAST(dft.df AS DOUBLE)) + 0.5::DOUBLE)
-            / (CAST(dft.df AS DOUBLE) + 0.5::DOUBLE))
-           * (CAST(tf.tf AS DOUBLE) * {_BM25_K1P1!r}::DOUBLE)
-           / (CAST(tf.tf AS DOUBLE)
-              + {_BM25_K1!r}::DOUBLE
-                * ({_BM25_1MB!r}::DOUBLE
-                   + {_BM25_B!r}::DOUBLE
-                     * (CAST(dl.dl AS DOUBLE) / sc.avgdl))) AS contrib
-  FROM tf
-  JOIN dft USING (term)
-  JOIN qt USING (term)
-  JOIN dl USING (doc_id)
-  CROSS JOIN sc
-),
-pd AS (
-  SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_hit,
-         list_sum(list(contrib ORDER BY term)) AS score
-  FROM ct GROUP BY query_id, doc_id
-),
-rkd AS (
-  SELECT query_id, doc_id, n_hit, score,
-         CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY score DESC, doc_id) AS INT) AS rank
-  FROM pd
-)
-SELECT query_id, doc_id, n_hit, score, rank FROM rkd WHERE rank <= 10
-"""
 
 ORACLES["doc_len_quantiles"] = """
 WITH v AS (
@@ -2540,63 +2031,7 @@ WHERE cum.n_le >= CAST(ceil(qq.q * CAST(t.n_total AS DOUBLE)) AS BIGINT)
 GROUP BY qq.q
 """
 
-QUERIES["bm25_topk"] = q_bm25_topk
 QUERIES["doc_len_quantiles"] = q_doc_len_quantiles
-
-
-def q_cluster_topics(spark, sf_dir):
-    """Per-cluster topic signatures: IVF-cell document clusters
-    labeled with their top-5 DISTINCTIVE 3-grams by lift ratio
-    p(gram|cell)/p(gram) — the BERTopic c-TF-IDF shape (lift written
-    as a fixed-order IEEE chain, engine bit-exact; BERTopic's log
-    weighting is a monotone transform). min_count=2: the sf corpora
-    put 20-83 twice-seen grams in every cell; >=3 empties cells."""
-    from ctinexus_spark.operators import retrieval as R
-    from ctinexus_spark.operators import similarity as S
-    from ctinexus_spark.operators import stats as ST
-    from ctinexus_spark.partitioning import barrier, ensure_parallelism
-
-    assign = barrier(S.ivf_assign(_emb(spark, sf_dir)))
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    return ST.cluster_topic_terms(
-        assign, R.ngram_terms(docs, n=3), min_count=2, k=5
-    )
-
-
-ORACLES["cluster_topics"] = f"""
-WITH {_IVF_ASSIGN_SQL},
-{_BM25_DT_CTES},
-tg AS (
-  SELECT a.cell, dt.term FROM dt JOIN assign a ON dt.doc_id = a.vec_id
-),
-cnt AS (
-  SELECT cell, term, CAST(count(*) AS BIGINT) AS n FROM tg GROUP BY cell, term
-),
-ctot AS (SELECT cell, CAST(sum(n) AS BIGINT) AS ct FROM cnt GROUP BY cell),
-ttot AS (SELECT term, CAST(sum(n) AS BIGINT) AS tn FROM cnt GROUP BY term),
-grand AS (SELECT CAST(sum(n) AS DOUBLE) AS grand FROM cnt),
-sz AS (SELECT cell, CAST(count(*) AS BIGINT) AS n_docs FROM assign GROUP BY cell),
-scored AS (
-  SELECT cnt.cell, cnt.term AS gram, cnt.n,
-         (CAST(cnt.n AS DOUBLE) * grand.grand)
-           / (CAST(ctot.ct AS DOUBLE) * CAST(ttot.tn AS DOUBLE)) AS ratio
-  FROM cnt
-  JOIN ctot USING (cell)
-  JOIN ttot ON cnt.term = ttot.term
-  CROSS JOIN grand
-  WHERE cnt.n >= 2
-),
-rk AS (
-  SELECT cell, gram, n, ratio,
-         CAST(row_number() OVER (
-           PARTITION BY cell ORDER BY ratio DESC, gram) AS INT) AS rank
-  FROM scored
-)
-SELECT rk.cell, rk.gram, rk.n, sz.n_docs, rk.ratio, rk.rank
-FROM rk JOIN sz USING (cell) WHERE rank <= 5
-"""
-
-QUERIES["cluster_topics"] = q_cluster_topics
 
 
 def q_jaccard_pairs(spark, sf_dir):
@@ -2710,125 +2145,6 @@ SELECT c.cohort_bucket, CAST(c.bucket_offset AS BIGINT) AS bucket_offset,
 FROM cells c JOIN sz USING (cohort_bucket)
 """
 QUERIES["cohort_retention"] = q_cohort_retention
-
-
-def q_hybrid_topk(spark, sf_dir):
-    """Hybrid more-like-this retrieval for 8 query documents: lexical
-    BM25 (query terms = the doc's 5 globally-RAREST 3-grams — the MLT
-    'interesting terms' heuristic) top-20 fused with dense cosine
-    top-20 by reciprocal-rank fusion (retrieval.rrf_fuse; 1/(60+r),
-    missing side contributes 0, score a fixed left-to-right chain of
-    IEEE divisions — engine bit-exact). The production hybrid-search
-    shape: two independent retrievers, provenance-preserving fusion."""
-    from pyspark.sql import Window
-    from ctinexus_spark.operators import retrieval as R
-    from ctinexus_spark.operators import similarity as S
-    from ctinexus_spark.partitioning import barrier, ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    doc_terms = barrier(R.ngram_terms(docs, n=3))
-    ddt = doc_terms.distinct()
-    dfreq = ddt.groupBy("term").agg(F.count("*").cast("bigint").alias("df"))
-    w = Window.partitionBy("doc_id").orderBy("df", "term")
-    qterms = (
-        ddt.filter(F.col("doc_id") < 8)
-        .join(dfreq, "term")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 5)
-        .select(F.col("doc_id").alias("query_id"), "term")
-    )
-    lex = R.bm25_topk(
-        doc_terms, barrier(qterms), k1=_BM25_K1, b=_BM25_B, k=20, idf="rational"
-    )
-    emb = _emb(spark, sf_dir)
-    dense = S.brute_force_topk(emb, emb.filter(F.col("vec_id") < 8), k=20)
-    return R.rrf_fuse(
-        [
-            lex.select("query_id", "doc_id", "rank"),
-            dense.select("query_id", F.col("neighbor_id").alias("doc_id"), "rank"),
-        ],
-        names=["lex", "dense"],
-        rrf_k=60,
-        topk=10,
-    )
-
-
-ORACLES["hybrid_topk"] = f"""
-WITH {_BM25_DT_CTES},
-ddt AS (SELECT DISTINCT doc_id, term FROM dt),
-dfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM ddt GROUP BY term),
-qt AS (
-  SELECT doc_id AS query_id, term FROM (
-    SELECT d.doc_id, d.term,
-           row_number() OVER (PARTITION BY d.doc_id ORDER BY f.df, d.term) AS rk
-    FROM ddt d JOIN dfreq f USING (term) WHERE d.doc_id < 8
-  ) WHERE rk <= 5
-),
-tf AS (
-  SELECT dt.doc_id, dt.term, CAST(count(*) AS BIGINT) AS tf
-  FROM dt JOIN (SELECT DISTINCT term FROM qt) v USING (term)
-  GROUP BY dt.doc_id, dt.term
-),
-dft AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl FROM dt GROUP BY doc_id),
-sc AS (
-  SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-         CAST(sum(dl) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-  FROM dl
-),
-ct AS (
-  SELECT qt.query_id, tf.doc_id, tf.term,
-         (((sc.n_docs - CAST(dft.df AS DOUBLE)) + 0.5::DOUBLE)
-            / (CAST(dft.df AS DOUBLE) + 0.5::DOUBLE))
-           * (CAST(tf.tf AS DOUBLE) * {_BM25_K1P1!r}::DOUBLE)
-           / (CAST(tf.tf AS DOUBLE)
-              + {_BM25_K1!r}::DOUBLE
-                * ({_BM25_1MB!r}::DOUBLE
-                   + {_BM25_B!r}::DOUBLE
-                     * (CAST(dl.dl AS DOUBLE) / sc.avgdl))) AS contrib
-  FROM tf
-  JOIN dft USING (term)
-  JOIN qt USING (term)
-  JOIN dl USING (doc_id)
-  CROSS JOIN sc
-),
-pd AS (
-  SELECT query_id, doc_id,
-         list_sum(list(contrib ORDER BY term)) AS score
-  FROM ct GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id, CAST(row_number() OVER (
-           PARTITION BY query_id ORDER BY score DESC, doc_id) AS INT) AS rank
-  FROM pd QUALIFY rank <= 20
-),
-dn AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS doc_id,
-         CAST(row_number() OVER (
-           PARTITION BY q.vec_id
-           ORDER BY list_cosine_similarity(q.embedding::DOUBLE[], c.embedding::DOUBLE[]) DESC,
-                    c.vec_id) AS INT) AS rank
-  FROM embeddings q JOIN embeddings c ON c.vec_id != q.vec_id
-  WHERE q.vec_id < 8
-  QUALIFY rank <= 20
-),
-fused AS (
-  SELECT coalesce(l.query_id, d.query_id) AS query_id,
-         coalesce(l.doc_id, d.doc_id) AS doc_id,
-         CAST(coalesce(l.rank, -1) AS INT) AS rank_lex,
-         CAST(coalesce(d.rank, -1) AS INT) AS rank_dense,
-         coalesce(1.0::DOUBLE / CAST(60 + l.rank AS DOUBLE), 0.0::DOUBLE)
-           + coalesce(1.0::DOUBLE / CAST(60 + d.rank AS DOUBLE), 0.0::DOUBLE) AS rrf_score
-  FROM lex l FULL OUTER JOIN dn d
-    ON l.query_id = d.query_id AND l.doc_id = d.doc_id
-)
-SELECT query_id, doc_id, rank_lex, rank_dense, rrf_score,
-       CAST(row_number() OVER (
-         PARTITION BY query_id ORDER BY rrf_score DESC, doc_id) AS INT) AS rank
-FROM fused
-QUALIFY rank <= 10
-"""
-QUERIES["hybrid_topk"] = q_hybrid_topk
 
 
 def q_event_bursts(spark, sf_dir):
@@ -2973,7 +2289,7 @@ def q_event_decay(spark, sf_dir):
     """Half-life-decayed trending counters per event type (half-life 7
     days over daily buckets, window 64) — stats.decayed_counts. The
     weight table is ONE Python-computed constant list embedded into
-    both engines ({v!r}::DOUBLE, BM25 precedent — engine pow() could
+    both engines ({v!r}::DOUBLE — engine pow() could
     differ in the last ulp); terms fold in pinned bucket order."""
     from ctinexus_spark.operators.stats import decayed_counts
 

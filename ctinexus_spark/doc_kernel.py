@@ -5,6 +5,8 @@ Every per-document rule of the pipeline lives here exactly once:
 - IE/ET response parsing — JSON repair, the validation filters, the
   first-key class fallback (llm_processor.py:81-213,
   cti_processor.py:118-198);
+- LP link-answer parsing — the predicted triple and its hallucination
+  guard (llm_processor.py:900-1015);
 - EA alignment — type-blocked pairwise cosine, star-set or connected-
   component clusters, frequency-argmax canonical name, dense entity ids
   in class-first-appearance order, IOC unmerge
@@ -119,6 +121,32 @@ def parse_tagging(resp) -> list[tuple]:
             valid_typed_triplet(t),
         ))
     return out
+
+
+def parse_link(resp, main_text: str, topic_text: str) -> tuple[str, bool | None]:
+    """LP response for the pair main ↔ topic → (relation, forward).
+    forward is True when the answer names main → topic, False for
+    topic → main, and None when it names neither orientation exactly
+    (the hallucination sentinel). Subject, relation and object come
+    from `predicted_triple`, else from the payload's first three
+    values. A missing, null or non-string field turns all three into
+    'unknown' (reference KeyError semantics, llm_processor.py:940-965),
+    so the pair lands in the hallucination branch and the relation is
+    always a string."""
+    payload = _payload(resp)
+    pt = payload.get("predicted_triple")
+    if isinstance(pt, dict):
+        vals = [pt.get(k) for k in ("subject", "relation", "object")]
+    else:
+        vals = list(payload.values())[:3]
+    if len(vals) < 3 or not all(isinstance(v, str) for v in vals):
+        vals = ["unknown"] * 3
+    subj, rel, obj = vals
+    if subj == main_text and obj == topic_text:
+        return rel, True
+    if subj == topic_text and obj == main_text:
+        return rel, False
+    return rel, None
 
 
 # --- EA: merge + IOC unmerge --------------------------------------------

@@ -7,7 +7,8 @@ llm_processor.py:900-1015):
   path;
 - one LLM call per non-topic main node proposing the edge
   main ↔ topic; answers that name neither orientation exactly become
-  the "hallucination" sentinel (L7-L8).
+  the "hallucination" sentinel (L7-L8) — the answer parse is
+  doc_kernel.parse_link.
 
 Spark shape: graph analysis runs per document through
 partitioning.grouped_map_stitched (many documents per Arrow batch);
@@ -25,8 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
-from ctinexus_spark.doc_kernel import EntityStats, analyze_doc
-from ctinexus_spark.jsonrepair import parse_llm_json
+from ctinexus_spark.doc_kernel import EntityStats, analyze_doc, parse_link
 
 GRAPH_SCHEMA = (
     "url string, entity_id int, entity_text string, component_id int, "
@@ -136,35 +136,16 @@ def _link_rows(pdf: pd.DataFrame, model) -> pd.DataFrame:
     )
     rows = []
     for r, resp in zip(recs, responses):
-        try:
-            payload = parse_llm_json(resp)
-        except ValueError:
-            payload = None
-        ps = pr = po = "unknown"
-        if isinstance(payload, dict):
-            pt = payload.get("predicted_triple")
-            if isinstance(pt, dict):
-                # reference KeyError semantics (llm_processor.py:940-965):
-                # a missing/null subject|relation|object key coerces all
-                # three to 'unknown', so the pair lands in the
-                # hallucination branch instead of emitting a null-field
-                # "ok" link.
-                if all(pt.get(k) is not None for k in ("subject", "relation", "object")):
-                    ps, pr, po = pt["subject"], pt["relation"], pt["object"]
-            else:
-                vals = list(payload.values())
-                if len(vals) >= 3:
-                    ps, pr, po = vals[0], vals[1], vals[2]
-        # hallucination guard: exact orientation match required
-        if ps == r.main_text and po == r.topic_text:
-            rows.append((r.url, int(r.main_id), r.main_text, pr,
-                         int(r.topic_id), r.topic_text, "ok"))
-        elif ps == r.topic_text and po == r.main_text:
-            rows.append((r.url, int(r.topic_id), r.topic_text, pr,
-                         int(r.main_id), r.main_text, "ok"))
-        else:
-            rows.append((r.url, None, "hallucination", pr,
+        rel, forward = parse_link(resp, r.main_text, r.topic_text)
+        if forward is None:
+            rows.append((r.url, None, "hallucination", rel,
                          None, "hallucination", "hallucination"))
+        elif forward:
+            rows.append((r.url, int(r.main_id), r.main_text, rel,
+                         int(r.topic_id), r.topic_text, "ok"))
+        else:
+            rows.append((r.url, int(r.topic_id), r.topic_text, rel,
+                         int(r.main_id), r.main_text, "ok"))
     return pd.DataFrame(rows, columns=_LINK_COLS)
 
 

@@ -530,7 +530,7 @@ def mmr_rerank(
     Determinism: rel/sim are the fixed left-fold cosine (bit-identical
     to DuckDB list_cosine_similarity); scores are the fixed IEEE chain
     lam·rel − (1−lam)·maxsim with BOTH float constants computed in
-    Python and embedded (BM25 precedent); argmax = min(struct(−score,
+    Python and embedded as ::DOUBLE literals; argmax = min(struct(−score,
     id)) — so (query_id, pick_rank, neighbor_id, mmr_score) hash-match
     the unrolled SQL twin exactly.
 

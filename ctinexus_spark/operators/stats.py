@@ -28,7 +28,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-__all__ = ["exact_quantiles", "cluster_topic_terms"]
+__all__ = ["exact_quantiles"]
 
 
 def exact_quantiles(
@@ -68,71 +68,6 @@ def exact_quantiles(
             F.col("s.n_le").alias("n_le"),
             F.col("s.n_total").alias("n_total"),
         )
-    )
-
-
-def cluster_topic_terms(
-    assign: DataFrame,
-    doc_terms: DataFrame,
-    min_count: int = 3,
-    k: int = 5,
-) -> DataFrame:
-    """(cell, gram, n, n_docs, ratio, rank): the top-k DISTINCTIVE
-    terms per document cluster — the BERTopic class-TF-IDF shape for
-    labeling embedding clusters with what their documents are about.
-
-    assign: (vec_id, cell) — a cluster assignment (ivf_assign or
-    trained k-means). doc_terms: (doc_id, term) occurrences, joined
-    on doc_id == vec_id.
-
-    Distinctiveness is the lift ratio p(term|cell) / p(term) written
-    as the fixed-order IEEE chain (n * total) / (cell_total * n_term)
-    of integer-valued doubles — engine bit-exact without libm log
-    (the token_pmi precedent); BERTopic's log weighting is a monotone
-    transform of the same lift, so rankings match. min_count drops
-    the unstable low-frequency tail BEFORE ranking.
-
-    Scale shape: one equi-join tags each term occurrence with its
-    cell; per-(cell, term) counts partial-aggregate map-side; the
-    cell/term marginals are two more partial aggs over the (already
-    tiny) count table; the corpus total rides one lazy keyless
-    aggregate (single allowed BroadcastNestedLoopJoin); top-k is a
-    window over cells. The count table is barriered once — it feeds
-    three consumers (counts, cell marginal, term marginal)."""
-    from ctinexus_spark.partitioning import barrier
-
-    tagged = doc_terms.join(
-        assign.select(F.col("vec_id").alias("doc_id"), "cell"), "doc_id"
-    )
-    cnt = barrier(
-        tagged.groupBy("cell", "term").agg(
-            F.count("*").cast("bigint").alias("n")
-        )
-    )
-    cell_tot = cnt.groupBy("cell").agg(F.sum("n").cast("bigint").alias("ct"))
-    term_tot = cnt.groupBy("term").agg(F.sum("n").cast("bigint").alias("tn"))
-    grand = cnt.agg(F.sum("n").cast("double").alias("grand"))
-    sizes = assign.groupBy("cell").agg(
-        F.count("*").cast("bigint").alias("n_docs")
-    )
-    ratio = (F.col("n").cast("double") * F.col("grand")) / (
-        F.col("ct").cast("double") * F.col("tn").cast("double")
-    )
-    scored = (
-        cnt.filter(F.col("n") >= min_count)
-        .join(cell_tot, "cell")
-        .join(term_tot, "term")
-        .crossJoin(grand)
-        .select("cell", F.col("term").alias("gram"), "n", ratio.alias("ratio"))
-    )
-    w = Window.partitionBy("cell").orderBy(
-        F.col("ratio").desc(), F.col("gram")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
-        .join(sizes, "cell")
-        .select("cell", "gram", "n", "n_docs", "ratio", "rank")
     )
 
 

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
 from ctinexus_spark.operators.et import tag_triples
-from ctinexus_spark.operators.ie import attach_demos, extract_triples
+from ctinexus_spark.operators.ie import extract_triples
 from ctinexus_spark.operators.lp import analyze_graph, predict_links
 from ctinexus_spark.operators.materialize import materialize_kg
 from ctinexus_spark.operators.normalize import normalize_documents
@@ -91,8 +91,6 @@ def run_pipeline(
     documents: DataFrame,
     model,
     config: PipelineConfig | None = None,
-    demo_texts: list[str] | None = None,
-    demo_ids: list[str] | None = None,
     lang_filter: str | None = "en",
 ) -> PipelineResult:
     cfg = config or PipelineConfig()
@@ -103,8 +101,6 @@ def run_pipeline(
     # the whole extraction lineage. (On the checkpointed production
     # path each stage is a parquet/Iceberg write instead.)
     docs = normalize_documents(documents, lang_filter=lang_filter).persist()
-    if demo_texts:
-        docs = attach_demos(docs, demo_texts, demo_ids or [str(i) for i in range(len(demo_texts))], cfg)
 
     ie_all = extract_triples(docs, model)
     triples_ie = ie_all.filter("valid")

@@ -375,230 +375,6 @@ def windowed_event_counts(
     )
 
 
-HLL_OUTPUT_SCHEMA = "group string, nonzero_registers long, hll_est double"
-
-
-def stream_hll_distinct(
-    values: DataFrame,
-    group_col: str = "source",
-    value_col: str = "v",
-    p: int = 10,
-) -> DataFrame:
-    """Streaming per-group distinct-count sketch: a cross-batch
-    HyperLogLog via applyInPandasWithState, keyed by group, state =
-    the 2^p register array (4 KB/group at p=10 — O(1) regardless of
-    stream volume, the whole point vs a streaming count(DISTINCT)
-    whose state grows with the value universe).
-
-    Emits (group, nonzero_registers, hll_est) every micro-batch the
-    group receives data ("update" output); the estimate is monotone
-    non-decreasing across batches (registers only ever max-merge).
-
-    Bit-equality contract with the batch sketch: register
-    observations come from the SAME Spark-side projection
-    (sketches.hll_register_rows) and the estimator repeats
-    hll_distinct's arithmetic — the register sum is exact powers of
-    two (order-free), the rest a fixed-order IEEE chain — so after
-    the final batch the stream's row per group equals
-    hll_distinct(union of batches) EXACTLY (pinned by
-    test_streaming)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ctinexus_spark.operators.sketches import hll_register_rows
-
-    m = 1 << p
-    prepped = hll_register_rows(values, group_col, value_col, p=p)
-
-    def upd(key, pdfs, state):
-        regs = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.zeros(m, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            # map-side combine within the state task: one max per
-            # observed bucket, then a vectorized register merge
-            gb = pdf.groupby("bucket")["rho"].max()
-            np.maximum.at(regs, gb.index.to_numpy(), gb.to_numpy())
-        state.update((regs.tolist(),))
-        nz = int((regs > 0).sum())
-        # identical arithmetic to hll_distinct's SQL expressions:
-        # exact power-of-two sum, then the fixed-order alpha chain
-        s = float(np.sum(1.0 / np.exp2(regs[regs > 0].astype(np.float64))))
-        alpha = 0.7213 / (1.0 + 1.079 / float(m))
-        est = (alpha * float(m * m)) / (s + float(m - nz))
-        return iter(
-            [
-                pd.DataFrame(
-                    [
-                        {
-                            "group": key[0],
-                            "nonzero_registers": nz,
-                            "hll_est": est,
-                        }
-                    ]
-                )
-            ]
-        )
-
-    return prepped.groupBy("group").applyInPandasWithState(
-        upd,
-        HLL_OUTPUT_SCHEMA,
-        "regs array<long>",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-CMS_OUTPUT_SCHEMA = "group string, value string, cms_est long"
-
-
-def stream_cms_probes(
-    values: DataFrame,
-    probes: list[str],
-    group_col: str = "source",
-    value_col: str = "v",
-    depth: int = 4,
-    width: int = 2048,
-) -> DataFrame:
-    """Streaming per-group frequency monitor: a cross-batch Count-Min
-    sketch via applyInPandasWithState, keyed by group, state = the
-    flattened depth×width counter array (64 KB/group at the batch
-    defaults — O(1) regardless of stream volume). Every micro-batch
-    the group receives data, it emits one row per monitored probe
-    value: (group, value, cms_est) — the running over-estimate of that
-    value's occurrence count so far ("which of these watched terms /
-    fingerprints is getting hot on this feed").
-
-    Bit-equality contract with the batch sketch: bucket observations
-    come from the SAME Spark-side projection (sketches.cms_bucket_rows)
-    and counters are additive integers, so after the final batch
-    cms_est equals min-over-rows of the batch cms_sketch(union of
-    batches) counters EXACTLY — probe positions are computed driver-
-    side with py_hash32, the byte-identical Python twin of the column
-    hash (pinned by test_streaming).
-    """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ctinexus_spark.operators.sketches import cms_bucket_rows, py_hash32
-
-    flat = depth * width
-    # (probe value, [flat positions row*width+bucket]) — constants,
-    # captured by the closure; tiny (len(probes)*depth ints)
-    probe_pos = [
-        (v, [i * width + (py_hash32(v, salt=i) % width) for i in range(depth)])
-        for v in sorted(set(probes))
-    ]
-    prepped = cms_bucket_rows(values, group_col, value_col, depth=depth, width=width)
-
-    def upd(key, pdfs, state):
-        cnts = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.zeros(flat, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            # map-side combine within the state task: one count per
-            # observed (row, bucket), then a vectorized add
-            gb = pdf.groupby(["row", "bucket"]).size()
-            idx = (
-                gb.index.get_level_values("row").to_numpy() * width
-                + gb.index.get_level_values("bucket").to_numpy()
-            )
-            np.add.at(cnts, idx, gb.to_numpy())
-        state.update((cnts.tolist(),))
-        return iter(
-            [
-                pd.DataFrame(
-                    [
-                        {
-                            "group": key[0],
-                            "value": v,
-                            "cms_est": int(cnts[pos].min()),
-                        }
-                        for v, pos in probe_pos
-                    ]
-                )
-            ]
-        )
-
-    return prepped.groupBy("group").applyInPandasWithState(
-        upd,
-        CMS_OUTPUT_SCHEMA,
-        "cnts array<long>",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
-KMV_OUTPUT_SCHEMA = "group string, n_kept int, kth_hash long, kmv_est double"
-
-
-def stream_kmv_distinct(
-    values: DataFrame,
-    group_col: str = "source",
-    value_col: str = "v",
-    k: int = 256,
-) -> DataFrame:
-    """Streaming per-group KMV (bottom-k) distinct sketch via
-    applyInPandasWithState: state = the k smallest distinct hashes
-    seen so far (≤ 8k bytes/group — O(1) regardless of stream
-    volume). Emits (group, n_kept, kth_hash, kmv_est) every
-    micro-batch the group receives data; unlike the HLL registers the
-    retained state supports downstream SET OPERATIONS (union /
-    Jaccard, sketches.kmv_overlap) over feeds.
-
-    Bit-equality contract with the batch sketch: the bottom-k merge
-    is associative and deduplicating (sorted-unique arrays), the hash
-    is the same md5 projection (sketches.hash32 Spark-side), and the
-    estimator repeats kmv_distinct's single IEEE division — after the
-    final batch the stream's row per group equals
-    kmv_distinct(union of batches) EXACTLY (pinned by
-    test_streaming)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from ctinexus_spark.operators.sketches import hash32
-
-    scale = float((k - 1) * (1 << 32))
-    prepped = values.select(
-        F.col(group_col).alias("group"), hash32(F.col(value_col)).alias("h")
-    )
-
-    def upd(key, pdfs, state):
-        hs = (
-            np.array(state.get[0], dtype=np.int64)
-            if state.exists
-            else np.empty(0, dtype=np.int64)
-        )
-        for pdf in pdfs:
-            hs = np.unique(np.concatenate([hs, pdf["h"].to_numpy(np.int64)]))[:k]
-        state.update((hs.tolist(),))
-        n = int(hs.size)
-        kth = int(hs[k - 1]) if n >= k else -1
-        est = scale / float(kth) if n >= k else float(n)
-        return iter(
-            [
-                pd.DataFrame(
-                    [{"group": key[0], "n_kept": n, "kth_hash": kth, "kmv_est": est}]
-                )
-            ]
-        )
-
-    return prepped.groupBy("group").applyInPandasWithState(
-        upd,
-        KMV_OUTPUT_SCHEMA,
-        "hs array<long>",
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
 def stream_bursts(
     events: DataFrame,
     key_col: str = "event_type",

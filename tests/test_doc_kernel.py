@@ -16,6 +16,7 @@ from ctinexus_spark.doc_kernel import (
     analyze_doc,
     first_key_or_default,
     parse_extraction,
+    parse_link,
     parse_tagging,
 )
 
@@ -36,11 +37,12 @@ def align(texts, classes, emb_of, mode="star", threshold=0.6):
 # --- parsing --------------------------------------------------------------
 
 json_values = st.recursive(
-    st.none() | st.booleans() | st.integers() | st.floats(allow_nan=False) | st.text(max_size=8),
+    st.none() | st.booleans() | st.integers() | st.floats(allow_nan=False)
+    | st.text(max_size=8) | st.sampled_from(["main", "topic"]),
     lambda inner: st.lists(inner, max_size=4)
     | st.dictionaries(
-        st.sampled_from(["triplets", "tagged_triples", "subject", "relation",
-                         "object", "text", "mention_text", "class"]),
+        st.sampled_from(["triplets", "tagged_triples", "predicted_triple", "subject",
+                         "relation", "object", "text", "mention_text", "class"]),
         inner, max_size=4,
     ),
     max_leaves=20,
@@ -59,13 +61,20 @@ json_values = st.recursive(
          '"object": {"text": "x", "class": "Tool"}}]}')
 @example('{"tagged_triples": [{"subject": {"text": "", "mention_text": 7}, "relation": "uses", '
          '"object": {"text": "x"}}]}')
+@example('{"predicted_triple": {"subject": "main", "relation": 5, "object": "topic"}}')
+@example('{"predicted_triple": {"subject": "topic", "relation": ["r"], "object": "main"}}')
+@example('{"s": "main", "r": 5, "o": "topic"}')
 def test_parsers_never_raise(resp):
     """Model output is arbitrary text; a response that is not a JSON
     object with the expected shape yields rejects or nothing, never an
     exception that would fail the whole Arrow task. A row marked valid
-    carries non-empty string subject and object texts (a valid row
-    with an int text would fail the string column's Arrow conversion
-    for the whole task)."""
+    carries non-empty string subject and object texts, and a link's
+    relation is always a string (a valid row with an int text or an
+    int relation would fail the string column's Arrow conversion for
+    the whole task)."""
+    rel, forward = parse_link(resp, "main", "topic")
+    assert isinstance(rel, str)
+    assert forward in (True, False, None)
     for row in parse_extraction(resp):
         assert len(row) == 4
         assert all(v is None or isinstance(v, str) for v in row[:3])
@@ -105,6 +114,45 @@ def test_extraction_rows_keep_rejects_and_coerce_text():
         ("a", None, "b", False),
         (None, None, None, False),
     ]
+
+
+def test_link_orientation_and_unknown_fields():
+    def ans(s, r, o):
+        return json.dumps({"predicted_triple": {"subject": s, "relation": r, "object": o}})
+
+    assert parse_link(ans("m", "uses", "t"), "m", "t") == ("uses", True)
+    assert parse_link(ans("t", "uses", "m"), "m", "t") == ("uses", False)
+    assert parse_link(ans("x", "uses", "t"), "m", "t") == ("uses", None)
+    # without predicted_triple the first three values are the triple
+    assert parse_link(json.dumps({"a": "t", "b": "hosts", "c": "m"}), "m", "t") == ("hosts", False)
+    # a missing, null or non-string field makes all three 'unknown': a
+    # hallucination, even when subject and object name the pair
+    for bad in (ans("m", None, "t"), ans("m", 5, "t"), ans("m", ["r"], "t"),
+                json.dumps({"predicted_triple": {"subject": "m", "object": "t"}}),
+                json.dumps({"a": "m", "b": 5, "c": "t"}), json.dumps({"a": "m", "b": "r"}),
+                "[]", None):
+        assert parse_link(bad, "m", "t") == ("unknown", None)
+
+
+def test_link_rows_carry_string_relations():
+    """A non-string relation in a link answer becomes a hallucination
+    row whose relation column still converts to an Arrow string."""
+    import pandas as pd
+    import pyarrow as pa
+
+    from ctinexus_spark.operators.lp import _link_rows
+
+    class Answers:
+        def link_batch(self, items):
+            return [json.dumps({"predicted_triple": {"subject": m, "relation": rel, "object": t}})
+                    for (_, m, t), rel in zip(items, ("uses", 5, ["r"]))]
+
+    pdf = pd.DataFrame({"url": ["u"] * 3, "main_id": [1, 2, 3], "main_text": ["a", "b", "c"],
+                        "topic_id": [0] * 3, "topic_text": ["t"] * 3, "text_norm": ["doc"] * 3})
+    out = _link_rows(pdf, Answers())
+    assert out["status"].tolist() == ["ok", "hallucination", "hallucination"]
+    assert out["relation"].tolist() == ["uses", "unknown", "unknown"]
+    pa.Array.from_pandas(out["relation"], type=pa.string())
 
 
 def test_tagging_class_fallbacks():

@@ -68,15 +68,11 @@ NAMES = [
 
 @pytest.mark.parametrize("name", NAMES)
 def test_query_matches_oracle(spark, ducks, name):
-    q = entry_mod.queries()[name]
-    sdf = q(spark, SF_DIR)
+    sql = entry_mod.oracle_sql().get(name)
+    assert sql is not None, f"{name}: no oracle_sql() twin"
+    sdf = entry_mod.queries()[name](spark, SF_DIR)
     spark_cols = sdf.columns
     spark_rows = [tuple(r) for r in sdf.collect()]
-
-    sql = entry_mod.oracle_sql().get(name)
-    if sql is None:
-        assert len(spark_rows) >= 0  # rows-only check
-        return
 
     rel = ducks.sql(sql)
     duck_cols = [d[0] for d in rel.description]
@@ -97,6 +93,16 @@ def test_query_matches_oracle(spark, ducks, name):
         only_s = list(s_set - d_set)[:3]
         only_d = list(d_set - s_set)[:3]
         pytest.fail(f"{name}: value-hash mismatch\nonly-spark: {only_s}\nonly-duck: {only_d}")
+
+
+def test_every_query_has_exactly_one_oracle():
+    """The two registries name the same queries: no orphan oracle is
+    left behind by a deleted query and no query goes unchecked."""
+    queries, oracles = set(entry_mod.queries()), set(entry_mod.oracle_sql())
+    assert queries == oracles, (
+        f"queries without oracle: {sorted(queries - oracles)}; "
+        f"oracles without query: {sorted(oracles - queries)}"
+    )
 
 
 def test_entry_smoke(spark):

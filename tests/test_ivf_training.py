@@ -38,76 +38,3 @@ def test_trained_centroids_beat_seed_recall(spark, emb):
     assert trained_recall > seed_recall
     assert trained_recall >= 0.20
 
-
-def test_pq_training_recovers_recall(spark, emb):
-    """Untrained random PQ codebooks quantize random unit vectors to
-    noise (recall ~0); per-subspace k-means recovers the signal.
-    Measured at sf0.01: untrained 0.000, trained 0.248 (ADC) / 0.208
-    (IVF-PQ) — deterministic, bars carry margin."""
-    from pyspark.sql import functions as F
-
-    from ctinexus_spark.operators.quantize import (
-        ivf_pq_topk,
-        pq_adc_topk,
-        train_pq_centroids,
-    )
-
-    q = emb.filter(F.col("vec_id") < 25)
-    exact = {(r.query_id, r.neighbor_id) for r in S.brute_force_topk(emb, q).collect()}
-
-    untrained = {(r.query_id, r.neighbor_id) for r in pq_adc_topk(emb, q).collect()}
-    assert len(untrained & exact) / len(exact) < 0.05
-
-    trained = train_pq_centroids(emb, iterations=5)
-    adc = {(r.query_id, r.neighbor_id) for r in pq_adc_topk(emb, q, centroids=trained).collect()}
-    assert len(adc & exact) / len(exact) >= 0.20
-
-    ivfpq = {(r.query_id, r.neighbor_id)
-             for r in ivf_pq_topk(emb, q, pq_centroids_=trained).collect()}
-    assert len(ivfpq & exact) / len(exact) >= 0.15
-
-    # determinism: two trainings agree exactly
-    again = train_pq_centroids(emb, iterations=5)
-    assert (trained == again).all()
-
-
-def test_fully_trained_ivf_pq_production_config(spark, emb):
-    """The configuration a production index actually runs: BOTH the
-    coarse quantizer (IVF k-means) and the codebooks (per-subspace PQ
-    k-means) trained on the corpus, composed through ivf_pq_topk.
-    Trained IVF cells partition random vectors more tightly than the
-    uniform seed set, so the standard recall knob applies: nprobe=4
-    buys the recall back (measured, deterministic: 0.176 at nprobe=2,
-    0.224 at nprobe=4 on the sf0.01 random-unit-vector corpus)."""
-    from pyspark.sql import functions as F
-
-    from ctinexus_spark.operators.quantize import ivf_pq_topk, train_pq_centroids
-
-    q = emb.filter(F.col("vec_id") < 25)
-    exact = {(r.query_id, r.neighbor_id) for r in S.brute_force_topk(emb, q).collect()}
-    ivf = S.train_ivf_centroids(emb, iterations=5)
-    pq = train_pq_centroids(emb, iterations=5)
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in ivf_pq_topk(emb, q, nprobe=4, ivf_centroids_=ivf, pq_centroids_=pq).collect()
-    }
-    assert len(got & exact) / len(exact) >= 0.2
-
-
-def test_pq_training_shrinks_k_to_sample(spark):
-    """Fewer distinct vectors than codebook entries must shrink k —
-    all-zero codebook rows would attract assignments and silently
-    degrade the trained codebook. An empty corpus raises."""
-    import numpy as np
-    import pytest
-
-    from ctinexus_spark.operators.quantize import train_pq_centroids
-
-    rows = [(i, np.eye(64)[i % 8].tolist()) for i in range(5)]
-    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
-    cents = train_pq_centroids(emb, iterations=1, k=256)
-    assert cents.shape[1] == 5
-
-    empty = spark.createDataFrame([], "vec_id bigint, embedding array<double>")
-    with pytest.raises(ValueError, match="empty"):
-        train_pq_centroids(empty, iterations=1)

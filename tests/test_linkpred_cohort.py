@@ -1,4 +1,4 @@
-"""Property tests: cohort_retention, rrf_fuse and the burst / decay /
+"""Property tests: cohort_retention and the burst / decay /
 CUSUM monitors vs plain-Python references — adversarial shapes the sf
 corpora don't contain."""
 
@@ -41,32 +41,6 @@ def test_cohort_retention_matches_brute(spark):
     assert all(
         got[(c, o)][0] == got[(c, o)][1] for (c, o) in got if o == 0
     )
-
-
-def test_rrf_fuse_semantics(spark):
-    import pytest
-
-    from ctinexus_spark.operators.retrieval import rrf_fuse
-
-    lex = spark.createDataFrame(
-        [("q", 1, 1), ("q", 2, 2), ("q", 3, 3)], ["query_id", "doc_id", "rank"]
-    )
-    dense = spark.createDataFrame(
-        [("q", 2, 1), ("q", 4, 2)], ["query_id", "doc_id", "rank"]
-    )
-    out = {r.doc_id: r for r in rrf_fuse([lex, dense], ["lex", "dense"]).collect()}
-    assert set(out) == {1, 2, 3, 4}
-    # doc 2 is in both: 1/62 + 1/61; doc 4 dense-only: 1/62 + 0
-    assert out[2].rrf_score == 1.0 / 62 + 1.0 / 61
-    assert out[4].rrf_score == 1.0 / 62
-    assert (out[4].rank_lex, out[4].rank_dense) == (-1, 2)
-    assert out[2].rank == 1  # both-retriever doc wins
-    # three-retriever chain keeps fixed addition order (smoke)
-    third = spark.createDataFrame([("q", 1, 1)], ["query_id", "doc_id", "rank"])
-    out3 = {r.doc_id: r.rrf_score for r in rrf_fuse([lex, dense, third], ["a", "b", "c"]).collect()}
-    assert out3[1] == (1.0 / 61 + 0.0) + 1.0 / 61
-    with pytest.raises(ValueError):
-        rrf_fuse([lex], ["a", "b"])
 
 
 def test_burst_detection_matches_numpy(spark):

@@ -52,14 +52,11 @@ QUADRATIC_NODES = ("CartesianProduct", "BroadcastNestedLoopJoin")
     "qname",
     ["emb_cosine_pairs", "knn_vote", "shingle_overlap", "lsh_candidates",
      "lsh_topk", "ivf_topk", "dedup_exact", "minhash", "simhash",
-     "pq_codes", "pq_adc_topk", "ivf_pq_topk", "repetition_ratios",
-     "lm_scores", "decontaminate", "vocab_topk", "line_dedup", "domain_cap",
-     "dsir_features", "bpe_merges", "token_pmi", "dup_grams", "cdc_chunks",
-     "langid", "hll_distinct", "cms_topk", "bloom_probe", "bm25_topk",
-     "doc_len_quantiles", "cluster_topics", "source_drift",
-     "event_asof_purchase", "click_attribution", "kmv_distinct",
-     "jaccard_pairs", "event_funnel",
-     "cohort_retention", "hybrid_topk", "event_bursts",
+     "repetition_ratios", "lm_scores", "decontaminate", "vocab_topk",
+     "line_dedup", "domain_cap", "dsir_features", "bpe_merges", "token_pmi",
+     "dup_grams", "cdc_chunks", "langid", "doc_len_quantiles",
+     "source_drift", "event_asof_purchase", "click_attribution",
+     "jaccard_pairs", "event_funnel", "cohort_retention", "event_bursts",
      "kg_entity_cooc", "event_twa", "event_decay",
      "event_transitions", "event_cusum", "order_zorder",
      "event_props_k"],
@@ -81,17 +78,10 @@ def test_no_quadratic_plan_in_scale_queries(spark, qname):
     # fails, restoring the per-node strictness the old blanket ban had.
     BNLJ_BUDGET = {
         "token_pmi": 2,
-        "bm25_topk": 1,
         "doc_len_quantiles": 1,
-        "cluster_topics": 1,
         # corpus total N attaches at the contribution terms AND the
         # final ratio — two keyless one-row builds
         "source_drift": 2,
-        # BM25's keyless corpus-scalar attach + the dense side's
-        # broadcast-QUERY-set non-equi scan (8 rows × corpus — the
-        # intended O(|q|·n) shape, asserted correct by
-        # test_ann_broadcasts_query_side)
-        "hybrid_topk": 2,
         # corpus doc-total N attaches as a keyless 1-row build
         "kg_entity_cooc": 1,
         # the newest-bucket reference attaches as a keyless 1-row build
@@ -153,7 +143,7 @@ def test_lsh_candidates_caps_degenerate_buckets(spark):
     assert uncapped.count() == 50 * 49 // 2 + 1
 
 
-@pytest.mark.parametrize("qname", ["lsh_topk", "ivf_topk", "knn_vote", "simhash_candidates", "ivf_pq_topk"])
+@pytest.mark.parametrize("qname", ["lsh_topk", "ivf_topk", "knn_vote", "simhash_candidates"])
 def test_ann_topk_plans_carry_bucket_cap(spark, qname):
     """Every bucket self-join (ANN top-k, SimHash banding) must include
     the degenerate-group guard (cap_buckets' `_bucket_n <= cap`

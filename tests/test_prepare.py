@@ -167,28 +167,6 @@ def test_mixture_plan_matches_naive_global_rank(spark):
     assert got == expected
 
 
-def test_pq_codes_shape_and_adc_prefers_duplicate(spark):
-    """PQ encodes 8 codes in [0,16) per vector, and ADC search ranks
-    an exact duplicate of the query first (identical codes → minimal
-    asymmetric distance)."""
-    from pyspark.sql import functions as F
-
-    from ctinexus_spark.model import stub_embedding
-    from ctinexus_spark.operators.quantize import pq_adc_topk, pq_encode
-
-    rows = [(i, stub_embedding(f"pq corpus {i}").tolist()) for i in range(40)]
-    rows.append((100, stub_embedding("pq corpus 7").tolist()))  # dup of vec 7
-    emb = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
-
-    codes = pq_encode(emb).collect()
-    assert len(codes) == 41 * 8
-    assert all(0 <= r.code < 16 and 0 <= r.subspace < 8 for r in codes)
-
-    top = pq_adc_topk(emb, emb.filter(F.col("vec_id") == 7), k=3).collect()
-    best = min(top, key=lambda r: r.rank)
-    assert best.neighbor_id == 100  # the duplicate wins rank 1
-
-
 def test_bigram_lm_scores_separate_fluent_from_gibberish(spark):
     """A document made of the corpus's dominant bigrams scores a much
     higher mean conditional probability (lower perplexity) than one

@@ -1,127 +1,20 @@
-"""BM25 retrieval + exact-quantile semantics: scoring pinned against
-a direct numpy/python recomputation, ranking invariance between the
-rational- and log-idf variants, and the quantile definition checked
-against its own spec — properties the DuckDB hash parity
-(test_entry_contract) can't express."""
+"""Exact-quantile, distribution-drift and MMR semantics: the quantile
+definition checked against its own spec and the re-rankers against
+direct python/numpy recomputations — properties the DuckDB hash
+parity (test_entry_contract) can't express."""
 
 import math
 import os
 import sys
 
-import pytest
 from pyspark.sql import Row, functions as F
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ctinexus_spark import dataset_queries as dq
-from ctinexus_spark.operators import retrieval as R
 from ctinexus_spark.operators import stats as ST
 
 SF = "/root/testdata/sf0.01"
-
-
-# --- BM25 ---------------------------------------------------------------
-
-DOCS = [
-    ("d1", "spark join window join spark"),
-    ("d2", "spark scan filter merge sort hash"),
-    ("d3", "join join join window window scan"),
-    ("d4", "hash merge sort"),
-]
-QUERY = [("qa", "join"), ("qa", "window"), ("qb", "hash")]
-
-
-def _py_bm25(idf_variant: str):
-    """Reference recomputation with unigram terms, k1=1.2, b=0.75."""
-    k1, b = 1.2, 0.75
-    toks = {d: t.split(" ") for d, t in DOCS}
-    dl = {d: len(t) for d, t in toks.items()}
-    n = len(toks)
-    avgdl = sum(dl.values()) / n
-    out = {}
-    for qid, term in QUERY:
-        df = sum(1 for t in toks.values() if term in t)
-        if df == 0:
-            continue
-        idf = (n - df + 0.5) / (df + 0.5)
-        if idf_variant == "robertson":
-            idf = math.log(idf)
-        for d, t in toks.items():
-            tf = t.count(term)
-            if tf == 0:
-                continue
-            c = idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * ((1.0 - b) + b * (dl[d] / avgdl))
-            )
-            out[(qid, d)] = out.get((qid, d), 0.0) + c
-    return out
-
-
-@pytest.mark.parametrize("variant", ["rational", "robertson"])
-def test_bm25_matches_python(spark, variant):
-    docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
-    terms = R.ngram_terms(docs, n=1)
-    q = spark.createDataFrame(QUERY, ["query_id", "term"])
-    got = {
-        (r["query_id"], r["doc_id"]): r["score"]
-        for r in R.bm25_topk(terms, q, k=10, idf=variant).collect()
-    }
-    want = _py_bm25(variant)
-    assert set(got) == set(want)
-    for key, s in want.items():
-        assert got[key] == pytest.approx(s, abs=1e-9), key
-
-
-def test_bm25_rank_ties_break_on_doc_id(spark):
-    """Two identical docs must score identically and rank by doc_id."""
-    docs = spark.createDataFrame(
-        [("a", "join window"), ("b", "join window"), ("c", "scan")],
-        ["doc_id", "text"],
-    )
-    q = spark.createDataFrame([("q", "join")], ["query_id", "term"])
-    out = R.bm25_topk(R.ngram_terms(docs, n=1), q, k=10).collect()
-    by_doc = {r["doc_id"]: r for r in out}
-    assert by_doc["a"]["score"] == by_doc["b"]["score"]
-    assert by_doc["a"]["rank"] == 1 and by_doc["b"]["rank"] == 2
-
-
-def test_bm25_rational_preserves_log_ranking(spark):
-    """For SINGLE-term queries the score is idf(t) * w(doc) with
-    idf(t) a positive per-query constant under either variant (df <<
-    N/2 on this corpus, so log-idf > 0 too) — rankings are therefore
-    guaranteed identical between rational and Robertson idf. Run the
-    15 corpus-derived band grams as 15 single-term queries and assert
-    exact rank agreement. (Multi-term rankings agree only up to the
-    monotone-per-term transform — NOT asserted, by design.)"""
-    from ctinexus_spark.partitioning import barrier, ensure_parallelism
-
-    docs = ensure_parallelism(
-        spark.read.parquet(f"{SF}/documents.parquet")
-    )
-    dt = R.ngram_terms(docs, n=3)
-    qt = barrier(
-        dq._bm25_query_terms(dt).select(
-            F.col("term").alias("query_id"), "term"
-        )
-    )
-    a = R.bm25_topk(dt, qt, k=10, idf="rational").collect()
-    b = R.bm25_topk(dt, qt, k=10, idf="robertson").collect()
-    key = lambda rows: {
-        (r["query_id"], r["doc_id"]): r["rank"] for r in rows
-    }
-    assert len(a) > 0 and key(a) == key(b)
-
-
-def test_bm25_registry_query_shape(spark):
-    out = dq.q_bm25_topk(spark, SF).collect()
-    assert len(out) > 0
-    qids = {r["query_id"] for r in out}
-    assert qids == {"q_hot", "q_mid", "q_tail"}
-    for qid in qids:
-        ranks = sorted(r["rank"] for r in out if r["query_id"] == qid)
-        assert ranks == list(range(1, len(ranks) + 1))
-        assert len(ranks) <= 10
-    assert all(r["score"] > 0 for r in out)
 
 
 # --- exact quantiles ----------------------------------------------------
@@ -164,59 +57,6 @@ def test_quantiles_exclude_nulls(spark):
 
 
 # --- cluster topic terms ------------------------------------------------
-
-
-def test_cluster_topics_match_python(spark):
-    """Lift-ratio top-k vs a direct python recomputation on a tiny
-    two-cluster corpus with a shared background term."""
-    assign = spark.createDataFrame(
-        [(1, 0), (2, 0), (3, 1), (4, 1)], ["vec_id", "cell"]
-    )
-    occurrences = (
-        [(1, "bg")] * 3 + [(1, "aaa")] * 2
-        + [(2, "bg")] * 3 + [(2, "aaa")] * 2
-        + [(3, "bg")] * 3 + [(3, "zzz")] * 4
-        + [(4, "bg")] * 3
-    )
-    terms = spark.createDataFrame(occurrences, ["doc_id", "term"])
-    out = ST.cluster_topic_terms(assign, terms, min_count=2, k=5).collect()
-    got = {(r["cell"], r["gram"]): (r["n"], r["ratio"], r["rank"]) for r in out}
-
-    cnt = {}
-    for d, t in occurrences:
-        c = 0 if d <= 2 else 1
-        cnt[(c, t)] = cnt.get((c, t), 0) + 1
-    grand = float(len(occurrences))
-    ctot = {c: sum(n for (cc, _), n in cnt.items() if cc == c) for c in (0, 1)}
-    ttot = {}
-    for (_, t), n in cnt.items():
-        ttot[t] = ttot.get(t, 0) + n
-    want = {
-        (c, t): (n * grand) / (float(ctot[c]) * float(ttot[t]))
-        for (c, t), n in cnt.items()
-        if n >= 2
-    }
-    assert set(got) == set(want)
-    for key, ratio in want.items():
-        assert got[key][1] == pytest.approx(ratio, abs=1e-12), key
-    # the cluster-exclusive term outranks the shared background term
-    assert got[(1, "zzz")][2] < got[(1, "bg")][2]
-    assert got[(0, "aaa")][2] < got[(0, "bg")][2]
-    # n_docs reflects assignment sizes
-    assert all(r["n_docs"] == 2 for r in out)
-
-
-def test_cluster_topics_registry_shape(spark):
-    rows = dq.q_cluster_topics(spark, SF).collect()
-    by_cell = {}
-    for r in rows:
-        by_cell.setdefault(r["cell"], []).append(r)
-    assert len(by_cell) == 16  # every IVF cell labeled at min_count=2
-    for cell, rs in by_cell.items():
-        ranks = sorted(r["rank"] for r in rs)
-        assert ranks == list(range(1, len(rs) + 1)) and len(rs) <= 5
-        assert all(r["n"] >= 2 for r in rs)
-    assert sum(r["n_docs"] for r in rows if r["rank"] == 1) == 500
 
 
 def test_quantiles_registry_monotone(spark):

@@ -3,8 +3,6 @@ exactly-once checkpointing, and watermarked windowed aggregation."""
 
 import os
 
-from pyspark.sql import functions as F
-
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.datagen import synthesize_documents
 from ctinexus_spark.model import StubModel
@@ -451,209 +449,6 @@ def test_session_window_merges_exact_gap_boundary(spark):
     r = got[0]
     assert (str(r.session_start), str(r.session_end), r.n_events) == (
         "2026-01-01 10:00:00", "2026-01-01 11:00:00", 2)
-
-
-def test_stream_hll_matches_batch_sketch_exactly(spark, tmp_path):
-    """Cross-batch streaming HLL == batch hll_distinct over the union
-    of batches, BIT-EXACTLY: registers come from the same Spark-side
-    projection and the estimator repeats the same IEEE chain. Also
-    checks the estimate is monotone non-decreasing across batches
-    (registers only max-merge)."""
-    import time
-
-    from ctinexus_spark.operators.sketches import hll_distinct
-    from ctinexus_spark.streaming.ingest import stream_hll_distinct
-
-    src = str(tmp_path / "vals")
-    schema = "source string, v string"
-    b1 = [("s1", f"val-{i}") for i in range(400)] + [
-        ("s2", f"x-{i}") for i in range(50)
-    ]
-    b2 = [("s1", f"val-{i}") for i in range(200, 600)] + [
-        ("s2", f"x-{i}") for i in range(50)
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # distinct mtimes → deterministic batch order
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_hll_distinct(stream, "source", "v", p=10)
-        .writeStream.format("memory")
-        .queryName("hll_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    emitted = spark.sql("SELECT * FROM hll_sink").collect()
-    # one emission per (group, batch-with-data): s1 twice, s2 twice
-    per_group = {}
-    for r in emitted:
-        per_group.setdefault(r["group"], []).append(r)
-    assert set(per_group) == {"s1", "s2"}
-    assert all(len(rows) == 2 for rows in per_group.values())
-
-    # registers only max-merge, so the estimate grows across batches:
-    # the final state's emission is the max (sink row order is not
-    # guaranteed, so select by value, not position)
-    final = {
-        g: max(rows, key=lambda r: (r["nonzero_registers"], r["hll_est"]))
-        for g, rows in per_group.items()
-    }
-    batch = {
-        r["source"]: r
-        for r in hll_distinct(
-            spark.createDataFrame(b1 + b2, schema), "source", "v", p=10
-        ).collect()
-    }
-    for g in ("s1", "s2"):
-        assert final[g]["nonzero_registers"] == batch[g]["nonzero_registers"]
-        assert final[g]["hll_est"] == batch[g]["hll_est"]  # bit-exact
-
-
-def test_stream_cms_probes_matches_batch_sketch_exactly(spark, tmp_path):
-    """Cross-batch streaming Count-Min == batch cms_sketch over the
-    union of batches: counters are additive integers and the bucket
-    projection is shared, so the final per-probe estimate equals the
-    batch min-over-rows EXACTLY (incl. an unseen probe at 0 — modulo
-    whatever collision noise the sketch itself carries, identically on
-    both paths)."""
-    import time
-
-    from ctinexus_spark.operators.sketches import cms_sketch, py_hash32
-    from ctinexus_spark.streaming.ingest import stream_cms_probes
-
-    depth, width = 4, 256
-    probes = ["hot", "warm", "never"]
-    src = str(tmp_path / "vals")
-    schema = "source string, v string"
-    b1 = (
-        [("s1", "hot")] * 30
-        + [("s1", "warm")] * 5
-        + [("s1", f"noise-{i}") for i in range(200)]
-        + [("s2", "hot")] * 2
-    )
-    b2 = (
-        [("s1", "hot")] * 20
-        + [("s2", "warm")] * 7
-        + [("s2", f"noise-{i}") for i in range(150)]
-    )
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)  # distinct mtimes → deterministic batch order
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_cms_probes(stream, probes, "source", "v", depth=depth, width=width)
-        .writeStream.format("memory")
-        .queryName("cms_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    emitted = spark.sql("SELECT * FROM cms_sink").collect()
-    per_gv = {}
-    for r in emitted:
-        per_gv.setdefault((r["group"], r["value"]), []).append(r["cms_est"])
-    # every emission carries ALL probes; counters only grow
-    assert set(g for g, _ in per_gv) == {"s1", "s2"}
-    assert all(len(v) == 2 and sorted(v) == v for v in per_gv.values())
-
-    allv = spark.createDataFrame(b1 + b2, schema)
-    for g in ("s1", "s2"):
-        sk = {
-            (r["row"], r["bucket"]): r["cnt"]
-            for r in cms_sketch(
-                allv.filter(F.col("source") == g), "v", depth=depth, width=width
-            ).collect()
-        }
-        for v in probes:
-            want = min(
-                sk.get((i, py_hash32(v, salt=i) % width), 0) for i in range(depth)
-            )
-            assert max(per_gv[(g, v)]) == want, (g, v)
-
-
-def test_stream_kmv_matches_batch_sketch_exactly(spark, tmp_path):
-    """Cross-batch streaming KMV == batch kmv_distinct over the union
-    of batches, BIT-EXACTLY: the bottom-k merge is associative and
-    deduplicating, and the estimator repeats the same IEEE division.
-    n_kept is monotone non-decreasing across batches."""
-    import time
-
-    from ctinexus_spark.operators.sketches import kmv_distinct
-    from ctinexus_spark.streaming.ingest import stream_kmv_distinct
-
-    k = 16
-    src = str(tmp_path / "vals")
-    schema = "source string, v string"
-    b1 = [("s1", f"val-{i}") for i in range(40)] + [("s2", f"x-{i}") for i in range(5)]
-    b2 = [("s1", f"val-{i}") for i in range(20, 70)] + [
-        ("s2", f"x-{i}") for i in range(5)
-    ]
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        stream_kmv_distinct(stream, "source", "v", k=k)
-        .writeStream.format("memory")
-        .queryName("kmv_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    emitted = spark.sql("SELECT * FROM kmv_sink").collect()
-    per_group = {}
-    for r in emitted:
-        per_group.setdefault(r["group"], []).append(r)
-    assert set(per_group) == {"s1", "s2"}
-    assert all(len(rows) == 2 for rows in per_group.values())
-    # the later emission has MORE kept values (below k) or a SMALLER
-    # kth hash (saturated: the bottom-k only ever shrinks) — n_kept
-    # alone ties once the sketch is full
-    final = {
-        g: min(
-            rows,
-            key=lambda r: (
-                -r["n_kept"],
-                r["kth_hash"] if r["kth_hash"] != -1 else 1 << 33,
-            ),
-        )
-        for g, rows in per_group.items()
-    }
-    batch = {
-        r["group"]: r
-        for r in kmv_distinct(
-            spark.createDataFrame(b1 + b2, schema), "source", "v", k=k
-        ).collect()
-    }
-    for g in ("s1", "s2"):
-        assert final[g]["n_kept"] == batch[g]["n_kept"]
-        assert final[g]["kth_hash"] == batch[g]["kth_hash"]
-        assert final[g]["kmv_est"] == batch[g]["kmv_est"]  # bit-exact
-    # s2 has only 5 distinct values: exact path, sentinel kth
-    assert final["s2"]["kth_hash"] == -1 and final["s2"]["kmv_est"] == 5.0
 
 
 def test_stream_bursts_final_equals_batch(spark, tmp_path):
