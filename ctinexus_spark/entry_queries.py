@@ -154,8 +154,7 @@ def q_kg_fused(spark, sf_dir):
     tests/test_fused_parity.py) — shares the kg_triples oracle."""
     from ctinexus_spark.operators.fused import fused_kg
 
-    docs = _docs_norm(spark, sf_dir).persist()
-    kg = fused_kg(docs, StubModel(CONFIG), CONFIG)
+    kg = fused_kg(_docs_norm(spark, sf_dir), StubModel(CONFIG), CONFIG)
     return kg.select(_doc_id(), "subj", "pred", "obj", "source")
 
 

@@ -13,7 +13,10 @@ Shuffle budget of the fused pipeline:
   distinct-text embed   : 1 shuffle (global distinct)
   embedding join        : broadcast (distinct mention texts ≪ nodes)
   align+graph+triples   : 1 shuffle (groupBy url)
-  link inference        : narrow filter + broadcast docs join
+  link inference        : skipped when the barrier observed no main
+                          pair; otherwise only the pair urls' documents
+                          are re-read and re-normalized (an IN-subquery
+                          semi-join planned below the normalize UDF)
 vs ~8 shuffles + 6 Python passes on the modular path.
 
 At 10^12 docs the url-grouped pass stays balanced because groups are
@@ -27,7 +30,7 @@ from collections import Counter
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
@@ -192,14 +195,12 @@ def link_main_pairs(fused: DataFrame, docs: DataFrame, model) -> DataFrame:
     via the shared batched link-inference pass (operators/lp.py)."""
     from ctinexus_spark.operators.lp import infer_links
 
-    pairs = (
-        fused.filter(F.col("row_type") == "main_pair")
-        .select("url",
-                F.col("s_entity_id").alias("main_id"), F.col("s_entity_text").alias("main_text"),
-                F.col("o_entity_id").alias("topic_id"), F.col("o_entity_text").alias("topic_text"))
-        .join(docs.select("url", "text_norm"), "url", "left")
+    pairs = fused.filter(F.col("row_type") == "main_pair").select(
+        "url",
+        F.col("s_entity_id").alias("main_id"), F.col("s_entity_text").alias("main_text"),
+        F.col("o_entity_id").alias("topic_id"), F.col("o_entity_text").alias("topic_text"),
     )
-    return infer_links(pairs, model)
+    return infer_links(pairs, docs, model)
 
 
 def fused_kg(docs: DataFrame, model, config: PipelineConfig) -> DataFrame:
@@ -207,14 +208,20 @@ def fused_kg(docs: DataFrame, model, config: PipelineConfig) -> DataFrame:
     through the fused path."""
     # Eagerly materialize the one multi-consumer node: fused feeds the
     # triple and main_pair branches; a lazy cache would race inside the
-    # single final job and compute the model-call pass twice.
-    # localCheckpoint (not persist+count): same barrier, but the blocks
-    # are GC-reclaimed when the result is dropped — repeated fused_kg
-    # calls in one session don't accumulate pinned cache entries. (The
-    # checkpointed production path gets the same barrier from the
-    # stage's parquet/Iceberg commit.)
+    # single final job and compute the model-call pass twice. The
+    # main_pair count is observed on the barrier's own job (no extra
+    # pass), so a corpus without multi-component documents never
+    # re-reads its documents for link prompts. (The checkpointed
+    # production path gets the same barrier from the stage's
+    # parquet/Iceberg commit.)
     typed = extract_and_tag(docs, model)
-    fused = barrier(align_graph_triples(typed, model, config))
-
-    links = link_main_pairs(fused, docs, model)
-    return extracted_triples(fused).unionByName(predicted_triples(links))
+    pairs = Observation()
+    fused = barrier(
+        align_graph_triples(typed, model, config).observe(
+            pairs, F.count(F.when(F.col("row_type") == "main_pair", 1)).alias("n")
+        )
+    )
+    triples = extracted_triples(fused)
+    if not pairs.get["n"]:
+        return triples
+    return triples.unionByName(predicted_triples(link_main_pairs(fused, docs, model)))

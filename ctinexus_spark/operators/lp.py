@@ -87,13 +87,14 @@ def predict_links(
 
     Shuffle shape (optimization round 6, guide §2.4): the topic row is
     attached to each main row with ONE window over url instead of the
-    earlier mains ⋈ topics self-join — `graph` is consumed exactly
-    once, so an unpersisted graph lineage (the align+analyze Arrow
-    passes) no longer computes twice, and the mains/topics exchange
+    earlier mains ⋈ topics self-join, so the mains/topics exchange
     pair collapses into the single window exchange. Semantics are
     unchanged: a document has at most one is_topic row (the main of
     its largest component), every topic row is also a main row, and
-    pairs = (main ∧ ¬topic) × that topic."""
+    pairs = (main ∧ ¬topic) × that topic. infer_links reads the pairs
+    twice (pair urls, then the pairs themselves), so an unpersisted
+    `graph` lineage computes twice; the fused path hands it
+    materialized pairs instead."""
     from pyspark.sql import Window
 
     w = Window.partitionBy("url")
@@ -113,9 +114,8 @@ def predict_links(
             "topic_id",
             "topic_text",
         )
-        .join(docs.select("url", "text_norm"), "url", "left")
     )
-    return infer_links(pairs, model)
+    return infer_links(pairs, docs, model)
 
 
 _LINK_COLS = [
@@ -149,13 +149,23 @@ def _link_rows(pdf: pd.DataFrame, model) -> pd.DataFrame:
     return pd.DataFrame(rows, columns=_LINK_COLS)
 
 
-def infer_links(pairs: DataFrame, model) -> DataFrame:
-    """(url, main_id, main_text, topic_id, topic_text, text_norm) →
-    LINKS_SCHEMA rows. Shared by the modular path (predict_links) and
-    the fused path (fused_kg / checkpointed pipeline)."""
+def infer_links(pairs: DataFrame, docs: DataFrame, model) -> DataFrame:
+    """(url, main_id, main_text, topic_id, topic_text) pairs + docs'
+    (url, text_norm) → LINKS_SCHEMA rows. Shared by the modular path
+    (predict_links) and the fused path (fused_kg / checkpointed
+    pipeline).
+
+    Only the documents whose url has a pair are fetched. The IN
+    subquery matters: Catalyst rewrites it into a left-semi join
+    planned below docs' normalize UDF and repartition, so the rest of
+    the corpus is neither re-read nor re-normalized. A DataFrame
+    join(..., "left_semi") stays above the UDF and normalizes every
+    document. The left join keeps every pair, and fans a pair out once
+    per document sharing its url."""
+    texts = docs.filter(F.col("url").isin(pairs.select("url"))).select("url", "text_norm")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             yield _link_rows(pdf, model)
 
-    return pairs.mapInPandas(run, schema=LINKS_SCHEMA)
+    return pairs.join(texts, "url", "left").mapInPandas(run, schema=LINKS_SCHEMA)

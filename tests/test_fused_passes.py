@@ -1,0 +1,99 @@
+"""fused_kg reads the corpus once: the link branch is skipped when the
+barrier observes no main pair, and otherwise re-reads and re-normalizes
+only the documents whose url has a pair."""
+
+import pandas as pd
+import pytest
+from pyspark.sql import functions as F
+
+from ctinexus_spark import entry_queries as eq
+from ctinexus_spark.model import SplitChainModel, StubModel
+from ctinexus_spark.operators import normalize
+from ctinexus_spark.operators.fused import fused_kg
+from ctinexus_spark.operators.normalize import normalize_documents
+
+
+def plan_tree(df) -> list[str]:
+    """The operator tree of the formatted physical plan, top-down."""
+    plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+    return plan.split("\n\n", 1)[0].splitlines()
+
+
+@pytest.fixture(autouse=True)
+def uncached(spark):
+    # an earlier test's cached normalize plan would stand in for the UDF
+    spark.catalog.clearCache()
+
+
+@pytest.fixture
+def normalize_rows(spark, monkeypatch):
+    """An accumulator counting the rows the normalize UDF sees."""
+    rows = spark.sparkContext.accumulator(0)
+    batch = normalize._normalize_batch
+
+    def counting(text: pd.Series, html: pd.Series) -> pd.Series:
+        rows.add(len(text))
+        return batch(text, html)
+
+    monkeypatch.setattr(normalize, "_normalize_batch", counting)
+    return rows
+
+
+def _docs(spark):
+    """100 driver-corpus documents. In lexicon mode StubModel makes each
+    one a single chain (no main pair); SplitChainModel splits each into
+    two chains, which gives a few of them a main pair. Read from parquet:
+    over a small in-memory frame AQE may drop a link join whose pair side
+    is empty before its docs side runs, which would hide a second pass."""
+    raw = eq.load_documents(spark, "/root/testdata/sf0.001").filter(F.col("url").cast("int") < 100)
+    return normalize_documents(raw, lang_filter=None)
+
+
+def test_no_pair_corpus_normalizes_each_document_once(spark, normalize_rows):
+    kg = fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG)
+    kg.write.format("noop").mode("overwrite").save()
+    assert normalize_rows.value == 100
+    assert kg.filter(F.col("source") == "predicted").count() == 0
+
+
+def test_pair_corpus_renormalizes_only_pair_documents(spark, normalize_rows):
+    kg = fused_kg(_docs(spark), SplitChainModel(eq.CONFIG), eq.CONFIG)
+    kg.write.format("noop").mode("overwrite").save()
+    seen = normalize_rows.value
+    # every pair is answered in orientation, so the predicted rows'
+    # urls are exactly the urls that have a main pair
+    pair_urls = kg.filter(F.col("source") == "predicted").select("url").distinct().count()
+    assert 0 < pair_urls < 100
+    assert seen == 100 + pair_urls
+
+
+def test_no_pair_plan_has_no_link_branch(spark):
+    tree = plan_tree(fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG))
+    assert not any("ArrowEvalPython" in ln or "BroadcastExchange" in ln for ln in tree), tree
+
+
+def test_pair_url_semi_join_sits_below_normalize_udf(spark):
+    tree = plan_tree(fused_kg(_docs(spark), SplitChainModel(eq.CONFIG), eq.CONFIG))
+    udf = [i for i, ln in enumerate(tree) if "ArrowEvalPython" in ln]
+    semi = [i for i, ln in enumerate(tree) if "Join LeftSemi" in ln]
+    # one normalize pass on the link branch, with the pair-url filter under it
+    assert len(udf) == 1 and len(semi) == 1, "\n".join(tree)
+    assert udf[0] < semi[0], "\n".join(tree)
+
+
+def test_no_pair_run_job_count(spark):
+    """The barrier job carries the pair count (DataFrame.observe), so a
+    corpus without pairs runs no link job: 5 jobs from the documents
+    to the sink."""
+    sc = spark.sparkContext
+    kg = fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG)
+    kg.write.format("noop").mode("overwrite").save()  # warm the session
+
+    group = "fused-kg-no-pairs"
+    sc.setJobGroup(group, "fused_kg job count")
+    try:
+        kg = fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG)
+        kg.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
