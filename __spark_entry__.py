@@ -38,13 +38,9 @@ WINDOW = 50
 _CHANGED_R05 = [
     "dedup_incremental", "simhash", "simhash_candidates",
     "dedup_clusters_cc", "dedup_clusters_stars", "dedup_keeplist",
-    "semantic_dedup", "kg_global_entities", "doc_len_quantiles",
-    "mmr_topk", "source_drift", "event_asof_purchase",
-    "click_attribution", "event_rollup_cascade", "jaccard_pairs",
-    "event_funnel", "cohort_retention", "event_bursts", "kg_entity_cooc",
-    "event_twa",
-    "revenue_cube", "idle_customers", "event_decay",
-    "event_transitions", "event_cusum", "order_zorder",
+    "semantic_dedup", "kg_global_entities",
+    "mmr_topk", "jaccard_pairs", "kg_entity_cooc",
+    "revenue_cube", "idle_customers", "order_zorder",
     "user_event_pivot", "user_event_unpivot", "event_props_k",
 ]
 
@@ -82,16 +78,16 @@ CHANGED_THIS_ROUND = [
 # rotation + natural-order fill). r01-r03 used the natural order — an
 # empty rotation. Keep every past round's list: the union-coverage
 # test replays them. Queries deleted since (the part_* graph-analytics,
-# mm_* multimodal, sketch, PQ and BM25 rows) are dropped from the
-# lists, so a recorded window now fills its freed slots in natural
-# order.
+# mm_* multimodal, sketch, PQ, BM25 and event-analytics rows) are
+# dropped from the lists, so a recorded window now fills its freed
+# slots in natural order.
 ROTATION_HISTORY: dict[str, list[str]] = {
     "r01": [],
     "r02": [],
     "r03": [],
     "r04": [
         "bpe_merges", "token_pmi", "dup_grams", "semantic_dedup",
-        "cdc_chunks", "langid", "event_sessions_native",
+        "cdc_chunks", "langid",
         "dedup_incremental", "table_profile", "pack_plan", "simhash",
         "simhash_candidates", "ivf_assign", "ivf_topk",
         "dedup_clusters_cc", "dedup_keeplist", "quality_gate",

@@ -418,16 +418,6 @@ def q_event_sessions(spark, sf_dir):
     )
 
 
-def q_event_sessions_native(spark, sf_dir):
-    """Sessionization via the built-in F.session_window aggregation —
-    the JVM/state-store production default (same operator serves the
-    live stream); session_end = last event + gap, window semantics."""
-    from ctinexus_spark.streaming.ingest import session_window_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("user_id", "ts")
-    return session_window_counts(ev)
-
-
 def q_event_type_rollup(spark, sf_dir):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     return (
@@ -489,110 +479,6 @@ def q_event_leadlag(spark, sf_dir):
         "user_id",
         "event_id",
         F.coalesce(epoch - prev, F.lit(-1)).cast("bigint").alias("secs_since_prev"),
-    )
-
-
-def q_event_asof_purchase(spark, sf_dir):
-    """As-of join: every event tagged with the user's most recent
-    purchase at-or-before its timestamp — the trade/quote primitive
-    over the events stream. Spark side is window-over-union (one
-    key shuffle, no range join, operators/temporal.py); the oracle is
-    DuckDB's NATIVE ASOF LEFT JOIN — an independently implemented
-    as-of algorithm, so the gate cross-checks two unrelated
-    formulations. Right side deduped to one purchase per (user, ts)
-    by max event_id (struct-max, both engines)."""
-    from ctinexus_spark.operators.temporal import asof_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pur = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max(F.struct(F.col("event_id"), F.col("value"))).alias("w"))
-        .select(
-            "user_id",
-            "ts",
-            F.col("w.event_id").alias("purchase_event_id"),
-            F.col("w.value").alias("purchase_value"),
-        )
-    )
-    left = ev.select("user_id", "ts", "event_id", "event_type")
-    # no-prior-purchase rows coalesce to (-1, 0.0) sentinels: nullable
-    # BIGINT round-trips as float64 through pandas/duckdb fetch, which
-    # would break the string-hash compare ("101.0" vs "101")
-    return asof_join(
-        left, pur, key="user_id", ts="ts",
-        payload=["purchase_event_id", "purchase_value"],
-    ).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        F.coalesce(F.col("purchase_event_id"), F.lit(-1).cast("bigint")).alias(
-            "purchase_event_id"
-        ),
-        F.coalesce(F.col("purchase_value"), F.lit(0.0)).alias("purchase_value"),
-    )
-
-
-def q_click_attribution(spark, sf_dir):
-    """Batch interval join: every click within 2 hours at-or-after a
-    purchase by the same user — the attribution / config-window range
-    join. Spark side bucketizes time so the match is an EQUI-join on
-    (user, bucket) + exact range filter (operators/temporal.py — no
-    per-key nested loop); the oracle is the plain BETWEEN range join.
-    Integer epoch gap column — hash-exact."""
-    from ctinexus_spark.operators.temporal import interval_join
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    pur = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("ts").alias("p_start"),
-        (F.col("ts") + F.expr("INTERVAL 2 HOURS")).alias("p_end"),
-        F.col("event_id").alias("purchase_event_id"),
-    )
-    clk = ev.filter(F.col("event_type") == "click").select(
-        "user_id", "ts", F.col("event_id").alias("click_event_id")
-    )
-    j = interval_join(
-        clk, pur, key="user_id", ts="ts", start="p_start", end="p_end",
-        bucket_seconds=7200,
-    )
-    gap = (
-        F.unix_timestamp(F.col("ts")) - F.unix_timestamp(F.col("p_start"))
-    ).cast("bigint")
-    return j.select(
-        "purchase_event_id", "click_event_id", "user_id", gap.alias("gap_secs")
-    )
-
-
-def q_event_rollup_cascade(spark, sf_dir):
-    """Hypertable-style cascading rollup: minute/hour/day event counts
-    + value sums where each coarser level re-aggregates the finer
-    level's PARTIALS (raw rows scanned once). The oracle aggregates
-    each level directly from raw — equality holds because counts and
-    DECIMAL sums are associative-exact; the double cast happens only
-    in the final projection on both engines."""
-    from ctinexus_spark.operators.temporal import time_rollup
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return time_rollup(ev, ts="ts", value="value")
-
-
-def q_source_drift(spark, sf_dir):
-    """Per-source distribution drift: total-variation distance between
-    each source's token distribution and the corpus distribution — the
-    mixture-QA alarm. Exact-integer numerator (absent-vocabulary terms
-    folded in algebraically, no source×vocab cross join); the single
-    final division is the only float op, so tv_dist is engine
-    bit-exact with no ordered folds (operators/stats.py)."""
-    from ctinexus_spark.operators.stats import distribution_drift
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    toks = docs.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("token")
-    )
-    return distribution_drift(toks, "source", "token").select(
-        F.col("group").alias("source"), "n_tokens", "tv_dist"
     )
 
 
@@ -1676,31 +1562,6 @@ SELECT user_id,
        CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS total_value
 FROM marked GROUP BY user_id
 """,
-    # event_sessions_native: session_window semantics — sessions are
-    # maximal runs with inter-event gap <= 30 min (verified: Spark
-    # MERGES events exactly gap apart, so a new session needs gap
-    # STRICTLY greater); window close = last event + gap
-    "event_sessions_native": """
-WITH marked AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-sess AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id ORDER BY ts
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM marked
-)
-SELECT user_id,
-       min(ts) AS session_start,
-       max(ts) + INTERVAL 30 MINUTE AS session_end,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM sess GROUP BY user_id, sid
-""",
     "stratified_sample": """
 SELECT doc_id, lang FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
@@ -1746,89 +1607,6 @@ SELECT event_type,
        CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
 FROM events GROUP BY event_type
 """,
-    # direct per-level aggregation from raw: equals the Spark cascade
-    # because counts and DECIMAL(18,6) sums are associative-exact and
-    # both engines cast to DOUBLE only in the final projection
-    "event_rollup_cascade": """
-WITH m AS (
-  SELECT date_trunc('minute', ts) AS bucket_start,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-  FROM events GROUP BY 1
-),
-h AS (
-  SELECT date_trunc('hour', ts) AS bucket_start,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-  FROM events GROUP BY 1
-),
-d AS (
-  SELECT date_trunc('day', ts) AS bucket_start,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-  FROM events GROUP BY 1
-)
-SELECT 'minute' AS level, bucket_start, n, sum_value FROM m
-UNION ALL SELECT 'hour', bucket_start, n, sum_value FROM h
-UNION ALL SELECT 'day', bucket_start, n, sum_value FROM d
-""",
-    # the oracle is the naive BETWEEN range join — the Spark side's
-    # bucketized equi-join must reproduce it exactly (inclusive both
-    # bounds; integer epoch gap)
-    "click_attribution": """
-WITH pur AS (
-  SELECT user_id, ts AS pts, event_id AS purchase_event_id
-  FROM events WHERE event_type = 'purchase'
-),
-clk AS (
-  SELECT user_id, ts AS cts, event_id AS click_event_id
-  FROM events WHERE event_type = 'click'
-)
-SELECT p.purchase_event_id, c.click_event_id, p.user_id,
-       CAST(floor(epoch(c.cts)) - floor(epoch(p.pts)) AS BIGINT) AS gap_secs
-FROM pur p JOIN clk c ON p.user_id = c.user_id
-  AND c.cts >= p.pts AND c.cts <= p.pts + INTERVAL 2 HOUR
-""",
-    # the oracle uses DuckDB's NATIVE ASOF JOIN — an independent
-    # as-of implementation vs Spark's window-over-union — so this row
-    # cross-checks two unrelated algorithms. Payload carried verbatim
-    # (no arithmetic) ⇒ the double column is trivially bit-exact.
-    "event_asof_purchase": """
-WITH pur AS (
-  SELECT user_id, ts,
-         (max(struct_pack(i := event_id, v := "value"))).i AS purchase_event_id,
-         (max(struct_pack(i := event_id, v := "value"))).v AS purchase_value
-  FROM events WHERE event_type = 'purchase' GROUP BY user_id, ts
-)
-SELECT e.event_id, e.user_id, e.event_type,
-       CAST(coalesce(p.purchase_event_id, -1) AS BIGINT) AS purchase_event_id,
-       coalesce(p.purchase_value, 0.0::DOUBLE) AS purchase_value
-FROM events e ASOF LEFT JOIN pur p
-  ON e.user_id = p.user_id AND e.ts >= p.ts
-""",
-    # exact-integer numerator: every sum is BIGINT (order-free), the
-    # single division is the one float op — bit-exact by construction.
-    # DuckDB sum(BIGINT) returns HUGEINT: CAST each sum back.
-    "source_drift": """
-WITH tok AS (
-  SELECT source AS grp, unnest(str_split(text, ' ')) AS token FROM documents
-),
-cnt AS (
-  SELECT grp, token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY grp, token
-),
-g_tot AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_g FROM cnt GROUP BY grp),
-t_tot AS (SELECT token, CAST(sum(c) AS BIGINT) AS ct FROM cnt GROUP BY token),
-grand AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM cnt),
-contrib AS (
-  SELECT cnt.grp, abs(cnt.c * nn - ct * n_g) - ct * n_g AS term
-  FROM cnt JOIN t_tot USING (token) JOIN g_tot USING (grp), grand
-),
-sv AS (SELECT grp, CAST(sum(term) AS BIGINT) AS s FROM contrib GROUP BY grp)
-SELECT sv.grp AS source, g_tot.n_g AS n_tokens,
-       CAST(g_tot.n_g * grand.nn + sv.s AS DOUBLE)
-         / CAST(2 * g_tot.n_g * grand.nn AS DOUBLE) AS tv_dist
-FROM sv JOIN g_tot USING (grp), grand
-""",
 }
 
 QUERIES = {
@@ -1869,15 +1647,10 @@ QUERIES = {
     "region_revenue": q_region_revenue,
     "user_top_events": q_user_top_events,
     "event_sessions": q_event_sessions,
-    "event_sessions_native": q_event_sessions_native,
     "event_type_rollup": q_event_type_rollup,
     "order_percentiles": q_order_percentiles,
     "revenue_rollup": q_revenue_rollup,
     "event_leadlag": q_event_leadlag,
-    "source_drift": q_source_drift,
-    "event_asof_purchase": q_event_asof_purchase,
-    "click_attribution": q_click_attribution,
-    "event_rollup_cascade": q_event_rollup_cascade,
     "stratified_sample": q_stratified_sample,
     "mixture_plan": q_mixture_plan,
     "decontaminate": q_decontaminate,
@@ -1989,51 +1762,6 @@ ORACLES["mmr_topk"] = _mmr_sql(k=5, lam=0.7, candidates=20, nq=8)
 QUERIES["mmr_topk"] = q_mmr_topk
 
 
-# --- exact quantiles (round 5) ---------------------------------------
-
-
-def q_doc_len_quantiles(spark, sf_dir):
-    """Exact token-count quantiles of the document corpus — the
-    length-threshold profile (Gopher-style cuts) computed exactly via
-    (value, count) aggregation + running sum, instead of the
-    engine-specific percentile_approx sketch."""
-    from ctinexus_spark.operators import stats as ST
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    lens = docs.select(
-        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
-    )
-    return ST.exact_quantiles(
-        lens, "n_tokens", qs=(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
-    )
-
-
-ORACLES["doc_len_quantiles"] = """
-WITH v AS (
-  SELECT CAST(len(str_split(text, ' ')) AS BIGINT) AS value FROM documents
-),
-c AS (SELECT value, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY value),
-cum AS (
-  SELECT value,
-         CAST(sum(cnt) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_le
-  FROM c
-),
-t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM c),
-qq AS (
-  SELECT unnest([0.1::DOUBLE, 0.25::DOUBLE, 0.5::DOUBLE,
-                 0.75::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q
-)
-SELECT qq.q, min(cum.value) AS value, min(cum.n_le) AS n_le,
-       min(t.n_total) AS n_total
-FROM cum, t, qq
-WHERE cum.n_le >= CAST(ceil(qq.q * CAST(t.n_total AS DOUBLE)) AS BIGINT)
-GROUP BY qq.q
-"""
-
-QUERIES["doc_len_quantiles"] = q_doc_len_quantiles
-
-
 def q_jaccard_pairs(spark, sf_dir):
     """EXACT all-pairs near-dup join (shingle Jaccard >= 1/2) via
     prefix filtering — the deterministic sibling of the MinHash/LSH
@@ -2063,166 +1791,6 @@ JOIN cnt cb ON i.b_id = cb.doc_id
 WHERE 3 * i.n_shared >= 1 * (ca.n + cb.n)
 """
 QUERIES["jaccard_pairs"] = q_jaccard_pairs
-
-
-def q_event_funnel(spark, sf_dir):
-    """Ordered conversion funnel view → click → purchase per user:
-    earliest completion time of each step strictly after the previous
-    one. Spark side is the single-shuffle fold (per-user sorted event
-    array + nested higher-order filters, operators/temporal.py); the
-    oracle is the k-stage join+agg cascade — two independent
-    formulations of the same recurrence. Epoch-micro BIGINTs with -1
-    sentinels (nullable-BIGINT pandas round-trip precedent)."""
-    from ctinexus_spark.operators.temporal import funnel
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return funnel(ev, ["view", "click", "purchase"]).select(
-        "user_id",
-        F.col("t0").alias("t_view"),
-        F.col("t1").alias("t_click"),
-        F.col("t2").alias("t_purchase"),
-        "depth",
-    )
-
-
-ORACLES["event_funnel"] = """
-WITH s0 AS (
-  SELECT user_id, min(epoch_us(ts)) AS t0 FROM events
-  WHERE event_type = 'view' GROUP BY user_id
-),
-s1 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t1
-  FROM events e JOIN s0 USING (user_id)
-  WHERE e.event_type = 'click' AND epoch_us(e.ts) > s0.t0
-  GROUP BY e.user_id
-),
-s2 AS (
-  SELECT e.user_id, min(epoch_us(e.ts)) AS t2
-  FROM events e JOIN s1 USING (user_id)
-  WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > s1.t1
-  GROUP BY e.user_id
-)
-SELECT s0.user_id,
-       CAST(s0.t0 AS BIGINT) AS t_view,
-       CAST(coalesce(s1.t1, -1) AS BIGINT) AS t_click,
-       CAST(coalesce(s2.t2, -1) AS BIGINT) AS t_purchase,
-       CAST(1 + (s1.t1 IS NOT NULL)::INT + (s2.t2 IS NOT NULL)::INT AS INT) AS depth
-FROM s0 LEFT JOIN s1 USING (user_id) LEFT JOIN s2 USING (user_id)
-"""
-QUERIES["event_funnel"] = q_event_funnel
-
-
-def q_cohort_retention(spark, sf_dir):
-    """DAILY cohort retention triangle over the events table: users
-    bucketed by first-event day, per-offset active fraction — the
-    growth-analytics standard (operators/temporal.cohort_retention).
-    Daily, not weekly: the sf corpora span 30 days of always-on users,
-    so weekly cells are all 1.0 — daily gives a real 59-cell triangle
-    (n_active 13-134 at sf0.01). Bucket index = exact BIGINT `div` of
-    epoch-micros on BOTH engines (no double rounding at bucket edges);
-    retention one IEEE division of integer-valued doubles."""
-    from ctinexus_spark.operators.temporal import cohort_retention
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cohort_retention(ev, bucket_seconds=86_400)
-
-
-ORACLES["cohort_retention"] = """
-WITH ev AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS bk FROM events
-),
-first AS (SELECT user_id, min(bk) AS cohort_bucket FROM ev GROUP BY user_id),
-cells AS (
-  SELECT f.cohort_bucket, ev.bk - f.cohort_bucket AS bucket_offset,
-         CAST(count(*) AS BIGINT) AS n_active
-  FROM ev JOIN first f USING (user_id)
-  GROUP BY f.cohort_bucket, ev.bk - f.cohort_bucket
-),
-sz AS (SELECT cohort_bucket, CAST(count(*) AS BIGINT) AS cohort_size FROM first GROUP BY cohort_bucket)
-SELECT c.cohort_bucket, CAST(c.bucket_offset AS BIGINT) AS bucket_offset,
-       c.n_active, sz.cohort_size,
-       CAST(c.n_active AS DOUBLE) / CAST(sz.cohort_size AS DOUBLE) AS retention
-FROM cells c JOIN sz USING (cohort_bucket)
-"""
-QUERIES["cohort_retention"] = q_cohort_retention
-
-
-def q_event_bursts(spark, sf_dir):
-    """Daily per-event-type burst flags: |c − μ| > 2σ in EXACT integer
-    arithmetic — q²·(n·c−S)² > p²·(n·SS−S²), no sqrt, no float
-    accumulation (operators/stats.burst_detection). dev_sq_ratio (the
-    squared z-score) is one IEEE division of integer-valued doubles.
-    ~150 daily cells at sf0.01, a handful flagged."""
-    from ctinexus_spark.operators.stats import burst_detection
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return burst_detection(ev)
-
-
-ORACLES["event_bursts"] = """
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-m AS (
-  SELECT key, CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS s,
-         CAST(sum(cnt * cnt) AS BIGINT) AS ss
-  FROM counts GROUP BY key
-)
-SELECT c.key AS event_type, CAST(c.bucket AS BIGINT) AS bucket, c.cnt, m.n,
-       CASE WHEN m.n * m.ss - m.s * m.s > 0
-            THEN CAST((m.n * c.cnt - m.s) * (m.n * c.cnt - m.s) AS DOUBLE)
-                   / CAST(m.n * m.ss - m.s * m.s AS DOUBLE)
-            ELSE 0.0::DOUBLE END AS dev_sq_ratio,
-       1 * (m.n * c.cnt - m.s) * (m.n * c.cnt - m.s)
-         > 4 * (m.n * m.ss - m.s * m.s) AS is_burst
-FROM counts c JOIN m USING (key)
-"""
-QUERIES["event_bursts"] = q_event_bursts
-
-
-def q_event_twa(spark, sf_dir):
-    """Time-weighted average of `value` per event type — the
-    irregular-sampling mean (TimescaleDB time_weight('Linear') shape,
-    operators/temporal.time_weighted_avg). Trapezoid terms are fixed
-    IEEE chains; their sum is order-pinned on both engines (Spark
-    left-fold over array_sort(collect_list), DuckDB list_sum(list(...
-    ORDER BY)) — the lm_scores fold precedent); one final division by
-    the exact integer span."""
-    from ctinexus_spark.operators.temporal import time_weighted_avg
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return time_weighted_avg(ev)
-
-
-ORACLES["event_twa"] = """
-WITH ev AS (
-  SELECT event_type AS key, epoch_us(ts) AS tus, CAST(value AS DOUBLE) AS v
-  FROM events
-),
-tr AS (
-  SELECT key, tus, v,
-         lead(tus) OVER w AS t2, lead(v) OVER w AS v2
-  FROM ev WINDOW w AS (PARTITION BY key ORDER BY tus, v)
-),
-terms AS (
-  SELECT key, tus, v, (v + v2) * CAST(t2 - tus AS DOUBLE) AS term
-  FROM tr WHERE t2 IS NOT NULL
-),
-sp AS (
-  SELECT key, CAST(max(tus) - min(tus) AS BIGINT) AS span_us,
-         CAST(count(*) AS BIGINT) AS n
-  FROM ev GROUP BY key
-)
-SELECT t.key AS event_type, sp.n AS n_samples, sp.span_us,
-       list_sum(list(t.term ORDER BY t.tus, t.v))
-         / (2.0::DOUBLE * CAST(sp.span_us AS DOUBLE)) AS twa
-FROM terms t JOIN sp ON t.key = sp.key
-WHERE sp.n >= 2 AND sp.span_us > 0
-GROUP BY t.key, sp.n, sp.span_us
-"""
-QUERIES["event_twa"] = q_event_twa
 
 
 def q_revenue_cube(spark, sf_dir):
@@ -2283,123 +1851,6 @@ FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
 """
 QUERIES["idle_customers"] = q_idle_customers
-
-
-def q_event_decay(spark, sf_dir):
-    """Half-life-decayed trending counters per event type (half-life 7
-    days over daily buckets, window 64) — stats.decayed_counts. The
-    weight table is ONE Python-computed constant list embedded into
-    both engines ({v!r}::DOUBLE — engine pow() could
-    differ in the last ulp); terms fold in pinned bucket order."""
-    from ctinexus_spark.operators.stats import decayed_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return decayed_counts(ev)
-
-
-def _decay_sql(half_life: float, window: int) -> str:
-    from ctinexus_spark.operators.stats import decay_weights
-
-    values = ", ".join(
-        f"(CAST({o} AS BIGINT), {w!r}::DOUBLE)"
-        for o, w in decay_weights(half_life, window)
-    )
-    return f"""
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-ref AS (SELECT max(bucket) AS ref_bucket FROM counts),
-wt(off, weight) AS (VALUES {values}),
-terms AS (
-  SELECT c.key, r.ref_bucket, c.bucket, c.cnt,
-         CAST(c.cnt AS DOUBLE) * w.weight AS term
-  FROM counts c CROSS JOIN ref r
-  JOIN wt w ON w.off = r.ref_bucket - c.bucket
-)
-SELECT key AS event_type, CAST(ref_bucket AS BIGINT) AS ref_bucket,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(cnt) AS BIGINT) AS n_events,
-       list_sum(list(term ORDER BY bucket)) AS score
-FROM terms GROUP BY key, ref_bucket
-"""
-
-
-ORACLES["event_decay"] = _decay_sql(half_life=7.0, window=64)
-QUERIES["event_decay"] = q_event_decay
-
-
-def q_event_transitions(spark, sf_dir):
-    """Within-session (30-min gap) event-type transition matrix with
-    row-conditional probabilities — the user-journey Markov/Sankey
-    primitive (operators/temporal.session_transitions). Integer pair
-    counts; p one IEEE division. 25 cells at sf0.01 (5x5 types)."""
-    from ctinexus_spark.operators.temporal import session_transitions
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return session_transitions(ev)
-
-
-ORACLES["event_transitions"] = """
-WITH seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER w AS from_type,
-         epoch_us(ts) - lag(epoch_us(ts)) OVER w AS gap_us
-  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-pairs AS (
-  SELECT from_type, event_type AS to_type, CAST(count(*) AS BIGINT) AS n
-  FROM seq WHERE from_type IS NOT NULL AND gap_us <= 1800000000
-  GROUP BY from_type, event_type
-),
-tot AS (SELECT from_type, CAST(sum(n) AS BIGINT) AS row_n FROM pairs GROUP BY from_type)
-SELECT p.from_type, p.to_type, p.n, t.row_n,
-       CAST(p.n AS DOUBLE) / CAST(t.row_n AS DOUBLE) AS p
-FROM pairs p JOIN tot t USING (from_type)
-"""
-QUERIES["event_transitions"] = q_event_transitions
-
-
-def q_event_cusum(spark, sf_dir):
-    """CUSUM drift chart over daily per-type event counts — sustained
-    level-shift detection via the prefix identity S_t = P_t −
-    least(0, min prefix P) (stats.cusum_drift), all-BIGINT window
-    arithmetic, k = per-key floor-mean. Complements event_bursts
-    (point outliers vs accumulated drift)."""
-    from ctinexus_spark.operators.stats import cusum_drift
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cusum_drift(ev, threshold=20)
-
-
-ORACLES["event_cusum"] = """
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-kref AS (SELECT key, CAST(sum(cnt) // count(*) AS BIGINT) AS k FROM counts GROUP BY key),
-prefixed AS (
-  SELECT c.key, c.bucket, c.cnt, kref.k,
-         sum(c.cnt - kref.k) OVER (
-           PARTITION BY c.key ORDER BY c.bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
-  FROM counts c JOIN kref USING (key)
-),
-scored AS (
-  SELECT key, bucket, cnt, k, p,
-         min(p) OVER (
-           PARTITION BY key ORDER BY bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mp
-  FROM prefixed
-)
-SELECT key AS event_type, CAST(bucket AS BIGINT) AS bucket, cnt, k,
-       CAST(p - least(CAST(0 AS BIGINT), mp) AS BIGINT) AS cusum,
-       (p - least(CAST(0 AS BIGINT), mp)) > 20 AS alarm
-FROM scored
-"""
-QUERIES["event_cusum"] = q_event_cusum
 
 
 def q_order_zorder(spark, sf_dir):

@@ -360,6 +360,20 @@ def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> 
     return ensure_parallelism(docs).select(F.col(id_col), _sh(F.col(text_col)).alias("simhash"))
 
 
+def check_simhash_bands(bands: int, max_hamming: int) -> None:
+    """Reject banding parameters that break the pigeonhole guarantee:
+    bands > SIMHASH_BITS gives 0-bit chunks (one bucket for every
+    document), and max_hamming >= bands admits pairs that may share
+    no chunk at all (one differing bit per chunk), so they would be
+    silently missed."""
+    if not 1 <= bands <= SIMHASH_BITS:
+        raise ValueError(f"bands must be in 1..{SIMHASH_BITS}, got {bands}")
+    if not 0 <= max_hamming < bands:
+        raise ValueError(
+            f"max_hamming must be in 0..bands-1 ({bands - 1}), got {max_hamming}"
+        )
+
+
 def simhash_candidates(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -380,6 +394,7 @@ def simhash_candidates(
     one chunk → n_bucket² pairs in a single task) — same guard as
     every other bucket self-join in this module.
     """
+    check_simhash_bands(bands, max_hamming)
     sh = simhash(docs, id_col, text_col)
     width = SIMHASH_BITS // bands
     mask = (1 << width) - 1

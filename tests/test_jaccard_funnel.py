@@ -1,20 +1,17 @@
-"""Property tests for the prefix-filter exact Jaccard join and the
-single-shuffle funnel — each checked against an independent brute
-reference in plain Python (the DuckDB twins in dataset_queries are the
-driver-side check; these pin the algorithms on adversarial inputs the
-sf corpora don't contain: tiny sets, dead funnels, ts ties) — plus
-shingle_overlap's argument check."""
+"""Property tests for the prefix-filter exact Jaccard join, checked
+against an independent brute reference in plain Python (the DuckDB
+twin in dataset_queries is the driver-side check; these pin the
+algorithm on adversarial inputs the sf corpora don't contain: tiny
+sets, threshold ties) — plus shingle_overlap's argument check."""
 
 from __future__ import annotations
 
-import datetime as dt
 import itertools
 import random
 
 import pytest
 
 from ctinexus_spark.operators import dedup as D
-from ctinexus_spark.operators.temporal import funnel
 
 
 def _shingles(text: str, k: int = 3) -> set[str]:
@@ -71,79 +68,6 @@ def test_jaccard_join_threshold_is_integer_exact(spark):
     assert len(rows) == 1 and rows[0].jaccard == 0.5
     rows = D.jaccard_join_exact(sdf, threshold=(51, 100)).collect()
     assert rows == []
-
-
-def _ts(s: int):
-    # tz-aware UTC so Python .timestamp() and Spark's session-UTC
-    # micros agree exactly (naive datetimes would go through the
-    # process-local zone on the Python side)
-    return dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc) + dt.timedelta(seconds=s)
-
-
-def test_funnel_dead_stays_dead_and_strict_order(spark):
-    ev = spark.createDataFrame(
-        [
-            # u1 completes all three in order
-            ("u1", "view", _ts(0)), ("u1", "click", _ts(10)), ("u1", "purchase", _ts(20)),
-            # u2: purchase BEFORE click -> depth 2, purchase = -1
-            ("u2", "view", _ts(0)), ("u2", "purchase", _ts(5)), ("u2", "click", _ts(10)),
-            # u3: click at the SAME ts as view -> strict > excludes it
-            ("u3", "view", _ts(0)), ("u3", "click", _ts(0)),
-            # u4: never views -> filtered out entirely
-            ("u4", "click", _ts(0)), ("u4", "purchase", _ts(1)),
-            # u5: view only
-            ("u5", "view", _ts(3)),
-        ],
-        ["user_id", "event_type", "ts"],
-    )
-    out = {r.user_id: r for r in funnel(ev, ["view", "click", "purchase"]).collect()}
-    assert set(out) == {"u1", "u2", "u3", "u5"}
-    assert out["u1"].depth == 3 and out["u1"].t2 > out["u1"].t1 > out["u1"].t0
-    assert out["u2"].depth == 2 and out["u2"].t2 == -1
-    assert out["u3"].depth == 1 and out["u3"].t1 == -1  # tie is NOT after
-    assert out["u5"].depth == 1 and (out["u5"].t1, out["u5"].t2) == (-1, -1)
-
-
-def test_funnel_matches_brute_reference(spark):
-    """Randomized events vs a per-user Python fold."""
-    rng = random.Random(11)
-    steps = ["view", "click", "purchase"]
-    rows = []
-    for u in range(25):
-        for _ in range(rng.randint(0, 15)):
-            rows.append(
-                (f"u{u}", rng.choice(steps + ["error", "signup"]), _ts(rng.randrange(3600)))
-            )
-    if not rows:
-        rows = [("u0", "view", _ts(0))]
-    ev = spark.createDataFrame(rows, ["user_id", "event_type", "ts"])
-    got = {
-        r.user_id: (r.t0, r.t1, r.t2, r.depth)
-        for r in funnel(ev, steps).collect()
-    }
-    # brute: min ts per step strictly after the previous step's min
-    want = {}
-    byuser: dict[str, list[tuple[dt.datetime, str]]] = {}
-    for u, t, ts in rows:
-        byuser.setdefault(u, []).append((ts, t))
-    for u, evs in byuser.items():
-        prev = None  # None = funnel start; -1 = dead
-        times = []
-        for s in steps:
-            if prev == -1:
-                times.append(-1)
-                continue
-            cand = [ts for ts, t in evs if t == s and (prev is None or ts > prev)]
-            if not cand:
-                times.append(-1)
-                prev = -1
-            else:
-                prev = min(cand)
-                times.append(int(prev.timestamp() * 1_000_000))
-        if times[0] != -1:
-            depth = sum(1 for t in times if t != -1)
-            want[u] = (*times, depth)
-    assert got == want
 
 
 @pytest.mark.parametrize("min_shared", [0, -1])

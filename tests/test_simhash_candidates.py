@@ -2,6 +2,8 @@
 pair within the hamming bound (pigeonhole guarantee) and the exact
 filter must reject distant pairs."""
 
+import pytest
+
 from ctinexus_spark.operators.dedup import (
     _simhash_batch,
     _simhash_one,
@@ -56,3 +58,21 @@ def test_identical_docs_zero_hamming(spark):
     )
     rows = simhash_candidates(df).collect()
     assert len(rows) == 1 and rows[0].hamming == 0
+
+
+def test_banding_parameters_validated_at_call_time(spark):
+    """max_hamming >= bands breaks the pigeonhole guarantee (a pair at
+    hamming == bands with one differing bit per chunk shares no
+    chunk and is never a candidate), and bands > 48 gives 0-bit chunks
+    that put every document in one bucket. Both are rejected when the
+    operator is built, before any Spark job."""
+    df = spark.createDataFrame([(1, "a b c"), (2, "a b d")], "doc_id bigint, text string")
+    for bands, max_hamming, match in [
+        (4, 4, "max_hamming"), (8, 9, "max_hamming"), (4, -1, "max_hamming"),
+        (49, 3, "bands"), (0, 0, "bands"),
+    ]:
+        with pytest.raises(ValueError, match=match):
+            simhash_candidates(df, bands=bands, max_hamming=max_hamming)
+    # the edges of the legal range still build
+    simhash_candidates(df, bands=48, max_hamming=47)
+    simhash_candidates(df, bands=1, max_hamming=0)

@@ -1,12 +1,13 @@
 """Streaming ingestion tests: micro-batch KG construction with
-exactly-once checkpointing, and watermarked windowed aggregation."""
+exactly-once checkpointing, and the cross-batch exact and near-
+duplicate filters."""
 
-import os
+import pytest
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.datagen import synthesize_documents
 from ctinexus_spark.model import StubModel
-from ctinexus_spark.streaming.ingest import stream_kg, windowed_event_counts
+from ctinexus_spark.streaming.ingest import stream_kg
 
 
 def test_stream_kg_end_to_end(spark, tmp_path):
@@ -75,239 +76,6 @@ def test_stream_dedup_drops_cross_batch_duplicates(spark, tmp_path):
     assert rows == {("a1", "alpha body"), ("b1", "beta body"), ("c1", "gamma body")}
 
 
-def test_windowed_event_counts_with_watermark(spark, tmp_path):
-    src = str(tmp_path / "events")
-    spark.createDataFrame(
-        [
-            ("2026-01-01 10:01:00", "click"),
-            ("2026-01-01 10:04:00", "click"),
-            ("2026-01-01 10:12:00", "view"),
-        ],
-        "ts_s string, event_type string",
-    ).selectExpr("CAST(ts_s AS TIMESTAMP) AS ts", "event_type").write.parquet(src)
-
-    stream = spark.readStream.schema("ts timestamp, event_type string").parquet(src)
-    agg = windowed_event_counts(stream)
-    out = str(tmp_path / "agg_out")
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "agg_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    # append mode emits only watermark-closed windows; with a single
-    # bounded batch the final watermark closes them after the run —
-    # verify the sink path exists and the query completed cleanly.
-    assert q.lastProgress is not None
-    assert os.path.isdir(out)
-
-
-def test_watermark_drops_late_data_across_batches(spark, tmp_path):
-    """An event arriving in a later micro-batch BEHIND the advanced
-    watermark must not resurrect its (already emittable) window, while
-    an on-time late-batch event lands normally."""
-    import time
-
-    src = str(tmp_path / "ev")
-    schema = "ts timestamp, event_type string"
-
-    def write(rows):
-        spark.createDataFrame(rows, "ts_s string, event_type string").selectExpr(
-            "CAST(ts_s AS TIMESTAMP) AS ts", "event_type"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: events up to 12:00 → watermark advances to 11:30
-    write([("2026-01-01 10:01:00", "click"),
-           ("2026-01-01 10:02:00", "click"),
-           ("2026-01-01 12:00:00", "view")])
-    time.sleep(1.1)
-    # batch 2: fresh event; the 10:00-10:10 window (end < watermark)
-    # is emitted and its state evicted at the end of this batch
-    write([("2026-01-01 13:00:00", "view")])
-    time.sleep(1.1)
-    # batch 3: a hopelessly late event (10:03 — its window was already
-    # evicted) must be dropped, not re-opened; plus one fresh event
-    write([("2026-01-01 10:03:00", "click"),
-           ("2026-01-01 14:00:00", "view")])
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        windowed_event_counts(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("wm_sink")
-        .option("checkpointLocation", str(tmp_path / "wm_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = {
-        (str(r.window_start), r.event_type, r.n)
-        for r in spark.sql("SELECT * FROM wm_sink").collect()
-    }
-    # the 10:00-10:10 click window closed with n=2 — the late 10:03
-    # event was dropped by the watermark: not counted, and no
-    # duplicate re-opened window emitted
-    assert ("2026-01-01 10:00:00", "click", 2) in rows
-    assert sum(1 for _, t, _n in rows if t == "click") == 1
-
-
-def test_stream_sessions_gap_close_and_timeout(spark, tmp_path):
-    """Sessionization closes a session two ways: an in-batch gap
-    beyond the threshold (user 1), and the watermark passing
-    last_ts + gap via EventTimeTimeout (user 2). The still-open
-    session (user 1's second) must NOT be emitted."""
-    import time
-
-    from ctinexus_spark.streaming.ingest import stream_sessions
-
-    src = str(tmp_path / "sess_ev")
-
-    def write(rows):
-        spark.createDataFrame(rows, "user_id bigint, ts_s string").selectExpr(
-            "user_id", "CAST(ts_s AS TIMESTAMP) AS ts"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: user 1 has two close events; user 2 one event
-    write([(1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:05:00"),
-           (2, "2026-01-01 10:00:00")])
-    time.sleep(1.1)
-    # batch 2: user 1 jumps 2h → in-batch close of [10:00, 10:05];
-    # watermark advances to 11:30, past user 2's last+gap (10:30)
-    write([(1, "2026-01-01 12:00:00")])
-    time.sleep(1.1)
-    # batch 3: lets user 2's timeout fire; extends user 1's open session
-    write([(1, "2026-01-01 12:05:00")])
-
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("sess_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "sess_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.sql("SELECT * FROM sess_sink").collect()
-    }
-    assert (1, "2026-01-01 10:00:00", "2026-01-01 10:05:00", 2) in rows
-    assert (2, "2026-01-01 10:00:00", "2026-01-01 10:00:00", 1) in rows
-    # the open 12:00-12:05 session is not emitted (stream ended first)
-    assert not any(u == 1 and s.startswith("2026-01-01 12:") for u, s, _e, _n in rows)
-
-
-def test_stream_sessions_late_event_keeps_session_end(spark, tmp_path):
-    """A below-watermark late event from a LATER micro-batch carrying
-    ts < the open session's last must extend the session monotonically:
-    session_end stays at the max ts seen (and start at the min), so the
-    late 10:05 arrival neither drags session_end back from 10:10 nor
-    re-times the gap from the stale event."""
-    import time
-
-    from ctinexus_spark.streaming.ingest import stream_sessions
-
-    src = str(tmp_path / "late_ev")
-
-    def write(rows):
-        spark.createDataFrame(rows, "user_id bigint, ts_s string").selectExpr(
-            "user_id", "CAST(ts_s AS TIMESTAMP) AS ts"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: open session [10:00, 10:10]; watermark trails at 09:40
-    write([(1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:10:00")])
-    time.sleep(1.1)
-    # batch 2: LATE event 10:05 (above watermark, below session last)
-    write([(1, "2026-01-01 10:05:00")])
-    time.sleep(1.1)
-    # batch 3: 13:00 is > gap past 10:10 → closes the session in-batch
-    write([(1, "2026-01-01 13:00:00")])
-
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("late_sess_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "late_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    rows = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.sql("SELECT * FROM late_sess_sink").collect()
-    }
-    assert (1, "2026-01-01 10:00:00", "2026-01-01 10:10:00", 3) in rows, rows
-
-
-def test_stream_sessions_very_late_event_forms_own_session(spark, tmp_path):
-    """A late event more than `gap` OLDER than the open session's start
-    must not be glued into it (that would emit a session violating the
-    gap invariant) — it forms its own immediately-closed session."""
-    import time
-
-    from ctinexus_spark.streaming.ingest import stream_sessions
-
-    src = str(tmp_path / "vlate_ev")
-
-    def write(rows):
-        spark.createDataFrame(rows, "user_id bigint, ts_s string").selectExpr(
-            "user_id", "CAST(ts_s AS TIMESTAMP) AS ts"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: open session [10:00, 10:05]; watermark trails far behind
-    write([(1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:05:00")])
-    time.sleep(1.1)
-    # batch 2: late event at 09:00 — 60 min before session start (> gap)
-    write([(1, "2026-01-01 09:00:00")])
-    time.sleep(1.1)
-    # batch 3: 13:00 closes the [10:00, 10:05] session in-batch
-    write([(1, "2026-01-01 13:00:00")])
-
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        stream_sessions(stream)
-        .writeStream.format("memory")
-        .queryName("vlate_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "vlate_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.sql("SELECT * FROM vlate_sink").collect()
-    }
-    # 09:00 is its own closed session; [10:00, 10:05] keeps its bounds
-    assert (1, "2026-01-01 09:00:00", "2026-01-01 09:00:00", 1) in rows, rows
-    assert (1, "2026-01-01 10:00:00", "2026-01-01 10:05:00", 2) in rows, rows
-
-
 def test_stream_near_dups_across_batches(spark, tmp_path):
     """Stateful SimHash banding: a near-duplicate arriving in a LATER
     micro-batch pairs with the earlier document (state outlives the
@@ -347,175 +115,15 @@ def test_stream_near_dups_across_batches(spark, tmp_path):
     assert not any("z1" in p for p in pairs)
 
 
-def test_stream_interval_join_attributes_within_window(spark, tmp_path):
-    """Stream-stream interval join: a click joins only the impressions
-    of the same user within the preceding 15 minutes — cross-batch
-    (impression in batch 1, click in batch 2) and within-batch pairs
-    both land; stale impressions (> within) never match."""
-    import time
+def test_stream_near_dups_validates_banding(spark, tmp_path):
+    """Same guard as the batch simhash_candidates: banding parameters
+    that break the pigeonhole guarantee, or give 0-bit chunks, raise
+    when the streaming plan is built, before the query starts."""
+    from ctinexus_spark.streaming.ingest import stream_near_dups
 
-    from ctinexus_spark.streaming.ingest import stream_interval_join
-
-    imp_src, clk_src = str(tmp_path / "imp"), str(tmp_path / "clk")
-
-    def write(src, rows):
-        spark.createDataFrame(rows, "user_id bigint, ts_s string").selectExpr(
-            "user_id", "CAST(ts_s AS TIMESTAMP) AS ts"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    # batch 1: impressions for users 1 and 2
-    write(imp_src, [(1, "2026-01-01 10:00:00"), (2, "2026-01-01 10:00:00"),
-                    (1, "2026-01-01 09:30:00")])  # stale for the 10:05 click
-    # clicks: user 1 clicks at 10:05 (attributes to 10:00 impression
-    # only — 09:30 is 35 min back); user 2 never clicks
-    write(clk_src, [(1, "2026-01-01 10:05:00")])
-
-    imp = (spark.readStream.schema("user_id bigint, ts timestamp")
-           .option("maxFilesPerTrigger", 1).parquet(imp_src))
-    clk = (spark.readStream.schema("user_id bigint, ts timestamp")
-           .option("maxFilesPerTrigger", 1).parquet(clk_src))
-    q = (
-        stream_interval_join(imp, clk)
-        .writeStream.format("memory").queryName("attr_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "attr_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {(r.user_id, str(r.left_ts), str(r.right_ts), r.lag_seconds)
-            for r in spark.sql("SELECT * FROM attr_sink").collect()}
-    assert rows == {(1, "2026-01-01 10:00:00", "2026-01-01 10:05:00", 300)}, rows
-
-
-def test_session_window_native_streaming(spark, tmp_path):
-    """The native session_window aggregation works on the STREAM with a
-    watermark: gap-separated runs emit as separate sessions once the
-    watermark closes them; session_end = last event + gap."""
-    import time
-
-    from ctinexus_spark.streaming.ingest import session_window_counts
-
-    src = str(tmp_path / "native_ev")
-
-    def write(rows):
-        spark.createDataFrame(rows, "user_id bigint, ts_s string").selectExpr(
-            "user_id", "CAST(ts_s AS TIMESTAMP) AS ts"
-        ).coalesce(1).write.mode("append").parquet(src)
-
-    write([(1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:10:00"),
-           (2, "2026-01-01 10:00:00")])
-    time.sleep(1.1)
-    # advances the watermark far past both sessions' close
-    write([(1, "2026-01-01 15:00:00")])
-
-    stream = (
-        spark.readStream.schema("user_id bigint, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    q = (
-        session_window_counts(stream)
-        .writeStream.format("memory")
-        .queryName("native_sess_sink")
-        .outputMode("append")
-        .option("checkpointLocation", str(tmp_path / "native_ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r.user_id, str(r.session_start), str(r.session_end), r.n_events)
-        for r in spark.sql("SELECT * FROM native_sess_sink").collect()
-    }
-    assert (1, "2026-01-01 10:00:00", "2026-01-01 10:40:00", 2) in rows, rows
-    assert (2, "2026-01-01 10:00:00", "2026-01-01 10:30:00", 1) in rows, rows
-    # the 15:00 session is still open at end-of-stream → not emitted
-    assert not any(u == 1 and s.startswith("2026-01-01 15:") for u, s, _e, _n in rows)
-
-
-def test_session_window_merges_exact_gap_boundary(spark):
-    """Spark's session_window MERGES events exactly `gap` apart (a new
-    session needs a STRICTLY greater gap) — the boundary the DuckDB
-    oracle twin must encode with `> 1800`, not `>= 1800`."""
-    from ctinexus_spark.streaming.ingest import session_window_counts
-
-    ev = spark.createDataFrame(
-        [(1, "2026-01-01 10:00:00"), (1, "2026-01-01 10:30:00")],
-        "user_id bigint, ts_s string",
-    ).selectExpr("user_id", "CAST(ts_s AS TIMESTAMP) AS ts")
-    got = session_window_counts(ev).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert (str(r.session_start), str(r.session_end), r.n_events) == (
-        "2026-01-01 10:00:00", "2026-01-01 11:00:00", 2)
-
-
-def test_stream_bursts_final_equals_batch(spark, tmp_path):
-    """Cross-batch streaming burst monitor == batch burst_detection
-    over the union of batches, bit-exactly: counters are additive
-    integers, the flag is the same BIGINT cross-product predicate, and
-    dev_sq_ratio replicates the batch cast-then-divide. Final emission
-    per key = rows with that key's max `total` (strictly increases on
-    every update the key receives)."""
-    import datetime as dt
-    import time
-
-    from ctinexus_spark.operators.stats import burst_detection
-    from ctinexus_spark.streaming.ingest import stream_bursts
-
-    base = dt.datetime(2024, 1, 1)
-    schema = "event_type string, ts timestamp"
-
-    def rows(spec):
-        out = []
-        for key, day, n in spec:
-            out += [(key, base + dt.timedelta(days=day, seconds=i)) for i in range(n)]
-        return out
-
-    # enough baseline days that one hot day clears 2 sigma (with only
-    # 3-4 buckets the outlier inflates sigma past its own deviation)
-    b1 = rows([("a", d, 5 + d % 3) for d in range(6)] + [("a", 6, 40), ("b", 0, 3)])
-    b2 = rows(
-        [("a", d, 5 + d % 2) for d in range(7, 11)]
-        + [("b", d, 3 + d % 2) for d in range(1, 8)]
-        + [("b", 8, 90)]
-    )
-    src = str(tmp_path / "ev")
-    spark.createDataFrame(b1, schema).coalesce(1).write.mode("append").parquet(src)
-    time.sleep(1.1)
-    spark.createDataFrame(b2, schema).coalesce(1).write.mode("append").parquet(src)
-
-    stream = (
-        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    )
-    q = (
-        stream_bursts(stream)
-        .writeStream.format("memory")
-        .queryName("burst_sink")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    emitted = spark.sql("select * from burst_sink").collect()
-    assert emitted
-    last_total = {}
-    for r in emitted:
-        last_total[r.event_type] = max(last_total.get(r.event_type, -1), r.total)
-    final = {
-        (r.event_type, r.bucket): (r.cnt, r.n, r.dev_sq_ratio, r.is_burst)
-        for r in emitted
-        if r.total == last_total[r.event_type]
-    }
-    batch = spark.createDataFrame(b1 + b2, schema)
-    want = {
-        (r.event_type, r.bucket): (r.cnt, r.n, r.dev_sq_ratio, r.is_burst)
-        for r in burst_detection(batch).collect()
-    }
-    assert final == want
-    # the big days must be flagged in the final state
-    assert want[("a", 19723 + 2)][3] or True  # bucket ids are absolute epoch days
-    flagged = {k for k, v in final.items() if v[3]}
-    assert flagged  # at least the 40/90-count days burst
+    stream = spark.readStream.schema("url string, text string").parquet(str(tmp_path))
+    for bands, max_hamming, match in [
+        (4, 4, "max_hamming"), (4, -1, "max_hamming"), (49, 3, "bands"), (0, 0, "bands"),
+    ]:
+        with pytest.raises(ValueError, match=match):
+            stream_near_dups(stream, bands=bands, max_hamming=max_hamming)
