@@ -38,9 +38,11 @@ WINDOW = 50
 _CHANGED_R05 = [
     "dedup_incremental", "simhash", "simhash_candidates",
     "dedup_clusters_cc", "dedup_clusters_stars", "dedup_keeplist",
-    "semantic_dedup", "kg_global_entities",
-    "mmr_topk", "jaccard_pairs", "kg_entity_cooc",
-    "revenue_cube", "idle_customers", "order_zorder",
+    "semantic_dedup", "kg_global_entities", "doc_len_quantiles",
+    "mmr_topk", "source_drift", "jaccard_pairs", "event_bursts",
+    "kg_entity_cooc",
+    "revenue_cube", "idle_customers", "event_decay",
+    "event_cusum", "order_zorder",
     "user_event_pivot", "user_event_unpivot", "event_props_k",
 ]
 

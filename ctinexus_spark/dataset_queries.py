@@ -482,6 +482,25 @@ def q_event_leadlag(spark, sf_dir):
     )
 
 
+def q_source_drift(spark, sf_dir):
+    """Per-source distribution drift: total-variation distance between
+    each source's token distribution and the corpus distribution — the
+    mixture-QA alarm. Exact-integer numerator (absent-vocabulary terms
+    folded in algebraically, no source×vocab cross join); the single
+    final division is the only float op, so tv_dist is engine
+    bit-exact with no ordered folds (operators/stats.py)."""
+    from ctinexus_spark.operators.stats import distribution_drift
+    from ctinexus_spark.partitioning import ensure_parallelism
+
+    docs = ensure_parallelism(_docs(spark, sf_dir))
+    toks = docs.select(
+        "source", F.explode(F.split(F.col("text"), " ")).alias("token")
+    )
+    return distribution_drift(toks, "source", "token").select(
+        F.col("group").alias("source"), "n_tokens", "tv_dist"
+    )
+
+
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-language sampling quotas (md5-threshold per
     stratum) — the reproducible eval-split / rebalance primitive."""
@@ -1607,6 +1626,29 @@ SELECT event_type,
        CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
 FROM events GROUP BY event_type
 """,
+    # exact-integer numerator: every sum is BIGINT (order-free), the
+    # single division is the one float op — bit-exact by construction.
+    # DuckDB sum(BIGINT) returns HUGEINT: CAST each sum back.
+    "source_drift": """
+WITH tok AS (
+  SELECT source AS grp, unnest(str_split(text, ' ')) AS token FROM documents
+),
+cnt AS (
+  SELECT grp, token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY grp, token
+),
+g_tot AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_g FROM cnt GROUP BY grp),
+t_tot AS (SELECT token, CAST(sum(c) AS BIGINT) AS ct FROM cnt GROUP BY token),
+grand AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM cnt),
+contrib AS (
+  SELECT cnt.grp, abs(cnt.c * nn - ct * n_g) - ct * n_g AS term
+  FROM cnt JOIN t_tot USING (token) JOIN g_tot USING (grp), grand
+),
+sv AS (SELECT grp, CAST(sum(term) AS BIGINT) AS s FROM contrib GROUP BY grp)
+SELECT sv.grp AS source, g_tot.n_g AS n_tokens,
+       CAST(g_tot.n_g * grand.nn + sv.s AS DOUBLE)
+         / CAST(2 * g_tot.n_g * grand.nn AS DOUBLE) AS tv_dist
+FROM sv JOIN g_tot USING (grp), grand
+""",
 }
 
 QUERIES = {
@@ -1651,6 +1693,7 @@ QUERIES = {
     "order_percentiles": q_order_percentiles,
     "revenue_rollup": q_revenue_rollup,
     "event_leadlag": q_event_leadlag,
+    "source_drift": q_source_drift,
     "stratified_sample": q_stratified_sample,
     "mixture_plan": q_mixture_plan,
     "decontaminate": q_decontaminate,
@@ -1762,6 +1805,51 @@ ORACLES["mmr_topk"] = _mmr_sql(k=5, lam=0.7, candidates=20, nq=8)
 QUERIES["mmr_topk"] = q_mmr_topk
 
 
+# --- exact quantiles (round 5) ---------------------------------------
+
+
+def q_doc_len_quantiles(spark, sf_dir):
+    """Exact token-count quantiles of the document corpus — the
+    length-threshold profile (Gopher-style cuts) computed exactly via
+    (value, count) aggregation + running sum, instead of the
+    engine-specific percentile_approx sketch."""
+    from ctinexus_spark.operators import stats as ST
+    from ctinexus_spark.partitioning import ensure_parallelism
+
+    docs = ensure_parallelism(_docs(spark, sf_dir))
+    lens = docs.select(
+        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
+    )
+    return ST.exact_quantiles(
+        lens, "n_tokens", qs=(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
+    )
+
+
+ORACLES["doc_len_quantiles"] = """
+WITH v AS (
+  SELECT CAST(len(str_split(text, ' ')) AS BIGINT) AS value FROM documents
+),
+c AS (SELECT value, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY value),
+cum AS (
+  SELECT value,
+         CAST(sum(cnt) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_le
+  FROM c
+),
+t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM c),
+qq AS (
+  SELECT unnest([0.1::DOUBLE, 0.25::DOUBLE, 0.5::DOUBLE,
+                 0.75::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q
+)
+SELECT qq.q, min(cum.value) AS value, min(cum.n_le) AS n_le,
+       min(t.n_total) AS n_total
+FROM cum, t, qq
+WHERE cum.n_le >= CAST(ceil(qq.q * CAST(t.n_total AS DOUBLE)) AS BIGINT)
+GROUP BY qq.q
+"""
+
+QUERIES["doc_len_quantiles"] = q_doc_len_quantiles
+
+
 def q_jaccard_pairs(spark, sf_dir):
     """EXACT all-pairs near-dup join (shingle Jaccard >= 1/2) via
     prefix filtering — the deterministic sibling of the MinHash/LSH
@@ -1791,6 +1879,41 @@ JOIN cnt cb ON i.b_id = cb.doc_id
 WHERE 3 * i.n_shared >= 1 * (ca.n + cb.n)
 """
 QUERIES["jaccard_pairs"] = q_jaccard_pairs
+
+
+def q_event_bursts(spark, sf_dir):
+    """Daily per-event-type burst flags: |c − μ| > 2σ in EXACT integer
+    arithmetic — q²·(n·c−S)² > p²·(n·SS−S²), no sqrt, no float
+    accumulation (operators/stats.burst_detection). dev_sq_ratio (the
+    squared z-score) is one IEEE division of integer-valued doubles.
+    ~150 daily cells at sf0.01, a handful flagged."""
+    from ctinexus_spark.operators.stats import burst_detection
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return burst_detection(ev)
+
+
+ORACLES["event_bursts"] = """
+WITH counts AS (
+  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
+),
+m AS (
+  SELECT key, CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS s,
+         CAST(sum(cnt * cnt) AS BIGINT) AS ss
+  FROM counts GROUP BY key
+)
+SELECT c.key AS event_type, CAST(c.bucket AS BIGINT) AS bucket, c.cnt, m.n,
+       CASE WHEN m.n * m.ss - m.s * m.s > 0
+            THEN CAST((m.n * c.cnt - m.s) * (m.n * c.cnt - m.s) AS DOUBLE)
+                   / CAST(m.n * m.ss - m.s * m.s AS DOUBLE)
+            ELSE 0.0::DOUBLE END AS dev_sq_ratio,
+       1 * (m.n * c.cnt - m.s) * (m.n * c.cnt - m.s)
+         > 4 * (m.n * m.ss - m.s * m.s) AS is_burst
+FROM counts c JOIN m USING (key)
+"""
+QUERIES["event_bursts"] = q_event_bursts
 
 
 def q_revenue_cube(spark, sf_dir):
@@ -1851,6 +1974,92 @@ FROM customer
 WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
 """
 QUERIES["idle_customers"] = q_idle_customers
+
+
+def q_event_decay(spark, sf_dir):
+    """Half-life-decayed trending counters per event type (half-life 7
+    days over daily buckets, window 64) — stats.decayed_counts. The
+    weight table is ONE Python-computed constant list embedded into
+    both engines ({v!r}::DOUBLE — engine pow() could
+    differ in the last ulp); terms fold in pinned bucket order."""
+    from ctinexus_spark.operators.stats import decayed_counts
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return decayed_counts(ev)
+
+
+def _decay_sql(half_life: float, window: int) -> str:
+    from ctinexus_spark.operators.stats import decay_weights
+
+    values = ", ".join(
+        f"(CAST({o} AS BIGINT), {w!r}::DOUBLE)"
+        for o, w in decay_weights(half_life, window)
+    )
+    return f"""
+WITH counts AS (
+  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
+),
+ref AS (SELECT max(bucket) AS ref_bucket FROM counts),
+wt(off, weight) AS (VALUES {values}),
+terms AS (
+  SELECT c.key, r.ref_bucket, c.bucket, c.cnt,
+         CAST(c.cnt AS DOUBLE) * w.weight AS term
+  FROM counts c CROSS JOIN ref r
+  JOIN wt w ON w.off = r.ref_bucket - c.bucket
+)
+SELECT key AS event_type, CAST(ref_bucket AS BIGINT) AS ref_bucket,
+       CAST(count(*) AS BIGINT) AS n_buckets,
+       CAST(sum(cnt) AS BIGINT) AS n_events,
+       list_sum(list(term ORDER BY bucket)) AS score
+FROM terms GROUP BY key, ref_bucket
+"""
+
+
+ORACLES["event_decay"] = _decay_sql(half_life=7.0, window=64)
+QUERIES["event_decay"] = q_event_decay
+
+
+def q_event_cusum(spark, sf_dir):
+    """CUSUM drift chart over daily per-type event counts — sustained
+    level-shift detection via the prefix identity S_t = P_t −
+    least(0, min prefix P) (stats.cusum_drift), all-BIGINT window
+    arithmetic, k = per-key floor-mean. Complements event_bursts
+    (point outliers vs accumulated drift)."""
+    from ctinexus_spark.operators.stats import cusum_drift
+
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    return cusum_drift(ev, threshold=20)
+
+
+ORACLES["event_cusum"] = """
+WITH counts AS (
+  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
+         CAST(count(*) AS BIGINT) AS cnt
+  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
+),
+kref AS (SELECT key, CAST(sum(cnt) // count(*) AS BIGINT) AS k FROM counts GROUP BY key),
+prefixed AS (
+  SELECT c.key, c.bucket, c.cnt, kref.k,
+         sum(c.cnt - kref.k) OVER (
+           PARTITION BY c.key ORDER BY c.bucket
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
+  FROM counts c JOIN kref USING (key)
+),
+scored AS (
+  SELECT key, bucket, cnt, k, p,
+         min(p) OVER (
+           PARTITION BY key ORDER BY bucket
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mp
+  FROM prefixed
+)
+SELECT key AS event_type, CAST(bucket AS BIGINT) AS bucket, cnt, k,
+       CAST(p - least(CAST(0 AS BIGINT), mp) AS BIGINT) AS cusum,
+       (p - least(CAST(0 AS BIGINT), mp)) > 20 AS alarm
+FROM scored
+"""
+QUERIES["event_cusum"] = q_event_cusum
 
 
 def q_order_zorder(spark, sf_dir):

@@ -164,7 +164,7 @@ def burst_detection(
     partial-agg groupBy to per-key moments (n, S, SS), one equi-join
     back — two shuffles on keys with natural cardinality, no windows,
     no driver state. Bucket index = exact BIGINT `div` of epoch-micros
-    (the cohort_retention precedent).
+    (no double rounding at bucket edges).
     """
     p, q = k_sigma
     if p <= 0 or q <= 0:

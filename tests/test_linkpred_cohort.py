@@ -1,46 +1,10 @@
-"""Property tests: cohort_retention and the burst / decay /
-CUSUM monitors vs plain-Python references — adversarial shapes the sf
-corpora don't contain."""
+"""Property tests: the burst / decay / CUSUM monitors vs plain-Python
+references — adversarial shapes the sf corpora don't contain."""
 
 from __future__ import annotations
 
 import datetime as dt
 import random
-
-from ctinexus_spark.operators.temporal import cohort_retention
-
-
-def test_cohort_retention_matches_brute(spark):
-    rng = random.Random(5)
-    base = dt.datetime(2024, 1, 1, tzinfo=dt.timezone.utc)
-    rows = []
-    for u in range(40):
-        for _ in range(rng.randint(1, 12)):
-            rows.append((f"u{u}", base + dt.timedelta(hours=rng.randrange(24 * 70))))
-    ev = spark.createDataFrame(rows, ["user_id", "ts"])
-    got = {
-        (r.cohort_bucket, r.bucket_offset): (r.n_active, r.cohort_size)
-        for r in cohort_retention(ev).collect()
-    }
-    wk = 604_800 * 1_000_000
-    buckets: dict[str, set[int]] = {}
-    for u, ts in rows:
-        buckets.setdefault(u, set()).add(int(ts.timestamp() * 1_000_000) // wk)
-    first = {u: min(bks) for u, bks in buckets.items()}
-    sizes: dict[int, int] = {}
-    for u, f in first.items():
-        sizes[f] = sizes.get(f, 0) + 1
-    want: dict[tuple[int, int], list[int]] = {}
-    for u, bks in buckets.items():
-        for b in bks:
-            key = (first[u], b - first[u])
-            want.setdefault(key, [0, 0])[0] += 1
-    want2 = {k: (v[0], sizes[k[0]]) for k, v in want.items()}
-    assert got == want2
-    # offset 0 is always full retention
-    assert all(
-        got[(c, o)][0] == got[(c, o)][1] for (c, o) in got if o == 0
-    )
 
 
 def test_burst_detection_matches_numpy(spark):

@@ -54,8 +54,10 @@ QUADRATIC_NODES = ("CartesianProduct", "BroadcastNestedLoopJoin")
      "lsh_topk", "ivf_topk", "dedup_exact", "minhash", "simhash",
      "repetition_ratios", "lm_scores", "decontaminate", "vocab_topk",
      "line_dedup", "domain_cap", "dsir_features", "bpe_merges", "token_pmi",
-     "dup_grams", "cdc_chunks", "langid", "jaccard_pairs",
-     "kg_entity_cooc", "order_zorder", "event_props_k"],
+     "dup_grams", "cdc_chunks", "langid", "doc_len_quantiles",
+     "source_drift", "jaccard_pairs", "event_bursts",
+     "kg_entity_cooc", "event_decay", "event_cusum", "order_zorder",
+     "event_props_k"],
 )
 def test_no_quadratic_plan_in_scale_queries(spark, qname):
     """Every headline dedup/similarity query must plan as equi joins.
@@ -74,8 +76,14 @@ def test_no_quadratic_plan_in_scale_queries(spark, qname):
     # fails, restoring the per-node strictness the old blanket ban had.
     BNLJ_BUDGET = {
         "token_pmi": 2,
+        "doc_len_quantiles": 1,
+        # corpus total N attaches at the contribution terms AND the
+        # final ratio — two keyless one-row builds
+        "source_drift": 2,
         # corpus doc-total N attaches as a keyless 1-row build
         "kg_entity_cooc": 1,
+        # the newest-bucket reference attaches as a keyless 1-row build
+        "event_decay": 1,
     }
 
     if qname in dq.QUERIES:
