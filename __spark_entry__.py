@@ -51,7 +51,10 @@ CHANGED_THIS_ROUND = [
     # design, but the BACKING IMPLEMENTATIONS changed, so every
     # consumer rotates into the window for a fresh driver-grade check.
     # mint_mentions / align / analyze_graph / predict_links /
-    # materialize_kg (modular KG chain reshuffle):
+    # materialize_kg (modular KG chain reshuffle), since replaced by
+    # projections of the fused align pass (et_typed: tag_triples →
+    # extract_and_tag):
+    "et_typed",
     "ea_mentions",
     "ea_entities",
     "ea_entities_merged",
@@ -126,7 +129,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
     # whose only greens date to r01-r03, then three of the stalest r04
     # rows the verdict named.
     "r06": CHANGED_THIS_ROUND + [
-        "doc_text_norm", "ie_triples", "ie_counts", "et_typed",
+        "doc_text_norm", "ie_triples", "ie_counts",
         "token_stats", "quality", "lang_features", "gopher_rules",
         "repetition_ratios", "lm_scores", "doc_chunks", "redact_pii",
         "fingerprints", "bpe_tokens", "dedup_exact", "minhash",

@@ -58,6 +58,8 @@ def _headline_queries():
     eq, dq = entry_queries, dataset_queries
     return {
         "kg_pipeline": eq.q_kg_fused,  # fused fast path
+        # run_pipeline's composition; the leaf keeps its name from the
+        # modular chain it timed until that chain was deleted
         "kg_modular": eq.q_kg_triples,
         "ie_triples": eq.q_ie_triples,
         "lp_graph": eq.q_lp_graph,

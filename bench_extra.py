@@ -1,9 +1,9 @@
-"""Optimization-round instrumentation (guide §1): per-stage noop-sink
-timings and .explain("formatted") captures for the expensive bench
-queries (bench.py's headline list). Not part of the query contract.
+"""Optimization-round instrumentation (guide §1): noop-sink timings and
+.explain("formatted") captures for the expensive bench queries
+(bench.py's headline list). Not part of the query contract. For the KG
+chain split by layer, run `python3 perfbench/run.py --trace 1`.
 
 Usage:
-  python3 bench_extra.py stages          # per-stage timings, kg chain
   python3 bench_extra.py q <name> [...]  # noop-time named bench queries
   python3 bench_extra.py plans <name>..  # dump plans to plans/r06/
   python3 bench_extra.py ab <nameA> <nameB> [reps]  # interleaved A/B
@@ -68,51 +68,6 @@ def cmd_q(names, reps=3):
     spark.stop()
 
 
-def cmd_stages():
-    """Per-stage isolation of the modular KG chain (guide §1.4)."""
-    from ctinexus_spark import entry_queries as E
-    from ctinexus_spark.model import StubModel
-    from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
-    from ctinexus_spark.operators.et import tag_triples
-    from ctinexus_spark.operators.ie import extract_triples
-    from ctinexus_spark.operators.lp import analyze_graph
-
-    spark = _spark()
-    sd = SF_DIR
-
-    _noop_time(spark, "docs_norm", lambda: E._docs_norm(spark, sd))
-    _noop_time(spark, "ie (docs→triples)", lambda: E._ie(spark, sd))
-
-    def typed():
-        return E._typed(spark, sd)
-
-    _noop_time(spark, "typed (ie+tag)", typed)
-
-    def nodes():
-        docs = E._docs_norm(spark, sd).persist()
-        ie = extract_triples(docs, StubModel(E.CONFIG)).filter("valid")
-        t = tag_triples(ie, docs, StubModel(E.CONFIG))
-        return mint_mentions(t)
-
-    _noop_time(spark, "nodes (typed+mint)", nodes)
-
-    def aligned():
-        _t, a = E._aligned(spark, sd)
-        return a
-
-    _noop_time(spark, "aligned (nodes+embed+align)", aligned)
-
-    def graph():
-        _t, a = E._aligned(spark, sd)
-        return analyze_graph(a)
-
-    _noop_time(spark, "graph (aligned+analyze)", graph)
-    _noop_time(spark, "kg_modular full", lambda: E.q_kg_triples(spark, sd))
-    _noop_time(spark, "lp_graph full", lambda: E.q_lp_graph(spark, sd))
-    _noop_time(spark, "kg_global full", lambda: E.q_kg_global_entities(spark, sd))
-    spark.stop()
-
-
 def cmd_plans(names):
     os.makedirs(os.path.join(_REPO, "plans", "r06"), exist_ok=True)
     spark = _spark()
@@ -153,10 +108,8 @@ def cmd_ab(a, b, reps=4):
 
 
 if __name__ == "__main__":
-    cmd = sys.argv[1] if len(sys.argv) > 1 else "stages"
-    if cmd == "stages":
-        cmd_stages()
-    elif cmd == "q":
+    cmd = sys.argv[1] if len(sys.argv) > 1 else ""
+    if cmd == "q":
         cmd_q(sys.argv[2:])
     elif cmd == "plans":
         cmd_plans(sys.argv[2:])
@@ -164,4 +117,4 @@ if __name__ == "__main__":
         reps = int(sys.argv[4]) if len(sys.argv) > 4 else 4
         cmd_ab(sys.argv[2], sys.argv[3], reps)
     else:
-        raise SystemExit(f"unknown command {cmd!r}")
+        raise SystemExit(f"unknown command {cmd!r}\n{__doc__}")

@@ -14,9 +14,9 @@ Every per-document rule of the pipeline lives here exactly once:
 - LP graph analysis — per-document components, degree, main and topic
   node (graph_constructor.py:51-209).
 
-The Spark operators (the fused fast path in operators/fused.py and the
-modular ie/et/ea/lp stages) only move columns in and out of these
-functions. Nothing here imports pyspark, so the rules are unit-tested
+The Spark operators (the two Arrow passes in operators/fused.py, the
+IE-only table in operators/ie.py and link inference in operators/lp.py)
+only move columns in and out of these functions. Nothing here imports pyspark, so the rules are unit-tested
 without a JVM.
 
 Order-dependent reference semantics rest on CPython dict/set iteration
@@ -298,15 +298,14 @@ class EntityStats(NamedTuple):
     is_topic: bool
 
 
-def analyze_doc(
-    ent_ids: list[int], ent_texts: list[str], edges: list[tuple[int, int]]
-) -> list[EntityStats]:
+def analyze_doc(ent_ids: list[int], ent_texts: list[str]) -> list[EntityStats]:
     """LP graph analysis for one document.
 
-    `ent_ids`/`ent_texts` are per-node lists in traversal order; each
-    edge is a (subject, object) pair of node indices, one per linked
-    triple (undirected). Degree counts every node occurrence, so a
-    self-loop counts twice. Components are numbered in discovery order;
+    `ent_ids`/`ent_texts` are per-node lists in traversal order, two
+    nodes per triple: triple i links its own subject and object, nodes
+    2i and 2i+1 (undirected). Documents sharing a url arrive as one
+    node list, so they form one graph. Degree counts every node
+    occurrence, so a self-loop counts twice. Components are numbered in discovery order;
     a component's main node is its degree argmax (ties → lower entity
     id) and the topic is the main node of the largest component (ties →
     first discovered). Returns one row per entity, grouped by component
@@ -332,8 +331,8 @@ def analyze_doc(
             text_of[e] = ent_texts[i]
             degree[e] = 0
         degree[e] += 1
-    for a, b in edges:
-        ra, rb = find(ent_ids[a]), find(ent_ids[b])
+    for a, b in zip(ent_ids[0::2], ent_ids[1::2]):
+        ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
 

@@ -28,12 +28,17 @@ from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.model import StubModel
-from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
-from ctinexus_spark.operators.et import tag_triples
+from ctinexus_spark.operators.fused import (
+    align_graph_triples,
+    aligned_nodes,
+    entity_graph,
+    extract_and_tag,
+    kg_rows,
+    link_main_pairs,
+)
 from ctinexus_spark.operators.ie import extract_triples
-from ctinexus_spark.operators.lp import analyze_graph, predict_links
-from ctinexus_spark.operators.materialize import materialize_kg
 from ctinexus_spark.operators.normalize import normalize_documents
+from ctinexus_spark.partitioning import barrier
 
 # Term → entity class over the driver corpus vocabulary.
 LEXICON = {
@@ -76,20 +81,27 @@ def _ie(spark: SparkSession, sf_dir: str) -> DataFrame:
     return extract_triples(docs, StubModel(CONFIG)).filter("valid")
 
 
-def _typed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # docs feeds both IE and the ET join — persist the branch point
-    docs = _docs_norm(spark, sf_dir).persist()
-    ie = extract_triples(docs, StubModel(CONFIG)).filter("valid")
-    return tag_triples(ie, docs, StubModel(CONFIG))
+def _fused(spark: SparkSession, sf_dir: str, model=None, cfg: PipelineConfig = CONFIG,
+           docs: DataFrame | None = None) -> DataFrame:
+    """The fused rows (operators/fused.FUSED_SCHEMA) over the normalized
+    corpus, or over `docs` when given: every ET/EA/LP/KG query below is
+    a select/filter of them. Lazy and uncached; a query with more than
+    one consumer of the rows barriers them itself."""
+    model = model or StubModel(cfg)
+    docs = _docs_norm(spark, sf_dir) if docs is None else docs
+    return align_graph_triples(extract_and_tag(docs, model), model, cfg)
 
 
-def _aligned(spark: SparkSession, sf_dir: str):
-    # typed feeds both mention minting and the final materialize —
-    # persist at the branch point so extraction doesn't recompute.
-    typed = _typed(spark, sf_dir).persist()
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, StubModel(CONFIG))
-    return typed, align_entities(nodes, emb, CONFIG)
+def _links(spark: SparkSession, sf_dir: str, model) -> tuple[DataFrame, DataFrame]:
+    """Barriered fused rows and their main → topic link rows: the pair
+    urls' subquery and the pair join both read the rows, so an
+    unbarriered lineage would compute twice."""
+    fused = barrier(_fused(spark, sf_dir, model))
+    return fused, link_main_pairs(fused, _docs_norm(spark, sf_dir), model)
+
+
+def _entities(fused: DataFrame) -> DataFrame:
+    return entity_graph(fused).select(_doc_id(), "entity_id", "entity_text")
 
 
 def _doc_id():
@@ -112,46 +124,42 @@ def q_ie_counts(spark, sf_dir):
 
 
 def q_et_typed(spark, sf_dir):
-    return _typed(spark, sf_dir).filter("valid").select(
-        _doc_id(), "t_idx", "subject_text", "subject_class",
-        "relation", "object_text", "object_class",
+    return _fused(spark, sf_dir).filter(F.col("row_type") == "triple").select(
+        _doc_id(), "t_idx",
+        F.col("s_text").alias("subject_text"), F.col("s_class").alias("subject_class"),
+        "relation",
+        F.col("o_text").alias("object_text"), F.col("o_class").alias("object_class"),
     )
 
 
 def q_ea_mentions(spark, sf_dir):
-    typed = _typed(spark, sf_dir)
-    return mint_mentions(typed).select(
+    return aligned_nodes(_fused(spark, sf_dir)).select(
         _doc_id(), "mention_id", "mention_text", "mention_class"
     ).distinct()
 
 
 def q_ea_entities(spark, sf_dir):
-    _typed_df, aligned = _aligned(spark, sf_dir)
-    return aligned.select(_doc_id(), "entity_id", "entity_text").distinct()
+    return _entities(_fused(spark, sf_dir))
 
 
 def q_lp_graph(spark, sf_dir):
-    _typed_df, aligned = _aligned(spark, sf_dir)
-    return analyze_graph(aligned, pre_grouped=True).select(
+    return entity_graph(_fused(spark, sf_dir)).select(
         _doc_id(), "entity_id", "entity_text", "component_id",
         "component_size", "degree", "is_main", "is_topic",
     )
 
 
 def q_kg_triples(spark, sf_dir):
-    typed, aligned = _aligned(spark, sf_dir)
-    aligned = aligned.persist()  # feeds graph AND materialize
-    graph = analyze_graph(aligned, pre_grouped=True)
-    docs = _docs_norm(spark, sf_dir)
-    links = predict_links(graph, docs, StubModel(CONFIG), CONFIG)
-    kg = materialize_kg(aligned, typed, links)
-    return kg.select(_doc_id(), "subj", "pred", "obj", "source")
+    """The KG as run_pipeline assembles it: extracted triples plus
+    every ok link, from one barriered pass."""
+    fused, links = _links(spark, sf_dir, StubModel(CONFIG))
+    return kg_rows(fused, links).select(_doc_id(), "subj", "pred", "obj", "source")
 
 
 def q_kg_fused(spark, sf_dir):
-    """Same result as q_kg_triples through the fused fast path
-    (operators/fused.py; equivalence additionally pinned by
-    tests/test_fused_parity.py) — shares the kg_triples oracle."""
+    """Same result as q_kg_triples through fused_kg, which skips the
+    link branch when no main pair exists — shares the kg_triples
+    oracle."""
     from ctinexus_spark.operators.fused import fused_kg
 
     kg = fused_kg(_docs_norm(spark, sf_dir), StubModel(CONFIG), CONFIG)
@@ -273,14 +281,7 @@ def q_lp_split_graph(spark, sf_dir):
     under the SQL oracle."""
     from ctinexus_spark.model import SplitChainModel
 
-    docs = _docs_norm(spark, sf_dir).persist()
-    model = SplitChainModel(CONFIG)
-    ie = extract_triples(docs, model).filter("valid")
-    typed = tag_triples(ie, docs, StubModel(CONFIG)).persist()
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, StubModel(CONFIG))
-    aligned = align_entities(nodes, emb, CONFIG)
-    return analyze_graph(aligned, pre_grouped=True).select(
+    return entity_graph(_fused(spark, sf_dir, SplitChainModel(CONFIG))).select(
         _doc_id(), "entity_id", "entity_text", "component_id",
         "component_size", "degree", "is_main", "is_topic",
     )
@@ -314,7 +315,7 @@ ORACLES["kg_fused"] = ORACLES["kg_triples"]
 
 # Multi-component LP oracle: pairs never cross the doc's midpoint;
 # the two chains share a component iff some term participates in both
-# halves. Derivation mirrors analyze_graph's pinned orders: node
+# halves. Derivation mirrors doc_kernel.analyze_doc's pinned orders: node
 # stream key skey = t_idx*2 + side, discovery order = min skey.
 # The CTE prefix (through topcomp) is shared with the lp_links_flaky
 # oracle below.
@@ -428,14 +429,7 @@ EA_ALIAS_MAP = {"join": "merge"}
 
 
 def q_ea_entities_merged(spark, sf_dir):
-    docs = _docs_norm(spark, sf_dir).persist()
-    model = StubModel(CONFIG, alias_map=EA_ALIAS_MAP)
-    ie = extract_triples(docs, model).filter("valid")
-    typed = tag_triples(ie, docs, model)
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, emb, CONFIG)
-    return aligned.select(_doc_id(), "entity_id", "entity_text").distinct()
+    return _entities(_fused(spark, sf_dir, StubModel(CONFIG, alias_map=EA_ALIAS_MAP)))
 
 
 # Oracle: the only ≥threshold pair is {join, merge}; clusters are that
@@ -550,14 +544,8 @@ def chain_embed_overrides() -> dict[str, list[float]]:
 
 
 def q_ea_entities_cc(spark, sf_dir):
-    docs = _docs_norm(spark, sf_dir).persist()
     model = StubModel(CONFIG_CC, embed_overrides=chain_embed_overrides())
-    ie = extract_triples(docs, model).filter("valid")
-    typed = tag_triples(ie, docs, model)
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, emb, CONFIG_CC)
-    return aligned.select(_doc_id(), "entity_id", "entity_text").distinct()
+    return _entities(_fused(spark, sf_dir, model, CONFIG_CC))
 
 
 # Oracle: whenever 'merge' is present its component is {merge} ∪
@@ -617,14 +605,9 @@ IOC_ALIAS_MAP = {IOC_B: IOC_A}
 def q_ea_ioc_unmerge(spark, sf_dir):
     docs = _docs_norm(spark, sf_dir).withColumn(
         "text_norm", F.concat(F.col("text_norm"), F.lit(f" {IOC_A} {IOC_B}"))
-    ).persist()
+    )
     model = StubModel(CONFIG_IOC, alias_map=IOC_ALIAS_MAP)
-    ie = extract_triples(docs, model).filter("valid")
-    typed = tag_triples(ie, docs, model)
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, emb, CONFIG_IOC)
-    return aligned.select(_doc_id(), "entity_id", "entity_text").distinct()
+    return _entities(_fused(spark, sf_dir, model, CONFIG_IOC, docs=docs))
 
 
 # Oracle: IOC_A appears before IOC_B, occurs ≥ as often, and has the
@@ -656,9 +639,9 @@ def q_kg_global_entities(spark, sf_dir):
     exact cosine → distributed CC (operators/resolve.py)."""
     from ctinexus_spark.operators.resolve import global_entity_resolution
 
-    _typed_df, aligned = _aligned(spark, sf_dir)
+    entities = entity_graph(_fused(spark, sf_dir))
     model = StubModel(CONFIG, alias_map=EA_ALIAS_MAP)
-    return global_entity_resolution(aligned, model, CONFIG.similarity_threshold)
+    return global_entity_resolution(entities, model, CONFIG.similarity_threshold)
 
 
 ORACLES["kg_global_entities"] = _BASE + """
@@ -679,15 +662,7 @@ def q_lp_links_flaky(spark, sf_dir):
     reference's lp_verification path (llm_processor.py:940-965)."""
     from ctinexus_spark.model import FlakyLinkModel
 
-    docs = _docs_norm(spark, sf_dir).persist()
-    model = FlakyLinkModel(CONFIG)
-    ie = extract_triples(docs, model).filter("valid")
-    typed = tag_triples(ie, docs, model).persist()
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, emb, CONFIG)
-    graph = analyze_graph(aligned, pre_grouped=True)
-    links = predict_links(graph, docs, model, CONFIG)
+    _fused_rows, links = _links(spark, sf_dir, FlakyLinkModel(CONFIG))
     return links.select(
         _doc_id(), "subject_entity_id", "subject_text", "relation",
         "object_entity_id", "object_text", "status",
@@ -755,8 +730,6 @@ def q_kg_entity_cooc(spark, sf_dir):
     IEEE division of exact integer-valued doubles (token_pmi pattern);
     the corpus total N attaches as a keyless 1-row broadcast aggregate
     — no driver collect."""
-    from ctinexus_spark.partitioning import barrier
-
     kg = q_kg_triples(spark, sf_dir)
     ents = barrier(
         kg.select("doc_id", F.col("subj").alias("entity"))

@@ -1,7 +1,7 @@
 """Distributed connected components (GraphFrames-free).
 
 The per-document graphs of the KG pipeline are tiny and handled
-in-batch (operators/lp.py, operators/fused.py). This operator covers
+in-batch (doc_kernel.analyze_doc, inside operators/fused.py). This operator covers
 the *cross-document* graph cases the north_star's GraphFrames
 connectedComponents would serve — e.g. global entity resolution over
 similarity edges spanning the whole corpus — without the GraphFrames

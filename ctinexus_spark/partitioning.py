@@ -31,21 +31,6 @@ def _plan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def keyed_partitions(df: DataFrame) -> int:
-    """Partition count for an explicit keyed repartition (~2 tasks per
-    core, the ensure_parallelism target). A BARE repartition(key) is an
-    AQE-coalescible shuffle: on small inputs it collapses to ~1
-    partition and serializes every narrow operation downstream of it —
-    including Arrow passes (measured round 6: the align stage doubled).
-    Passing the count pins it; the value is derived from the session,
-    never hard-coded."""
-    spark = df.sparkSession
-    try:
-        return spark.sparkContext.defaultParallelism * 2
-    except Exception:  # Spark Connect: no sparkContext — conf-driven
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-
-
 def ensure_parallelism(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
     spark = df.sparkSession
     try:
@@ -59,9 +44,7 @@ def ensure_parallelism(df: DataFrame, min_parallelism: int | None = None) -> Dat
     return df
 
 
-def grouped_map_stitched(
-    df: DataFrame, key: str, process, schema, assume_grouped: bool = False
-) -> DataFrame:
+def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
     """The cheap replacement for groupBy(key).applyInPandas(...) when
     groups are numerous and small (per-document work): one Arrow
     exchange per BATCH of many groups instead of per group — the
@@ -77,19 +60,7 @@ def grouped_map_stitched(
     Arrow caps batches at arrow.maxRecordsPerBatch, so one group can
     straddle a batch boundary; rows arrive sorted by key, so each
     batch's trailing group is held back and stitched onto the next
-    batch — every group is processed whole regardless of batch size.
-
-    assume_grouped=True (optimization round 6, guide §2.4) skips the
-    repartition AND the sort: the CALLER asserts that every key-group
-    already lives whole and contiguous inside one partition — true for
-    the direct output of another grouped_map_stitched on the same key
-    (whole groups are emitted sequentially per task and narrow ops
-    preserve that), which is exactly the align_entities → analyze_graph
-    hand-off. The stitch logic only needs group contiguity, not a
-    global sort, so correctness is unchanged; the exchange of the full
-    row set (at web scale: every aligned node row) disappears. Do NOT
-    pass True for inputs whose grouping you cannot prove: a key split
-    across partitions would be processed once per fragment."""
+    batch — every group is processed whole regardless of batch size."""
     import pandas as pd
 
     def run(batches):
@@ -109,15 +80,11 @@ def grouped_map_stitched(
         if pending is not None and len(pending):
             yield process(pending)
 
-    if assume_grouped:
-        return df.mapInPandas(run, schema=schema)
     # DELIBERATELY a bare (AQE-coalescible) repartition: for the pure
     # Arrow passes behind this helper, fewer+larger post-shuffle
     # partitions measured FASTER (fused kg ~3.4s vs ~4.0s with a pinned
     # 2x-cores count — larger batches amortize per-task pandas/model
     # overhead, and there are no JVM sorts downstream to parallelize).
-    # Contrast mint_mentions, which pins its count because two window
-    # SORTS ride its exchange (see keyed_partitions docstring).
     return (
         df.repartition(key)
         .sortWithinPartitions(key)
@@ -130,9 +97,11 @@ def barrier(df: DataFrame) -> DataFrame:
     (a lazy persist would race inside a single multi-consumer job and
     compute the upstream pass twice).
 
-    Local mode: localCheckpoint — blocks live on executors and are
-    GC-reclaimed once unreferenced (no cache-manager leak). TRADEOFF:
-    localCheckpoint truncates lineage, so losing an executor after
+    Local mode: localCheckpoint — blocks live on executors, outside the
+    cache manager (no later plan matches them), but they stay pinned
+    for the session's lifetime: dropping the DataFrame does not free
+    them (see release_checkpoint_blocks). TRADEOFF: localCheckpoint
+    truncates lineage, so losing an executor after
     materialization fails the job instead of recomputing — acceptable
     in a single-JVM local run, not on a 1000-executor cluster.
 

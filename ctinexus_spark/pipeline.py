@@ -1,9 +1,10 @@
-"""End-to-end pipeline orchestration: IE → ET → EA → LP → materialize.
+"""End-to-end pipeline orchestration: IE → ET → EA → LP.
 
 Replaces the reference's run_pipeline sequencing
-(utils/gradio_utils.py:89-150) with a DataFrame DAG. Each stage is an
-independent function over tables, so callers can checkpoint/resume any
-prefix (see checkpoint.py).
+(utils/gradio_utils.py:89-150) with a DataFrame DAG. run_pipeline runs
+the two Arrow passes of operators/fused.py and exposes every stage
+table as a select/filter of their rows; run_pipeline_checkpointed
+commits each model-call stage so a rerun resumes (see checkpoint.py).
 """
 
 from __future__ import annotations
@@ -11,13 +12,19 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
-from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
-from ctinexus_spark.operators.et import tag_triples
+from ctinexus_spark.operators.fused import (
+    align_graph_triples,
+    aligned_nodes,
+    barriered_rows,
+    entity_graph,
+    extract_and_tag,
+    kg_rows,
+    link_main_pairs,
+)
 from ctinexus_spark.operators.ie import extract_triples
-from ctinexus_spark.operators.lp import analyze_graph, predict_links
-from ctinexus_spark.operators.materialize import materialize_kg
 from ctinexus_spark.operators.normalize import normalize_documents
 
 
@@ -37,17 +44,6 @@ def run_pipeline_checkpointed(
     Stage boundaries chosen where re-computation is expensive
     (model-call stages): documents_clean → triples_typed → kg.
     """
-    from pyspark.sql import functions as F
-
-    from ctinexus_spark.operators.fused import (
-        align_graph_triples,
-        extract_and_tag,
-        extracted_triples,
-        link_main_pairs,
-        predicted_triples,
-    )
-    from ctinexus_spark.operators.normalize import normalize_documents
-
     cfg = config or PipelineConfig()
 
     docs = store.run_stage(
@@ -72,7 +68,7 @@ def run_pipeline_checkpointed(
         spark, "kg_links", pairs_input,
         lambda fr: link_main_pairs(fr, docs, model), key="url",
     )
-    return extracted_triples(fused).unionByName(predicted_triples(links))
+    return kg_rows(fused, links)
 
 
 @dataclass
@@ -93,34 +89,27 @@ def run_pipeline(
     config: PipelineConfig | None = None,
     lang_filter: str | None = "en",
 ) -> PipelineResult:
+    """Every stage table over one align_graph_triples pass. The fused
+    rows are barriered here (an eager job); the other tables stay lazy.
+    documents_clean and triples_typed are cached, because the fused
+    pass, the link fetch and the caller all read them: unpersist them
+    when done. triples_ie is the IE-only table and runs its own extract
+    pass when read."""
     cfg = config or PipelineConfig()
-
-    # Persist at DAG branch points: docs feeds IE, ET and LP; typed
-    # feeds minting and materialize; aligned feeds graph and
-    # materialize. Without these every downstream branch would re-run
-    # the whole extraction lineage. (On the checkpointed production
-    # path each stage is a parquet/Iceberg write instead.)
     docs = normalize_documents(documents, lang_filter=lang_filter).persist()
-
-    ie_all = extract_triples(docs, model)
-    triples_ie = ie_all.filter("valid")
-
-    typed_all = tag_triples(triples_ie, docs, model).persist()
-    nodes = mint_mentions(typed_all)
-    embeddings = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, embeddings, cfg).persist()
-
-    graph = analyze_graph(aligned, pre_grouped=True)
-    links = predict_links(graph, docs, model, cfg)
-    kg = materialize_kg(aligned, typed_all, links)
-
+    typed = extract_and_tag(docs, model).persist()
+    fused, n_pairs = barriered_rows(typed, model, cfg)
+    nodes = aligned_nodes(fused)
+    links = link_main_pairs(fused, docs, model)
     return PipelineResult(
         documents_clean=docs,
-        triples_ie=triples_ie,
-        triples_typed=typed_all,
-        mentions=nodes,
-        aligned_nodes=aligned,
-        graph=graph,
+        triples_ie=extract_triples(docs, model).filter("valid"),
+        triples_typed=typed,
+        mentions=nodes.select(
+            "url", "t_idx", "side", "mention_id", "mention_text", "mention_class"
+        ),
+        aligned_nodes=nodes,
+        graph=entity_graph(fused),
         predicted_links=links,
-        kg=kg,
+        kg=kg_rows(fused, links if n_pairs else None),
     )

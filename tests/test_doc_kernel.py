@@ -1,6 +1,6 @@
 """Per-document kernel (ctinexus_spark/doc_kernel.py) semantics on plain
-lists — no Spark needed except for the last check, which pins the
-modular EA operator's Spark plumbing to the same kernel call."""
+lists — no Spark needed except for the last checks, which pin the fused
+align pass's Spark plumbing to the same kernel calls."""
 
 import json
 import os
@@ -25,7 +25,7 @@ E1, E2, E3 = np.eye(3)
 
 
 def mint(texts):
-    """First-occurrence dense mention ids, as mint_mentions assigns them."""
+    """First-occurrence dense mention ids, as the fused align pass mints them."""
     ids: dict[str, int] = {}
     return [ids.setdefault(t, len(ids)) for t in texts]
 
@@ -234,30 +234,63 @@ def by_id(ents):
 
 def test_topic_is_largest_component_first_discovered_on_ties():
     # two size-2 components; the one discovered first holds the HIGHER ids
-    g = by_id(analyze_doc([3, 4, 0, 1], ["d", "e", "a", "b"], [(0, 1), (2, 3)]))
+    g = by_id(analyze_doc([3, 4, 0, 1], ["d", "e", "a", "b"]))
     assert g[3].component_id == 0 and g[0].component_id == 1
     assert g[3].is_main and g[0].is_main  # degree ties → lower entity id
     assert g[3].is_topic and not g[0].is_topic
     # a strictly larger later component wins
-    g = by_id(analyze_doc([3, 4, 0, 1, 0, 2], list("deabac"), [(0, 1), (2, 3), (4, 5)]))
+    g = by_id(analyze_doc([3, 4, 0, 1, 0, 2], list("deabac")))
     assert g[0].is_topic and g[0].degree == 2 and g[0].component_size == 3
     assert [e for e in g.values() if e.is_topic] == [g[0]]
 
 
 def test_self_loop_counts_degree_twice():
-    g = by_id(analyze_doc([0, 0, 1, 2], ["s", "s", "o", "t"], [(0, 1), (2, 3)]))
+    g = by_id(analyze_doc([0, 0, 1, 2], ["s", "s", "o", "t"]))
     assert g[0].degree == 2
     assert g[0].component_size == 1
     assert g[1].component_id == g[2].component_id != g[0].component_id
 
 
 def test_only_listed_edges_link():
-    # nodes 2 and 3 share no edge: each is its own component, and every
-    # occurrence still counts toward degree
-    g = by_id(analyze_doc([0, 1, 0, 2], list("abac"), [(0, 1)]))
+    # triple i links nodes 2i and 2i+1 only: nodes 1 and 2 sit next to
+    # each other but belong to different triples, so b and c stay
+    # apart; every occurrence counts toward degree
+    g = by_id(analyze_doc([0, 1, 2, 3, 0, 1], list("abcdab")))
     assert g[0].component_id == g[1].component_id == 0
-    assert g[2].component_id == 1 and g[2].is_main
-    assert g[0].degree == 2 and g[0].is_topic
+    assert g[2].component_id == g[3].component_id == 1
+    assert g[2].is_main and not g[2].is_topic
+    assert g[0].degree == 2 and g[2].degree == 1 and g[0].is_topic
+
+
+def test_shared_url_triples_link_positionally():
+    """Two documents under one url arrive as one node list in which
+    t_idx values repeat. Every triple still links its own subject and
+    object, so the pair corpus forms one graph."""
+    from conftest import CTI_DOC_1, CTI_DOC_2
+
+    from ctinexus_spark.config import PipelineConfig
+    from ctinexus_spark.model import StubModel
+
+    model = StubModel(PipelineConfig())
+    texts = [CTI_DOC_1, CTI_DOC_2]
+    extracted = [
+        [{"subject": s, "relation": r, "object": o} for s, r, o, ok in parse_extraction(resp) if ok]
+        for resp in model.extract(texts)
+    ]
+    typed = sorted(
+        (i, *row[:5])
+        for resp in model.tag(texts, extracted)
+        for i, row in enumerate(parse_tagging(resp)) if row[5]
+    )
+    assert len({t[0] for t in typed}) < len(typed)  # t_idx repeats
+    nodes = [x for t in typed for x in (t[1], t[4])]
+    classes = [x for t in typed for x in (t[2], t[5])]
+    emb_of = dict(zip(nodes, model.embed(nodes)))
+    ids, ent_texts, _ = align(nodes, classes, emb_of)
+    g = by_id(analyze_doc(ids, ent_texts))
+    for a, b in zip(ids[0::2], ids[1::2]):
+        assert g[a].component_id == g[b].component_id
+    assert sum(e.degree for e in g.values()) == len(nodes)
 
 
 # --- tooling ----------------------------------------------------------------
@@ -275,49 +308,45 @@ def test_kernel_import_does_not_load_pyspark():
 # --- Spark plumbing == kernel -------------------------------------------------
 
 
-def test_align_entities_matches_kernel_per_url(spark, cti_documents):
-    """align_entities' Spark output equals the collected input grouped
-    by url and fed through the same align_doc call."""
+def test_fused_align_matches_kernel_per_url(spark, cti_documents):
+    """The fused pass's per-node rows equal the collected typed triples
+    grouped by url and fed through the same align_doc call."""
     from ctinexus_spark.config import PipelineConfig
     from ctinexus_spark.model import StubModel
-    from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
-    from ctinexus_spark.operators.et import tag_triples
-    from ctinexus_spark.operators.ie import extract_triples
+    from ctinexus_spark.operators.fused import align_graph_triples, aligned_nodes, extract_and_tag
     from ctinexus_spark.operators.normalize import normalize_documents
 
     cfg = PipelineConfig()
     model = StubModel(cfg, alias_map={"Cozy Bear": "APT29"})
     docs = normalize_documents(cti_documents, lang_filter="en")
-    typed = tag_triples(extract_triples(docs, model).filter("valid"), docs, model)
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
+    typed = extract_and_tag(docs, model).filter("valid").toPandas()
 
     got = {
-        (r.url, r.pos, r.entity_id, r.entity_text, tuple(r.mention_merged))
-        for r in align_entities(nodes, emb, cfg).collect()
+        (r.url, r.t_idx, r.side, r.entity_id, r.entity_text, tuple(r.mention_merged))
+        for r in aligned_nodes(align_graph_triples(spark.createDataFrame(typed), model, cfg)).collect()
     }
 
     expected = set()
-    for url, g in nodes.join(emb, "mention_text", "left").toPandas().groupby("url"):
-        g = g.sort_values("pos")
-        texts = g["mention_text"].tolist()
+    for url, g in typed.groupby("url"):
+        g = g.sort_values("t_idx")
+        texts = [x for pair in zip(g["subject_text"], g["object_text"]) for x in pair]
+        classes = [x for pair in zip(g["subject_class"], g["object_class"]) for x in pair]
         ids, ent_texts, merged = align_doc(
-            g["mention_id"].tolist(), texts, g["mention_class"].tolist(),
-            dict(zip(texts, g["embedding"])), cfg.similarity_threshold, cfg.ea_cluster_mode,
+            mint(texts), texts, classes, dict(zip(texts, model.embed(texts))),
+            cfg.similarity_threshold, cfg.ea_cluster_mode,
         )
+        keys = [(t, side) for t in g["t_idx"].tolist() for side in ("subject", "object")]
         expected |= {
-            (url, p, i, t, tuple(m))
-            for p, i, t, m in zip(g["pos"].tolist(), ids, ent_texts, merged)
+            (url, t, side, i, txt, tuple(m))
+            for (t, side), i, txt, m in zip(keys, ids, ent_texts, merged)
         }
     assert got and got == expected
 
 
-def test_duplicate_url_linking_per_path(spark):
-    """Two documents under one url repeat each other's t_idx values. The
-    modular path links a repeated t_idx's last subject with its last
-    object; the fused path links none of the triples that repeat a
-    t_idx. Both paths' predicted links are pinned here until
-    duplicate-url semantics are settled."""
+def test_shared_url_documents_form_one_graph(spark):
+    """Two documents under one url: run_pipeline and fused_kg build the
+    same KG, it holds every extracted triple of both documents, and each
+    of those triples links its subject and object in the graph table."""
     from conftest import CTI_DOC_1, CTI_DOC_2
 
     from ctinexus_spark.config import PipelineConfig
@@ -327,21 +356,25 @@ def test_duplicate_url_linking_per_path(spark):
     from ctinexus_spark.pipeline import run_pipeline
 
     url = "https://threats.example.com/akira"
-    df = spark.createDataFrame(
-        [(url, CTI_DOC_1, "en"), (url, CTI_DOC_2, "en")],
-        "url string, text string, lang string",
-    )
     cfg = PipelineConfig()
 
-    def predicted(kg):
-        return {(r.subj, r.obj) for r in kg.filter("source = 'predicted'").collect()}
+    def frame(*texts):
+        return spark.createDataFrame([(url, t, "en") for t in texts],
+                                     "url string, text string, lang string")
 
-    modular = run_pipeline(df, StubModel(cfg), cfg).kg
-    assert predicted(modular) == {("192.168.1.100", "malicious.com")}
+    def kg_set(kg):
+        return {tuple(r) for r in kg.select("subj", "pred", "obj", "source").collect()}
 
-    fused = fused_kg(normalize_documents(df, lang_filter="en"), StubModel(cfg), cfg)
-    topic = "Victims in the financial sector"
-    assert predicted(fused) == {
-        (m, topic) for m in ("192.168.1.100", "CVE-2023-1234", "attacker@malicious.com",
-                             "evil-domain.example.com", "malicious.com")
-    }
+    def extracted(*texts):
+        kg = fused_kg(normalize_documents(frame(*texts), lang_filter="en"), StubModel(cfg), cfg)
+        return {t for t in kg_set(kg) if t[3] == "extracted"}
+
+    result = run_pipeline(frame(CTI_DOC_1, CTI_DOC_2), StubModel(cfg), cfg)
+    kg = kg_set(result.kg)
+    docs = normalize_documents(frame(CTI_DOC_1, CTI_DOC_2), lang_filter="en")
+    assert kg == kg_set(fused_kg(docs, StubModel(cfg), cfg))
+    triples = {t for t in kg if t[3] == "extracted"}
+    assert triples == extracted(CTI_DOC_1) | extracted(CTI_DOC_2)
+    comp = {r.entity_text: r.component_id for r in result.graph.collect()}
+    for s, _, o, _ in triples:
+        assert comp[s] == comp[o]

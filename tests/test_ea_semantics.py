@@ -1,13 +1,11 @@
 """EA merge/unmerge semantics tests — the scenarios of FIXTURES.md §6
 (reference behavior: graph_constructor.py:246-441 Merger,
-cti_processor.py:53-115 PostProcessor)."""
-
-import pytest
-from pyspark.sql import functions as F
+cti_processor.py:53-115 PostProcessor), read from the per-node
+projection of the fused align pass."""
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.model import StubModel
-from ctinexus_spark.operators.ea import align_entities, embed_mentions, mint_mentions
+from ctinexus_spark.operators.fused import align_graph_triples, aligned_nodes
 
 
 def typed_df(spark, rows):
@@ -19,12 +17,10 @@ def typed_df(spark, rows):
     )
 
 
-def run_ea(spark, rows, alias_map=None, mode="star"):
+def run_ea(spark, rows, alias_map=None, mode="star", embed_overrides=None):
     cfg = PipelineConfig(ea_cluster_mode=mode)
-    model = StubModel(cfg, alias_map=alias_map or {})
-    nodes = mint_mentions(typed_df(spark, rows))
-    emb = embed_mentions(nodes, model)
-    return align_entities(nodes, emb, cfg).collect()
+    model = StubModel(cfg, alias_map=alias_map or {}, embed_overrides=embed_overrides)
+    return aligned_nodes(align_graph_triples(typed_df(spark, rows), model, cfg)).collect()
 
 
 def by_mention(rows):
@@ -41,7 +37,7 @@ class TestMintMentions:
             (URL, 1, "B", "Tool", "targets", "C", "Organization"),
             (URL, 2, "A", "Malware", "drops", "D", "Indicator: File"),
         ]
-        nodes = mint_mentions(typed_df(spark, rows)).collect()
+        nodes = run_ea(spark, rows)
         ids = {r.mention_text: r.mention_id for r in nodes}
         # traversal order: A(t0 subj), B(t0 obj), C(t1 obj), D(t2 obj)
         assert ids == {"A": 0, "B": 1, "C": 2, "D": 3}
@@ -50,7 +46,7 @@ class TestMintMentions:
         rows = [
             (URL, 0, "X", "Malware", "r", "X", "Tool"),
         ]
-        nodes = mint_mentions(typed_df(spark, rows)).collect()
+        nodes = run_ea(spark, rows)
         assert {r.mention_id for r in nodes} == {0}
 
 
@@ -126,11 +122,7 @@ class TestMerge:
         ]
 
         def run(mode):
-            cfg = PipelineConfig(ea_cluster_mode=mode)
-            model = StubModel(cfg, embed_overrides=over)
-            nodes = mint_mentions(typed_df(spark, rows))
-            emb = embed_mentions(nodes, model)
-            return by_mention(align_entities(nodes, emb, cfg).collect())
+            return by_mention(run_ea(spark, rows, mode=mode, embed_overrides=over))
 
         cc = run("cc")
         assert cc["join"].entity_id == cc["merge"].entity_id == cc["sort"].entity_id

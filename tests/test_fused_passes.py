@@ -1,6 +1,7 @@
 """fused_kg reads the corpus once: the link branch is skipped when the
 barrier observes no main pair, and otherwise re-reads and re-normalizes
-only the documents whose url has a pair."""
+only the documents whose url has a pair. The KG entry queries leave no
+cached corpus behind."""
 
 import pandas as pd
 import pytest
@@ -97,3 +98,17 @@ def test_no_pair_run_job_count(spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+
+
+def test_kg_entry_queries_leave_no_cached_corpus(spark, tmp_path):
+    """The KG entry queries cache nothing: a leftover cached corpus would
+    serve a later query's normalized documents by plan match and grow
+    with every call."""
+    texts = ["spark join filter table then query sort merge window",
+             "hash scan row batch and key value stream vector"]
+    spark.createDataFrame(
+        [(i, t, "en") for i, t in enumerate(texts)], "doc_id bigint, text string, lang string"
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    for q in (eq.q_kg_triples, eq.q_lp_links_flaky):
+        assert q(spark, str(tmp_path)).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1,40 +1,48 @@
 """LP graph-analysis semantics (reference graph_constructor.py:51-209):
-components, degree, main/topic selection, hallucination guard."""
+components, degree, main/topic selection, hallucination guard — read
+from the entity and main_pair rows of the fused align pass."""
 
 import json
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.model import StubModel
-from ctinexus_spark.operators.lp import analyze_graph, predict_links
+from ctinexus_spark.operators.fused import align_graph_triples, entity_graph, link_main_pairs
 
 URL = "https://d/1"
 
-ALIGNED_SCHEMA = (
-    "url string, t_idx int, side string, pos int, mention_id int, "
-    "mention_text string, mention_class string, entity_id int, "
-    "entity_text string, mention_merged array<string>"
+TYPED_SCHEMA = (
+    "url string, t_idx int, subject_text string, subject_class string, "
+    "relation string, object_text string, object_class string, valid boolean"
 )
 
 
-def aligned_df(spark, triples):
-    """triples: list of (t_idx, subj_eid, subj_text, obj_eid, obj_text)"""
-    rows = []
-    for (t_idx, se, st, oe, ot) in triples:
-        rows.append((URL, t_idx, "subject", t_idx * 2, se, st, "c", se, st, []))
-        rows.append((URL, t_idx, "object", t_idx * 2 + 1, oe, ot, "c", oe, ot, []))
-    return spark.createDataFrame(rows, ALIGNED_SCHEMA)
+def fused_rows(spark, triples):
+    """triples: list of (t_idx, subj_text, obj_text). One class and no
+    alias, so entity ids are the first-occurrence mention ids."""
+    rows = [(URL, t_idx, st, "c", "r", ot, "c", True) for (t_idx, st, ot) in triples]
+    cfg = PipelineConfig()
+    return align_graph_triples(spark.createDataFrame(rows, TYPED_SCHEMA), StubModel(cfg), cfg)
+
+
+def graph(spark, triples):
+    return {r.entity_id: r for r in entity_graph(fused_rows(spark, triples)).collect()}
+
+
+def links(spark, triples, model):
+    docs = spark.createDataFrame([(URL, "doc text")], "url string, text_norm string")
+    return link_main_pairs(fused_rows(spark, triples), docs, model).collect()
 
 
 # two components: {0,1,2} (entity 0 has degree 2) and {3,4}
 TRIPLES = [
-    (0, 0, "Hub", 1, "Leaf1"),
-    (1, 0, "Hub", 2, "Leaf2"),
-    (2, 3, "IslandA", 4, "IslandB"),
+    (0, "Hub", "Leaf1"),
+    (1, "Hub", "Leaf2"),
+    (2, "IslandA", "IslandB"),
 ]
 
 
 def test_components_and_degree(spark):
-    g = {(r.entity_id): r for r in analyze_graph(aligned_df(spark, TRIPLES)).collect()}
+    g = graph(spark, TRIPLES)
     assert g[0].component_id == g[1].component_id == g[2].component_id
     assert g[3].component_id == g[4].component_id
     assert g[0].component_id != g[3].component_id
@@ -44,7 +52,7 @@ def test_components_and_degree(spark):
 
 
 def test_main_and_topic_selection(spark):
-    g = {r.entity_id: r for r in analyze_graph(aligned_df(spark, TRIPLES)).collect()}
+    g = graph(spark, TRIPLES)
     assert g[0].is_main and g[0].is_topic  # biggest component, max degree
     # island main: degree tie (1,1) → lowest entity_id
     assert g[3].is_main and not g[3].is_topic
@@ -53,27 +61,25 @@ def test_main_and_topic_selection(spark):
 
 def test_component_size_tie_first_discovered(spark):
     triples = [
-        (0, 0, "A", 1, "B"),   # component discovered first
-        (1, 2, "C", 3, "D"),   # same size
+        (0, "A", "B"),   # component discovered first
+        (1, "C", "D"),   # same size
     ]
-    g = {r.entity_id: r for r in analyze_graph(aligned_df(spark, triples)).collect()}
+    g = graph(spark, triples)
     assert g[0].is_topic or g[1].is_topic
     assert not (g[2].is_topic or g[3].is_topic)
 
 
 def test_self_loop_counts_degree_twice(spark):
-    triples = [(0, 0, "Selfie", 0, "Selfie"), (1, 1, "Other", 2, "Third")]
-    g = {r.entity_id: r for r in analyze_graph(aligned_df(spark, triples)).collect()}
+    triples = [(0, "Selfie", "Selfie"), (1, "Other", "Third")]
+    g = graph(spark, triples)
     assert g[0].degree == 2
     assert g[0].component_size == 1
 
 
 def test_predicted_links_main_to_topic(spark):
-    graph = analyze_graph(aligned_df(spark, TRIPLES))
-    docs = spark.createDataFrame([(URL, "doc text")], "url string, text_norm string")
-    links = predict_links(graph, docs, StubModel()).collect()
-    assert len(links) == 1
-    (link,) = links
+    got = links(spark, TRIPLES, StubModel())
+    assert len(got) == 1
+    (link,) = got
     assert link.subject_text == "IslandA"
     assert link.object_text == "Hub"
     assert link.status == "ok"
@@ -95,17 +101,13 @@ class ReversedModel(StubModel):
 
 
 def test_hallucination_guard(spark):
-    graph = analyze_graph(aligned_df(spark, TRIPLES))
-    docs = spark.createDataFrame([(URL, "doc text")], "url string, text_norm string")
-    links = predict_links(graph, docs, HallucinatingModel()).collect()
-    assert links[0].status == "hallucination"
-    assert links[0].subject_text == "hallucination"
+    got = links(spark, TRIPLES, HallucinatingModel())
+    assert got[0].status == "hallucination"
+    assert got[0].subject_text == "hallucination"
 
 
 def test_reversed_orientation_accepted(spark):
-    graph = analyze_graph(aligned_df(spark, TRIPLES))
-    docs = spark.createDataFrame([(URL, "doc text")], "url string, text_norm string")
-    links = predict_links(graph, docs, ReversedModel()).collect()
-    assert links[0].status == "ok"
-    assert links[0].subject_text == "Hub"       # topic as subject
-    assert links[0].object_text == "IslandA"
+    got = links(spark, TRIPLES, ReversedModel())
+    assert got[0].status == "ok"
+    assert got[0].subject_text == "Hub"       # topic as subject
+    assert got[0].object_text == "IslandA"

@@ -1,95 +1,18 @@
-"""Focused pins for round-6 optimization internals: every rewrite that
-changed an operator's dataflow keeps bit-identical results.
-
-- grouped_map_stitched(assume_grouped=True) over a proven-grouped
-  input equals the repartition+sort path;
-- analyze_graph(pre_grouped=True) on align_entities output equals the
-  default path (the exchange it skips was a no-op by construction);
-- winnowed_fingerprints' array-side fold reproduces the window-frame
-  semantics including truncated tail windows (docs shorter than the
-  winnowing window — not exercised by the sf corpora);
-- materialize_kg's conditional aggregation drops half-paired triples
-  exactly like the former subject x object inner self-join.
+"""Focused pin for a round-6 optimization internal: winnowed_fingerprints'
+array-side fold reproduces the window-frame semantics including
+truncated tail windows (docs shorter than the winnowing window — not
+exercised by the sf corpora).
 """
 
 import hashlib
 import os
 import sys
 
-import pandas as pd
-from pyspark.sql import functions as F
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from ctinexus_spark.partitioning import grouped_map_stitched
 
 
 def _rowset(df):
     return sorted(tuple(r) for r in df.collect())
-
-
-def test_assume_grouped_matches_default_path(spark):
-    # input with many keys spread over several partitions
-    base = spark.createDataFrame(
-        [(f"k{i % 37}", i) for i in range(2000)], "k string, v bigint"
-    )
-
-    def agg(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for k, g in pdf.groupby("k", sort=False):
-            out.append((k, int(g["v"].count()), int(g["v"].sum())))
-        return pd.DataFrame(out, columns=["k", "n", "s"])
-
-    # first stitched pass establishes whole-group-per-partition
-    # contiguity; identity process keeps every row
-    ident = grouped_map_stitched(
-        base, "k", lambda pdf: pdf, "k string, v bigint"
-    )
-    got = grouped_map_stitched(
-        ident, "k", agg, "k string, n bigint, s bigint", assume_grouped=True
-    )
-    want = grouped_map_stitched(
-        ident, "k", agg, "k string, n bigint, s bigint", assume_grouped=False
-    )
-    assert _rowset(got) == _rowset(want)
-    # and the skip really skipped: no exchange above the outer map
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    first_map = plan.index("MapInPandas")
-    assert "Exchange" not in plan[:first_map]
-
-
-def test_analyze_graph_pre_grouped_equivalence(spark):
-    from ctinexus_spark.config import PipelineConfig
-    from ctinexus_spark.model import StubModel
-    from ctinexus_spark.operators.ea import (
-        align_entities,
-        embed_mentions,
-        mint_mentions,
-    )
-    from ctinexus_spark.operators.lp import analyze_graph
-
-    lex = {"spark": "A", "join": "B", "merge": "B", "sort": "B", "table": "C"}
-    cfg = PipelineConfig(lexicon=lex)
-    model = StubModel(cfg)
-    words = list(lex)
-    rows = []
-    for d in range(40):
-        seq = [words[(d + i) % len(words)] for i in range(5)]
-        for i in range(4):
-            rows.append(
-                (f"u{d}", i, seq[i], lex[seq[i]], "precedes", seq[i + 1], lex[seq[i + 1]], True)
-            )
-    typed = spark.createDataFrame(
-        rows,
-        "url string, t_idx int, subject_text string, subject_class string, "
-        "relation string, object_text string, object_class string, valid boolean",
-    )
-    nodes = mint_mentions(typed)
-    emb = embed_mentions(nodes, model)
-    aligned = align_entities(nodes, emb, cfg)
-    fast = analyze_graph(aligned, pre_grouped=True)
-    slow = analyze_graph(aligned, pre_grouped=False)
-    assert _rowset(fast) == _rowset(slow) and fast.count() > 0
 
 
 def test_winnow_truncated_tail_windows(spark):
@@ -110,22 +33,3 @@ def test_winnow_truncated_tail_windows(spark):
         {(1, min(hs[j : j + 4])) for j in range(len(hs))}
     )  # doc 2 has <3 tokens -> no rows
     assert got == want
-
-
-def test_materialize_agg_drops_half_paired_triples(spark):
-    from ctinexus_spark.operators.materialize import materialize_kg
-
-    aligned = spark.createDataFrame(
-        [
-            ("u1", 0, "subject", "A", 0),
-            ("u1", 0, "object", "B", 1),
-            ("u1", 1, "subject", "C", 2),  # no object row -> must drop
-        ],
-        "url string, t_idx int, side string, entity_text string, entity_id int",
-    )
-    typed = spark.createDataFrame(
-        [("u1", 0, "r0", True), ("u1", 1, "r1", True)],
-        "url string, t_idx int, relation string, valid boolean",
-    )
-    got = _rowset(materialize_kg(aligned, typed))
-    assert got == [("u1", "A", "r0", "B", "extracted")]
