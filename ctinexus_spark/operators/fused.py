@@ -7,11 +7,17 @@ columns in and out of it. Every stage table of pipeline.run_pipeline
 select/filter of the one align_graph_triples output, so each semantic
 has one implementation.
 
-Shuffle budget:
-  normalize+extract+tag : mapInPandas, ZERO shuffles
-  align+graph+triples   : 1 shuffle (repartition by url); embeddings
-                          are fetched inside the pass, one model call
-                          per Arrow batch of distinct mention texts
+Shuffle budget (one Python task per core slot in each pass: every
+Python task pays a fixed ~0.35 s start-up header, see partitioning.py):
+  normalize+extract+tag : ZERO shuffles after the input's round-robin
+                          spread; extract_and_tag is a scalar pandas
+                          UDF chained onto the normalize UDF in one
+                          ArrowEvalPython, exploded by the JVM
+  align+graph+triples   : 1 shuffle (repartition by url, pinned to the
+                          core-slot count so AQE cannot coalesce it to
+                          one task); embeddings are fetched inside the
+                          pass, one model call per Arrow batch of
+                          distinct mention texts
   link inference        : skipped when the barrier observed no main
                           pair; otherwise only the pair urls' documents
                           are re-read and re-normalized (an IN-subquery
@@ -24,14 +30,13 @@ handles at the partitioner level (url is already high-cardinality).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import pandas as pd
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.doc_kernel import align_doc, analyze_doc, parse_extraction, parse_tagging
+from ctinexus_spark.operators.ie import per_document_rows
 from ctinexus_spark.partitioning import barrier, grouped_map_stitched
 
 TYPED_SCHEMA = (
@@ -43,28 +48,22 @@ TYPED_SCHEMA = (
 def extract_and_tag(docs: DataFrame, model, text_col: str = "text_norm") -> DataFrame:
     """IE + ET in one Arrow pass: extract → repair/validate → tag →
     repair/validate, with the model still seeing the reference's two
-    prompts per document (one extract batch + one tag batch)."""
+    prompts per document (one extract batch + one tag batch). A scalar
+    pandas UDF over `text_col` (ie.per_document_rows), so over
+    normalize_documents output both UDFs run in one Python worker."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = pdf[text_col].fillna("").tolist()
-            extracted = [
-                [{"subject": s, "relation": r, "object": o}
-                 for s, r, o, ok in parse_extraction(resp) if ok]
-                for resp in model.extract(texts)
-            ]
-            rows = [
-                (url, i, *typed)
-                for url, resp in zip(pdf["url"].tolist(), model.tag(texts, extracted))
-                for i, typed in enumerate(parse_tagging(resp))
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=["url", "t_idx", "subject_text", "subject_class",
-                         "relation", "object_text", "object_class", "valid"],
-            )
+    def extract_tag(texts: list[str]) -> list[list[tuple]]:
+        extracted = [
+            [{"subject": s, "relation": r, "object": o}
+             for s, r, o, ok in parse_extraction(resp) if ok]
+            for resp in model.extract(texts)
+        ]
+        return [
+            [(i, *typed) for i, typed in enumerate(parse_tagging(resp))]
+            for resp in model.tag(texts, extracted)
+        ]
 
-    return docs.select("url", text_col).mapInPandas(run, schema=TYPED_SCHEMA)
+    return per_document_rows(docs, text_col, extract_tag, TYPED_SCHEMA)
 
 
 FUSED_SCHEMA = (

@@ -8,9 +8,10 @@ Spark shape:
 - the demo corpus (~148 docs) is fit into a TF-IDF model once on the
   driver and captured by closure → broadcast to executors; retrieval
   is a *broadcast kNN join* inside a pandas UDF — zero shuffle.
-- extraction runs in `mapInPandas`: one ModelClient batch call per
-  Arrow batch (strictly better batching than the reference's
-  one-call-per-doc); each response goes through
+- extraction runs in a scalar pandas UDF chained onto the normalize
+  UDF (per_document_rows): one ModelClient batch call per Arrow batch
+  (strictly better batching than the reference's one-call-per-doc);
+  each response goes through
   doc_kernel.parse_extraction (JSON repair + validation), the parse
   the fused path shares.
 - invalid triplets land in a `valid=false` side-output instead of a
@@ -18,8 +19,6 @@ Spark shape:
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -78,6 +77,40 @@ def attach_random_demos(
     return docs.withColumn("demo_ids", F.array(*[F.lit(d) for d in picked]))
 
 
+def per_document_rows(docs: DataFrame, text_col: str, rows_of, schema: str) -> DataFrame:
+    """docs → one row per element of `rows_of`'s per-document lists,
+    with the document's url prepended.
+
+    `rows_of(texts)` maps one Arrow batch of texts (nulls as "") to one
+    list of row tuples per text, whose fields are `schema`'s after its
+    leading `url string`. It runs as a scalar pandas UDF returning an
+    array per document, so Catalyst chains it onto an upstream pandas
+    UDF (normalize_documents) in ONE ArrowEvalPython: each task starts
+    one Python worker and the text crosses the boundary once. The JVM
+    explodes the arrays: explode_outer plus a null filter, because a
+    plain explode lets InferFiltersFromGenerate put `size(arr) > 0`
+    below the round-robin exchange, which evaluates the UDF chain twice.
+    """
+    fields = schema.split(", ", 1)[1]  # drop the leading "url string"
+    names = [f.split()[0] for f in fields.split(", ")]
+
+    def batch(texts: pd.Series) -> pd.Series:
+        return pd.Series(
+            [[dict(zip(names, row)) for row in rows] for rows in rows_of(texts.fillna("").tolist())]
+        )
+
+    batch.__name__ = rows_of.__name__  # the UDF's name in plans
+    udf = pandas_udf(batch, f"array<struct<{fields}>>")
+    # the UDF gets its own Project (not inside the Generate), so that
+    # CollapseProject can merge it with the normalize UDF's Project
+    return (
+        docs.select("url", udf(F.col(text_col)).alias("rows"))
+        .select("url", F.explode_outer("rows").alias("row"))
+        .filter(F.col("row").isNotNull())
+        .select("url", "row.*")
+    )
+
+
 def extract_triples(docs: DataFrame, model, text_col: str = "text_norm") -> DataFrame:
     """documents → (url, t_idx, subject, relation, object, valid).
 
@@ -86,17 +119,10 @@ def extract_triples(docs: DataFrame, model, text_col: str = "text_norm") -> Data
     rejects keep valid=false.
     """
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            responses = model.extract(pdf[text_col].fillna("").tolist())
-            rows = [
-                (url, i, *triplet)
-                for url, resp in zip(pdf["url"].tolist(), responses)
-                for i, triplet in enumerate(parse_extraction(resp))
-            ]
-            yield pd.DataFrame(
-                rows, columns=["url", "t_idx", "subject", "relation", "object", "valid"]
-            )
+    def extract(texts: list[str]) -> list[list[tuple]]:
+        return [
+            [(i, *triplet) for i, triplet in enumerate(parse_extraction(resp))]
+            for resp in model.extract(texts)
+        ]
 
-    cols = ["url", text_col]
-    return docs.select(*cols).mapInPandas(run, schema=IE_SCHEMA)
+    return per_document_rows(docs, text_col, extract, IE_SCHEMA)

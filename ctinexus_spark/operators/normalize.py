@@ -7,7 +7,9 @@ column wins when present; otherwise the html fallback extractors run
 
 Arrow-batched pandas UDF — one Python call per ~10k rows, no per-row
 Python dispatch. Column pruning: only (text, html) feed the UDF, so a
-downstream select keeps parquet scans narrow.
+downstream select keeps parquet scans narrow. A downstream scalar
+pandas UDF over text_norm (extract_and_tag, extract_triples) chains
+onto this one in the same Python worker.
 """
 
 from __future__ import annotations
@@ -42,9 +44,10 @@ def normalize_documents(
 
     Inputs arriving as a handful of large files (or one small file)
     would serialize every downstream Arrow pass onto a few cores —
-    repartition up to ~2 tasks/core when the scan is under-split. At
-    100 TB the scan naturally yields thousands of splits and this is
-    a no-op.
+    repartition up to one task per core slot when the scan is
+    under-split (one task wave: each Python task pays a fixed start-up
+    header, see partitioning.py). At 100 TB the scan naturally yields
+    thousands of splits and this is a no-op.
     """
     from ctinexus_spark.partitioning import ensure_parallelism
 

@@ -3,9 +3,17 @@ scan-heavy and multi-consumer operators.
 
 Inputs arriving as a handful of large files (or one small file) would
 serialize every downstream Arrow pass / explode onto a few cores —
-repartition up to ~2 tasks/core when the scan is under-split. At
-100 TB the scan naturally yields thousands of splits and this is a
+repartition up to one task per core slot when the scan is under-split.
+At 100 TB the scan naturally yields thousands of splits and this is a
 no-op (the partition probe is plan-time only; no job runs).
+
+Why one task per core slot and not more: every Python task pays a
+fixed start-up header before its first batch, even on a reused worker.
+PySpark's per-task setup calls importlib.invalidate_caches(), and on
+CPython 3.11 each cached zipimporter then re-parses its archive's
+central directory — pyspark.zip and the spark-core jar on the worker
+path — about 0.35 s of CPU per Python runner start. A second wave of
+tasks pays that header again for no extra parallelism.
 """
 
 from __future__ import annotations
@@ -31,13 +39,20 @@ def _plan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def ensure_parallelism(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    spark = df.sparkSession
+def core_slots(spark) -> int:
+    """The number of tasks the cluster runs at once (defaultParallelism);
+    under Spark Connect (no sparkContext) the shuffle-partition conf."""
     try:
-        default = spark.sparkContext.defaultParallelism
-    except Exception:  # Spark Connect: no sparkContext — conf-driven
-        default = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    target = min_parallelism or default * 2
+        return spark.sparkContext.defaultParallelism
+    except Exception:
+        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+
+
+def ensure_parallelism(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
+    """Repartition an under-split input to one task per core slot (or
+    `min_parallelism`): a single wave, each task paying the per-task
+    Python header once (see the module docstring)."""
+    target = min_parallelism or core_slots(df.sparkSession)
     current = _plan_partitions(df)
     if current is None or current < target:
         df = df.repartition(target)
@@ -56,7 +71,8 @@ def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
     (possibly many per call; split them with pdf.groupby(key)) and
     returns a frame matching `schema` by column name.
 
-    Shape: repartition(key) → sortWithinPartitions(key) → mapInPandas.
+    Shape: repartition(core_slots, key) → sortWithinPartitions(key) →
+    mapInPandas.
     Arrow caps batches at arrow.maxRecordsPerBatch, so one group can
     straddle a batch boundary; rows arrive sorted by key, so each
     batch's trailing group is held back and stitched onto the next
@@ -80,13 +96,12 @@ def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
         if pending is not None and len(pending):
             yield process(pending)
 
-    # DELIBERATELY a bare (AQE-coalescible) repartition: for the pure
-    # Arrow passes behind this helper, fewer+larger post-shuffle
-    # partitions measured FASTER (fused kg ~3.4s vs ~4.0s with a pinned
-    # 2x-cores count — larger batches amortize per-task pandas/model
-    # overhead, and there are no JVM sorts downstream to parallelize).
+    # Pinned to one partition per core slot: a bare repartition(key) is
+    # AQE-coalescible, and a small url shuffle collapsed to ONE task,
+    # running the whole pass's Python on one core. More partitions than
+    # slots only add task waves, each paying the per-task Python header.
     return (
-        df.repartition(key)
+        df.repartition(core_slots(df.sparkSession), key)
         .sortWithinPartitions(key)
         .mapInPandas(run, schema=schema)
     )

@@ -1,7 +1,8 @@
 """fused_kg reads the corpus once: the link branch is skipped when the
 barrier observes no main pair, and otherwise re-reads and re-normalizes
 only the documents whose url has a pair. The KG entry queries leave no
-cached corpus behind."""
+cached corpus behind. Each Python pass runs one task per core slot, and
+the IE/ET UDF is chained onto the normalize UDF in one Python worker."""
 
 import pandas as pd
 import pytest
@@ -10,7 +11,8 @@ from pyspark.sql import functions as F
 from ctinexus_spark import entry_queries as eq
 from ctinexus_spark.model import SplitChainModel, StubModel
 from ctinexus_spark.operators import normalize
-from ctinexus_spark.operators.fused import fused_kg
+from ctinexus_spark.operators.fused import TYPED_SCHEMA, extract_and_tag, fused_kg
+from ctinexus_spark.operators.ie import extract_triples
 from ctinexus_spark.operators.normalize import normalize_documents
 
 
@@ -18,6 +20,11 @@ def plan_tree(df) -> list[str]:
     """The operator tree of the formatted physical plan, top-down."""
     plan = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
     return plan.split("\n\n", 1)[0].splitlines()
+
+
+def plan_lines(df) -> list[str]:
+    """The simple physical plan, one operator (with its expressions) a line."""
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple").splitlines()
 
 
 @pytest.fixture(autouse=True)
@@ -112,3 +119,50 @@ def test_kg_entry_queries_leave_no_cached_corpus(spark, tmp_path):
     for q in (eq.q_kg_triples, eq.q_lp_links_flaky):
         assert q(spark, str(tmp_path)).collect()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("extract, udf_name", [(extract_and_tag, "extract_tag"), (extract_triples, "extract")])
+def test_extract_udf_chains_onto_normalize_udf(spark, extract, udf_name):
+    """One ArrowEvalPython evaluates extract(normalize(text, html)): each
+    task starts one Python worker. explode_outer keeps Catalyst from
+    inferring a size() filter that would run the UDF chain twice."""
+    lines = plan_lines(extract(_docs(spark), StubModel(eq.CONFIG)))
+    udfs = [ln for ln in lines if "ArrowEvalPython" in ln]
+    assert len(udfs) == 1, "\n".join(lines)
+    assert f"{udf_name}(_normalize_batch(" in udfs[0], udfs[0]
+    assert not any("MapInPandas" in ln for ln in lines), "\n".join(lines)
+    assert not any("Filter" in ln and "size(" in ln for ln in lines), "\n".join(lines)
+
+
+def test_extract_and_tag_schema_is_typed_schema(spark):
+    typed = extract_and_tag(_docs(spark), StubModel(eq.CONFIG)).schema
+    want = spark.createDataFrame([], TYPED_SCHEMA).schema
+    assert [(f.name, f.dataType) for f in typed] == [(f.name, f.dataType) for f in want]
+
+
+def test_python_passes_run_one_task_per_core_slot(spark):
+    """A warm fused_kg runs its IE/ET stage (the map side of the url
+    shuffle) and its align stage (the barrier's localCheckpoint) with
+    one task per core slot: a second wave, or an align pass coalesced
+    to one task, pays the per-task Python start-up again or serializes
+    the pass onto one core."""
+    sc = spark.sparkContext
+    kg = fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG)
+    kg.write.format("noop").mode("overwrite").save()  # warm the session
+
+    group = "fused-kg-task-counts"
+    sc.setJobGroup(group, "fused_kg stage task counts")
+    try:
+        kg = fused_kg(_docs(spark), StubModel(eq.CONFIG), eq.CONFIG)
+        kg.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    stage_ids = sorted(
+        s for j in tracker.getJobIdsForGroup(group) for s in tracker.getJobInfo(j).stageIds
+    )
+    # stages that ran tasks (a stage whose shuffle output is reused is skipped)
+    ran = [st for st in map(tracker.getStageInfo, stage_ids) if st.numCompletedTasks > 0]
+    align = next(i for i, st in enumerate(ran) if st.name.startswith("localCheckpoint"))
+    ie_et = ran[align - 1]
+    assert (ie_et.numTasks, ran[align].numTasks) == (sc.defaultParallelism,) * 2, ran
