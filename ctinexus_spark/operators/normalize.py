@@ -49,13 +49,13 @@ def normalize_documents(
     header, see partitioning.py). At 100 TB the scan naturally yields
     thousands of splits and this is a no-op.
     """
-    from ctinexus_spark.partitioning import ensure_parallelism
+    from ctinexus_spark.partitioning import core_slots, ensure_parallelism
 
     df = documents
     if lang_filter and "lang" in df.columns:
         df = df.filter(F.col("lang") == lang_filter)
 
-    df = ensure_parallelism(df, min_parallelism)
+    df = ensure_parallelism(df, min_parallelism or core_slots(df.sparkSession))
 
     html_col = F.col("html") if "html" in df.columns else F.lit(None).cast("binary")
     normalize_udf = pandas_udf(_normalize_batch, "string")

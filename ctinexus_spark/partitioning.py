@@ -3,17 +3,19 @@ scan-heavy and multi-consumer operators.
 
 Inputs arriving as a handful of large files (or one small file) would
 serialize every downstream Arrow pass / explode onto a few cores —
-repartition up to one task per core slot when the scan is under-split.
-At 100 TB the scan naturally yields thousands of splits and this is a
+repartition up to ~2 tasks/core when the scan is under-split. At
+100 TB the scan naturally yields thousands of splits and this is a
 no-op (the partition probe is plan-time only; no job runs).
 
-Why one task per core slot and not more: every Python task pays a
-fixed start-up header before its first batch, even on a reused worker.
-PySpark's per-task setup calls importlib.invalidate_caches(), and on
-CPython 3.11 each cached zipimporter then re-parses its archive's
-central directory — pyspark.zip and the spark-core jar on the worker
-path — about 0.35 s of CPU per Python runner start. A second wave of
-tasks pays that header again for no extra parallelism.
+The KG's Python passes take one task per core slot instead
+(core_slots: normalize_documents and grouped_map_stitched). Every
+Python task pays a fixed start-up header before its first batch, even
+on a reused worker: PySpark's per-task setup calls
+importlib.invalidate_caches(), and on CPython 3.11 each cached
+zipimporter then re-parses its archive's central directory —
+pyspark.zip and the spark-core jar on the worker path — about 0.35 s
+of CPU per Python runner start. A second wave of tasks pays that
+header again for no extra parallelism.
 """
 
 from __future__ import annotations
@@ -39,20 +41,20 @@ def _plan_partitions(df: DataFrame) -> int | None:
         return None
 
 
-def core_slots(spark) -> int:
+def core_slots(spark) -> int | None:
     """The number of tasks the cluster runs at once (defaultParallelism);
-    under Spark Connect (no sparkContext) the shuffle-partition conf."""
+    None under Spark Connect, which has no sparkContext to ask."""
     try:
         return spark.sparkContext.defaultParallelism
     except Exception:
-        return int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+        return None
 
 
 def ensure_parallelism(df: DataFrame, min_parallelism: int | None = None) -> DataFrame:
-    """Repartition an under-split input to one task per core slot (or
-    `min_parallelism`): a single wave, each task paying the per-task
-    Python header once (see the module docstring)."""
-    target = min_parallelism or core_slots(df.sparkSession)
+    spark = df.sparkSession
+    # Spark Connect: no sparkContext — conf-driven
+    default = core_slots(spark) or int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    target = min_parallelism or default * 2
     current = _plan_partitions(df)
     if current is None or current < target:
         df = df.repartition(target)
@@ -72,7 +74,7 @@ def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
     returns a frame matching `schema` by column name.
 
     Shape: repartition(core_slots, key) → sortWithinPartitions(key) →
-    mapInPandas.
+    mapInPandas (a bare repartition(key) under Spark Connect).
     Arrow caps batches at arrow.maxRecordsPerBatch, so one group can
     straddle a batch boundary; rows arrive sorted by key, so each
     batch's trailing group is held back and stitched onto the next
@@ -100,11 +102,11 @@ def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
     # AQE-coalescible, and a small url shuffle collapsed to ONE task,
     # running the whole pass's Python on one core. More partitions than
     # slots only add task waves, each paying the per-task Python header.
-    return (
-        df.repartition(core_slots(df.sparkSession), key)
-        .sortWithinPartitions(key)
-        .mapInPandas(run, schema=schema)
-    )
+    # Spark Connect exposes no slot count; keep the bare, coalescible
+    # form there rather than pin a guess.
+    slots = core_slots(df.sparkSession)
+    shuffled = df.repartition(slots, key) if slots else df.repartition(key)
+    return shuffled.sortWithinPartitions(key).mapInPandas(run, schema=schema)
 
 
 def barrier(df: DataFrame) -> DataFrame:

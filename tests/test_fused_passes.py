@@ -166,3 +166,21 @@ def test_python_passes_run_one_task_per_core_slot(spark):
     align = next(i for i, st in enumerate(ran) if st.name.startswith("localCheckpoint"))
     ie_et = ran[align - 1]
     assert (ie_et.numTasks, ran[align].numTasks) == (sc.defaultParallelism,) * 2, ran
+
+
+@pytest.mark.parametrize("slots, shuffle", [(3, "hashpartitioning(url#*, 3), REPARTITION_BY_NUM"),
+                                            (None, "REPARTITION_BY_COL")])
+def test_grouped_map_pins_core_slots_or_stays_coalescible(spark, monkeypatch, slots, shuffle):
+    """The url shuffle is pinned to the core-slot count; without one (Spark
+    Connect) it stays a bare repartition that AQE may coalesce, rather
+    than a pinned guess."""
+    import fnmatch
+
+    from ctinexus_spark import partitioning
+
+    monkeypatch.setattr(partitioning, "core_slots", lambda s: slots)
+    rows = spark.createDataFrame([("u1", 1), ("u2", 2)], "url string, n int")
+    out = partitioning.grouped_map_stitched(rows, "url", lambda pdf: pdf, rows.schema)
+    exchanges = [ln for ln in plan_lines(out) if "Exchange" in ln]
+    assert len(exchanges) == 1 and fnmatch.fnmatch(exchanges[0], f"*{shuffle}*"), exchanges
+    assert sorted(out.collect()) == sorted(rows.collect())
