@@ -13,4 +13,6 @@ Everything heavy runs inside Arrow-batched pandas UDFs; everything
 relational is plain DataFrame ops so Catalyst/AQE can optimize.
 """
 
+from ctinexus_spark import _zipimport  # noqa: F401  (installs on import; see the module)
+
 __version__ = "0.1.0"

@@ -39,6 +39,39 @@ from ctinexus_spark.partitioning import barrier
 CHECKPOINT_EVERY = 3
 
 
+def _star_edges(batches, names: list[str]):
+    """One partition's union-find: (node, local min root) per node seen.
+    Module-level so the worker that unpickles the contraction imports
+    ctinexus_spark (and so installs _zipimport)."""
+    import pandas as pd
+
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for pdf in batches:
+        for a, b in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
+            ra, rb = find(a), find(b)
+            if ra == rb:
+                parent.setdefault(ra, ra)
+                continue
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+            parent.setdefault(ra, ra)
+    nodes = list(parent)
+    CHUNK = 1 << 16
+    for i in range(0, len(nodes), CHUNK):
+        chunk = nodes[i : i + CHUNK]
+        yield pd.DataFrame({names[0]: chunk, names[1]: [find(n) for n in chunk]})
+
+
 def contract_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """Partition-local union-find contraction — the classic two-phase
     CC pre-pass (GraphX/Stergiou-style): hash-partition the edge list
@@ -63,38 +96,7 @@ def contract_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     the corpus, sizes it.
     """
     two = edges.select(F.col(src), F.col(dst))
-    schema = two.schema
-
-    def _contract(batches):
-        import pandas as pd
-
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for pdf in batches:
-            for a, b in zip(pdf.iloc[:, 0], pdf.iloc[:, 1]):
-                ra, rb = find(a), find(b)
-                if ra == rb:
-                    parent.setdefault(ra, ra)
-                    continue
-                if rb < ra:
-                    ra, rb = rb, ra
-                parent[rb] = ra
-                parent.setdefault(ra, ra)
-        nodes = list(parent)
-        CHUNK = 1 << 16
-        for i in range(0, len(nodes), CHUNK):
-            chunk = nodes[i : i + CHUNK]
-            yield pd.DataFrame(
-                {schema[0].name: chunk, schema[1].name: [find(n) for n in chunk]}
-            )
+    names = two.columns
 
     # bare (AQE-coalescible) repartition DELIBERATELY: fewer, larger
     # partitions measured ~1.7x faster for this pass at bench scale
@@ -102,7 +104,7 @@ def contract_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
     # the per-partition union-find amortizes over bigger chunks and
     # the contracted output shrinks with partition count; at scale the
     # advisory-size coalescing yields healthy chunks either way.
-    return two.repartition(F.col(src)).mapInPandas(_contract, schema)
+    return two.repartition(F.col(src)).mapInPandas(lambda batches: _star_edges(batches, names), two.schema)
 
 
 def connected_components(

@@ -26,6 +26,7 @@ from __future__ import annotations
 import hashlib
 import json
 import re
+import threading
 
 import numpy as np
 
@@ -90,16 +91,31 @@ def stub_tag_class(mention_text: str, lexicon: dict[str, str]) -> str:
     return "default"
 
 
+_rng = threading.local()
+
+
+def _seeded_normal(seed: int, dim: int) -> np.ndarray:
+    """np.random.RandomState(seed).standard_normal(dim), bit for bit,
+    without constructing a RandomState (each construction draws OS
+    entropy before the seed replaces it). One generator per thread:
+    the simulated endpoint embeds from its handler threads."""
+    rs = getattr(_rng, "rs", None)
+    if rs is None:
+        rs = _rng.rs = np.random.RandomState()
+    rs.seed(seed)
+    return rs.standard_normal(dim)
+
+
 def stub_embedding(text: str, dim: int = 64, alias_map: dict[str, str] | None = None) -> np.ndarray:
     """Deterministic unit vector. alias_map maps alias → canonical
     text; aliases reuse the canonical base vector with a small
     deterministic perturbation (cosine ≈ 0.95 > the 0.6 threshold)."""
     canonical = (alias_map or {}).get(text, text)
     seed = int.from_bytes(hashlib.md5(canonical.encode("utf-8")).digest()[:4], "big")
-    vec = np.random.RandomState(seed).standard_normal(dim)
+    vec = _seeded_normal(seed, dim)
     if canonical != text:
         noise_seed = int.from_bytes(hashlib.md5(text.encode("utf-8")).digest()[4:8], "big")
-        vec = vec + 0.3 * np.random.RandomState(noise_seed).standard_normal(dim)
+        vec = vec + 0.3 * _seeded_normal(noise_seed, dim)
     return vec / np.linalg.norm(vec)
 
 

@@ -7,8 +7,8 @@ columns in and out of it. Every stage table of pipeline.run_pipeline
 select/filter of the one align_graph_triples output, so each semantic
 has one implementation.
 
-Shuffle budget (one Python task per core slot in each pass: every
-Python task pays a fixed ~0.35 s start-up header, see partitioning.py):
+Shuffle budget (one Python task per core slot in each pass, so no
+pass runs a second task wave; see partitioning.py):
   normalize+extract+tag : ZERO shuffles after the input's round-robin
                           spread; extract_and_tag is a scalar pandas
                           UDF chained onto the normalize UDF in one

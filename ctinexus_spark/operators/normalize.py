@@ -38,16 +38,16 @@ def _normalize_batch(text: pd.Series, html: pd.Series) -> pd.Series:
 def normalize_documents(
     documents: DataFrame,
     lang_filter: str | None = "en",
-    min_parallelism: int | None = None,
 ) -> DataFrame:
     """Add text_norm; optionally keep one language (pushed-down filter).
 
     Inputs arriving as a handful of large files (or one small file)
     would serialize every downstream Arrow pass onto a few cores —
     repartition up to one task per core slot when the scan is
-    under-split (one task wave: each Python task pays a fixed start-up
-    header, see partitioning.py). At 100 TB the scan naturally yields
-    thousands of splits and this is a no-op.
+    under-split; more tasks than slots only add a task wave (cheap:
+    a reused Python worker pays PySpark's per-task header on its
+    first two tasks only, see partitioning.py). At 100 TB the scan
+    naturally yields thousands of splits and this is a no-op.
     """
     from ctinexus_spark.partitioning import core_slots, ensure_parallelism
 
@@ -55,7 +55,7 @@ def normalize_documents(
     if lang_filter and "lang" in df.columns:
         df = df.filter(F.col("lang") == lang_filter)
 
-    df = ensure_parallelism(df, min_parallelism or core_slots(df.sparkSession))
+    df = ensure_parallelism(df, core_slots(df.sparkSession))
 
     html_col = F.col("html") if "html" in df.columns else F.lit(None).cast("binary")
     normalize_udf = pandas_udf(_normalize_batch, "string")

@@ -8,6 +8,10 @@ Everything JVM-side: dot products via zip_with + aggregate inside
 whole-stage codegen. Hyperplanes are deterministic ±1 vectors derived
 from md5 (computed once driver-side, embedded as literals) so the SQL
 oracle can reproduce them exactly.
+
+The Arrow UDFs' bodies are module-level functions: unpickling one on a
+worker imports ctinexus_spark, which installs _zipimport (a UDF
+pickled whole, by value, would leave the per-task header in place).
 """
 
 from __future__ import annotations
@@ -40,6 +44,19 @@ def cosine_expr(a: str, b: str) -> Column:
     return dot / (na * nb)
 
 
+def _cosine_batch(a: pd.Series, b: pd.Series) -> pd.Series:
+    ma = np.vstack([np.asarray(v, dtype=np.float64) for v in a])
+    mb = np.vstack([np.asarray(v, dtype=np.float64) for v in b])
+    dot = np.zeros(ma.shape[0])
+    na = np.zeros(ma.shape[0])
+    nb = np.zeros(ma.shape[0])
+    for d in range(ma.shape[1]):  # left-fold per dimension
+        dot += ma[:, d] * mb[:, d]
+        na += ma[:, d] * ma[:, d]
+        nb += mb[:, d] * mb[:, d]
+    return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
+
+
 def cosine_udf() -> Column:
     """Arrow-batched cosine, bit-identical to cosine_expr: the sums
     accumulate dimension-by-dimension in doubles — the same left-fold
@@ -49,20 +66,7 @@ def cosine_udf() -> Column:
     pairs the HOF path is GC-bound). Use for wide re-rank joins; keep
     cosine_expr where the pair count is small."""
 
-    @pandas_udf("double")
-    def _cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        ma = np.vstack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.vstack([np.asarray(v, dtype=np.float64) for v in b])
-        dot = np.zeros(ma.shape[0])
-        na = np.zeros(ma.shape[0])
-        nb = np.zeros(ma.shape[0])
-        for d in range(ma.shape[1]):  # left-fold per dimension
-            dot += ma[:, d] * mb[:, d]
-            na += ma[:, d] * ma[:, d]
-            nb += mb[:, d] * mb[:, d]
-        return pd.Series(dot / (np.sqrt(na) * np.sqrt(nb)))
-
-    return _cos
+    return pandas_udf(_cosine_batch, "double")
 
 
 def hyperplane_signs(dim: int = EMBED_DIM, planes: int = N_PLANES) -> list[list[int]]:
@@ -140,6 +144,21 @@ def lsh_buckets(
     return ensure_parallelism(embeddings).select(F.col(id_col), F.concat(*bits).alias("bucket"))
 
 
+def _band_keys(vecs: pd.Series, signs: np.ndarray, n_bands: int, band_planes: int) -> pd.Series:
+    m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+    dots = np.zeros((m.shape[0], signs.shape[0]))
+    for d in range(m.shape[1]):
+        dots += m[:, d : d + 1] * signs[None, :, d][0]
+    bits = dots >= 0
+    out = []
+    for i in range(m.shape[0]):
+        out.append([
+            "".join("1" if bits[i, b * band_planes + p] else "0" for p in range(band_planes))
+            for b in range(n_bands)
+        ])
+    return pd.Series(out)
+
+
 def lsh_band_buckets(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -171,18 +190,7 @@ def lsh_band_buckets(
     # and the JVM aggregate() — so sign bits are bit-identical.
     @pandas_udf("array<string>")
     def _buckets(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        dots = np.zeros((m.shape[0], signs.shape[0]))
-        for d in range(m.shape[1]):
-            dots += m[:, d : d + 1] * signs[None, :, d][0]
-        bits = dots >= 0
-        out = []
-        for i in range(m.shape[0]):
-            out.append([
-                "".join("1" if bits[i, b * band_planes + p] else "0" for p in range(band_planes))
-                for b in range(n_bands)
-            ])
-        return pd.Series(out)
+        return _band_keys(vecs, signs, n_bands, band_planes)
 
     return embeddings.select(
         F.col(id_col), F.posexplode(_buckets(F.col(vec_col))).alias("band_idx", "bucket")
@@ -290,6 +298,14 @@ def _unit_rows(cents: np.ndarray) -> np.ndarray:
     return cents / norms
 
 
+def _centroid_cosines(vecs: pd.Series, cents: np.ndarray) -> np.ndarray:
+    """(batch × cells) cosines against unit centroids: one matmul."""
+    m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
+    norms = np.linalg.norm(m, axis=1, keepdims=True)
+    norms[norms == 0] = 1.0
+    return (m / norms) @ cents.T
+
+
 def _assign_udf(cents: np.ndarray):
     """Vectorized nearest-centroid assignment: one numpy matmul per
     Arrow batch (a cells×dim expression tree blows up codegen; the
@@ -300,10 +316,7 @@ def _assign_udf(cents: np.ndarray):
 
     @pandas_udf("int")
     def _assign(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (m / norms) @ cents.T
+        sims = _centroid_cosines(vecs, cents)
         # tie rule (unreachable in practice): higher cell index wins,
         # matching the SQL oracle's ORDER BY cos DESC, cell DESC
         best = (sims.shape[1] - 1) - np.argmax(sims[:, ::-1], axis=1)
@@ -321,10 +334,7 @@ def _probe_udf(cents: np.ndarray, nprobe: int):
 
     @pandas_udf("array<int>")
     def _probe(vecs: pd.Series) -> pd.Series:
-        m = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        norms = np.linalg.norm(m, axis=1, keepdims=True)
-        norms[norms == 0] = 1.0
-        sims = (m / norms) @ cents.T
+        sims = _centroid_cosines(vecs, cents)
         # reverse cells then stable-argsort so ties prefer the higher
         # original cell index (mirrors ORDER BY cos DESC, cell DESC)
         rev = sims[:, ::-1]

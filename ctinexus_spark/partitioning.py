@@ -8,14 +8,16 @@ repartition up to ~2 tasks/core when the scan is under-split. At
 no-op (the partition probe is plan-time only; no job runs).
 
 The KG's Python passes take one task per core slot instead
-(core_slots: normalize_documents and grouped_map_stitched). Every
-Python task pays a fixed start-up header before its first batch, even
-on a reused worker: PySpark's per-task setup calls
-importlib.invalidate_caches(), and on CPython 3.11 each cached
-zipimporter then re-parses its archive's central directory —
-pyspark.zip and the spark-core jar on the worker path — about 0.35 s
-of CPU per Python runner start. A second wave of tasks pays that
-header again for no extra parallelism.
+(core_slots: normalize_documents and grouped_map_stitched): more tasks
+than slots add a task wave for no extra parallelism. A wave is cheap
+now. PySpark's per-task setup calls importlib.invalidate_caches(), and
+on CPython < 3.13 each cached zipimporter used to re-parse its
+archive's central directory on every task (pyspark.zip, py4j's zip,
+the spark-core jar on the worker path: ~0.35 s of CPU per task).
+ctinexus_spark._zipimport re-reads an archive only when it changed,
+so a reused worker pays that on its first two tasks only (see that
+module); a second wave of a no-op pandas UDF costs ~0.04 s on
+local[4].
 """
 
 from __future__ import annotations
@@ -101,7 +103,7 @@ def grouped_map_stitched(df: DataFrame, key: str, process, schema) -> DataFrame:
     # Pinned to one partition per core slot: a bare repartition(key) is
     # AQE-coalescible, and a small url shuffle collapsed to ONE task,
     # running the whole pass's Python on one core. More partitions than
-    # slots only add task waves, each paying the per-task Python header.
+    # slots only add task waves.
     # Spark Connect exposes no slot count; keep the bare, coalescible
     # form there rather than pin a guess.
     slots = core_slots(df.sparkSession)

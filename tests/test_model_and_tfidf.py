@@ -1,8 +1,11 @@
 """Stub model determinism + TF-IDF retrieval tests."""
 
+import hashlib
 import json
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
+import pytest
 
 from ctinexus_spark.config import PipelineConfig
 from ctinexus_spark.model import ReplayModel, StubModel, stub_embedding, stub_extract_triplets
@@ -13,6 +16,17 @@ from ctinexus_spark.validation import (
     valid_ie_triplet,
     valid_typed_triplet,
 )
+
+
+def _fresh_state_embedding(text, dim, alias_map):
+    """stub_embedding's definition, one fresh RandomState per draw."""
+    canonical = alias_map.get(text, text)
+    seed = int.from_bytes(hashlib.md5(canonical.encode("utf-8")).digest()[:4], "big")
+    vec = np.random.RandomState(seed).standard_normal(dim)
+    if canonical != text:
+        noise_seed = int.from_bytes(hashlib.md5(text.encode("utf-8")).digest()[4:8], "big")
+        vec = vec + 0.3 * np.random.RandomState(noise_seed).standard_normal(dim)
+    return vec / np.linalg.norm(vec)
 
 
 class TestStubModel:
@@ -50,6 +64,22 @@ class TestStubModel:
         base = stub_embedding("APT29", alias_map=amap)
         alias = stub_embedding("Cozy Bear", alias_map=amap)
         assert float(base @ alias) >= 0.6
+
+    @pytest.mark.parametrize("dim", [64, 63])
+    def test_embedding_bits_match_fresh_random_state(self, dim):
+        amap = {f"alias {i}": f"text {i}" for i in range(0, 40, 3)}
+        texts = [f"text {i}" for i in range(40)] + list(amap)
+        assert [stub_embedding(t, dim, amap).tobytes() for t in texts] == [
+            _fresh_state_embedding(t, dim, amap).tobytes() for t in texts
+        ]
+
+    def test_embedding_bits_match_across_threads(self):
+        amap = {f"alias {i}": f"text {i}" for i in range(0, 200, 7)}
+        texts = [f"text {i}" for i in range(200)] + list(amap)
+        want = [_fresh_state_embedding(t, 63, amap).tobytes() for t in texts]
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            runs = list(pool.map(lambda _: [stub_embedding(t, 63, amap).tobytes() for t in texts], range(8)))
+        assert all(got == want for got in runs)
 
     def test_tag_classes(self):
         m = StubModel(PipelineConfig())
