@@ -38,12 +38,8 @@ WINDOW = 50
 _CHANGED_R05 = [
     "dedup_incremental", "simhash", "simhash_candidates",
     "dedup_clusters_cc", "dedup_clusters_stars", "dedup_keeplist",
-    "semantic_dedup", "kg_global_entities", "doc_len_quantiles",
-    "mmr_topk", "source_drift", "jaccard_pairs", "event_bursts",
-    "kg_entity_cooc",
-    "revenue_cube", "idle_customers", "event_decay",
-    "event_cusum", "order_zorder",
-    "user_event_pivot", "user_event_unpivot", "event_props_k",
+    "semantic_dedup", "kg_global_entities", "mmr_topk",
+    "jaccard_pairs", "kg_entity_cooc",
 ]
 
 CHANGED_THIS_ROUND = [
@@ -83,9 +79,10 @@ CHANGED_THIS_ROUND = [
 # rotation + natural-order fill). r01-r03 used the natural order — an
 # empty rotation. Keep every past round's list: the union-coverage
 # test replays them. Queries deleted since (the part_* graph-analytics,
-# mm_* multimodal, sketch, PQ, BM25 and event-analytics rows) are
-# dropped from the lists, so a recorded window now fills its freed
-# slots in natural order.
+# mm_* multimodal, sketch, PQ, BM25 and event-analytics rows, the
+# quantile/drift/burst/decay/CUSUM stats monitors, and the TPC-H,
+# e-commerce and event-table queries) are dropped from the lists, so a
+# recorded window now fills its freed slots in natural order.
 ROTATION_HISTORY: dict[str, list[str]] = {
     "r01": [],
     "r02": [],
@@ -96,10 +93,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "dedup_incremental", "table_profile", "pack_plan", "simhash",
         "simhash_candidates", "ivf_assign", "ivf_topk",
         "dedup_clusters_cc", "dedup_keeplist", "quality_gate",
-        "text_dedupe", "tpch_q1", "revenue_join", "region_revenue",
-        "user_top_events", "event_sessions", "event_type_rollup",
-        "order_percentiles", "revenue_rollup", "event_leadlag",
-        "stratified_sample", "mixture_plan", "decontaminate",
+        "text_dedupe", "stratified_sample", "mixture_plan", "decontaminate",
         "vocab_topk", "line_dedup", "domain_cap", "dsir_features",
     ],
     # round 5: the changed set first, then the rows whose only greens
@@ -135,7 +129,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "fingerprints", "bpe_tokens", "dedup_exact", "minhash",
         "lsh_bands", "lsh_candidates", "emb_cosine_pairs", "ann_topk",
         "lsh_buckets", "lsh_topk", "knn_vote",
-        "tpch_q1", "ivf_topk",
+        "ivf_topk",
     ],
 }
 

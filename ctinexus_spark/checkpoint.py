@@ -1,7 +1,7 @@
 """Stage checkpointing + resume (snapshot-manifest store).
 
-north_rule: every stage writes per-partition lineage + metrics and the
-job "resumes from the last committed snapshot checkpoint".
+north_rule: the job "resumes from the last committed snapshot
+checkpoint".
 
 Layout — Iceberg's snapshot/manifest pattern on plain parquet (the
 sandbox has no Iceberg runtime jar; `IcebergStageStore` below maps the
@@ -265,12 +265,3 @@ class IcebergStageStore:
         else:
             self.commit(transform(todo), stage, partition_by)
         return self.load(spark, stage)
-
-
-def with_lineage(df: DataFrame, stage: str) -> DataFrame:
-    """Per-partition lineage columns (stage, partition id) — appended
-    to stage outputs so every row is traceable to the task that
-    produced it (north_rule's per-partition lineage)."""
-    return df.withColumn("_stage", F.lit(stage)).withColumn(
-        "_partition_id", F.spark_partition_id()
-    )

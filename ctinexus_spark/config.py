@@ -18,7 +18,6 @@ class PipelineConfig:
     # kNN demonstration retrieval (reference config.yaml:26-30: shot 3, asc)
     shot: int = 3
     demo_permutation: str = "asc"  # "asc" reverses the ranked top-k
-    retriever: str = "kNN"  # kNN | rand | fixed
     # EA cluster mode: "star" replicates the reference's overlapping
     # star-sets (graph_constructor.py:394-436); "cc" uses connected
     # components over the >=threshold similarity graph (north_star).
@@ -37,7 +36,6 @@ class PipelineConfig:
     # Lexicon-based stub extraction (term -> entity class). Empty map
     # means "CTI mode": IOC regex extraction drives the stub.
     lexicon: dict[str, str] = field(default_factory=dict)
-    random_seed: int = 42
     # --- LSH geometry (dedup/similarity scale paths) ---
     # Sign-LSH planes for single-band vector buckets: 2^planes buckets,
     # in-bucket pair count ~ n²/2^planes at uniform spread. 8 fits

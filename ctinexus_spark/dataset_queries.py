@@ -1,4 +1,4 @@
-"""Training-data-pipeline + classical query registry with DuckDB
+"""Training-data-pipeline query registry with DuckDB
 oracle twins (extends entry_queries; merged by __spark_entry__).
 
 Families:
@@ -16,15 +16,11 @@ Families:
                   kNN label vote over LSH neighbors
                   (operators/similarity.py)
 - url ops       : normalize/validate/domain (text/urls.py)
-- classical     : TPC-H-style agg + join + window/sessionization
-                  (the classical-operator checklist of SURVEY.md §2.7)
 
 Float determinism notes (verified empirically):
 - cosine: Spark left-fold aggregate over double-cast arrays is
   bit-identical to DuckDB list_cosine_similarity(::DOUBLE[]).
 - ratios of ints and double divisions are IEEE-exact on both engines.
-- money sums go through decimal(18,2) then cast to double (exact,
-  order-independent) instead of double sums (order-dependent).
 """
 
 from __future__ import annotations
@@ -322,183 +318,7 @@ def q_text_dedupe(spark, sf_dir):
     return exact_text_dedupe(_docs(spark, sf_dir)).select("doc_id", "n_chars")
 
 
-# --- classical ----------------------------------------------------------
-
-
-def q_tpch_q1(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    dec = lambda c: c.cast("decimal(18,2)")  # noqa: E731
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec(F.col("l_quantity"))).cast("double").alias("sum_qty"),
-            F.sum(dec(F.col("l_extendedprice"))).cast("double").alias("sum_base_price"),
-            # price (2dp) × (1-disc) (2dp) is an exact 4-decimal value:
-            # decimal(18,4) recovers it exactly on both engines, while
-            # (18,2) would hit .005 ties where Spark (HALF_UP) and
-            # DuckDB (HALF_EVEN) round differently.
-            F.sum((F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,4)"))
-            .cast("double").alias("sum_disc_price"),
-            F.count("*").cast("bigint").alias("count_order"),
-        )
-    )
-
-
-def q_revenue_join(spark, sf_dir):
-    """customer ⨝ orders ⨝ lineitem revenue rollup (broadcast dims)."""
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = F.sum(
-        (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,4)")
-    ).cast("double")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .groupBy("c_mktsegment", "o_orderpriority")
-        .agg(rev.alias("revenue"), F.count("*").cast("bigint").alias("n_items"))
-    )
-
-
-def q_region_revenue(spark, sf_dir):
-    """TPC-H Q5-style snowflake join: region → nation → customer →
-    orders → lineitem, dims broadcast, revenue rolled up per region."""
-    region = spark.read.parquet(f"{sf_dir}/region.parquet")
-    nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    cust = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    rev = F.sum(
-        (F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount"))).cast("decimal(18,4)")
-    ).cast("double")
-    return (
-        li.join(orders, li.l_orderkey == orders.o_orderkey)
-        .join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
-        .join(F.broadcast(nation), cust.c_nationkey == nation.n_nationkey)
-        .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-        .groupBy("r_name")
-        .agg(rev.alias("revenue"), F.count("*").cast("bigint").alias("n_items"))
-    )
-
-
-def q_user_top_events(spark, sf_dir):
-    """Window top-k: each user's 3 highest-value events
-    (row_number with deterministic tie-break)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        ev.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-        .select("user_id", "event_id", "event_type", F.col("rk").cast("int").alias("rk"))
-    )
-
-
-def q_event_sessions(spark, sf_dir):
-    """Sessionization: 30-min inactivity gap → new session (window
-    functions; at scale this is the watermarked streaming shape)."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    marked = ev.withColumn(
-        "new_session",
-        F.when(gap.isNull() | (gap > 1800), F.lit(1)).otherwise(F.lit(0)),
-    )
-    return (
-        marked.groupBy("user_id")
-        .agg(
-            F.sum("new_session").cast("bigint").alias("n_sessions"),
-            F.count("*").cast("bigint").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("total_value"),
-        )
-    )
-
-
-def q_event_type_rollup(spark, sf_dir):
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.countDistinct("user_id").cast("bigint").alias("n_users"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-    )
-
-
-def q_order_percentiles(spark, sf_dir):
-    """Exact interpolated percentiles per priority class — Spark's
-    percentile() and DuckDB's quantile_cont use the same linear
-    interpolation (verified bit-exact on this corpus)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    price = F.col("o_totalprice").cast("double")
-    return o.groupBy("o_orderpriority").agg(
-        F.percentile(price, 0.5).alias("p50"),
-        F.percentile(price, 0.95).alias("p95"),
-        F.count("*").cast("bigint").alias("n"),
-    )
-
-
-def q_revenue_rollup(spark, sf_dir):
-    """ROLLUP over (priority, status): per-group + subtotal + grand
-    total rows, dims coalesced to '(all)' so no NULLs reach the hash
-    compare; money summed through decimal then cast (order-free)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    return (
-        o.rollup("o_orderpriority", "o_orderstatus")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        .select(
-            F.coalesce("o_orderpriority", F.lit("(all)")).alias("priority"),
-            F.coalesce("o_orderstatus", F.lit("(all)")).alias("status"),
-            "total",
-            "n",
-        )
-    )
-
-
-def q_event_leadlag(spark, sf_dir):
-    """Per-user event-to-event gap seconds via lag() — the funnel/
-    dwell-time window shape; ties broken by event_id so the frame
-    order is total on both engines."""
-    from pyspark.sql import Window
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    # NTZ timestamps: unix_timestamp under the UTC session zone ==
-    # DuckDB epoch() on the same naive values
-    epoch = F.unix_timestamp(F.col("ts"))
-    prev = F.lag(epoch).over(w)
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.coalesce(epoch - prev, F.lit(-1)).cast("bigint").alias("secs_since_prev"),
-    )
-
-
-def q_source_drift(spark, sf_dir):
-    """Per-source distribution drift: total-variation distance between
-    each source's token distribution and the corpus distribution — the
-    mixture-QA alarm. Exact-integer numerator (absent-vocabulary terms
-    folded in algebraically, no source×vocab cross join); the single
-    final division is the only float op, so tv_dist is engine
-    bit-exact with no ordered folds (operators/stats.py)."""
-    from ctinexus_spark.operators.stats import distribution_drift
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    toks = docs.select(
-        "source", F.explode(F.split(F.col("text"), " ")).alias("token")
-    )
-    return distribution_drift(toks, "source", "token").select(
-        F.col("group").alias("source"), "n_tokens", "tv_dist"
-    )
+# --- corpus preparation -------------------------------------------------
 
 
 def q_stratified_sample(spark, sf_dir):
@@ -1529,58 +1349,6 @@ SELECT doc_id, n_chars FROM (
   FROM documents
 ) WHERE _rn = 1
 """,
-    "tpch_q1": """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS sum_disc_price,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-    "revenue_join": """
-SELECT c_mktsegment, o_orderpriority,
-       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment, o_orderpriority
-""",
-    "region_revenue": """
-SELECT r_name,
-       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,4))) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_items
-FROM lineitem
-JOIN orders ON l_orderkey = o_orderkey
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY r_name
-""",
-    "user_top_events": """
-SELECT user_id, event_id, event_type, CAST(rk AS INT) AS rk FROM (
-  SELECT user_id, event_id, event_type,
-         row_number() OVER (PARTITION BY user_id ORDER BY "value" DESC, event_id) AS rk
-  FROM events
-) WHERE rk <= 3
-""",
-    "event_sessions": """
-WITH marked AS (
-  SELECT user_id, "value",
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-)
-SELECT user_id,
-       CAST(sum(new_session) AS BIGINT) AS n_sessions,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-FROM marked GROUP BY user_id
-""",
     "stratified_sample": """
 SELECT doc_id, lang FROM documents
 WHERE substr(md5(CAST(doc_id AS VARCHAR)), 1, 4) <
@@ -1597,57 +1365,6 @@ WITH pos AS (
 SELECT doc_id, source,
        CAST(row_number() OVER (ORDER BY p, source, doc_id) AS BIGINT) AS mix_rank
 FROM pos
-""",
-    "order_percentiles": """
-SELECT o_orderpriority,
-       quantile_cont(CAST(o_totalprice AS DOUBLE), 0.5) AS p50,
-       quantile_cont(CAST(o_totalprice AS DOUBLE), 0.95) AS p95,
-       CAST(count(*) AS BIGINT) AS n
-FROM orders GROUP BY o_orderpriority
-""",
-    "revenue_rollup": """
-SELECT COALESCE(o_orderpriority, '(all)') AS priority,
-       COALESCE(o_orderstatus, '(all)') AS status,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-       CAST(count(*) AS BIGINT) AS n
-FROM orders GROUP BY ROLLUP (o_orderpriority, o_orderstatus)
-""",
-    "event_leadlag": """
-SELECT user_id, event_id,
-       CAST(COALESCE(CAST(floor(epoch(ts)) AS BIGINT) - lag(CAST(floor(epoch(ts)) AS BIGINT))
-              OVER (PARTITION BY user_id ORDER BY ts, event_id), -1) AS BIGINT)
-         AS secs_since_prev
-FROM events
-""",
-    "event_type_rollup": """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(sum(CAST("value" AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-FROM events GROUP BY event_type
-""",
-    # exact-integer numerator: every sum is BIGINT (order-free), the
-    # single division is the one float op — bit-exact by construction.
-    # DuckDB sum(BIGINT) returns HUGEINT: CAST each sum back.
-    "source_drift": """
-WITH tok AS (
-  SELECT source AS grp, unnest(str_split(text, ' ')) AS token FROM documents
-),
-cnt AS (
-  SELECT grp, token, CAST(count(*) AS BIGINT) AS c FROM tok GROUP BY grp, token
-),
-g_tot AS (SELECT grp, CAST(sum(c) AS BIGINT) AS n_g FROM cnt GROUP BY grp),
-t_tot AS (SELECT token, CAST(sum(c) AS BIGINT) AS ct FROM cnt GROUP BY token),
-grand AS (SELECT CAST(sum(c) AS BIGINT) AS nn FROM cnt),
-contrib AS (
-  SELECT cnt.grp, abs(cnt.c * nn - ct * n_g) - ct * n_g AS term
-  FROM cnt JOIN t_tot USING (token) JOIN g_tot USING (grp), grand
-),
-sv AS (SELECT grp, CAST(sum(term) AS BIGINT) AS s FROM contrib GROUP BY grp)
-SELECT sv.grp AS source, g_tot.n_g AS n_tokens,
-       CAST(g_tot.n_g * grand.nn + sv.s AS DOUBLE)
-         / CAST(2 * g_tot.n_g * grand.nn AS DOUBLE) AS tv_dist
-FROM sv JOIN g_tot USING (grp), grand
 """,
 }
 
@@ -1684,16 +1401,6 @@ QUERIES = {
     "url_ops": q_url_ops,
     "quality_gate": q_quality_gate,
     "text_dedupe": q_text_dedupe,
-    "tpch_q1": q_tpch_q1,
-    "revenue_join": q_revenue_join,
-    "region_revenue": q_region_revenue,
-    "user_top_events": q_user_top_events,
-    "event_sessions": q_event_sessions,
-    "event_type_rollup": q_event_type_rollup,
-    "order_percentiles": q_order_percentiles,
-    "revenue_rollup": q_revenue_rollup,
-    "event_leadlag": q_event_leadlag,
-    "source_drift": q_source_drift,
     "stratified_sample": q_stratified_sample,
     "mixture_plan": q_mixture_plan,
     "decontaminate": q_decontaminate,
@@ -1805,49 +1512,7 @@ ORACLES["mmr_topk"] = _mmr_sql(k=5, lam=0.7, candidates=20, nq=8)
 QUERIES["mmr_topk"] = q_mmr_topk
 
 
-# --- exact quantiles (round 5) ---------------------------------------
-
-
-def q_doc_len_quantiles(spark, sf_dir):
-    """Exact token-count quantiles of the document corpus — the
-    length-threshold profile (Gopher-style cuts) computed exactly via
-    (value, count) aggregation + running sum, instead of the
-    engine-specific percentile_approx sketch."""
-    from ctinexus_spark.operators import stats as ST
-    from ctinexus_spark.partitioning import ensure_parallelism
-
-    docs = ensure_parallelism(_docs(spark, sf_dir))
-    lens = docs.select(
-        F.size(F.split(F.col("text"), " ")).cast("bigint").alias("n_tokens")
-    )
-    return ST.exact_quantiles(
-        lens, "n_tokens", qs=(0.1, 0.25, 0.5, 0.75, 0.9, 0.99)
-    )
-
-
-ORACLES["doc_len_quantiles"] = """
-WITH v AS (
-  SELECT CAST(len(str_split(text, ' ')) AS BIGINT) AS value FROM documents
-),
-c AS (SELECT value, CAST(count(*) AS BIGINT) AS cnt FROM v GROUP BY value),
-cum AS (
-  SELECT value,
-         CAST(sum(cnt) OVER (ORDER BY value ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_le
-  FROM c
-),
-t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_total FROM c),
-qq AS (
-  SELECT unnest([0.1::DOUBLE, 0.25::DOUBLE, 0.5::DOUBLE,
-                 0.75::DOUBLE, 0.9::DOUBLE, 0.99::DOUBLE]) AS q
-)
-SELECT qq.q, min(cum.value) AS value, min(cum.n_le) AS n_le,
-       min(t.n_total) AS n_total
-FROM cum, t, qq
-WHERE cum.n_le >= CAST(ceil(qq.q * CAST(t.n_total AS DOUBLE)) AS BIGINT)
-GROUP BY qq.q
-"""
-
-QUERIES["doc_len_quantiles"] = q_doc_len_quantiles
+# --- exact near-dup join ---------------------------------------------
 
 
 def q_jaccard_pairs(spark, sf_dir):
@@ -1881,310 +1546,3 @@ WHERE 3 * i.n_shared >= 1 * (ca.n + cb.n)
 QUERIES["jaccard_pairs"] = q_jaccard_pairs
 
 
-def q_event_bursts(spark, sf_dir):
-    """Daily per-event-type burst flags: |c − μ| > 2σ in EXACT integer
-    arithmetic — q²·(n·c−S)² > p²·(n·SS−S²), no sqrt, no float
-    accumulation (operators/stats.burst_detection). dev_sq_ratio (the
-    squared z-score) is one IEEE division of integer-valued doubles.
-    ~150 daily cells at sf0.01, a handful flagged."""
-    from ctinexus_spark.operators.stats import burst_detection
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return burst_detection(ev)
-
-
-ORACLES["event_bursts"] = """
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-m AS (
-  SELECT key, CAST(count(*) AS BIGINT) AS n, CAST(sum(cnt) AS BIGINT) AS s,
-         CAST(sum(cnt * cnt) AS BIGINT) AS ss
-  FROM counts GROUP BY key
-)
-SELECT c.key AS event_type, CAST(c.bucket AS BIGINT) AS bucket, c.cnt, m.n,
-       CASE WHEN m.n * m.ss - m.s * m.s > 0
-            THEN CAST((m.n * c.cnt - m.s) * (m.n * c.cnt - m.s) AS DOUBLE)
-                   / CAST(m.n * m.ss - m.s * m.s AS DOUBLE)
-            ELSE 0.0::DOUBLE END AS dev_sq_ratio,
-       1 * (m.n * c.cnt - m.s) * (m.n * c.cnt - m.s)
-         > 4 * (m.n * m.ss - m.s * m.s) AS is_burst
-FROM counts c JOIN m USING (key)
-"""
-QUERIES["event_bursts"] = q_event_bursts
-
-
-def q_revenue_cube(spark, sf_dir):
-    """CUBE over (market segment, order status): all 4 grouping-set
-    combinations in one pass — the OLAP cross-tab the ROLLUP query
-    (revenue_rollup) doesn't produce. Dims coalesced to '(all)';
-    money through DECIMAL then DOUBLE (order-free, the rollup
-    precedent); one customer⇄orders equi-join feeds the cube."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    j = o.join(c, o["o_custkey"] == c["c_custkey"])
-    return (
-        j.cube("c_mktsegment", "o_orderstatus")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).cast("double").alias("total"),
-            F.count("*").cast("bigint").alias("n"),
-        )
-        .select(
-            F.coalesce("c_mktsegment", F.lit("(all)")).alias("segment"),
-            F.coalesce("o_orderstatus", F.lit("(all)")).alias("status"),
-            "total",
-            "n",
-        )
-    )
-
-
-ORACLES["revenue_cube"] = """
-SELECT coalesce(c_mktsegment, '(all)') AS segment,
-       coalesce(o_orderstatus, '(all)') AS status,
-       CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total,
-       CAST(count(*) AS BIGINT) AS n
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY CUBE (c_mktsegment, o_orderstatus)
-"""
-QUERIES["revenue_cube"] = q_revenue_cube
-
-
-def q_idle_customers(spark, sf_dir):
-    """Customers with NO orders (LEFT ANTI join) plus each one's
-    market segment and balance — the classical exclusion-join shape
-    (at scale an anti join is the broadcast/DPP-friendly form of the
-    NOT-IN subquery, which naive plans turn into a nested loop)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_custkey")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return (
-        c.join(o, c["c_custkey"] == o["o_custkey"], "left_anti")
-        .select(
-            "c_custkey",
-            "c_mktsegment",
-            F.col("c_acctbal").cast("double").alias("acctbal"),
-        )
-    )
-
-
-ORACLES["idle_customers"] = """
-SELECT c_custkey, c_mktsegment, CAST(c_acctbal AS DOUBLE) AS acctbal
-FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-"""
-QUERIES["idle_customers"] = q_idle_customers
-
-
-def q_event_decay(spark, sf_dir):
-    """Half-life-decayed trending counters per event type (half-life 7
-    days over daily buckets, window 64) — stats.decayed_counts. The
-    weight table is ONE Python-computed constant list embedded into
-    both engines ({v!r}::DOUBLE — engine pow() could
-    differ in the last ulp); terms fold in pinned bucket order."""
-    from ctinexus_spark.operators.stats import decayed_counts
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return decayed_counts(ev)
-
-
-def _decay_sql(half_life: float, window: int) -> str:
-    from ctinexus_spark.operators.stats import decay_weights
-
-    values = ", ".join(
-        f"(CAST({o} AS BIGINT), {w!r}::DOUBLE)"
-        for o, w in decay_weights(half_life, window)
-    )
-    return f"""
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-ref AS (SELECT max(bucket) AS ref_bucket FROM counts),
-wt(off, weight) AS (VALUES {values}),
-terms AS (
-  SELECT c.key, r.ref_bucket, c.bucket, c.cnt,
-         CAST(c.cnt AS DOUBLE) * w.weight AS term
-  FROM counts c CROSS JOIN ref r
-  JOIN wt w ON w.off = r.ref_bucket - c.bucket
-)
-SELECT key AS event_type, CAST(ref_bucket AS BIGINT) AS ref_bucket,
-       CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(cnt) AS BIGINT) AS n_events,
-       list_sum(list(term ORDER BY bucket)) AS score
-FROM terms GROUP BY key, ref_bucket
-"""
-
-
-ORACLES["event_decay"] = _decay_sql(half_life=7.0, window=64)
-QUERIES["event_decay"] = q_event_decay
-
-
-def q_event_cusum(spark, sf_dir):
-    """CUSUM drift chart over daily per-type event counts — sustained
-    level-shift detection via the prefix identity S_t = P_t −
-    least(0, min prefix P) (stats.cusum_drift), all-BIGINT window
-    arithmetic, k = per-key floor-mean. Complements event_bursts
-    (point outliers vs accumulated drift)."""
-    from ctinexus_spark.operators.stats import cusum_drift
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return cusum_drift(ev, threshold=20)
-
-
-ORACLES["event_cusum"] = """
-WITH counts AS (
-  SELECT event_type AS key, epoch_us(ts) // 86400000000 AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY event_type, epoch_us(ts) // 86400000000
-),
-kref AS (SELECT key, CAST(sum(cnt) // count(*) AS BIGINT) AS k FROM counts GROUP BY key),
-prefixed AS (
-  SELECT c.key, c.bucket, c.cnt, kref.k,
-         sum(c.cnt - kref.k) OVER (
-           PARTITION BY c.key ORDER BY c.bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS p
-  FROM counts c JOIN kref USING (key)
-),
-scored AS (
-  SELECT key, bucket, cnt, k, p,
-         min(p) OVER (
-           PARTITION BY key ORDER BY bucket
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS mp
-  FROM prefixed
-)
-SELECT key AS event_type, CAST(bucket AS BIGINT) AS bucket, cnt, k,
-       CAST(p - least(CAST(0 AS BIGINT), mp) AS BIGINT) AS cusum,
-       (p - least(CAST(0 AS BIGINT), mp)) > 20 AS alarm
-FROM scored
-"""
-QUERIES["event_cusum"] = q_event_cusum
-
-
-def q_order_zorder(spark, sf_dir):
-    """Z-order (Morton) clustering keys over orders: interleave
-    (o_custkey, order epoch-day) — the lakehouse OPTIMIZE ZORDER
-    primitive that makes file min/max stats selective for range
-    predicates on EITHER dimension (prepare.zorder_key, pure-JVM
-    shift/mask fold, exact BIGINT). Sorting/writing by zkey is the
-    layout step; this query pins the key math cross-engine."""
-    from ctinexus_spark.operators.prepare import zorder_key
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    day = "CAST(unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000 AS BIGINT)"
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.expr(day).alias("order_day"),
-        zorder_key("o_custkey", day).alias("zkey"),
-    )
-
-
-ORACLES["order_zorder"] = """
-WITH base AS (
-  SELECT o_orderkey, o_custkey,
-         CAST(epoch_us(CAST(o_orderdate AS TIMESTAMP)) // 86400000000 AS BIGINT) AS order_day
-  FROM orders
-)
-SELECT o_orderkey, o_custkey, order_day,
-       CAST(list_sum(list_transform(range(0, 21), i ->
-         (((o_custkey >> CAST(i AS INT)) % 2) << CAST(i * 2 AS INT))
-         + (((order_day >> CAST(i AS INT)) % 2) << CAST(i * 2 + 1 AS INT))
-       )) AS BIGINT) AS zkey
-FROM base
-"""
-QUERIES["order_zorder"] = q_order_zorder
-
-
-def q_user_event_pivot(spark, sf_dir):
-    """PIVOT: per-user event counts widened to one column per event
-    type (the 5 types pinned explicitly — an unpinned pivot scans
-    once to discover values; pinning keeps the plan single-pass) —
-    the classical wide-format operator. Integer counts, 0 for absent
-    combinations."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    types = ["click", "error", "purchase", "signup", "view"]
-    out = (
-        ev.groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(F.count(F.lit(1)))  # count(*) is invalid inside a pivot agg
-    )
-    return out.select(
-        "user_id",
-        *[F.coalesce(F.col(t), F.lit(0)).cast("bigint").alias(f"n_{t}") for t in types],
-    )
-
-
-ORACLES["user_event_pivot"] = """
-SELECT user_id,
-       CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
-       CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
-       CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
-       CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
-       CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view
-FROM events GROUP BY user_id
-"""
-QUERIES["user_event_pivot"] = q_user_event_pivot
-
-
-def q_user_event_unpivot(spark, sf_dir):
-    """UNPIVOT (melt): the wide pivot table back to long form via the
-    native unpivot operator, zero-count cells dropped — the round
-    trip proves pivot+unpivot lose nothing, and the oracle is the
-    DIRECT long-form aggregation (never pivoted at all)."""
-    wide = q_user_event_pivot(spark, sf_dir)
-    types = ["click", "error", "purchase", "signup", "view"]
-    long = wide.unpivot(
-        "user_id",
-        [f"n_{t}" for t in types],
-        "event_type",
-        "n",
-    )
-    return long.filter(F.col("n") > 0).select(
-        "user_id",
-        F.expr("substring(event_type, 3)").alias("event_type"),
-        F.col("n").cast("bigint").alias("n"),
-    )
-
-
-ORACLES["user_event_unpivot"] = """
-SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n
-FROM events GROUP BY user_id, event_type
-"""
-QUERIES["user_event_unpivot"] = q_user_event_unpivot
-
-
-def q_event_props_k(spark, sf_dir):
-    """Semi-structured extraction: parse the JSON `props` column
-    (get_json_object path $.k) and profile k per event type — the
-    JSON-column shape every event pipeline carries. All-integer
-    outputs; the oracle uses DuckDB's independent JSON reader."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return (
-        ev.select("event_type", k.alias("k"))
-        .filter(F.col("k").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.min("k").alias("k_min"),
-            F.max("k").alias("k_max"),
-            F.sum("k").cast("bigint").alias("k_sum"),
-            F.count_distinct(F.col("k")).cast("bigint").alias("k_distinct"),
-        )
-    )
-
-
-ORACLES["event_props_k"] = """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(min(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_min,
-       CAST(max(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_max,
-       CAST(sum(CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
-       CAST(count(DISTINCT CAST(json_extract(props, '$.k') AS BIGINT)) AS BIGINT) AS k_distinct
-FROM events
-WHERE json_extract(props, '$.k') IS NOT NULL
-GROUP BY event_type
-"""
-QUERIES["event_props_k"] = q_event_props_k

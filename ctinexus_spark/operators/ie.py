@@ -58,25 +58,6 @@ def attach_demos(
     return docs.withColumn("demo_ids", _topk(F.col("text_norm")))
 
 
-def attach_random_demos(
-    docs: DataFrame,
-    demo_ids: list[str],
-    config: PipelineConfig | None = None,
-) -> DataFrame:
-    """Random demonstration retriever (reference
-    llm_processor.py:1283-1307 — a latent dead path there; here a
-    seeded shuffle): every document gets the same k random demos,
-    deterministic under config.random_seed."""
-    import random
-
-    cfg = config or PipelineConfig()
-    rng = random.Random(cfg.random_seed)
-    picked = list(demo_ids)
-    rng.shuffle(picked)
-    picked = picked[: cfg.shot]
-    return docs.withColumn("demo_ids", F.array(*[F.lit(d) for d in picked]))
-
-
 def per_document_rows(docs: DataFrame, text_col: str, rows_of, schema: str) -> DataFrame:
     """docs → one row per element of `rows_of`'s per-document lists,
     with the document's url prepended.

@@ -492,28 +492,3 @@ def mixture_plan(
         .withColumn("mix_rank", F.col("_off") + F.col("_lrn"))
         .drop("_pid", "_lrn", "_off", "_pos")
     )
-
-
-def zorder_key(x: str, y: str, bits: int = 21):
-    """Column expression: the Z-order (Morton) key of two non-negative
-    integer columns (given by NAME or SQL sub-expression) —
-    bit-interleave x into even positions and y into odd ones, `bits`
-    bits each (42-bit key at the default; raise `bits` for
-    >2M-cardinality dimensions).
-
-    Z-ordering is the lakehouse multi-column clustering primitive
-    (Delta/Iceberg OPTIMIZE ZORDER): sorting files by this key makes
-    min/max file stats selective for range predicates on EITHER
-    dimension, so a 2D box query prunes to a near-contiguous key
-    range instead of scanning everything sorted by only the first
-    column. Pure JVM fold (no UDF), exact BIGINT arithmetic — the
-    same shift/mask chain is expressible verbatim in any engine.
-    """
-    # SQL expr, not the Python shiftleft() wrapper: the wrapper only
-    # takes literal shift amounts, while the SQL shiftleft(a, b)
-    # accepts the lambda variable
-    return F.expr(
-        f"aggregate(sequence(0, {bits - 1}), CAST(0 AS BIGINT), (acc, i) -> acc"
-        f" + shiftleft(shiftright(CAST({x} AS BIGINT), i) % 2, i * 2)"
-        f" + shiftleft(shiftright(CAST({y} AS BIGINT), i) % 2, i * 2 + 1))"
-    )

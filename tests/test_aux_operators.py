@@ -145,17 +145,6 @@ def test_ingest_html_null_bytes(spark):
     assert rows[0].summary
 
 
-def test_random_demo_retriever_deterministic(spark):
-    from ctinexus_spark.config import PipelineConfig
-    from ctinexus_spark.operators.ie import attach_random_demos
-
-    docs = spark.createDataFrame([("u1", "t")], "url string, text_norm string")
-    a = attach_random_demos(docs, [f"d{i}" for i in range(10)], PipelineConfig()).collect()
-    b = attach_random_demos(docs, [f"d{i}" for i in range(10)], PipelineConfig()).collect()
-    assert a[0].demo_ids == b[0].demo_ids
-    assert len(a[0].demo_ids) == 3
-
-
 def test_barrier_prefers_reliable_checkpoint_when_dir_set(spark, monkeypatch):
     """barrier() = localCheckpoint in local mode, but must switch to
     reliable .checkpoint() when the session has a checkpoint dir (so

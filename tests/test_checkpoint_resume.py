@@ -6,7 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from ctinexus_spark.checkpoint import StageStore, with_lineage
+from ctinexus_spark.checkpoint import StageStore
 from ctinexus_spark.metrics import measure_partitions
 
 
@@ -238,13 +238,6 @@ def test_iceberg_store_gated_on_catalog(spark):
     from ctinexus_spark.checkpoint import IcebergStageStore
 
     assert not IcebergStageStore.is_available(spark, "iceberg")
-
-
-def test_lineage_columns(spark, docs):
-    got = with_lineage(docs, "ie")
-    rows = got.collect()
-    assert all(r._stage == "ie" for r in rows)
-    assert all(r._partition_id >= 0 for r in rows)
 
 
 def test_metrics_rows(spark, docs):

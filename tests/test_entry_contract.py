@@ -16,10 +16,7 @@ import __spark_entry__ as entry_mod
 from ctinexus_spark.demos import REFERENCE_DEMO_DIR
 
 SF_DIR = "/root/testdata/sf0.01"
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+TABLES = ["documents", "embeddings"]
 
 
 @pytest.fixture(scope="module")

@@ -376,37 +376,3 @@ def test_domain_cap_matches_naive_window(spark):
         .collect()
     )
     assert got == naive and len(got) == 15
-
-
-def test_zorder_key_matches_python_and_box_contiguity(spark):
-    """zkey == the Python bit-interleave; and the defining locality
-    property: points of a 2^k-aligned box occupy ONE contiguous zkey
-    range (that contiguity is exactly why sorted-file min/max stats
-    prune 2D range predicates)."""
-    import random
-
-    from ctinexus_spark.operators.prepare import zorder_key
-
-    def interleave(x, y, bits=21):
-        z = 0
-        for i in range(bits):
-            z |= ((x >> i) & 1) << (2 * i)
-            z |= ((y >> i) & 1) << (2 * i + 1)
-        return z
-
-    rng = random.Random(41)
-    pts = [(rng.randrange(1 << 16), rng.randrange(1 << 16)) for _ in range(300)]
-    # an aligned 16x16 box plus every point of a small aligned 4x4 box
-    pts += [(32 + dx, 64 + dy) for dx in range(4) for dy in range(4)]
-    df = spark.createDataFrame(pts, ["x", "y"]).select(
-        "x", "y", zorder_key("x", "y").alias("zkey")
-    )
-    rows = df.collect()
-    for r in rows:
-        assert r.zkey == interleave(r.x, r.y)
-    # contiguity: the COMPLETE aligned 4x4 box at (32, 64) spans
-    # exactly 16 consecutive zkeys — no outside point can interleave
-    # into the middle of an aligned box's range
-    box = sorted(r.zkey for r in rows if 32 <= r.x < 36 and 64 <= r.y < 68)
-    assert len(set(box)) == 16
-    assert box[-1] - box[0] == 15
