@@ -72,7 +72,6 @@ CHANGED_THIS_ROUND = [
     # operator-internal rewrites (same integers, new dataflow):
     "jaccard_pairs",
     "shingle_overlap",
-    "winnow_fp",
 ]
 
 # Per-round rotation fronts (the driver window = first WINDOW names of
@@ -80,21 +79,22 @@ CHANGED_THIS_ROUND = [
 # empty rotation. Keep every past round's list: the union-coverage
 # test replays them. Queries deleted since (the part_* graph-analytics,
 # mm_* multimodal, sketch, PQ, BM25 and event-analytics rows, the
-# quantile/drift/burst/decay/CUSUM stats monitors, and the TPC-H,
-# e-commerce and event-table queries) are dropped from the lists, so a
-# recorded window now fills its freed slots in natural order.
+# quantile/drift/burst/decay/CUSUM stats monitors, the TPC-H,
+# e-commerce and event-table queries, and the text-analysis queries:
+# token stats, quality, language features, fingerprints, Gopher rules,
+# PII scrub, LM/DSIR scoring, langid, column profile and the
+# vocabulary/BPE/PMI tables) are dropped from the lists, so a recorded
+# window now fills its freed slots in natural order.
 ROTATION_HISTORY: dict[str, list[str]] = {
     "r01": [],
     "r02": [],
     "r03": [],
     "r04": [
-        "bpe_merges", "token_pmi", "dup_grams", "semantic_dedup",
-        "cdc_chunks", "langid",
-        "dedup_incremental", "table_profile", "pack_plan", "simhash",
-        "simhash_candidates", "ivf_assign", "ivf_topk",
-        "dedup_clusters_cc", "dedup_keeplist", "quality_gate",
+        "dup_grams", "semantic_dedup", "cdc_chunks", "dedup_incremental",
+        "pack_plan", "simhash", "simhash_candidates", "ivf_assign",
+        "ivf_topk", "dedup_clusters_cc", "dedup_keeplist", "quality_gate",
         "text_dedupe", "stratified_sample", "mixture_plan", "decontaminate",
-        "vocab_topk", "line_dedup", "domain_cap", "dsir_features",
+        "line_dedup", "domain_cap",
     ],
     # round 5: the changed set first, then the rows whose only greens
     # date to r01-r03 (oldest coverage), then the r04 KG block.
@@ -105,9 +105,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
         "url_ops",
         "doc_sample", "doc_text_norm", "ie_triples", "ie_counts",
         "et_typed", "ea_mentions", "ea_entities", "lp_graph",
-        "kg_triples", "token_stats", "quality", "lang_features",
-        "gopher_rules", "repetition_ratios", "lm_scores", "doc_chunks",
-        "redact_pii", "fingerprints", "bpe_tokens", "winnow_fp",
+        "kg_triples", "doc_chunks",
         "dedup_exact", "minhash", "lsh_bands", "lsh_candidates",
         "shingle_overlap", "emb_cosine_pairs", "ann_topk",
         "lsh_buckets", "lsh_topk", "knn_vote",
@@ -124,9 +122,7 @@ ROTATION_HISTORY: dict[str, list[str]] = {
     # rows the verdict named.
     "r06": CHANGED_THIS_ROUND + [
         "doc_text_norm", "ie_triples", "ie_counts",
-        "token_stats", "quality", "lang_features", "gopher_rules",
-        "repetition_ratios", "lm_scores", "doc_chunks", "redact_pii",
-        "fingerprints", "bpe_tokens", "dedup_exact", "minhash",
+        "doc_chunks", "dedup_exact", "minhash",
         "lsh_bands", "lsh_candidates", "emb_cosine_pairs", "ann_topk",
         "lsh_buckets", "lsh_topk", "knn_vote",
         "ivf_topk",

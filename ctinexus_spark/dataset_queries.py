@@ -2,10 +2,6 @@
 oracle twins (extends entry_queries; merged by __spark_entry__).
 
 Families:
-- text analysis : token stats, quality scores, lang features,
-                  fingerprints, BPE-piece estimates, winnowing
-                  rolling-hash fingerprints, Gopher quality rules +
-                  repetition filters (operators/textops.py)
 - dedup         : exact, MinHash signatures, LSH bands/candidates
                   (bucket-capped), candidate-gated n-gram Jaccard,
                   SimHash + hamming bands, LSH-gated embedding
@@ -29,8 +25,7 @@ from pyspark.sql import functions as F
 
 from ctinexus_spark.operators import dedup as D
 from ctinexus_spark.operators import similarity as S
-from ctinexus_spark.operators import textops as T
-from ctinexus_spark.operators.textops import STOPWORD_LIST
+from ctinexus_spark.stopwords import STOPWORD_LIST
 
 
 def _docs(spark, sf_dir):
@@ -41,66 +36,7 @@ def _emb(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 
 
-# --- text analysis ------------------------------------------------------
-
-
-def q_token_stats(spark, sf_dir):
-    return T.token_stats(_docs(spark, sf_dir))
-
-
-def q_quality(spark, sf_dir):
-    return T.quality_scores(_docs(spark, sf_dir))
-
-
-def q_lang_features(spark, sf_dir):
-    return T.lang_features(_docs(spark, sf_dir))
-
-
-def q_fingerprints(spark, sf_dir):
-    return T.fingerprints(_docs(spark, sf_dir))
-
-
-def q_bpe_tokens(spark, sf_dir):
-    return T.bpe_token_estimate(_docs(spark, sf_dir))
-
-
-def q_winnow_fp(spark, sf_dir):
-    return T.winnowed_fingerprints(_docs(spark, sf_dir))
-
-
 # --- dedup --------------------------------------------------------------
-
-
-def q_gopher_rules(spark, sf_dir):
-    return T.gopher_rules(_docs(spark, sf_dir))
-
-
-def q_repetition_ratios(spark, sf_dir):
-    return T.repetition_ratios(_docs(spark, sf_dir))
-
-
-def q_redact_pii(spark, sf_dir):
-    """PII scrub over documents with deterministic synthesized PII
-    appended (the driver corpus carries none): email + IPv4 + SSN per
-    doc, so placeholders and counts are value-rich under the oracle."""
-    d = F.col("doc_id").cast("string")
-    suffix = F.concat(
-        F.lit(" contact intruder"), d, F.lit("@malicious-"),
-        (F.col("doc_id") % 7).cast("string"),
-        F.lit(".example.com from 10."),
-        (F.col("doc_id") % 250).cast("string"),
-        F.lit(".0.9 ref 123-45-6789"),
-    )
-    docs = _docs(spark, sf_dir).withColumn("text", F.concat(F.col("text"), suffix))
-    return T.redact_pii(docs)
-
-
-def q_lm_scores(spark, sf_dir):
-    # mean_prob is the engine-exact column; log2_ppl stays Spark-side
-    # (libm vs JVM log differ in last-ulp)
-    return T.bigram_lm_scores(_docs(spark, sf_dir)).select(
-        "doc_id", "n_bigrams", "mean_prob"
-    )
 
 
 def q_doc_chunks(spark, sf_dir):
@@ -381,64 +317,12 @@ def q_domain_cap(spark, sf_dir):
     )
 
 
-def q_dsir_features(spark, sf_dir):
-    """DSIR-shaped importance features: every doc scored under a
-    bigram LM trained on the lang='en' target subset vs one trained on
-    the full corpus (the data-selection likelihood-ratio shape).
-    log_weight is informational-only and kept out of the hash-checked
-    projection."""
-    docs = _docs(spark, sf_dir)
-    return T.dsir_features(docs, docs.filter(F.col("lang") == "en")).select(
-        "doc_id", "n_bigrams", "mean_p_target", "mean_p_corpus"
-    )
-
-
-def q_vocab_topk(spark, sf_dir):
-    """Top-20 token-frequency vocabulary (tokenizer-induction step
-    one); global top-k planned as TakeOrderedAndProject."""
-    return T.vocab_topk(_docs(spark, sf_dir), k=20)
-
-
 def q_cdc_chunks(spark, sf_dir):
     """Content-defined chunking: boundaries where a token's md5 ends
     in nibble 0 (1/16) — chunk ids stable under upstream edits."""
     from ctinexus_spark.operators.prepare import cdc_chunks
 
     return cdc_chunks(_docs(spark, sf_dir))
-
-
-def q_langid(spark, sf_dir):
-    """Self-trained TextCat trigram language ID: per-lang top-100
-    trigram profiles from the labeled corpus, argmax profile hits.
-    NOTE the synthetic corpus's 'languages' all share one 31-token
-    vocabulary (no real language signal), so accuracy here (~0.27) is
-    the data's ceiling; the oracle checks the mechanics exactly and
-    tests/test_textops.py pins real-signal behavior on genuinely
-    distinct languages."""
-    return T.langid_trigram(_docs(spark, sf_dir))
-
-
-def q_table_profile(spark, sf_dir):
-    """Single-pass column profile of the documents table (null counts,
-    distinct counts, lexicographic string min/max per column) — the
-    data-quality health check run before processing a drop."""
-    return T.profile_columns(
-        spark.read.parquet(f"{sf_dir}/documents.parquet"),
-        ["doc_id", "text", "lang", "source", "n_chars"],
-    )
-
-
-def q_bpe_merges(spark, sf_dir):
-    """Top-100 adjacent pre-tokenization piece pairs — the BPE merge-
-    candidate table (the count a BPE trainer maximizes per merge)."""
-    return T.bpe_merge_pairs(_docs(spark, sf_dir), k=100)
-
-
-def q_token_pmi(spark, sf_dir):
-    """Top-100 adjacent-token collocations by the PMI ratio
-    p(a,b)/(p(a)p(b)) — phrase-mining over the corpus; the ratio is a
-    fixed-order IEEE chain so both engines agree bit-for-bit."""
-    return T.token_pmi(_docs(spark, sf_dir), min_count=3, k=100)
 
 
 def q_dup_grams(spark, sf_dir):
@@ -562,23 +446,6 @@ _BUCKET_SQL = "concat(" + ", ".join(
 ) + ")"
 
 ORACLES = {
-    "token_stats": f"""
-SELECT doc_id,
-       CAST(len({_TOKS}) AS BIGINT) AS n_tokens,
-       CAST(length(text) AS BIGINT) AS n_chars,
-       CAST(len(list_distinct({_TOKS})) AS BIGINT) AS n_distinct_tokens
-FROM documents
-""",
-    "quality": f"""
-SELECT doc_id,
-       CAST(len(list_filter({_TOKS}, w -> w IN ({_STOPS}))) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE) AS stopword_ratio,
-       CAST(length(text) - (len({_TOKS}) - 1) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE) AS mean_token_len,
-       CAST(len(list_distinct({_TOKS})) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE) AS distinct_ratio
-FROM documents
-""",
     "doc_chunks": """
 WITH tk AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
 nc AS (
@@ -679,152 +546,6 @@ FROM (
 )
 WHERE r <= 10
 """,
-    "vocab_topk": """
-SELECT token, freq, CAST(row_number() OVER (ORDER BY freq DESC, token) AS INT) AS rank
-FROM (
-  SELECT token, CAST(count(*) AS BIGINT) AS freq
-  FROM (SELECT unnest(str_split(text, ' ')) AS token FROM documents)
-  GROUP BY token
-)
-ORDER BY freq DESC, token
-LIMIT 20
-""",
-    "lm_scores": """
-WITH tk AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-words AS (SELECT unnest(l) AS w FROM tk),
-vocab AS (SELECT count(DISTINCT w) AS v FROM words),
-c1 AS (SELECT w AS w1, count(*) AS c1 FROM words GROUP BY w),
-bg AS (
-  SELECT doc_id, CAST(i - 1 AS INT) AS pos, l[i] AS w1, l[i + 1] AS w2
-  FROM tk, unnest(range(1, len(l))) t(i)
-  WHERE len(l) >= 2
-),
-c2 AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-scored AS (
-  SELECT b.doc_id, b.pos,
-         CAST(c2.c2 + 1 AS DOUBLE) / CAST(c1.c1 + (SELECT v FROM vocab) AS DOUBLE) AS p
-  FROM bg b JOIN c2 ON b.w1 = c2.w1 AND b.w2 = c2.w2 JOIN c1 ON b.w1 = c1.w1
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       list_sum(list(p ORDER BY pos)) / count(*) AS mean_prob
-FROM scored GROUP BY doc_id
-""",
-    "dsir_features": """
-WITH tk AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents),
-bg AS (
-  SELECT doc_id, CAST(i - 1 AS INT) AS pos, l[i] AS w1, l[i + 1] AS w2
-  FROM tk, unnest(range(1, len(l))) t(i)
-  WHERE len(l) >= 2
-),
-words_c AS (SELECT unnest(l) AS w FROM tk),
-vocab_c AS (SELECT count(DISTINCT w) AS v FROM words_c),
-c1_c AS (SELECT w AS w1, count(*) AS c1 FROM words_c GROUP BY w),
-c2_c AS (SELECT w1, w2, count(*) AS c2 FROM bg GROUP BY w1, w2),
-tk_t AS (SELECT doc_id, str_split(text, ' ') AS l FROM documents WHERE lang = 'en'),
-bg_t AS (
-  SELECT l[i] AS w1, l[i + 1] AS w2
-  FROM tk_t, unnest(range(1, len(l))) t(i)
-  WHERE len(l) >= 2
-),
-words_t AS (SELECT unnest(l) AS w FROM tk_t),
-vocab_t AS (SELECT count(DISTINCT w) AS v FROM words_t),
-c1_t AS (SELECT w AS w1, count(*) AS c1 FROM words_t GROUP BY w),
-c2_t AS (SELECT w1, w2, count(*) AS c2 FROM bg_t GROUP BY w1, w2),
-scored AS (
-  SELECT b.doc_id, b.pos,
-         CAST(coalesce(ct2.c2, 0) + 1 AS DOUBLE)
-           / CAST(coalesce(ct1.c1, 0) + (SELECT v FROM vocab_t) AS DOUBLE) AS pt,
-         CAST(cc2.c2 + 1 AS DOUBLE)
-           / CAST(cc1.c1 + (SELECT v FROM vocab_c) AS DOUBLE) AS pc
-  FROM bg b
-  LEFT JOIN c2_t ct2 ON b.w1 = ct2.w1 AND b.w2 = ct2.w2
-  LEFT JOIN c1_t ct1 ON b.w1 = ct1.w1
-  JOIN c2_c cc2 ON b.w1 = cc2.w1 AND b.w2 = cc2.w2
-  JOIN c1_c cc1 ON b.w1 = cc1.w1
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       list_sum(list(pt ORDER BY pos)) / count(*) AS mean_p_target,
-       list_sum(list(pc ORDER BY pos)) / count(*) AS mean_p_corpus
-FROM scored GROUP BY doc_id
-""",
-    "gopher_rules": f"""
-SELECT doc_id,
-       CAST(len({_TOKS}) AS BIGINT) AS n_words,
-       CAST(length(text) - (len({_TOKS}) - 1) AS DOUBLE) / len({_TOKS}) AS mean_word_len,
-       CAST(len(list_filter({_TOKS}, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE)
-         / len({_TOKS}) AS frac_words_alpha,
-       CAST(len(list_intersect(list_distinct(list_transform({_TOKS}, w -> lower(w))),
-                ['the','be','to','of','and','that','have','with'])) AS BIGINT)
-         AS required_stop_hits,
-       CAST(length(text) - length(regexp_replace(text, '[#…]', '', 'g')) AS DOUBLE)
-         / len({_TOKS}) AS symbol_ratio,
-       (len({_TOKS}) >= 50 AND len({_TOKS}) <= 100000
-        AND CAST(length(text) - (len({_TOKS}) - 1) AS DOUBLE) / len({_TOKS}) >= 3.0
-        AND CAST(length(text) - (len({_TOKS}) - 1) AS DOUBLE) / len({_TOKS}) <= 10.0
-        AND CAST(len(list_filter({_TOKS}, w -> regexp_matches(w, '[A-Za-z]'))) AS DOUBLE)
-              / len({_TOKS}) >= 0.8
-        AND len(list_intersect(list_distinct(list_transform({_TOKS}, w -> lower(w))),
-                ['the','be','to','of','and','that','have','with'])) >= 2
-        AND CAST(length(text) - length(regexp_replace(text, '[#…]', '', 'g')) AS DOUBLE)
-              / len({_TOKS}) <= 0.1) AS passes_gopher
-FROM documents
-""",
-    "repetition_ratios": f"""
-WITH words AS (SELECT doc_id, unnest({_TOKS}) AS gram FROM documents),
-wc AS (SELECT doc_id, gram, count(*) AS c FROM words GROUP BY doc_id, gram),
-wtop AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS top_word_frac
-         FROM wc GROUP BY doc_id),
-bigr AS (
-  SELECT doc_id, unnest(
-    CASE WHEN len({_TOKS}) >= 2 THEN
-      list_transform(range(1, len({_TOKS})), i -> {_TOKS}[i] || ' ' || {_TOKS}[i + 1])
-    ELSE CAST([] AS VARCHAR[]) END) AS gram
-  FROM documents
-),
-bc AS (SELECT doc_id, gram, count(*) AS c FROM bigr GROUP BY doc_id, gram),
-btop AS (SELECT doc_id, CAST(max(c) AS DOUBLE) / CAST(sum(c) AS DOUBLE) AS top_bigram_frac
-         FROM bc GROUP BY doc_id)
-SELECT w.doc_id, w.top_word_frac, b.top_bigram_frac
-FROM wtop w JOIN btop b ON w.doc_id = b.doc_id
-""",
-    "redact_pii": r"""
-WITH aug AS (SELECT doc_id, text || ' contact intruder' || CAST(doc_id AS VARCHAR) || '@malicious-' || CAST(doc_id % 7 AS VARCHAR) || '.example.com from 10.' || CAST(doc_id % 250 AS VARCHAR) || '.0.9 ref 123-45-6789' AS text FROM documents)
-SELECT doc_id,
-       regexp_replace(regexp_replace(regexp_replace(regexp_replace(text, $$[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$$, '<EMAIL>', 'g'), $$\b(?:\d{1,3}\.){3}\d{1,3}\b$$, '<IP>', 'g'), $$\+\d{1,3}[ -]\d{2,4}[ -]\d{3,4}[ -]\d{3,4}$$, '<PHONE>', 'g'), $$\b\d{3}-\d{2}-\d{4}\b$$, '<SSN>', 'g') AS redacted_text,
-       CAST(len(regexp_extract_all(text, $$[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}$$)) AS BIGINT) AS n_email,
-       CAST(len(regexp_extract_all(text, $$\b(?:\d{1,3}\.){3}\d{1,3}\b$$)) AS BIGINT) AS n_ipv4,
-       CAST(len(regexp_extract_all(text, $$\+\d{1,3}[ -]\d{2,4}[ -]\d{3,4}[ -]\d{3,4}$$)) AS BIGINT) AS n_phone,
-       CAST(len(regexp_extract_all(text, $$\b\d{3}-\d{2}-\d{4}\b$$)) AS BIGINT) AS n_ssn
-FROM aug
-""",
-    "lang_features": f"""
-SELECT doc_id,
-       CAST(len(list_filter({_TOKS}, w -> lower(w) IN ({_STOPS}))) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE) AS en_stopword_rate,
-       CAST(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) AS DOUBLE)
-         / CAST(length(text) AS DOUBLE) AS ascii_letter_ratio
-FROM documents
-""",
-    "fingerprints": """
-SELECT doc_id, md5(text) AS fingerprint FROM documents
-""",
-    "bpe_tokens": f"""
-SELECT doc_id,
-       CAST(len({_TOKS}) AS BIGINT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(text, '{T.BPE_SPLIT_PATTERN}')) AS BIGINT) AS n_bpe_pieces,
-       CAST(len(regexp_extract_all(text, '{T.BPE_SPLIT_PATTERN}')) AS DOUBLE)
-         / CAST(len({_TOKS}) AS DOUBLE) AS pieces_per_word
-FROM documents
-""",
-    "table_profile": " UNION ALL ".join(
-        f"""SELECT '{c}' AS "column",
-       CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT {c}) AS BIGINT) AS n_distinct,
-       min(CAST({c} AS VARCHAR)) AS min_value,
-       max(CAST({c} AS VARCHAR)) AS max_value
-FROM documents"""
-        for c in ["doc_id", "text", "lang", "source", "n_chars"]
-    ),
     "cdc_chunks": f"""
 WITH pos AS (
   SELECT doc_id, i - 1 AS pos, l[i] AS tok,
@@ -841,86 +562,6 @@ SELECT doc_id, chunk_idx,
        array_to_string(list(tok ORDER BY pos), ' ') AS chunk_text,
        CAST(count(*) AS BIGINT) AS n_tokens
 FROM ch GROUP BY doc_id, chunk_idx
-""",
-    "langid": f"""
-WITH tri AS (
-  SELECT doc_id, lang, substr(text, i, 3) AS t
-  FROM documents, unnest(range(1, length(text) - 1)) u(i)
-  WHERE length(text) >= 3
-),
-counts AS (SELECT lang AS plang, t, count(*) AS c FROM tri GROUP BY lang, t),
-prof AS (
-  SELECT plang, t FROM (
-    SELECT plang, t, row_number() OVER (PARTITION BY plang ORDER BY c DESC, t) AS r
-    FROM counts
-  ) WHERE r <= 100
-),
-dt AS (SELECT DISTINCT doc_id, t FROM tri),
-hits AS (
-  SELECT dt.doc_id, prof.plang, CAST(count(*) AS BIGINT) AS h
-  FROM dt JOIN prof USING (t) GROUP BY dt.doc_id, prof.plang
-),
-best AS (
-  SELECT doc_id, min(struct_pack(n := -h, l := plang)) AS w
-  FROM hits GROUP BY doc_id
-)
-SELECT d.doc_id,
-       coalesce(b.w.l, 'und') AS pred_lang,
-       CAST(coalesce(-b.w.n, 0) AS BIGINT) AS n_hits
-FROM documents d LEFT JOIN best b USING (doc_id)
-""",
-    "bpe_merges": f"""
-WITH p AS (
-  SELECT regexp_extract_all(text, '{T.BPE_SPLIT_PATTERN}') AS l FROM documents
-),
-pr AS (
-  SELECT l[i] AS "left", l[i + 1] AS "right"
-  FROM p, unnest(range(1, len(l))) t(i)
-  WHERE len(l) >= 2
-),
-f AS (
-  SELECT "left", "right", CAST(count(*) AS BIGINT) AS freq
-  FROM pr GROUP BY "left", "right"
-  ORDER BY freq DESC, "left", "right" LIMIT 100
-)
-SELECT "left", "right", freq,
-       CAST(row_number() OVER (ORDER BY freq DESC, "left", "right") AS INT) AS rank
-FROM f
-""",
-    "token_pmi": f"""
-WITH tk AS (SELECT {_TOKS} AS l FROM documents),
-w AS (SELECT unnest(l) AS w FROM tk),
-uni AS (SELECT w, CAST(count(*) AS BIGINT) AS n_w FROM w GROUP BY w),
-pr AS (
-  SELECT l[i] AS "left", l[i + 1] AS "right"
-  FROM tk, unnest(range(1, len(l))) t(i)
-  WHERE len(l) >= 2
-),
-pc AS (
-  SELECT "left", "right", CAST(count(*) AS BIGINT) AS n_pair
-  FROM pr GROUP BY "left", "right"
-),
-tot AS (
-  SELECT CAST((SELECT count(*) FROM w) AS DOUBLE) AS n_tokens,
-         CAST((SELECT count(*) FROM pr) AS DOUBLE) AS n_pairs
-),
-j AS (
-  SELECT pc."left", pc."right", pc.n_pair,
-         ul.n_w AS n_left, ur.n_w AS n_right,
-         CAST(pc.n_pair AS DOUBLE) * t.n_tokens * t.n_tokens
-           / (t.n_pairs * CAST(ul.n_w AS DOUBLE) * CAST(ur.n_w AS DOUBLE)) AS pmi_ratio
-  FROM pc
-  JOIN uni ul ON pc."left" = ul.w
-  JOIN uni ur ON pc."right" = ur.w
-  CROSS JOIN tot t
-  WHERE pc.n_pair >= 3
-),
-top AS (
-  SELECT * FROM j ORDER BY pmi_ratio DESC, "left", "right" LIMIT 100
-)
-SELECT "left", "right", n_pair, n_left, n_right, pmi_ratio,
-       CAST(row_number() OVER (ORDER BY pmi_ratio DESC, "left", "right") AS INT) AS rank
-FROM top
 """,
     "dup_grams": f"""
 WITH g AS (
@@ -948,24 +589,6 @@ SELECT d.doc_id,
             THEN CAST(coalesce(s.n_shared, 0) AS DOUBLE) / CAST(s.n_grams AS DOUBLE)
             ELSE 0.0 END AS dup_fraction
 FROM documents d LEFT JOIN s USING (doc_id)
-""",
-    "winnow_fp": f"""
-WITH sh AS (
-  SELECT doc_id, i AS pos,
-         md5(array_to_string(list_slice({_TOKS}, i + 1, i + 3), ' ')) AS h
-  FROM (
-    SELECT doc_id, text,
-           unnest(range(0, greatest(0, len({_TOKS}) - 2))) AS i
-    FROM documents
-  )
-),
-wm AS (
-  SELECT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND 3 FOLLOWING) AS fingerprint
-  FROM sh
-)
-SELECT DISTINCT doc_id, fingerprint FROM wm
 """,
     "dedup_exact": """
 SELECT md5(text) AS fingerprint,
@@ -1369,18 +992,8 @@ FROM pos
 }
 
 QUERIES = {
-    "token_stats": q_token_stats,
-    "quality": q_quality,
-    "lang_features": q_lang_features,
-    "gopher_rules": q_gopher_rules,
-    "repetition_ratios": q_repetition_ratios,
-    "lm_scores": q_lm_scores,
     "doc_chunks": q_doc_chunks,
     "pack_plan": q_pack_plan,
-    "redact_pii": q_redact_pii,
-    "fingerprints": q_fingerprints,
-    "bpe_tokens": q_bpe_tokens,
-    "winnow_fp": q_winnow_fp,
     "dedup_exact": q_dedup_exact,
     "minhash": q_minhash,
     "lsh_bands": q_lsh_bands,
@@ -1404,18 +1017,12 @@ QUERIES = {
     "stratified_sample": q_stratified_sample,
     "mixture_plan": q_mixture_plan,
     "decontaminate": q_decontaminate,
-    "vocab_topk": q_vocab_topk,
     "line_dedup": q_line_dedup,
     "domain_cap": q_domain_cap,
-    "dsir_features": q_dsir_features,
-    "bpe_merges": q_bpe_merges,
-    "token_pmi": q_token_pmi,
     "dup_grams": q_dup_grams,
     "semantic_dedup": q_semantic_dedup,
     "dedup_incremental": q_dedup_incremental,
-    "table_profile": q_table_profile,
     "cdc_chunks": q_cdc_chunks,
-    "langid": q_langid,
 }
 
 ORACLES["dedup_clusters_stars"] = ORACLES["dedup_clusters_cc"]

@@ -727,7 +727,7 @@ def q_kg_entity_cooc(spark, sf_dir):
     entities' panel every CTI product derives from its KG (reference
     renders per-doc graphs; at scale the graph IS the triple table and
     this is one groupBy + one per-doc pair join over it). Lift is one
-    IEEE division of exact integer-valued doubles (token_pmi pattern);
+    IEEE division of exact integer-valued doubles, so both engines agree;
     the corpus total N attaches as a keyless 1-row broadcast aggregate
     — no driver collect."""
     kg = q_kg_triples(spark, sf_dir)

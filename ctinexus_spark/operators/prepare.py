@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ctinexus_spark.operators.textops import STOPWORD_LIST
+from ctinexus_spark.stopwords import STOPWORD_LIST
 
 
 def quality_gate(

@@ -24,3 +24,7 @@ ENGLISH_STOPWORDS = frozenset(
     shouldn't wasn wasn't weren weren't won won't wouldn wouldn't
     """.split()
 )
+
+# Deterministic order, shared by the Spark stopword filters and their
+# SQL oracles.
+STOPWORD_LIST = sorted(ENGLISH_STOPWORDS)

@@ -1,4 +1,5 @@
-"""Every `from ctinexus_spark... import ...` in the repository resolves.
+"""Every `from ctinexus_spark... import ...` in the repository resolves,
+and the library modules that only tests import are exactly `TEST_ONLY`.
 
 Registry queries and many operators import lazily inside function
 bodies, so a dangling import (a deleted module or function still named
@@ -14,6 +15,19 @@ import os
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SOURCE_DIRS = ("ctinexus_spark", "jobs", "perfbench", "tests")
+
+# Library modules (relative to ctinexus_spark, packages' __init__ not
+# counted) that no source outside tests/ imports. Each one is queued
+# for deletion or for wiring into the product (ROADMAP direction 1(e));
+# deleting or wiring one in means editing this set, and so does adding
+# a new module that only tests reach.
+TEST_ONLY = {
+    "operators.url_ingest",
+    "providers",
+    "skew",
+    "streaming.ingest",
+    "viz",
+}
 
 
 def _sources() -> list[str]:
@@ -71,3 +85,32 @@ def test_every_package_import_resolves():
     assert not dangling, "dangling imports:\n" + "\n".join(dangling)
     # the walk itself must have reached every scanned tree
     assert reached >= {"<root>", *SOURCE_DIRS}, reached
+
+
+def _library_modules() -> set[str]:
+    pkg = os.path.join(REPO, "ctinexus_spark")
+    out = set()
+    for root, _, files in os.walk(pkg):
+        for f in files:
+            if f.endswith(".py") and f != "__init__.py":
+                rel = os.path.relpath(os.path.join(root, f[:-3]), pkg)
+                out.add(rel.replace(os.sep, "."))
+    return out
+
+
+def test_test_only_modules_match_ratchet():
+    imported = set()
+    for path in _sources():
+        if os.path.relpath(path, REPO).split(os.sep)[0] == "tests":
+            continue
+        for _, module, name in _package_imports(path):
+            # `from pkg import submodule` imports the submodule too
+            imported.update((module, f"{module}.{name}"))
+    test_only = {
+        m for m in _library_modules() if f"ctinexus_spark.{m}" not in imported
+    }
+    assert test_only == TEST_ONLY, (
+        f"imported only by tests: {sorted(test_only)}; "
+        f"new: {sorted(test_only - TEST_ONLY)}; "
+        f"now imported or gone: {sorted(TEST_ONLY - test_only)}"
+    )

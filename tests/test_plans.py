@@ -37,28 +37,25 @@ QUADRATIC_NODES = ("CartesianProduct", "BroadcastNestedLoopJoin")
     "qname",
     ["emb_cosine_pairs", "knn_vote", "shingle_overlap", "lsh_candidates",
      "lsh_topk", "ivf_topk", "dedup_exact", "minhash", "simhash",
-     "repetition_ratios", "lm_scores", "decontaminate", "vocab_topk",
-     "line_dedup", "domain_cap", "dsir_features", "bpe_merges", "token_pmi",
-     "dup_grams", "cdc_chunks", "langid", "jaccard_pairs",
-     "kg_entity_cooc"],
+     "decontaminate", "line_dedup", "domain_cap", "dup_grams", "cdc_chunks",
+     "jaccard_pairs", "kg_entity_cooc"],
 )
 def test_no_quadratic_plan_in_scale_queries(spark, qname):
     """Every headline dedup/similarity query must plan as equi joins.
     Exception, checked structurally: a BroadcastNestedLoopJoin whose
     build side is a KEYLESS global aggregate (guaranteed one row —
-    scalar-totals attachment, e.g. token_pmi's corpus counts) is the
-    optimal plan at any scale and is allowed; every other BNLJ (or any
-    CartesianProduct) fails. (Round-1 verdict: the brute all-pairs
+    scalar-totals attachment, e.g. kg_entity_cooc's document total) is
+    the optimal plan at any scale and is allowed; every other BNLJ (or
+    any CartesianProduct) fails. (Round-1 verdict: the brute all-pairs
     variants are test-only baselines.)"""
     import re
 
     # per-query BNLJ allowance: ONLY the scalar-totals attachments we
-    # know are one-row builds (token_pmi: the two corpus-totals
-    # aggregates). Any additional BNLJ — e.g. a regression introducing
-    # a data-sized nested-loop build — exceeds the exact budget and
-    # fails, restoring the per-node strictness the old blanket ban had.
+    # know are one-row builds. Any additional BNLJ — e.g. a regression
+    # introducing a data-sized nested-loop build — exceeds the exact
+    # budget and fails, restoring the per-node strictness the old
+    # blanket ban had.
     BNLJ_BUDGET = {
-        "token_pmi": 2,
         # corpus doc-total N attaches as a keyless 1-row build
         "kg_entity_cooc": 1,
     }
@@ -238,13 +235,6 @@ def test_line_dedup_no_join_on_line_hash(spark):
     # the winners aggregation is partial: an aggregate on both sides of
     # its exchange (map-side combine eats the hot line before shuffle)
     assert plan.count("Aggregate") >= 2
-
-
-def test_vocab_topk_is_take_ordered(spark):
-    """Global top-k must plan as TakeOrderedAndProject (per-partition
-    heaps), not a global Sort of the whole vocabulary."""
-    plan = plan_of(dq.QUERIES["vocab_topk"](spark, SF))
-    assert "TakeOrderedAndProject" in plan
 
 
 def test_fused_pipeline_shuffle_budget(spark):

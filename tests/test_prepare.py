@@ -34,83 +34,6 @@ def test_exact_text_dedupe_min_id_wins(spark):
     assert got == {2, 9}
 
 
-def test_winnowing_shared_run_shares_fingerprint(spark):
-    """MOSS guarantee: two docs sharing a run of >= window+k-1 tokens
-    (here 6) share at least one winnowed fingerprint; disjoint docs
-    share none."""
-    from ctinexus_spark.operators.textops import winnowed_fingerprints
-
-    shared = "alpha beta gamma delta epsilon zeta"
-    docs = spark.createDataFrame(
-        [
-            (1, f"intro words {shared} trailing stuff here"),
-            (2, f"{shared} completely different ending tokens now"),
-            (3, "nothing in common with the others at all kept long enough"),
-        ],
-        "doc_id int, text string",
-    )
-    fps = winnowed_fingerprints(docs)
-    by_doc = {}
-    for r in fps.collect():
-        by_doc.setdefault(r.doc_id, set()).add(r.fingerprint)
-    assert by_doc[1] & by_doc[2]
-    assert not (by_doc[1] & by_doc[3])
-    assert not (by_doc[2] & by_doc[3])
-
-
-def test_gopher_rules_flags(spark):
-    """Each Gopher rule fails on a purpose-built doc; a compliant doc
-    passes (thresholds from the public Gopher paper A1.1)."""
-    from ctinexus_spark.operators.textops import gopher_rules
-
-    good = "the quick brown fox jumps over that lazy dog and then " * 6  # 66 words, stopword-rich
-    rows = [
-        (1, good.strip()),
-        (2, "too short to pass the word count and that is all"),  # < 50 words
-        (3, ("aa " * 60).strip()),  # mean word len 2 < 3, no required stops
-        (4, ("#### " * 60).strip()),  # symbols, no alpha
-    ]
-    docs = spark.createDataFrame(rows, "doc_id int, text string")
-    got = {r.doc_id: r for r in gopher_rules(docs).collect()}
-    assert got[1].passes_gopher
-    assert got[1].required_stop_hits >= 2 and got[1].frac_words_alpha == 1.0
-    assert not got[2].passes_gopher  # word count
-    assert not got[3].passes_gopher  # mean word length + stopwords
-    assert not got[4].passes_gopher and got[4].frac_words_alpha == 0.0
-
-
-def test_repetition_ratios(spark):
-    from ctinexus_spark.operators.textops import repetition_ratios
-
-    docs = spark.createDataFrame(
-        [(1, "a a a a b"), (2, "x y x y x")], "doc_id int, text string"
-    )
-    got = {r.doc_id: r for r in repetition_ratios(docs).collect()}
-    assert got[1].top_word_frac == 4 / 5
-    assert got[1].top_bigram_frac == 3 / 4  # "a a" x3 of 4 bigrams
-    assert got[2].top_word_frac == 3 / 5
-    assert got[2].top_bigram_frac == 2 / 4  # "x y" x2
-
-
-def test_redact_pii(spark):
-    from ctinexus_spark.operators.textops import redact_pii
-
-    docs = spark.createDataFrame(
-        [(1, "mail bob@corp.example.com or call +1 555-0100-999 from 10.1.2.3 ssn 123-45-6789"),
-         (2, "clean text with no identifiers at all")],
-        "doc_id int, text string",
-    )
-    got = {r.doc_id: r for r in redact_pii(docs).collect()}
-    r = got[1]
-    assert "<EMAIL>" in r.redacted_text and "<IP>" in r.redacted_text
-    assert "<PHONE>" in r.redacted_text and "<SSN>" in r.redacted_text
-    assert "bob@" not in r.redacted_text and "10.1.2.3" not in r.redacted_text
-    assert (r.n_email, r.n_ipv4, r.n_phone, r.n_ssn) == (1, 1, 1, 1)
-    c = got[2]
-    assert c.redacted_text == "clean text with no identifiers at all"
-    assert (c.n_email, c.n_ipv4, c.n_phone, c.n_ssn) == (0, 0, 0, 0)
-
-
 def test_stratified_sample_quotas(spark):
     from ctinexus_spark.operators.prepare import stratified_sample
 
@@ -165,25 +88,6 @@ def test_mixture_plan_matches_naive_global_rank(spark):
     )
     expected = {r.doc_id: r.mix_rank for r in naive.collect()}
     assert got == expected
-
-
-def test_bigram_lm_scores_separate_fluent_from_gibberish(spark):
-    """A document made of the corpus's dominant bigrams scores a much
-    higher mean conditional probability (lower perplexity) than one
-    whose bigrams are unique in the corpus."""
-    from ctinexus_spark.operators.textops import bigram_lm_scores
-
-    common = "the cat sat on the mat " * 20
-    docs = spark.createDataFrame(
-        [(1, common.strip()),
-         (2, common.strip()),
-         (3, "zyx wvu tsr qpo nml kji hgf edc ba")],
-        "doc_id int, text string",
-    )
-    got = {r.doc_id: r for r in bigram_lm_scores(docs).collect()}
-    assert got[1].mean_prob > 3 * got[3].mean_prob
-    assert got[1].log2_ppl < got[3].log2_ppl
-    assert got[1].n_bigrams == 6 * 20 - 1
 
 
 def test_chunk_documents_coverage_and_overlap(spark):

@@ -1,31 +1,5 @@
 
 
-def test_bpe_merge_pairs_counts_and_rank(spark):
-    from ctinexus_spark.operators.textops import bpe_merge_pairs
-
-    docs = spark.createDataFrame(
-        [(1, "ab cd ab cd"), (2, "ab cd x1")], "doc_id int, text string"
-    )
-    got = [(r.left, r.right, r.freq, r.rank) for r in bpe_merge_pairs(docs, k=10).collect()]
-    # pieces doc1: ab cd ab cd → pairs (ab,cd)x2 (cd,ab)x1
-    # pieces doc2: ab cd x (digit-run split: 'x','1') → (ab,cd) (cd,x) (x,1)
-    assert got[0] == ("ab", "cd", 3, 1)
-    assert ("cd", "ab", 1, 2) in got  # tie group ordered by (left, right)
-    assert len(got) == 4
-
-
-def test_token_pmi_surfaces_collocation(spark):
-    from ctinexus_spark.operators.textops import token_pmi
-
-    # "hong kong" always adjacent; filler tokens are frequent alone
-    rows = [(i, "the of hong kong the of and") for i in range(5)]
-    docs = spark.createDataFrame(rows, "doc_id int, text string")
-    got = token_pmi(docs, min_count=3, k=5).collect()
-    assert got[0].left == "hong" and got[0].right == "kong" and got[0].rank == 1
-    # exact ratio: n_pair=5, N=35, P=30, n_hong=n_kong=5
-    assert got[0].pmi_ratio == (5.0 * 35.0 * 35.0) / (30.0 * 5.0 * 5.0)
-
-
 def test_dup_gram_fraction_cross_doc_shared_spans(spark):
     from ctinexus_spark.operators.prepare import dup_gram_fraction
 
@@ -45,34 +19,6 @@ def test_dup_gram_fraction_cross_doc_shared_spans(spark):
     assert got[2].n_shared == 1
     assert got[3].n_shared == 0 and got[3].dup_fraction == 0.0
     assert got[4].n_grams == 0 and got[4].dup_fraction == 0.0
-
-
-def test_langid_trigram_separates_real_languages(spark):
-    """On text with genuine character-level signal the self-trained
-    trigram profiles classify held-in documents correctly; too-short
-    text falls back to 'und'."""
-    from ctinexus_spark.operators.textops import langid_trigram
-
-    en = [
-        "the quick brown fox jumps over the lazy dog near the river bank",
-        "she was walking through the old town with a heavy bag of books",
-        "this sentence should look like ordinary english prose with the usual words",
-    ]
-    fr = [
-        "le renard brun saute par dessus le chien paresseux pres de la riviere",
-        "elle marchait dans la vieille ville avec un sac lourd de livres",
-        "cette phrase devrait ressembler a du francais ordinaire avec les mots habituels",
-    ]
-    rows = [(i, t, "en") for i, t in enumerate(en)]
-    rows += [(10 + i, t, "fr") for i, t in enumerate(fr)]
-    rows.append((99, "ab", "en"))  # shorter than a trigram
-    docs = spark.createDataFrame(rows, "doc_id int, text string, lang string")
-    got = {r.doc_id: r for r in langid_trigram(docs, profile_size=60).collect()}
-    for i in range(3):
-        assert got[i].pred_lang == "en", (i, got[i])
-    for i in range(10, 13):
-        assert got[i].pred_lang == "fr", (i, got[i])
-    assert got[99].pred_lang == "und" and got[99].n_hits == 0
 
 
 def test_cdc_chunks_boundaries_stable_under_prefix_edit(spark):
@@ -95,58 +41,3 @@ def test_cdc_chunks_boundaries_stable_under_prefix_edit(spark):
     assert c1[1:] == c2[len(c2) - len(c1) + 1:]
     # full coverage: concatenation reconstructs the document
     assert " ".join(c1) == base and " ".join(c2) == edited
-
-
-def test_vocab_topk_order_and_ties(spark):
-    from ctinexus_spark.operators.textops import vocab_topk
-
-    docs = spark.createDataFrame(
-        [(1, "b a a c b a"), (2, "c d b")], "doc_id int, text string"
-    )
-    got = vocab_topk(docs, k=3).collect()
-    # freqs: a=3 b=3 c=2 d=1; tie a/b breaks on token asc
-    assert [(r.token, r.freq, r.rank) for r in got] == [
-        ("a", 3, 1),
-        ("b", 3, 2),
-        ("c", 2, 3),
-    ]
-
-
-def test_dsir_features_upweights_target_like_docs(spark):
-    """Docs resembling the target subset must get mean_p_target >
-    mean_p_corpus; off-target docs the reverse (the DSIR selection
-    signal). Self-trained scores stay consistent with lm_scores."""
-    from pyspark.sql import functions as F
-
-    from ctinexus_spark.operators.textops import bigram_lm_scores, dsir_features
-
-    rows = [
-        (1, "the cat sat on the mat and the cat ran", "en"),
-        (2, "the dog sat on the mat and the dog ran", "en"),
-        (3, "le chien dort sur le tapis et le chien court", "fr"),
-        (4, "le chat dort sur le tapis et le chat court", "fr"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id int, text string, lang string")
-    target = docs.filter(F.col("lang") == "en")
-    got = {r.doc_id: r for r in dsir_features(docs, target).collect()}
-    assert got[1].mean_p_target > got[1].mean_p_corpus
-    assert got[2].mean_p_target > got[2].mean_p_corpus
-    assert got[3].mean_p_target < got[3].mean_p_corpus
-    assert got[1].log_weight > 0 > got[3].log_weight
-    # corpus side of dsir == self-trained lm_scores (left-join no-op)
-    lm = {r.doc_id: r.mean_prob for r in bigram_lm_scores(docs).collect()}
-    for d in (1, 2, 3, 4):
-        assert abs(got[d].mean_p_corpus - lm[d]) == 0.0
-
-
-def test_profile_columns_single_pass_stats(spark):
-    from ctinexus_spark.operators.textops import profile_columns
-
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, "a"), (4, "b")], "id int, v string"
-    )
-    got = {r.column: r for r in profile_columns(df).collect()}
-    assert got["id"].n_nulls == 0 and got["id"].n_distinct == 4
-    assert got["id"].min_value == "1" and got["id"].max_value == "4"
-    assert got["v"].n_nulls == 1 and got["v"].n_distinct == 2
-    assert got["v"].min_value == "a" and got["v"].max_value == "b"
